@@ -6,7 +6,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def rebalance(df: DataFrame) -> DataFrame:
+def rebalance(df: DataFrame, key: str | None = None) -> DataFrame:
     """Spread a under-partitioned input across the cluster's cores.
 
     Small single-file tables arrive as ONE input split, which would
@@ -24,7 +24,12 @@ def rebalance(df: DataFrame) -> DataFrame:
     leaf file count ≥ cores means the scan alone is wide, and any
     Exchange / InMemoryTableScan in the compiled physical plan means
     a shuffle (or a cached post-shuffle layout) already widens the
-    plan to ``spark.sql.shuffle.partitions``."""
+    plan to ``spark.sql.shuffle.partitions``.
+
+    ``key``: hash-partition on this column instead of round-robin.  An
+    operator that next groups or joins on ``key`` (the MinHash
+    ``GROUP BY id``) then reuses the layout instead of shuffling
+    again; with unique keys the spread is as even as round-robin."""
     target = df.sparkSession.sparkContext.defaultParallelism
     try:
         if len(df.inputFiles()) >= target:
@@ -34,7 +39,7 @@ def rebalance(df: DataFrame) -> DataFrame:
             return df
     except Exception:  # noqa: BLE001 — non-SQL-backed plans: play safe
         pass
-    return df.repartition(target)
+    return df.repartition(target, key) if key else df.repartition(target)
 
 
 def sql_over(frames: dict[str, DataFrame], sql_fmt: str) -> DataFrame:
@@ -46,11 +51,10 @@ def sql_over(frames: dict[str, DataFrame], sql_fmt: str) -> DataFrame:
     AND N eager JVM analysis passes while building a plan; registering
     the input frames as temp views and parsing the whole downstream as
     one SQL statement yields the same analyzed tree in ONE pass.  The
-    views are dropped before returning — the returned DataFrame holds
-    its (already analyzed) plan, so the names only exist to address
-    the subtrees inside the single parse.
+    returned DataFrame holds its (already analyzed) plan, so the view
+    names only exist to address the subtrees inside the single parse.
 
-    The views are NOT dropped here: ``dropTempView`` cascades an
+    Yet the views are NOT dropped here: ``dropTempView`` cascades an
     UNCACHE of every cache entry whose plan contains the view's plan
     (measured — it silently evicted the curation pipeline's persisted
     frames, turning three persists into no-ops), and the same applies

@@ -5,9 +5,11 @@ Scale design (the point of these, vs. the naive O(n²) all-pairs):
 
 - exact: hash-shuffle groupBy on the dedup key — one shuffle, AQE
   handles skew.
-- MinHash+LSH: per-row signature (narrow), explode to (band, hash)
-  buckets, self-join *within buckets only* — candidate generation cost
-  is Σ|bucket|² instead of n²; verification runs only on candidates.
+- MinHash+LSH: per-doc signature (batch: one map-side-combined
+  aggregate over the shingle rows; streaming: a narrow Arrow kernel),
+  explode to (band, hash) buckets, pair *within buckets only* —
+  candidate generation cost is Σ|bucket|² instead of n²; verification
+  runs only on candidates.
 - SimHash: 64-bit fingerprint per row (narrow), exact-match dedup is a
   groupBy; near-match joins on rotated prefix blocks.
 - embedding near-dup: the default is a fully distributed block
@@ -113,6 +115,26 @@ def _md5_hash32(s: Column) -> Column:
     """Deterministic 32-bit integer hash of a string via md5 — matches
     ``('0x' || substr(md5(x),1,8))::BIGINT`` in ANSI-SQL oracles."""
     return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
+
+
+def _minhash_agg_sql(idq: str, src: str, num_perm: int) -> str:
+    """The JVM MinHash aggregate as SQL text: ONE ``GROUP BY id`` over
+    (id, gram) shingle rows emitting ``n`` (distinct-shingle count, the
+    exact verify's set size) and ``minhash`` (the ``num_perm``
+    ``min((a·h+b) mod P)`` values, ``h`` the :func:`_md5_hash32` of the
+    gram).  Shared by ``minhash_signature(impl="agg")`` and the
+    one-parse :func:`minhash_dup_pairs` so their signatures agree by
+    construction.  The aggregate combines map-side, so its shuffle
+    ships about one row per document, not one per gram."""
+    mins = ", ".join(
+        f"min(({a} * __h + {b}) % {_P})" for a, b in _perm_params(num_perm)
+    )
+    return (
+        f"SELECT {idq}, count(1) AS n, array({mins}) AS minhash FROM"
+        f" (SELECT {idq},"
+        " CAST(conv(substring(md5(gram), 1, 8), 16, 10) AS BIGINT) AS __h"
+        f" FROM {src}) GROUP BY {idq}"
+    )
 
 
 def _md5_hash64(s: Column) -> Column:
@@ -253,49 +275,48 @@ def minhash_signature(
     include_shingles: bool = True,
 ) -> DataFrame:
     """Per-document MinHash signature (array<long>, length num_perm) over
-    distinct k-word shingles.  Narrow transform — no shuffle.
+    distinct k-word shingles.
     ``include_shingles=False`` drops the shingle arrays from the output
     (skips their Arrow round-trip when the caller re-derives them).
 
-    ``impl="agg"`` (default): shingles are built as exploded ROWS
-    (:func:`pql_spark.operators.text.shingle_rows` — avoids the
-    HOF-lambda re-evaluation trap), each row is md5-hashed once, and the
-    signature is one groupBy(id) with ``num_perm`` ``min((a·h+b) mod P)``
-    aggregates — all JVM, map-side partial aggregation, no Python
-    workers at all.  Does not support ``include_shingles``.
-
-    ``impl="pandas"``: one Arrow-batched kernel does shingling + md5 +
-    the permutation mins.  Shingling runs INSIDE the kernel (a Python
-    twin of :func:`pql_spark.operators.text.word_shingles` — lower,
-    collapse whitespace, split, sliding k-gram, first-occurrence
+    ``impl="pandas"`` (default): one Arrow-batched kernel does shingling
+    + md5 + the permutation mins.  Shingling runs INSIDE the kernel (a
+    Python twin of :func:`pql_spark.operators.text.word_shingles` —
+    lower, collapse whitespace, split, sliding k-gram, first-occurrence
     distinct) so Arrow ships ONE text string per document instead of
     ~n_words shingle strings, and md5 runs once per DISTINCT shingle in
     the batch with the permutation mins as a single
     ``minimum.reduceat`` — measured ~4× over Catalyst-side shingling +
-    a per-doc loop.  This is the streaming path (narrow, no aggregate).
+    a per-doc loop.  Narrow (no shuffle, no aggregate), so it is the
+    streaming path; it pays for Python workers.
+
+    ``impl="agg"``: shingles are built as exploded ROWS
+    (:func:`pql_spark.operators.text.shingle_rows` — avoids the
+    HOF-lambda re-evaluation trap), each row is md5-hashed once, and the
+    signature is one ``GROUP BY id`` with ``num_perm``
+    ``min((a·h+b) mod P)`` aggregates, parsed as one SQL statement — all
+    JVM, map-side partial aggregation, no Python workers at all.  This
+    is the batch path (:func:`minhash_dup_pairs`,
+    :func:`near_dup_incremental`).  Does not support
+    ``include_shingles``.
+
     md5 over UTF-8 bytes is engine-independent, so all three impls are
     bit-identical (``impl="catalyst"`` is the pure-expression reference
-    implementation).
+    implementation).  The one difference is a NULL text: ``"pandas"``
+    signs it as the empty shingle ``""``, ``"catalyst"`` returns a NULL
+    signature, and ``"agg"`` returns no row (NULL text has no shingle
+    rows).
     """
     params = _perm_params(num_perm)
 
     if impl == "agg":
         if include_shingles:
             raise ValueError("impl='agg' does not return shingle arrays")
-        rows = shingle_rows(df, text_col, id_col, shingle_k)
-        hashed = rows.select(
-            F.col(id_col), _md5_hash32(F.col("gram")).alias("h")
-        )
-        mins = [
-            F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(_P)).alias(
-                f"m{i}"
-            )
-            for i, (a, b) in enumerate(params)
-        ]
-        sig = hashed.groupBy(id_col).agg(*mins)
-        return sig.select(
-            F.col(id_col),
-            F.array(*[f"m{i}" for i in range(num_perm)]).alias("minhash"),
+        rows = shingle_rows(rebalance(df, id_col), text_col, id_col, shingle_k)
+        return sql_over(
+            {"sh": rows},
+            f"SELECT `{id_col}`, minhash FROM"
+            f" ({_minhash_agg_sql(f'`{id_col}`', '{sh}', num_perm)})",
         )
 
     sh = word_shingles(F.col(text_col), shingle_k)
@@ -421,47 +442,47 @@ def minhash_signature(
     )
 
 
-def _bucket_pairs(buckets: DataFrame, cap: int | None) -> DataFrame:
-    """Candidate (id_a, id_b) pairs emitted map-side from bucket posting
-    lists (column ``ids``: sorted array of doc ids).
+def _bucket_pairs_sql(cap: int | None) -> str:
+    """Candidate pairs emitted map-side from a bucket posting list
+    (column ``ids``: sorted array), as SQL text: an array of
+    ``named_struct('a', x, 'b', y)`` with x before y in ``ids``.
 
-    ``cap=None``: every bucket contributes all |b|·(|b|-1)/2 pairs with
-    id_a < id_b.  With a cap, oversized buckets fall back to a STAR
-    (min-id paired with each other member): O(|b|) pairs that keep the
-    cluster connected for downstream grouping without the quadratic
-    blow-up a boilerplate-heavy corpus hits at scale (one 10⁶-doc
-    bucket = 5·10¹¹ pairs materialized in a single task).  Star pairs
-    are still exact-verified by the caller, so precision is unchanged;
-    only pair-recall *inside* oversized buckets drops — cluster
-    membership does not.
-    """
-    ids = F.col("ids")
-    all_pairs = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + 2, F.size(ids)),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
+    ``cap=None``: every bucket contributes all |b|·(|b|-1)/2 pairs.
+    With a cap, oversized buckets fall back to a STAR (first member
+    paired with each other member): O(|b|) pairs that keep the cluster
+    connected for downstream grouping without the quadratic blow-up a
+    boilerplate-heavy corpus hits at scale (one 10⁶-doc bucket =
+    5·10¹¹ pairs materialized in a single task).  Star pairs are still
+    exact-verified by the caller, so precision is unchanged; only
+    pair-recall *inside* oversized buckets drops — cluster membership
+    does not."""
+    all_pairs = (
+        "flatten(transform(ids, (x, i) -> transform("
+        "slice(ids, i + 2, size(ids)), y -> named_struct('a', x, 'b', y))))"
     )
-    emit = all_pairs
-    if cap is not None:
-        star = F.transform(
-            F.slice(ids, 2, F.size(ids) - 1),
-            lambda y: F.struct(
-                F.element_at(ids, 1).alias("id_a"), y.alias("id_b")
-            ),
-        )
-        emit = F.when(F.size(ids) <= F.lit(cap), all_pairs).otherwise(star)
-    return buckets.select(F.explode(emit).alias("p")).select(
-        "p.id_a", "p.id_b"
+    if cap is None:
+        return all_pairs
+    star = (
+        "transform(slice(ids, 2, size(ids) - 1),"
+        " y -> named_struct('a', element_at(ids, 1), 'b', y))"
     )
+    return (
+        f"CASE WHEN size(ids) <= {int(cap)} THEN {all_pairs}"
+        f" ELSE {star} END"
+    )
+
+
+def _bucket_pairs(buckets: DataFrame, cap: int | None) -> DataFrame:
+    """(id_a, id_b) candidate pairs from bucket posting lists (column
+    ``ids``: sorted array of doc ids) — see :func:`_bucket_pairs_sql`;
+    id_a < id_b."""
+    return buckets.select(
+        F.expr(f"explode({_bucket_pairs_sql(cap)})").alias("p")
+    ).select(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b"))
 
 
 def _verify_jaccard(
-    sh: DataFrame, cand: DataFrame, id_col: str, threshold: float,
-    sort: bool = True,
+    sh: DataFrame, cand: DataFrame, id_col: str, threshold: float
 ) -> DataFrame:
     """Exact shingle-set Jaccard over candidate pairs, rows-based.
 
@@ -485,13 +506,13 @@ def _verify_jaccard(
     jac = F.col("n_inter") / (
         F.col("sa.n") + F.col("sb.n") - F.col("n_inter")
     )
-    out = (
+    return (
         inter.join(sa, F.col("id_a") == F.col(f"sa.{id_col}"))
         .join(sb, F.col("id_b") == F.col(f"sb.{id_col}"))
         .select("id_a", "id_b", jac.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
+        .orderBy("id_a", "id_b")
     )
-    return out.orderBy("id_a", "id_b") if sort else out
 
 
 def band_signature(
@@ -551,90 +572,80 @@ def minhash_dup_pairs(
     shingle-set Jaccard ≥ threshold.  Returns (id_a, id_b, jaccard) with
     id_a < id_b.
 
-    Signatures come from the NARROW Arrow kernel (``impl="pandas"`` —
-    zero shuffles, md5 once per distinct shingle per batch; measured 2×
-    the all-JVM ``agg`` impl, which pays a full (id, gram) shuffle).
+    Signatures come from ONE JVM aggregate over the (id, gram) shingle
+    rows that the exact verify joins anyway (:func:`_minhash_agg_sql`,
+    the ``impl="agg"`` signature): a partial-then-final ``GROUP BY id``
+    that emits each document's shingle count ``n`` next to its
+    signature, so the verify needs no second aggregate for set sizes —
+    ``n`` rides with the id through the bucket lists onto each
+    candidate pair.  No Python workers run anywhere in the plan.  A
+    NULL text has no shingle rows, so it has no signature and joins no
+    bucket.
+
+    Measured against the Arrow-kernel signatures this replaced (4-core
+    host, Spark 4.1.2, Python 3.11): every Python task paid ~0.3 s of
+    worker overhead before its kernel ran (a no-op ``mapInPandas`` over
+    four one-row tasks: 0.40 s vs 0.06 s for the same job in the JVM),
+    and the four workers plus their daemon held ~575 MB.  Same-session
+    alternated A/B at sf0.1, median of 4: op_minhash_dups 3.32 → 3.07 s
+    (jobs 11 → 9, shuffle 5.1 → 5.6 MB), op_curate_corpus 10.3 → 9.7 s.
     Candidate generation is then ONE shuffle — groupBy(band, bhash) on
-    ~40 bytes/row with pairs emitted map-side from each bucket's sorted
-    id list (vs. a two-sided self-join, which shuffles the banded rows
-    twice and sort-merges).  Exact verify is rows-based
-    (:func:`_verify_jaccard`).
+    ~50 bytes/row with pairs emitted map-side from each bucket's sorted
+    member list (vs. a two-sided self-join, which shuffles the banded
+    rows twice and sort-merges).  Exact verify is rows-based: |A∩B| by
+    joining the pair list back to the (id, gram) rows, so no shingle
+    ARRAYS are ever shuffled.
 
     ``max_bucket`` bounds the quadratic pair emission for oversized
     buckets (typically exact-dup / boilerplate clusters, which a band
     hash captures wholesale): those fall back to star pairs — see
-    :func:`_bucket_pairs`.  Default None keeps exact LSH semantics so
+    :func:`_bucket_pairs_sql`.  Default None keeps exact LSH semantics so
     SQL oracles can mirror candidate generation verbatim.  Note the
-    per-bucket id LIST still materializes during the aggregate (8 bytes
-    per doc — fine to ~10⁷ dups per bucket); corpora beyond that should
-    run :func:`dedup_exact` first, which removes exact-dup mega-buckets
-    at the source.
+    per-bucket member LIST still materializes during the aggregate (16
+    bytes per doc — fine to ~10⁷ dups per bucket); corpora beyond that
+    should run :func:`dedup_exact` first, which removes exact-dup
+    mega-buckets at the source.
+
+    The whole signature → band → bucket → pair → verify chain is ONE
+    ``spark.sql`` parse (:func:`~pql_spark.operators._util.sql_over`):
+    a Column build of the same ~15 ops paid ~0.5 s of py4j round trips
+    and per-op eager analysis on every call.
     """
-    df = rebalance(df)
-    sig = minhash_signature(
-        df, text_col, id_col, num_perm, shingle_k,
-        impl="pandas", include_shingles=False,
-    )
+    # hash-partitioned on the id: when this adds an exchange, the
+    # signature GROUP BY id reuses its layout instead of a second one
+    df = rebalance(df, id_col)
     sh = shingle_rows(df, text_col, id_col, shingle_k)
-    if max_bucket is not None:
-        # capped mode keeps the Column build (the star fallback's
-        # conditional emit) — the hot path below is the default
-        banded = band_signature(sig, id_col, num_perm, bands)
-        buckets = (
-            banded.groupBy("band", "bhash")
-            .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-            .filter(F.size("ids") >= 2)
-        )
-        cand = _bucket_pairs(buckets, max_bucket).dropDuplicates(
-            ["id_a", "id_b"]
-        )
-        return _verify_jaccard(sh, cand, id_col, threshold, sort=sort_pairs)
-    # One-parse SQL twin of the band → bucket → pair → verify chain
-    # (r16, guide §4 driver-side): the Column build of these ~15 ops
-    # paid ~0.5 s of py4j round trips + per-op eager analysis on every
-    # call (measured; it is the curation pipeline's largest single
-    # driver site).  The SQL text parses to the same join/aggregate
-    # tree — band key on (id, band, bhash) ONLY (the heavy shingle
-    # arrays are joined back after pair-dedup, so the candidate
-    # shuffle moves ~40 bytes/row), pairs emitted map-side from each
-    # bucket's sorted id list, rows-based exact verify.  Equivalence
-    # vs the Column path is pinned by tests/test_dedup.py and every
-    # consuming gate's DuckDB oracle.
     idq = f"`{id_col}`"
     order = " ORDER BY id_a, id_b" if sort_pairs else ""
     return sql_over(
-        {"sig": sig, "sh": sh},
-        "WITH banded AS ("
-        f" SELECT {idq}, bk.band AS band, bk.bhash AS bhash FROM"
-        f" (SELECT {idq},"
+        {"sh": sh},
+        f"WITH sig AS ({_minhash_agg_sql(idq, '{sh}', num_perm)}"
+        "), banded AS ("
+        f" SELECT named_struct('id', {idq}, 'n', n) AS m,"
+        " bk.band AS band, bk.bhash AS bhash FROM"
+        f" (SELECT {idq}, n,"
         f" explode(array({_band_entries_sql(num_perm, bands)})) AS bk"
-        " FROM {sig})"
+        " FROM sig)"
         "), buckets AS ("
         " SELECT ids FROM ("
-        f"  SELECT sort_array(collect_list({idq})) AS ids"
+        "  SELECT sort_array(collect_list(m)) AS ids"
         "  FROM banded GROUP BY band, bhash)"
         " WHERE size(ids) >= 2"
         "), cand AS ("
-        " SELECT DISTINCT p.id_a AS id_a, p.id_b AS id_b FROM ("
-        "  SELECT explode(flatten(transform(ids, (x, i) ->"
-        "   transform(slice(ids, i + 2, size(ids)),"
-        "    y -> named_struct('id_a', x, 'id_b', y))))) AS p"
+        " SELECT DISTINCT p.a.id AS id_a, p.a.n AS n_a,"
+        " p.b.id AS id_b, p.b.n AS n_b FROM ("
+        f"  SELECT explode({_bucket_pairs_sql(max_bucket)}) AS p"
         "  FROM buckets)"
-        "), sizes AS ("
-        f" SELECT {idq} AS __vid, count(1) AS n FROM {{sh}}"
-        f" GROUP BY {idq}"
         "), inter AS ("
-        " SELECT id_a, id_b, count(1) AS n_inter FROM"
+        " SELECT id_a, id_b, n_a, n_b, count(1) AS n_inter FROM"
         f"  (SELECT {idq} AS id_a, gram FROM {{sh}})"
         "  JOIN cand USING (id_a)"
         f"  JOIN (SELECT {idq} AS id_b, gram FROM {{sh}})"
         "  USING (id_b, gram)"
-        " GROUP BY id_a, id_b)"
+        " GROUP BY id_a, id_b, n_a, n_b)"
         " SELECT id_a, id_b, jaccard FROM ("
-        "  SELECT id_a, id_b,"
-        "   n_inter / (sa.n + sb.n - n_inter) AS jaccard"
-        "  FROM inter JOIN sizes sa ON id_a = sa.__vid"
-        "  JOIN sizes sb ON id_b = sb.__vid)"
+        "  SELECT id_a, id_b, n_inter / (n_a + n_b - n_inter) AS jaccard"
+        "  FROM inter)"
         f" WHERE jaccard >= {float(threshold)!r}D{order}",
     )
 
@@ -1426,9 +1437,13 @@ def near_dup_incremental(
     banding to :func:`band_signature`/:func:`minhash_dup_pairs`, so
     batch, incremental, and streaming buckets agree bit-for-bit.
     Returns ``(id, band, dup_of)`` candidate rows (same contract as
-    the stream: verify exact Jaccard downstream if needed).  The state
-    append is plain parquet `append` — wrap calls in your job-level
-    retry/transaction if partial writes matter.
+    the stream: verify exact Jaccard downstream if needed).
+    Signatures are the JVM aggregate (``minhash_signature(impl="agg")``
+    — no Python workers), bit-identical to the stream's Arrow kernel
+    except on a NULL text, which has no shingles here and so is never
+    flagged and never a keeper (the stream signs it as the empty
+    shingle).  The state append is plain parquet `append` — wrap calls
+    in your job-level retry/transaction if partial writes matter.
     """
     from pathlib import Path
 
@@ -1437,7 +1452,7 @@ def near_dup_incremental(
     spark = new_docs.sparkSession
     sig = minhash_signature(
         new_docs, text_col, id_col, num_perm, shingle_k,
-        impl="pandas", include_shingles=False,
+        impl="agg", include_shingles=False,
     )
     banded = tracked_persist(
         band_signature(sig, id_col, num_perm, bands)

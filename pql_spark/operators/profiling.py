@@ -151,7 +151,6 @@ def numeric_histogram(
             f"SELECT __h_v FROM (SELECT {v} AS __h_v FROM {{src}})"
             " WHERE __h_v IS NOT NULL"
         )
-        hint = ""
     else:
         base = (
             "SELECT /*+ BROADCAST(__h_b) */ __h_v, __h_lo, __h_hi FROM"
@@ -162,7 +161,6 @@ def numeric_histogram(
             " WHERE __h_v IS NOT NULL"
         )
         lo_s, hi_s = "__h_lo", "__h_hi"
-        hint = None  # hint lives inside `base`
     width = f"(({hi_s}) - ({lo_s})) / {float(bins)!r}D"
     raw = f"CAST(floor((__h_v - ({lo_s})) / ({width})) AS INT)"
     # degenerate single-value range: everything in bin 0

@@ -51,7 +51,9 @@ def curate_corpus(
        (``drop_repeated_lines``, narrow — see
        :func:`~pql_spark.operators.text.dedup_lines`);
     1. quality ≥ ``min_quality`` (C4/Gopher-style heuristics);
-    2. predicted language ∈ ``langs`` (skipped when ``langs`` is None);
+    2. predicted language ∈ ``langs`` (skipped when ``langs`` is None;
+       every entry must be a ``str`` — anything else raises
+       ``ValueError``, since the codes are compared as SQL strings);
     3. repetition filter: drop docs whose duplicate-``n``-gram char
        fraction exceeds ``max_dup_ngram_frac`` (Gopher rule; skipped
        when None);
@@ -97,6 +99,11 @@ def curate_corpus(
     import time as _time
 
     from .operators._util import pinned_filter, rebalance, tracked_persist
+
+    if langs is not None:
+        bad = [lang for lang in langs if not isinstance(lang, str)]
+        if bad:
+            raise ValueError(f"langs must be str language codes, got {bad!r}")
 
     def _mark(stage: str, frame: DataFrame) -> DataFrame:
         if timing is None:
@@ -154,7 +161,7 @@ def curate_corpus(
 
     cond_sql = f"quality >= {float(min_quality)!r}D"
     if langs is not None:
-        in_list = ", ".join(_slit(str(lang)) for lang in langs)
+        in_list = ", ".join(_slit(lang) for lang in langs)
         cond_sql += f" AND lang_pred IN ({in_list})"
     cond = F.expr(cond_sql)
     kept = _mark("quality_lang", pinned_filter(kept, cond))

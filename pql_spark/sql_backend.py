@@ -1061,9 +1061,11 @@ class _SqlEmitter:
             # simple identifiers keep the per-key path form —
             # json_tuple matches field names literally while
             # get_json_object treats '$.{key}' as a path, and only
-            # simple keys make the two provably agree.
+            # simple ASCII keys make the two provably agree.
             simple = all(
-                key.replace("_", "").isalnum() and not key[0].isdigit()
+                key.isascii()
+                and key.replace("_", "").isalnum()
+                and not key[0].isdigit()
                 for key, _ in op.schema
             )
             if simple and op.schema:

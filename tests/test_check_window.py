@@ -31,10 +31,17 @@ def test_every_window_gate_has_an_oracle_or_documented_exception():
     assert missing == [], missing
 
 
-def test_new_gates_ship_inside_the_window():
+def test_gates_without_driver_evidence_sit_inside_the_window():
     # the op_gif_dups lesson (r14): a gate registered OUTSIDE the
-    # frozen window spends a round evidence-pending.  Gates new in r15
-    # must sit in the window so their first driver row lands this round.
-    assert "op_mp3_features" in entrymod._CHECK_FIRST
-    assert "op_gif_dups" in entrymod._CHECK_FIRST
-    assert "op_gif_anim_dups" in entrymod._CHECK_FIRST
+    # frozen window spends a round evidence-pending.  So every gate
+    # with no hash-green driver row yet (per the CORRECTNESS_r*.json
+    # records) must sit in the window, where its first row lands on
+    # the next driver run.
+    from tools.evidence_freshness import collect
+
+    green = collect()["latest_green_by_gate"]
+    window = set(entrymod._CHECK_FIRST)
+    outside = [
+        g for g in entrymod.queries() if g not in green and g not in window
+    ]
+    assert outside == [], outside

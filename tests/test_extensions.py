@@ -927,6 +927,23 @@ def test_bag_unpack_schema_sql_backend(spark):
     assert df_rows == sql_rows == [(1, 1, "a"), (2, 2, None), (3, None, None)]
 
 
+def test_bag_unpack_non_ascii_key_keeps_per_key_path(spark):
+    # json_tuple matches field names literally while get_json_object
+    # reads '$.{key}' as a path; the one-parse json_tuple fast path is
+    # only provably equal for ASCII identifier keys
+    from pql_spark import PqlEngine
+
+    df = spark.createDataFrame(
+        [(1, '{"x": 1, "é1": 2}')], "id long, bag string"
+    )
+    eng = PqlEngine(spark, resolver={"B": df})
+    ascii_q = "B | evaluate bag_unpack(bag) : (x: long)"
+    uni_q = "B | evaluate bag_unpack(bag) : (x: long, é1: long)"
+    assert "json_tuple" in eng.to_sql(ascii_q)
+    assert "json_tuple" not in eng.to_sql(uni_q)
+    assert [tuple(r) for r in eng.query(uni_q).collect()] == [(1, 1, 2)]
+
+
 def test_partition_top(spark):
     from pql_spark import PqlEngine
 

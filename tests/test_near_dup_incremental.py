@@ -76,3 +76,15 @@ def test_state_buckets_match_batch_banding(spark, tmp_path):
         .collect()
     }
     assert stored == expect
+
+
+def test_null_text_is_never_flagged_nor_a_keeper(spark, tmp_path):
+    # JVM signatures: a NULL text has no shingle rows, so no signature
+    # and no buckets; the empty and whitespace-only docs share one
+    state = str(tmp_path / "state3")
+    docs = _docs(spark, [(1, None), (2, None), (3, ""), (4, " \t "),
+                         (5, BASE)])
+    out = near_dup_incremental(docs, state)
+    assert {(r.doc_id, r.dup_of) for r in out.collect()} == {(4, 3)}
+    assert {k for k, in spark.read.parquet(state).select("keeper")
+            .distinct().collect()} == {3, 5}

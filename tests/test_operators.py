@@ -147,10 +147,10 @@ def test_minhash_dup_pairs_cap_not_triggered(docs):
 
 
 def test_minhash_dup_pairs_sql_twin_bit_exact(docs):
-    """r16: the default path builds band→bucket→pair→verify as ONE SQL
-    parse; the capped path keeps the Column build.  With a cap no
-    bucket reaches, both must produce bit-identical rows (ids AND
-    jaccard doubles), sorted and unsorted."""
+    """The default path and the capped path (star emission for
+    oversized buckets) share one SQL parse.  With a cap no bucket
+    reaches, both must produce bit-identical rows (ids AND jaccard
+    doubles), sorted and unsorted."""
     sql_rows = sorted(
         (r.id_a, r.id_b, r.jaccard)
         for r in minhash_dup_pairs(

@@ -90,6 +90,14 @@ def test_curate_corpus_no_lang_filter(raw_docs):
     assert 6 in ids  # german doc kept when lang filter is off
 
 
+@pytest.mark.parametrize("langs", [("en", 1), (None,), ["en", b"de"]])
+def test_curate_corpus_rejects_non_str_langs(raw_docs, langs):
+    # language codes are compared as SQL string literals: a non-str
+    # entry would silently compare by its str() form, so it is refused
+    with pytest.raises(ValueError, match="langs must be str"):
+        curate_corpus(raw_docs, langs=langs)
+
+
 def test_wav_roundtrip_and_distributed_feature(spark):
     """WAV codec path: encode→decode roundtrip accuracy and the
     distributed kernel reproducing driver-side reference math."""

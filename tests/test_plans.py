@@ -294,3 +294,34 @@ def test_sql_backend_path_same_physical_shape(spark, sf_catalog):
         )[1][:120], backend
         assert "partial_count" in plan, backend
         assert "TakeOrderedAndProject" in plan or "Sort" in plan, backend
+
+
+_PYTHON_NODES = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython")
+
+
+def _python_nodes(df) -> list[str]:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [n for n in _PYTHON_NODES if n in plan]
+
+
+def test_batch_minhash_and_curation_run_no_python_workers(spark):
+    """Batch MinHash signatures are a JVM aggregate: neither the pair
+    operator nor the curation pipeline (whose near-dup stage it is) may
+    plan a Python-worker node.  The persisted frames' cached plans are
+    part of the tree string, so a Python stage behind a persist shows
+    here too."""
+    from pql_spark.operators._util import unpersist_tracked
+    from pql_spark.operators.dedup import minhash_dup_pairs
+    from pql_spark.pipelines import curate_corpus
+
+    docs = spark.read.parquet(str(SF_SMOKE / "documents.parquet"))
+    try:
+        assert _python_nodes(minhash_dup_pairs(docs)) == []
+        assert _python_nodes(minhash_dup_pairs(docs, max_bucket=8)) == []
+        qa: dict = {}
+        out = curate_corpus(docs, qa=qa)
+        assert _python_nodes(out) == []
+        for name, frame in qa.items():
+            assert _python_nodes(frame) == [], name
+    finally:
+        unpersist_tracked()

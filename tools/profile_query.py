@@ -9,9 +9,14 @@ reported) but splits the timing into:
               decision/centroid jobs here);
 * collect_s — ``df.collect()``;
 * jobs      — Spark jobs launched during the run (statusTracker);
-* stages    — total stages those jobs ran.
+* stages    — total stages those jobs ran;
+* shuffle   — shuffle bytes written by the stages the run completed
+              (the application status store, eager build jobs
+              included).
 
 Same session shape as bench.py (warm parquet + python workers first).
+:func:`start_session` and :func:`profile_once` are importable, so an
+A/B of two code paths can alternate inside one session.
 """
 
 from __future__ import annotations
@@ -32,6 +37,23 @@ def main() -> int:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     n_runs = int(os.environ.get("PROFILE_RUNS", "2"))
+    spark = start_session(sf_dir)
+    qs = entrymod.queries()
+    for name in names:
+        best = None
+        for run in range(n_runs):
+            rec = profile_once(spark, qs[name], sf_dir)
+            if best is None or rec["total"] < best["total"]:
+                best = rec
+            print(f"{name} run{run}: {_fmt(rec)}", file=sys.stderr)
+        print(f"{name}: best {_fmt(best)}")
+    spark.stop()
+    return 0
+
+
+def start_session(sf_dir: str):
+    """A warmed profiling session: parquet read path and a pre-forked
+    Python worker pool."""
     spark = build_session("query-profile")
     spark.sparkContext.setLogLevel("ERROR")
     warm = spark.read.parquet(str(Path(sf_dir) / "region.parquet"))
@@ -53,44 +75,60 @@ def main() -> int:
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         list(pool.map(_warm_py, range(2)))
+    return spark
 
-    qs = entrymod.queries()
+
+def _shuffle_bytes_written(spark) -> int:
+    """Shuffle bytes written by every stage the application ran so far,
+    read once the listener bus has delivered all pending events."""
+    ctx = spark.sparkContext
+    sc = ctx._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    every = ctx._jvm.java.util.ArrayList()  # empty filter: all statuses
+    no_quantiles = ctx._gateway.new_array(ctx._jvm.double, 0)
+    stages = sc.statusStore().stageList(
+        every, False, False, no_quantiles, every
+    )
+    return sum(
+        stages.apply(i).shuffleWriteBytes() for i in range(stages.size())
+    )
+
+
+def profile_once(spark, fn, sf_dir: str) -> dict:
+    """Build and collect one gate, then release its persists and views.
+    Returns total/build/collect seconds, jobs, stages, shuffle bytes
+    and rows."""
     tracker = spark.sparkContext.statusTracker()
-    for name in names:
-        fn = qs[name]
-        best = None
-        for run in range(n_runs):
-            jobs0 = set(tracker.getJobIdsForGroup(None) or [])
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            t1 = time.perf_counter()
-            n = len(df.collect())
-            t2 = time.perf_counter()
-            jobs1 = set(tracker.getJobIdsForGroup(None) or [])
-            new_jobs = sorted(jobs1 - jobs0)
-            stages = 0
-            for j in new_jobs:
-                info = tracker.getJobInfo(j)
-                if info is not None:
-                    stages += len(info.stageIds)
-            rec = (t2 - t0, t1 - t0, t2 - t1, len(new_jobs), stages, n)
-            if best is None or rec[0] < best[0]:
-                best = rec
-            unpersist_tracked()
-            spark.catalog.clearCache()
-            print(
-                f"{name} run{run}: total={rec[0]:.3f}s build={rec[1]:.3f}s"
-                f" collect={rec[2]:.3f}s jobs={rec[3]} stages={rec[4]}"
-                f" rows={rec[5]}",
-                file=sys.stderr,
-            )
-        print(
-            f"{name}: best total={best[0]:.3f}s build={best[1]:.3f}s"
-            f" collect={best[2]:.3f}s jobs={best[3]} stages={best[4]}"
-            f" rows={best[5]}"
-        )
-    spark.stop()
-    return 0
+    jobs0 = set(tracker.getJobIdsForGroup(None) or [])
+    shuffle0 = _shuffle_bytes_written(spark)
+    t0 = time.perf_counter()
+    df = fn(spark, sf_dir)
+    t1 = time.perf_counter()
+    n = len(df.collect())
+    t2 = time.perf_counter()
+    new_jobs = sorted(set(tracker.getJobIdsForGroup(None) or []) - jobs0)
+    stages = 0
+    for j in new_jobs:
+        info = tracker.getJobInfo(j)
+        if info is not None:
+            stages += len(info.stageIds)
+    rec = {
+        "total": t2 - t0, "build": t1 - t0, "collect": t2 - t1,
+        "jobs": len(new_jobs), "stages": stages,
+        "shuffle": _shuffle_bytes_written(spark) - shuffle0, "rows": n,
+    }
+    unpersist_tracked()
+    spark.catalog.clearCache()
+    return rec
+
+
+def _fmt(rec: dict) -> str:
+    return (
+        f"total={rec['total']:.3f}s build={rec['build']:.3f}s"
+        f" collect={rec['collect']:.3f}s jobs={rec['jobs']}"
+        f" stages={rec['stages']} shuffle={rec['shuffle']}B"
+        f" rows={rec['rows']}"
+    )
 
 
 if __name__ == "__main__":
