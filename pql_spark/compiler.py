@@ -328,11 +328,14 @@ class Compiler:
                         # same scope as `as` bindings).  materialize()
                         # persists the bound plan so N downstream
                         # references compute the shared prefix once —
-                        # Spark's MEMORY_AND_DISK cache, evicted lazily
+                        # Spark's MEMORY_AND_DISK cache, released with
+                        # the engine's other persists (close())
                         try:
                             bound = self.compile_tabular(stmt.tabular)
                             if stmt.materialize:
-                                bound = bound.persist()
+                                from .operators._util import tracked_persist
+
+                                bound = tracked_persist(bound)
                             self.bindings[stmt.name] = bound
                         except ParseError as e:
                             raise QueryError(self.source, [e]) from None

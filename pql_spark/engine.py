@@ -54,8 +54,10 @@ class PqlEngine:
       query); results are bit-identical (backend-equality tested).
       Side effect: each referenced table is registered as a temp view
       under a collision-proof ``__pql_v<N>_<name>`` name for the
-      duration of the ONE ``spark.sql`` call, then dropped — user temp
-      views of the same name are never touched.
+      duration of the ONE ``spark.sql`` call, then only that name is
+      removed again.  The caller's caches (a persisted resolver frame
+      stays cached) and the caller's temp views of the same name are
+      untouched.
     * ``"df"`` — the DataFrame compiler: one Column-expression
       tree per operator, zero catalog side effects.
     """
@@ -80,14 +82,16 @@ class PqlEngine:
     def close(self) -> int:
         """Drain the PROCESS-GLOBAL tracked-persist registry (see
         ``operators._util.tracked_persist``) so a long-lived session
-        does not pile up cached blocks in executor storage.  The
-        registry is shared by every engine and pipeline in the
-        process — closing one engine evicts blocks persisted by all
-        of them (they stay usable; Spark recomputes evicted plans on
-        next use, a perf cost only).  Matches the bench/test usage of
-        one drain per query; hold eviction until the last live engine
-        closes if several share heavy cached state.  Returns the
-        number of persists evicted.  Safe to call repeatedly."""
+        does not pile up cached blocks in executor storage.  Persists
+        only: queries leave no temp views behind, and the caller's own
+        persists are never touched.  The registry is shared by every
+        engine and pipeline in the process — closing one engine evicts
+        blocks persisted by all of them (they stay usable; Spark
+        recomputes evicted plans on next use, a perf cost only).
+        Matches the bench/test usage of one drain per query; hold
+        eviction until the last live engine closes if several share
+        heavy cached state.  Returns the number of persists evicted.
+        Safe to call repeatedly."""
         from .operators._util import unpersist_tracked
 
         return unpersist_tracked()
@@ -149,57 +153,39 @@ class PqlEngine:
         ``spark.sql`` call.  Each referenced table is registered as a
         temp view under a fresh ``__pql_v<N>_<name>`` name (never the
         bare table name — a user's own temp view of that name survives
-        untouched), and dropped right after ``spark.sql`` returns:
-        analysis is eager, so the returned DataFrame's resolved plan no
-        longer needs the catalog entry."""
+        untouched) for that one call only; see
+        ``operators._util.sql_with_views``."""
+        from .compiler import externaldata_df
+        from .operators._util import sql_with_views
         from .sql_backend import compile_to_sql
 
-        seen: set[str] = set()
-
-        def cols(name: str) -> list[str]:
-            seen.add(name)
-            return self._resolver(name).columns
-
         uid = next(_VIEW_IDS)
-        view_names = {}
+        views: dict[str, DataFrame] = {}
 
         def view_name(name: str) -> str:
-            return view_names.setdefault(name, f"__pql_v{uid}_{name}")
+            v = f"__pql_v{uid}_{name}"
+            if v not in views:
+                views[v] = self._resolver(name)
+            return v
 
-        # option-bearing externaldata (csv/json): served through the
-        # same transient-view device — the reader-backed DataFrame
-        # (declared schema + options) is registered for the one
-        # spark.sql call, then dropped
-        ext_srcs: list = []
+        # option-bearing externaldata (csv/json): the reader-backed
+        # DataFrame (declared schema + options) rides along as one more
+        # view, named ``__pql_v<N>ed<i>`` so no table view's name can
+        # equal it
+        ext_ids = itertools.count()
 
         def ext_view(src) -> str:
-            ext_srcs.append(src)
-            return f"__pql_v{uid}_ed{len(ext_srcs) - 1}"
+            v = f"__pql_v{uid}ed{next(ext_ids)}"
+            views[v] = externaldata_df(self.spark, src)
+            return v
 
         sql = compile_to_sql(
-            text, cols, params,
+            text, lambda name: self._resolver(name).columns, params,
             width=self.spark.sparkContext.defaultParallelism,
             view_name_of=view_name,
             externaldata_view_of=ext_view,
         )
-        registered = []
-        try:
-            for name in seen:
-                if name in view_names:  # referenced in the emitted SQL
-                    self._resolver(name).createOrReplaceTempView(
-                        view_names[name]
-                    )
-                    registered.append(view_names[name])
-            for i, src in enumerate(ext_srcs):
-                from .compiler import externaldata_df
-
-                v = f"__pql_v{uid}_ed{i}"
-                externaldata_df(self.spark, src).createOrReplaceTempView(v)
-                registered.append(v)
-            return self.spark.sql(sql)
-        finally:
-            for v in registered:
-                self.spark.catalog.dropTempView(v)
+        return sql_with_views(self.spark, sql, views)
 
     def to_sql(
         self, text: str, params: Mapping[str, object] | None = None

@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Mapping
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -42,47 +44,51 @@ def rebalance(df: DataFrame, key: str | None = None) -> DataFrame:
     return df.repartition(target, key) if key else df.repartition(target)
 
 
+def sql_with_views(
+    spark: SparkSession, sql: str, views: Mapping[str, DataFrame | None]
+) -> DataFrame:
+    """The one temp-view lifecycle: register each frame under its
+    collision-proof name, run ONE ``spark.sql``, then drop every name
+    in ``views`` again, also when the statement fails.  A ``None``
+    frame names a view that something else registered (a streaming
+    memory sink's); it is only dropped.
+
+    Spark analyses the statement eagerly, so the returned DataFrame no
+    longer needs the names.  The drop goes through the session catalog,
+    which removes only the name: ``spark.catalog.dropTempView`` would
+    also UNCACHE every cache entry whose plan contains the view's plan,
+    evicting the caller's persisted frames and the operators' own."""
+    try:
+        for name, frame in views.items():
+            if frame is not None:
+                frame.createOrReplaceTempView(name)
+        return spark.sql(sql)
+    finally:
+        catalog = spark._jsparkSession.sessionState().catalog()
+        for name in views:
+            catalog.dropTempView(name)
+
+
 def sql_over(frames: dict[str, DataFrame], sql_fmt: str) -> DataFrame:
     """Run ONE ``spark.sql`` over temp views of the given frames.
 
-    ``sql_fmt`` references each frame by ``{alias}``.  Driver-cost
-    device (r16, guide §4's Python-boundary tax in its driver-side
-    form): a chain of N DataFrame operations pays N py4j round trips
-    AND N eager JVM analysis passes while building a plan; registering
-    the input frames as temp views and parsing the whole downstream as
-    one SQL statement yields the same analyzed tree in ONE pass.  The
-    returned DataFrame holds its (already analyzed) plan, so the view
-    names only exist to address the subtrees inside the single parse.
-
-    Yet the views are NOT dropped here: ``dropTempView`` cascades an
-    UNCACHE of every cache entry whose plan contains the view's plan
-    (measured — it silently evicted the curation pipeline's persisted
-    frames, turning three persists into no-ops), and the same applies
-    to the parameterized ``spark.sql(..., df=frame)`` form, whose
-    formatter drops its internal views.  Instead the uuid-named views
-    are registered with the same session-lifecycle tracker as the
-    persists and released by :func:`unpersist_tracked` (which bench
-    and test harnesses already call between queries)."""
-    spark = next(iter(frames.values())).sparkSession
-    names: dict[str, str] = {}
-    for alias, frame in frames.items():
-        names[alias] = track_view(frame, alias)
-    return spark.sql(sql_fmt.format(**names))
-
-
-_TRACKED_VIEWS: list[tuple[object, str]] = []
-
-
-def track_view(frame: DataFrame, alias: str = "v") -> str:
-    """Register ``frame`` as a uuid-named temp view whose lifetime is
-    managed by :func:`unpersist_tracked` (see :func:`sql_over` for why
-    views must not be dropped eagerly).  Returns the view name."""
+    ``sql_fmt`` references each frame by ``{alias}`` (``str.format``:
+    literal braces are doubled).  Driver-cost device (r16, guide §4's
+    Python-boundary tax in its driver-side form): a chain of N
+    DataFrame operations pays N py4j round trips AND N eager JVM
+    analysis passes while building a plan; registering the input frames
+    as temp views and parsing the whole downstream as one SQL statement
+    yields the same analyzed tree in ONE pass.  The views exist only
+    for that one call (:func:`sql_with_views`)."""
     from uuid import uuid4
 
-    nm = f"__sq_{alias}_{uuid4().hex[:8]}"
-    frame.createOrReplaceTempView(nm)
-    _TRACKED_VIEWS.append((frame.sparkSession, nm))
-    return nm
+    spark = next(iter(frames.values())).sparkSession
+    names = {alias: f"__sq_{alias}_{uuid4().hex[:8]}" for alias in frames}
+    return sql_with_views(
+        spark,
+        sql_fmt.format(**names),
+        {names[alias]: frame for alias, frame in frames.items()},
+    )
 
 
 _TRACKED_PERSISTS: list[DataFrame] = []
@@ -104,20 +110,13 @@ def tracked_persist(df: DataFrame) -> DataFrame:
 
 
 def unpersist_tracked() -> int:
-    """Evict every DataFrame registered via :func:`tracked_persist`
-    (and drop every :func:`track_view` temp view); returns how many
-    persists were released.  Safe at any time: Spark recomputes an
-    evicted plan on next use."""
+    """Evict every DataFrame registered via :func:`tracked_persist`;
+    returns how many persists were released.  Safe at any time: Spark
+    recomputes an evicted plan on next use."""
     n = len(_TRACKED_PERSISTS)
     while _TRACKED_PERSISTS:
         try:
             _TRACKED_PERSISTS.pop().unpersist(blocking=False)
-        except Exception:  # noqa: BLE001 — session already stopped
-            pass
-    while _TRACKED_VIEWS:
-        spark, nm = _TRACKED_VIEWS.pop()
-        try:
-            spark.catalog.dropTempView(nm)
         except Exception:  # noqa: BLE001 — session already stopped
             pass
     return n

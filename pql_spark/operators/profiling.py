@@ -70,7 +70,7 @@ def profile_columns(
         return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
     # driver-cost note (r15, extended r16): the whole aggregate+reshape
-    # is emitted as ONE SQL parse over a tracked temp view — the
+    # is emitted as ONE SQL parse over a temp view (sql_over) — the
     # per-column Column-API build cost ~0.4 s of py4j round trips per
     # call, and even the per-expression F.expr form paid eager per-op
     # analysis on the agg/select chain (~0.2 s on the curation QA
@@ -139,7 +139,7 @@ def numeric_histogram(
     if bins <= 0:
         raise ValueError("bins must be positive")
     v = f"CAST(`{col}` AS DOUBLE)"
-    # ONE SQL parse over a tracked temp view (r16) — see the
+    # ONE SQL parse over a temp view (r16, sql_over) — see the
     # profile_columns driver-cost note; the parsed tree matches the
     # old per-op build (project → filter → [broadcast bounds join →]
     # group → project → sort)

@@ -255,24 +255,17 @@ def curate_corpus(
     out = _mark("split", out)
 
     if qa is not None:
+        from .operators._util import sql_over
         from .operators.profiling import numeric_histogram, profile_columns
 
         stages.append(("final", out))
-        spark = out.sparkSession
 
-        def _view(name: str, frame: DataFrame) -> str:
-            # track_view, not an eagerly-dropped view: dropTempView
-            # cascades an UNCACHE of dependent cache entries, which
-            # would evict the pipeline's own persists (see
-            # _util.sql_over)
-            from .operators._util import track_view
+        def _lit(text: str) -> str:
+            # sql_over formats its text: caller-given identifiers and
+            # the `langs` literals in cond_sql keep their braces
+            return text.replace("{", "{{").replace("}", "}}")
 
-            return track_view(frame, f"qa_{name}")
-
-        def _sql(text: str) -> DataFrame:
-            return spark.sql(text)
-
-        idq = f"`{id_col}`"
+        idq = _lit(f"`{id_col}`")
         # cohort label: did the annotated doc survive to the output?
         # (left join on the id — the output is a subset of `annot`, so
         # a match means kept).  text_len instead of raw text keeps the
@@ -280,16 +273,15 @@ def curate_corpus(
         # parse (r16): the old 4-op Column chain paid eager analysis
         # per op over the full annotated lineage; the SQL text yields
         # the same join+project tree in one analysis pass.
-        v_annot = _view("annot", annot)
-        v_out = _view("out", out)
-        labeled = _sql(
+        labeled = sql_over(
+            {"annot": annot, "out": out},
             f"SELECT a.{idq}, a.quality, a.lang_pred,"
-            f" length(a.`{text_col}`) AS text_len,"
+            f" length(a.{_lit(f'`{text_col}`')}) AS text_len,"
             " CASE WHEN o.__qa_kept THEN 'kept' ELSE 'dropped' END"
             " AS cohort"
-            f" FROM {v_annot} a LEFT JOIN"
-            f" (SELECT {idq}, TRUE AS __qa_kept FROM {v_out}) o"
-            f" ON a.{idq} = o.{idq}"
+            " FROM {annot} a LEFT JOIN"
+            f" (SELECT {idq}, TRUE AS __qa_kept FROM {{out}}) o"
+            f" ON a.{idq} = o.{idq}",
         )
         # r15 (guide §1.2 / §5): `labeled` feeds the profile AND both
         # histograms AND two stage counts below — without a persist,
@@ -333,9 +325,9 @@ def curate_corpus(
         # The whole accounting is ONE spark.sql parse instead of the
         # old per-frame agg/explode/union Column chains.
         by_name = {name: i for i, (name, _) in enumerate(stages)}
-        v_labeled = _view("labeled", labeled)
-        v_kept = _view("kept", kept_persisted)
-        v_drops = _view("drops", drops)
+        frames = {
+            "labeled": labeled, "kept": kept_persisted, "drops": drops,
+        }
 
         def _emit(entries: list[tuple[int, str, str]], src: str) -> str:
             structs = ", ".join(
@@ -355,8 +347,8 @@ def curate_corpus(
                     (by_name["quality_lang"], "quality_lang", "__n_ql"),
                 ],
                 "SELECT count(1) AS __n_input,"
-                f" count(CASE WHEN {cond_sql} THEN 1 END) AS __n_ql"
-                f" FROM {v_labeled}",
+                f" count(CASE WHEN {_lit(cond_sql)} THEN 1 END) AS __n_ql"
+                " FROM {labeled}",
             ),
             _emit(
                 [
@@ -370,7 +362,7 @@ def curate_corpus(
                 ],
                 "SELECT count(1) AS __n_exact,"
                 f" count(CASE WHEN d.{idq} IS NULL THEN 1 END) AS __n_post"
-                f" FROM {v_kept} k LEFT JOIN {v_drops} d"
+                " FROM {kept} k LEFT JOIN {drops} d"
                 f" ON k.{idq} = d.{idq}",
             ),
         ]
@@ -380,10 +372,10 @@ def curate_corpus(
                 "near_dup_decontam", "final",
             ):
                 continue
-            v_mid = _view(f"mid{i}", f)
+            frames[f"mid{i}"] = f
             parts.append(
                 f"SELECT {i} AS stage_idx, '{name}' AS stage,"
-                f" count(1) AS rows FROM {v_mid}"
+                f" count(1) AS rows FROM {{mid{i}}}"
             )
-        qa["stage_counts"] = _sql(" UNION ALL ".join(parts))
+        qa["stage_counts"] = sql_over(frames, " UNION ALL ".join(parts))
     return out

@@ -438,6 +438,13 @@ class _SqlEmitter:
                 sql, cols = self.emit_externaldata(expr.source)
             elif isinstance(expr.source, RangeSource):
                 src = expr.source
+                if (
+                    isinstance(src.step, NumberLit)
+                    and float(src.step.text) == 0
+                ):
+                    raise ParseError(
+                        "range step must be non-zero", src.step.span
+                    )
                 step = self.expr(src.step)
                 # bounds inclusive (KQL); Spark's range() TVF end is
                 # exclusive — widen by one step-sign

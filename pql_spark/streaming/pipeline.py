@@ -21,6 +21,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from pql_spark.operators._util import sql_with_views
+
 # (schema, stream_dir) per parquet path — see stream_parquet_table
 _STREAM_SRC_CACHE: dict[tuple, tuple] = {}
 
@@ -368,11 +370,8 @@ def run_available_now_df(
     re-wrapping with ``createDataFrame`` costs ~3 s per 100 k rows of
     pure serialization; use this variant whenever the result feeds
     further DataFrame work."""
-    name = _drain_to_memory(df, output_mode, no_data_batches)
-    spark = df.sparkSession
-    out = spark.sql(f"SELECT * FROM {name}").localCheckpoint()
-    spark.catalog.dropTempView(name)
-    return out
+    out = _drain_to_memory(df, output_mode, no_data_batches)
+    return out.localCheckpoint()
 
 
 def run_available_now(
@@ -394,10 +393,7 @@ def run_available_now(
     the final windows.  Pass ``False`` explicitly for append drains of
     eager operators (stream-stream inner joins, ``dropDuplicates``,
     stateful kernels), which emit their matches in the data batch."""
-    name = _drain_to_memory(df, output_mode, no_data_batches)
-    out = df.sparkSession.sql(f"SELECT * FROM {name}").collect()
-    df.sparkSession.catalog.dropTempView(name)
-    return out
+    return _drain_to_memory(df, output_mode, no_data_batches).collect()
 
 
 _ND_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
@@ -407,9 +403,10 @@ def _drain_to_memory(
     df: DataFrame,
     output_mode: str,
     no_data_batches: bool | None = None,
-) -> str:
+) -> DataFrame:
     """Shared drain: run ``df`` into a uniquely named memory sink with
-    ``availableNow`` and return the sink's temp-view name.
+    ``availableNow`` and return the sink's contents as a DataFrame; the
+    temp view the sink registered is dropped again.
 
     ``no_data_batches`` — see :func:`run_available_now`; ``None``
     resolves to False (skip the finalize batch) for update/complete,
@@ -465,7 +462,7 @@ def _drain_to_memory(
             spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()  # noqa: E501
         except Exception:
             pass
-    return name
+    return sql_with_views(spark, f"SELECT * FROM {name}", {name: None})
 
 
 # ------------------------------------------------------------------ sinks
@@ -695,12 +692,8 @@ def stream_upsert_to_table(
             if others
             else batch_df.dropDuplicates(keys)
         )
-        view = f"__pql_upsert_{batch_id}"
-        dedup.createOrReplaceTempView(view)
-        try:
-            sp.sql(merge_upsert_sql(table, view, keys))
-        finally:
-            sp.catalog.dropTempView(view)
+        view = f"__sq_upsert_{uuid4().hex[:8]}"
+        sql_with_views(sp, merge_upsert_sql(table, view, keys), {view: dedup})
 
     writer = (
         df.writeStream.foreachBatch(merge)
@@ -764,9 +757,12 @@ def stream_near_dup(
     """
     from pql_spark.operators.dedup import band_signature, minhash_signature
 
+    # a NULL text has no shingles, so no signature (as on the batch
+    # paths): the Arrow kernel would sign it as "" and put every
+    # NULL-text doc in the same buckets
     sig = minhash_signature(
-        docs, text_col, id_col, num_perm, shingle_k,
-        impl="pandas", include_shingles=False,
+        docs.filter(F.col(text_col).isNotNull()), text_col, id_col,
+        num_perm, shingle_k, impl="pandas", include_shingles=False,
     )
     banded = band_signature(sig, id_col, num_perm, bands).withColumn(
         "__shard",

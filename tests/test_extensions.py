@@ -520,6 +520,12 @@ def test_range_source(spark):
     ).collect()] == [5, 3, 1]
     with pytest.raises(QueryError, match="non-zero"):
         eng.query("range x from 1 to 5 step 0")
+    # an explicit refusal on the SQL backend too, not an analysis error
+    # that backend="auto" would mask by falling back
+    with pytest.raises(QueryError, match="non-zero"):
+        PqlEngine(spark, resolver={}, backend="sql").query(
+            "range x from 1 to 5 step 0"
+        )
 
 
 def test_make_series_numeric_axis(spark):
@@ -1546,6 +1552,7 @@ def test_series_fit_line_numpy_reference(spark):
 def test_materialize_let(spark, _ff_df):
     from pql_spark import PqlEngine
     from pql_spark.compiler import Compiler
+    from pql_spark.operators._util import unpersist_tracked
     from pql_spark.parser import parse as pql_parse
 
     eng = PqlEngine(spark, resolver={"T": _ff_df})
@@ -1563,7 +1570,9 @@ def test_materialize_let(spark, _ff_df):
     try:
         assert comp.bindings["m"].storageLevel.useMemory
     finally:
-        comp.bindings["m"].unpersist()
+        # a tracked persist: the engine's close() releases it
+        unpersist_tracked()
+    assert not comp.bindings["m"].storageLevel.useMemory
     # SQL backend accepts it as a plain tabular let (no cache in text)
     sql = eng.to_sql(q)
     _ff_df.createOrReplaceTempView("T")

@@ -325,3 +325,21 @@ def test_batch_minhash_and_curation_run_no_python_workers(spark):
             assert _python_nodes(frame) == [], name
     finally:
         unpersist_tracked()
+
+
+def test_curation_qa_reads_its_persists(spark):
+    """The QA report's frames are built over the pipeline's persisted
+    frames through temp views; dropping those views must not UNCACHE
+    them (``spark.catalog.dropTempView`` would), so the executed plans
+    still scan the in-memory cache."""
+    from pql_spark.operators._util import unpersist_tracked
+    from pql_spark.pipelines import curate_corpus
+
+    docs = spark.read.parquet(str(SF_SMOKE / "documents.parquet"))
+    try:
+        qa: dict = {}
+        curate_corpus(docs, qa=qa)
+        for name in ("stage_counts", "profile"):
+            assert "InMemoryTableScan" in executed_plan(qa[name]), name
+    finally:
+        unpersist_tracked()

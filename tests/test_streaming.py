@@ -372,6 +372,31 @@ def test_stream_near_dup_matches_batch_buckets(tmp_path, spark):
     assert len(flagged) >= 30  # every injected near-dup is caught
 
 
+def test_stream_near_dup_null_text_has_no_signature(tmp_path, spark):
+    """A NULL text gets no signature, as on the batch paths: NULL-text
+    docs never share a bucket with each other, and a real near-dup
+    beside them is still flagged."""
+    import pandas as pd
+
+    from pql_spark.streaming import stream_near_dup
+
+    text = " ".join(f"word{i}" for i in range(40))
+    d = tmp_path / "docs"
+    d.mkdir()
+    pd.DataFrame(
+        {
+            "doc_id": [1, 2, 3, 4, 5, 6],
+            "text": [text, text + " tail", "other words entirely here",
+                     None, None, None],
+        }
+    ).to_parquet(d / "a.parquet", index=False)
+    stream = spark.readStream.schema("doc_id long, text string").parquet(
+        str(d)
+    )
+    got = run_available_now(stream_near_dup(stream), "update")
+    assert {(r.doc_id, r.dup_of) for r in got} == {(2, 1)}
+
+
 def test_curate_stream_matches_batch(tmp_path, spark):
     """Composed incremental curation: filters + LSH near-dup over two
     incremental runs equals the batch computation over all files, and

@@ -175,8 +175,8 @@ NOTES = {
         " not a plan defect or a floor.  r14 shaved the constant by"
         " packing the window structs/post-filters as BIGINT micros"
         " (bare-long min for the last step): the CONTROLLED"
-        " same-session A/B (tools/exp_seqdetect_packed.py, identical"
-        " outputs asserted) reads 1.43 -> 1.10 s at sf1 (-23%)."
+        " same-session A/B (PERF_NOTES_r14.md, identical outputs"
+        " asserted) reads 1.43 -> 1.10 s at sf1 (-23%)."
         " Sweep-to-sweep RATIOS cannot resolve a change this size:"
         " across same-day sessions spark_sf10 reads 5.8-8.2 s and the"
         " duck twin 0.77-1.54 s, so the ratio swings 5.3-7.5 on"
