@@ -28,7 +28,9 @@ from pql_spark.sources import parquet_catalog
 
 # --------------------------------------------------------------------- PQL
 # Each entry: (pql_text, oracle_sql).  The PQL runs through the full
-# lexer→parser→DataFrame compiler; the oracle is hand-written ANSI SQL.
+# lexer→parser→SQL emitter and one spark.sql call (PqlEngine.query;
+# the DataFrame compiler only where the SQL backend refuses); the
+# oracle is hand-written ANSI SQL.
 
 PQL_QUERIES: dict[str, tuple[str, str]] = {
     # TPC-H Q1-style pricing summary: where + summarize + sort
@@ -4012,37 +4014,11 @@ def _cat(spark: SparkSession, sf_dir: str):
     return _CAT_CACHE[key]
 
 
-def _pql(
-    text: str, backend: str = "auto"
-) -> Callable[[SparkSession, str], DataFrame]:
-    # backend="auto": the batched SQL compile path (one spark.sql call,
-    # ~1 ms Python compile vs ~0.25 s of per-Column py4j chatter —
-    # VERDICT r10 item 2), falling back to the DataFrame compiler for
-    # the constructs the SQL backend honestly refuses.  Results are
-    # bit-identical (backend-equality tests + every gate's DuckDB hash).
-    # A few execution-bound gates pin backend="df" where the DataFrame
-    # compiler's plan surgery beats the text path at sf1 (see
-    # _PQL_BACKEND_PINS).
+def _pql(text: str) -> Callable[[SparkSession, str], DataFrame]:
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return PqlEngine(
-            spark, resolver=_cat(spark, sf_dir), backend=backend
-        ).query(text)
+        return PqlEngine(spark, resolver=_cat(spark, sf_dir)).query(text)
 
     return run
-
-
-# Gates pinned to the DataFrame compiler when its plan measurably
-# beats the SQL text path at sf1.  EMPTY as of late r11: the CIDR
-# lookups were pinned mid-round (v6 read 14.9 s on the text path),
-# but the attribution chased it to TWO emitter fixes — the
-# Generate-shape emission for literal-prefix lookups, and a pinned
-# REPARTITION(width) passthrough BELOW the parse projections (an
-# argless REBALANCE/REPARTITION hint is AQE-coalesced back to the raw
-# 1-2 scan splits on small shuffle bytes, which serialized the
-# per-row address parse).  With both, the text path now beats the
-# DataFrame plan (sf1 best-of-2: v4 1.74 vs 2.85 s, v6 2.76 vs
-# 3.68 s, bit-equal).  The mechanism stays for future rows.
-_PQL_BACKEND_PINS: dict[str, str] = {}
 
 
 # multi-output (facet/fork) queries: one gated entry per output table
@@ -7160,7 +7136,7 @@ _CHECK_FIRST = [
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-        name: _pql(text, _PQL_BACKEND_PINS.get(name, "auto"))
+        name: _pql(text)
         for name, (text, _) in PQL_QUERIES.items()
     }
     out.update(

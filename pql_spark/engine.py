@@ -8,17 +8,15 @@ a lazy DataFrame — Catalyst plans it, nothing executes until an action.
 from __future__ import annotations
 
 import itertools
-import logging
 from collections.abc import Callable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
 from .compiler import Compiler, MultiResult, Resolver
-from .parser import parse
+from .parser import QueryError, parse
+from .sql_backend import Unsupported
 
 __all__ = ["MultiResult", "PqlEngine", "compile_pql", "parse"]
-
-logger = logging.getLogger(__name__)
 
 # collision-proof temp-view names for the SQL backend (process-wide
 # counter: two engines in one session never reuse a name)
@@ -34,32 +32,25 @@ class PqlEngine:
     (pql.go:25-30): identifiers substituted at compile time, bound here as
     typed literal values.
 
-    ``backend`` picks the compile path for :meth:`query`:
+    :meth:`query` compiles to one Spark SQL string and submits it with a
+    single ``spark.sql`` call: ~1 ms of Python compile where the
+    DataFrame compiler pays one py4j round trip per Column op.  Each
+    referenced table is registered as a temp view under a
+    collision-proof ``__pql_v<N>_<name>`` name for that one call, then
+    only the name is removed again; the caller's caches and same-named
+    temp views are untouched.
 
-    * ``"auto"`` (default since r12) — try ``"sql"``, fall back to
-      ``"df"`` on the constructs the SQL backend honestly refuses
-      (schema-less ``pivot``/``bag_unpack``, ``ipv*_lookup
-      return_unmatched``, ``pack_all()``, multi-output
-      ``facet``/``fork``; since r12 ``externaldata`` csv/json rides
-      the same transient-view device and no longer falls back —
-      only bare ``to_sql()`` still refuses it).  Fallbacks are
-      counted on :attr:`sql_fallbacks`; an unexpected one (emitted SQL
-      failing Spark analysis — a backend bug, not a documented
-      refusal) is also logged at WARNING so silent perf regressions
-      are observable.
-    * ``"sql"`` — compile to one Spark SQL string and submit it with a
-      SINGLE ``spark.sql`` call.  Python compile time drops from ~0.25 s
-      to ~1 ms on deep pipelines (the DataFrame path pays one py4j
-      round-trip per Column op — ~1000 on a sequence_detect-class
-      query); results are bit-identical (backend-equality tested).
-      Side effect: each referenced table is registered as a temp view
-      under a collision-proof ``__pql_v<N>_<name>`` name for the
-      duration of the ONE ``spark.sql`` call, then only that name is
-      removed again.  The caller's caches (a persisted resolver frame
-      stays cached) and the caller's temp views of the same name are
-      untouched.
-    * ``"df"`` — the DataFrame compiler: one Column-expression
-      tree per operator, zero catalog side effects.
+    Only the SQL backend decides when a query needs the DataFrame
+    compiler: when it raises its refusal (``sql_backend.Unsupported`` —
+    ``scan``, multi-output ``facet``/``fork``, schema-less
+    ``pivot``/``bag_unpack``, ``diffpatterns``/``autocluster`` without
+    a column list, ``ipv*_lookup return_unmatched``, ``mv-expand``/
+    ``mv-apply`` over a known map), :meth:`query` compiles once more
+    with :func:`compile_pql` and counts it on :attr:`sql_fallbacks`.
+    Every other error — a user error, or emitted SQL that fails Spark
+    analysis — propagates from the one SQL compile.  :func:`compile_pql`
+    stays public: the DataFrame compiler on its own, with zero catalog
+    side effects.
     """
 
     def __init__(
@@ -67,16 +58,12 @@ class PqlEngine:
         spark: SparkSession,
         resolver: Resolver | Mapping[str, DataFrame] | None = None,
         params: Mapping[str, object] | None = None,
-        backend: str = "auto",
     ):
-        if backend not in ("df", "sql", "auto"):
-            raise ValueError(f"unknown backend {backend!r}")
         self.spark = spark
         self._resolver = _as_resolver(spark, resolver)
         self._params = dict(params or {})
-        self._backend = backend
-        #: number of times backend="auto" fell back to the DataFrame
-        #: path (documented refusals + analysis failures combined)
+        #: number of queries the SQL backend refused and
+        #: :func:`compile_pql` built instead
         self.sql_fallbacks = 0
 
     def close(self) -> int:
@@ -109,44 +96,13 @@ class PqlEngine:
         merged = dict(self._params)
         if params:
             merged.update(params)
-        if self._backend in ("sql", "auto"):
-            try:
-                return self._query_via_sql(text, merged)
-            except Exception as e:
-                if self._backend == "sql":
-                    raise
-                # auto: fall back ONLY on the documented refusal type
-                # (QueryError from the SQL compiler) and Spark analysis
-                # failures; anything else (a bad parameter binding, an
-                # injected bug) would hide an SQL-backend defect behind
-                # the silent slow path, so it raises instead of
-                # degrading.  Analysis failures are usually USER errors
-                # (unknown column — the DataFrame path raises the same
-                # AnalysisException), so the backend-bug warning only
-                # fires when the DataFrame path SUCCEEDS where the
-                # emitted SQL did not.
-                from pyspark.errors import AnalysisException
-
-                from .parser import QueryError
-
-                if isinstance(e, QueryError):
-                    self.sql_fallbacks += 1
-                    logger.debug(
-                        "sql backend refused, using DataFrame path: %s", e
-                    )
-                elif isinstance(e, AnalysisException):
-                    self.sql_fallbacks += 1
-                    df = compile_pql(text, self._resolver, merged)
-                    logger.warning(
-                        "sql backend emitted SQL that failed Spark"
-                        " analysis but the DataFrame path succeeded"
-                        " (likely a pql_spark bug — the fallback masks"
-                        " a perf regression): %s", e,
-                    )
-                    return df
-                else:
-                    raise
-        return compile_pql(text, self._resolver, merged)
+        try:
+            return self._query_via_sql(text, merged)
+        except QueryError as e:
+            if not any(isinstance(x, Unsupported) for x in e.errors):
+                raise
+            self.sql_fallbacks += 1
+            return compile_pql(text, self._resolver, merged)
 
     def _query_via_sql(self, text: str, params: dict) -> DataFrame:
         """The batched compile path: PQL → one SQL string → ONE
@@ -180,7 +136,7 @@ class PqlEngine:
             return v
 
         sql = compile_to_sql(
-            text, lambda name: self._resolver(name).columns, params,
+            text, lambda name: self._resolver(name).schema, params,
             width=self.spark.sparkContext.defaultParallelism,
             view_name_of=view_name,
             externaldata_view_of=ext_view,
@@ -199,7 +155,7 @@ class PqlEngine:
         if params:
             merged.update(params)
         return compile_to_sql(
-            text, lambda n: self._resolver(n).columns, merged,
+            text, lambda n: self._resolver(n).schema, merged,
             width=self.spark.sparkContext.defaultParallelism,
         )
 
@@ -215,7 +171,7 @@ class PqlEngine:
         if params:
             merged.update(params)
         return compile_to_sql_multi(
-            text, lambda n: self._resolver(n).columns, merged
+            text, lambda n: self._resolver(n).schema, merged
         )
 
 

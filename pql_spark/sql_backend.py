@@ -18,7 +18,14 @@ the golden corpus.
 
 Schema knowledge: SQL text can't introspect, so the caller provides
 per-table column lists (needed to expand ``*`` at joins and rename
-right-side duplicates to ``$right.<col>``, JoinInner golden).
+right-side duplicates to ``$right.<col>``, JoinInner golden), or Spark
+schemas, whose MAP columns the emitter tracks so ``mv-expand`` over a
+bag is refused instead of emitted as array expansion.
+
+Refusals: a construct this module cannot express but the DataFrame
+compiler can raises :class:`Unsupported`, wrapped in the usual
+``QueryError``.  ``PqlEngine.query`` compiles such a query again with
+``compile_pql``; every other error is the user's and is final.
 """
 
 from __future__ import annotations
@@ -145,6 +152,33 @@ from .parser import ParseError, QueryError, parse
 __all__ = ["compile_to_sql"]
 
 ColumnsOf = Callable[[str], Sequence[str]]
+
+
+class Unsupported(ParseError):
+    """The SQL backend's refusal: a construct it cannot emit but the
+    DataFrame compiler (``engine.compile_pql``) builds.  The only
+    error on which ``PqlEngine.query`` compiles a second time."""
+
+
+# functions whose result this backend emits as a Spark MAP — an
+# operand assigned from one is a known bag (see ``_SqlEmitter.maps``)
+_MAP_FUNCS = frozenset({
+    "bag_pack", "pack", "pack_all", "bag_set_key", "bag_remove_keys",
+    "bag_merge", "make_bag", "make_bag_if", "parse_urlquery",
+})
+
+
+def _names_and_maps(columns) -> tuple[list[str], set[str]]:
+    """A table's column names, plus its MAP columns' names when
+    ``columns`` is a Spark schema (a plain name list marks none)."""
+    fields = getattr(columns, "fields", None)
+    if fields is None:
+        return list(columns), set()
+    return (
+        [f.name for f in fields],
+        {f.name for f in fields if f.dataType.typeName() == "map"},
+    )
+
 
 # binary-op precedence for minimal parenthesization (parser.go:991-1007)
 _PREC = {
@@ -425,12 +459,17 @@ class _SqlEmitter:
         # emitting graph-match where/project — ident() must resolve
         # them as ONE quoted identifier, not a struct-field path
         self._flat_cols: frozenset[str] | None = None
+        # columns of the current pipeline known to hold a MAP: a source
+        # table's MAP columns, or a name last assigned from a
+        # _MAP_FUNCS call (pipeline-scoped, like last_sort)
+        self.maps: set[str] = set()
 
     # ------------------------------------------------------------ pipeline
 
     def emit_query(self, expr: TabularExpr) -> tuple[str, list[str]]:
-        saved = (self.last_sort, self.window, self._graph)
+        saved = (self.last_sort, self.window, self._graph, self.maps)
         self.last_sort, self.window, self._graph = None, None, None
+        self.maps = set()
         try:
             if isinstance(expr.source, DatatableSource):
                 sql, cols = self.emit_datatable(expr.source)
@@ -461,7 +500,9 @@ class _SqlEmitter:
                     sql, cols = self.bound[name]
                 else:
                     try:
-                        cols = list(self.columns_of(name))
+                        cols, self.maps = _names_and_maps(
+                            self.columns_of(name)
+                        )
                     except ParseError:
                         raise
                     except Exception as e:  # resolver miss → same
@@ -473,8 +514,9 @@ class _SqlEmitter:
                     sql = f"SELECT * FROM {_q(self.view_name_of(name))}"
             for op in expr.operators:
                 sql, cols = self.emit_op(op, sql, cols)
+                self.maps &= set(cols)
         finally:
-            self.last_sort, self.window, self._graph = saved
+            self.last_sort, self.window, self._graph, self.maps = saved
         return sql, cols
 
     def emit_externaldata(
@@ -507,7 +549,7 @@ class _SqlEmitter:
                 " the self-describing path-scan formats (parquet, orc)"
                 " with no reader options — Spark SQL has no inline"
                 " OPTIONS syntax (csv/json need CREATE ... USING DDL)."
-                " PqlEngine(backend='sql'|'auto').query() handles"
+                " PqlEngine.query() handles"
                 " csv/json by registering a transient reader-backed"
                 " temp view; plain to_sql() cannot",
                 src.span,
@@ -623,6 +665,12 @@ class _SqlEmitter:
                 # REPARTITION hint on the aggregate's INPUT (wrapped in
                 # a subquery so the hint binds below the Aggregate,
                 # matching the DataFrame backend's pre-agg repartition)
+                for c in op.shufflekey:
+                    if c not in cols:
+                        raise ParseError(
+                            f"hint.shufflekey: unknown column {c!r}",
+                            op.span,
+                        )
                 parts = [str(op.num_partitions)] if op.num_partitions else []
                 parts += [_q(c) for c in op.shufflekey]
                 inner = (
@@ -739,6 +787,7 @@ class _SqlEmitter:
     def _emit_mv_expand_core(
         self, op: MvExpandOp, inner: str, cols: list[str]
     ) -> tuple[str, list[str]]:
+        self._refuse_maps(op, "mv-expand")
         if True:
             if len(op.cols) > 1:
                 return self._emit_mv_expand_zip(op, inner, cols)
@@ -843,6 +892,7 @@ class _SqlEmitter:
                     )
                 mapping[old] = new
             out = [mapping.get(c, c) for c in cols]
+            self.maps = {mapping.get(c, c) for c in self.maps}
             items = ", ".join(
                 f"{_q(c)} AS {_q(mapping.get(c, c))}" for c in cols
             )
@@ -930,11 +980,12 @@ class _SqlEmitter:
             return self.emit_top_nested(op, inner, cols)
         if isinstance(op, PivotOp):
             if op.schema is None:
-                raise ParseError(
+                raise Unsupported(
                     "evaluate pivot without an output-schema"
                     " annotation is data-dependent — declare it"
                     " (`evaluate pivot(col[, agg]) : (name: type,"
-                    " …)`) or use the DataFrame backend",
+                    " …)`); PqlEngine.query / compile_pql discover it"
+                    " on the DataFrame backend",
                     op.span,
                 )
             from .parser import _DATATABLE_TYPES
@@ -1025,11 +1076,12 @@ class _SqlEmitter:
             return self._emit_graph_match(op)
         if isinstance(op, BagUnpackOp):
             if op.schema is None:
-                raise ParseError(
+                raise Unsupported(
                     "evaluate bag_unpack without an output-schema"
                     " annotation is data-dependent — declare it"
-                    " (`evaluate bag_unpack(col) : (name: type, …)`)"
-                    " or use the DataFrame backend",
+                    " (`evaluate bag_unpack(col) : (name: type, …)`);"
+                    " PqlEngine.query / compile_pql discover it on the"
+                    " DataFrame backend",
                     op.span,
                 )
             from .parser import _DATATABLE_TYPES
@@ -1043,8 +1095,8 @@ class _SqlEmitter:
             # JSON-string bag, so the extraction is TYPE-AGNOSTIC
             # (r12 — the old CAST(col AS STRING) returned Spark's
             # `{k -> v}` rendering for maps, not JSON, so every map
-            # key read NULL once backend=auto made this the executed
-            # path): branch 1 re-serializes the bag through
+            # key read NULL once the SQL path became the executed
+            # one): branch 1 re-serializes the bag through
             # to_json(named_struct(…)) — a MAP becomes a real JSON
             # object at `$.__pql_bag.key`, while a STRING bag becomes
             # a quoted scalar there (path misses → NULL); branch 2 is
@@ -1113,9 +1165,9 @@ class _SqlEmitter:
         if isinstance(op, PartitionOp):
             return self._emit_partition(op, inner, cols)
         if isinstance(op, ScanOp):
-            raise ParseError(
+            raise Unsupported(
                 "scan's sequential automaton requires the DataFrame"
-                " backend",
+                " backend (PqlEngine.query / compile_pql)",
                 op.span,
             )
         if isinstance(op, SerializeOp):
@@ -1719,7 +1771,7 @@ class _SqlEmitter:
                     op.split_col.span,
                 )
             if not op.cols:
-                raise ParseError(
+                raise Unsupported(
                     "diffpatterns: list the columns explicitly in the"
                     " SQL backend (no schema to pick string columns"
                     " from)",
@@ -1733,8 +1785,8 @@ class _SqlEmitter:
                     )
             if len(names) > 6:
                 raise ParseError(
-                    f"diffpatterns: at most 6 columns"
-                    f" (got {len(names)})",
+                    f"diffpatterns: at most 6 columns (got {len(names)};"
+                    " the cube grows 2^k)",
                     op.span,
                 )
             k = len(names)
@@ -1798,7 +1850,7 @@ class _SqlEmitter:
             )
         if isinstance(op, AutoclusterOp):
             if not op.cols:
-                raise ParseError(
+                raise Unsupported(
                     "autocluster: list the columns explicitly in the"
                     " SQL backend (no schema to pick string columns"
                     " from)",
@@ -1812,7 +1864,8 @@ class _SqlEmitter:
                     )
             if len(names) > 6:
                 raise ParseError(
-                    f"autocluster: at most 6 columns (got {len(names)})",
+                    f"autocluster: at most 6 columns (got {len(names)};"
+                    " the cube grows 2^k)",
                     op.span,
                 )
             k = len(names)
@@ -1863,8 +1916,8 @@ class _SqlEmitter:
             # window aggregates over the same (keys, ts desc) spec —
             # Catalyst stacks the WindowExecs on one Sort when specs
             # match.  Replaces the r≤11 N-1 union + running-min form
-            # this path had kept for textual auditability: with
-            # backend=auto the SQL emission became the EXECUTED plan,
+            # this path had kept for textual auditability: since
+            # r12 the SQL emission is the EXECUTED plan,
             # and the union form's n-1 sort shuffles were the
             # unattributed 5.3× sf1 scaling row (BENCH_SCALING_r11
             # 2.82 s vs 0.53 s twin; PERF_NOTES_r12 decomposition).
@@ -2057,9 +2110,21 @@ class _SqlEmitter:
                 f"SELECT * FROM {inner} WHERE coalesce({hits}, FALSE)",
                 cols,
             )
-        raise ParseError(
+        raise Unsupported(
             f"SQL backend: unsupported operator {type(op).__name__}", op.span
         )
+
+    def _refuse_maps(self, op: MvExpandOp | MvApplyOp, what: str) -> None:
+        """Expansion below is positional (arrays); a bag expands per
+        property, which the DataFrame compiler decides from the type."""
+        for c in op.cols:
+            if self._known_map(c):
+                raise Unsupported(
+                    f"{what} over a map (bag) column: the SQL backend"
+                    " expands arrays only — PqlEngine.query / compile_pql"
+                    " expand bags on the DataFrame backend",
+                    c.span,
+                )
 
     def _emit_mv_apply(
         self, op: MvApplyOp, inner: str, cols: list[str]
@@ -2070,6 +2135,7 @@ class _SqlEmitter:
         where/extend/project stay row-local, sort+take/top become a
         per-record rank window, summarize a GROUP BY on the record id
         with record-constant columns carried via first()."""
+        self._refuse_maps(op, "mv-apply")
         ROW, IDX = "__mv_row", "__mv_idx"
         names = [self.col_spec(c)[0] for c in op.cols]
         # bare array EXPRESSIONS (col_spec's item carries the alias)
@@ -2248,9 +2314,9 @@ class _SqlEmitter:
         )
         names = [name for name, _ in specs]
         # slice(e, 1, size(e)) is an identity for arrays but a type
-        # error for maps — surfaces map inputs at analysis time instead
-        # of silently key-looking-up integer indexes (no schema is
-        # available in the text backend to reject earlier)
+        # error for maps — surfaces a map not known to _refuse_maps at
+        # analysis time instead of silently key-looking-up integer
+        # indexes
         elems = {
             name: (
                 f"try_element_at(slice({e}, 1, size({e})),"
@@ -2795,9 +2861,10 @@ class _SqlEmitter:
         identity)."""
         pname = "ipv6_lookup" if op.v6 else "ipv4_lookup"
         if op.return_unmatched:
-            raise ParseError(
+            raise Unsupported(
                 f"{pname}: return_unmatched is only supported on"
-                " the DataFrame backend",
+                " the DataFrame backend (PqlEngine.query /"
+                " compile_pql)",
                 op.span,
             )
         right_sql, right_cols = self.emit_query(op.right)
@@ -3111,12 +3178,29 @@ class _SqlEmitter:
     def col_spec(self, spec: ColSpec) -> tuple[str, str]:
         """Returns (output name, SELECT item) per the naming rules:
         Name=Expr | bare Name (identity) | bare Expr (source text)."""
-        if spec.name is not None and spec.expr is not None:
-            return spec.name, f"{self.expr(spec.expr)} AS {_q(spec.name)}"
-        if spec.name is not None:
+        if spec.name is not None and spec.expr is None:
             return spec.name, _q(spec.name)
-        name = spec.expr.source(self.text).strip()
+        name = spec.name or spec.expr.source(self.text).strip()
+        if self._known_map(spec):
+            self.maps.add(name)
+        else:
+            self.maps.discard(name)
         return name, f"{self.expr(spec.expr)} AS {_q(name)}"
+
+    def _known_map(self, spec: ColSpec) -> bool:
+        """Is the value of ``spec`` a MAP on this emitter's evidence: a
+        column in ``self.maps`` or a call of a ``_MAP_FUNCS`` function?
+        Anything else is emitted as an array."""
+        e = spec.expr
+        if e is None:
+            return spec.name in self.maps
+        if isinstance(e, Ident):
+            return e.simple and e.parts[0] in self.maps
+        return (
+            isinstance(e, CallExpr)
+            and e.func not in self.let_funcs
+            and e.func.lower() in _MAP_FUNCS
+        )
 
     # ---------------------------------------------------------- expressions
 
@@ -3177,7 +3261,7 @@ class _SqlEmitter:
             )
         if isinstance(e, CallExpr):
             return self.call(e)
-        raise ParseError(
+        raise Unsupported(
             f"SQL backend: unsupported expression {type(e).__name__}", e.span
         )
 
@@ -3335,7 +3419,8 @@ class _SqlEmitter:
             # string-valued bag of every current column, like the DF
             # compiler's create_map (r7: the operator-level column
             # context `_cur_cols` is exactly the needed schema)
-            argc(0, 0)
+            if args:
+                raise ParseError("pack_all() takes no arguments", e.span)
             cur = getattr(self, "_cur_cols", None)
             if not cur:
                 raise ParseError(
@@ -5003,19 +5088,12 @@ class _SqlEmitter:
             # device and identical FP op order as the DataFrame build,
             # so results are bit-identical across backends.
             argc(3, 3)
-            for k in (1, 2):
-                if not isinstance(args[k], NumberLit) or args[k].is_float:
-                    raise ParseError(
-                        f"{name}() period/points must be integer"
-                        " literals",
-                        e.span,
-                    )
-            p = int(args[1].text)
-            points = int(args[2].text)
+            p = lit_int(1)
             if p < 1:
-                raise ParseError(f"{name}() period must be >= 1", e.span)
+                raise ParseError(f"{e.func}() period must be >= 1", e.span)
+            points = lit_int(2)
             if points < 1:
-                raise ParseError(f"{name}() points must be >= 1", e.span)
+                raise ParseError(f"{e.func}() points must be >= 1", e.span)
             lo, hi = (p - 1) // 2, p // 2
 
             def bind(x: str, v: str, body: str) -> str:
@@ -5118,18 +5196,14 @@ class _SqlEmitter:
             # exponential text duplication
             anomalies = name == "series_decompose_anomalies"
             argc(2, 3 if anomalies else 2)
-            if not isinstance(args[1], NumberLit) or args[1].is_float:
-                raise ParseError(
-                    f"{name}() period must be an integer literal", e.span
-                )
-            p = int(args[1].text)
+            p = lit_int(1)
             if p < 1:
-                raise ParseError(f"{name}() period must be >= 1", e.span)
+                raise ParseError(f"{e.func}() period must be >= 1", e.span)
             threshold = 1.5
             if anomalies and len(args) == 3:
                 if not isinstance(args[2], NumberLit):
                     raise ParseError(
-                        f"{name}() threshold must be a number literal",
+                        f"{e.func}() threshold must be a number literal",
                         e.span,
                     )
                 threshold = float(args[2].text)
@@ -5292,7 +5366,9 @@ class _SqlEmitter:
                 f" ({self.expr(args[1])}) + 1, {length})"
             )
         if name in ("has_ipv4", "has_any_ipv4", "has_ipv4_prefix"):
-            argc(2, 2 if name != "has_any_ipv4" else 99)
+            argc(2, 99)
+            if name != "has_any_ipv4":
+                argc(2, 2)
             src = self.expr(args[0])
             octs = [
                 "TRY_CAST(try_element_at(split(__hi_x, '\\\\.'),"
@@ -5721,9 +5797,10 @@ def compile_to_sql(
 ) -> str:
     """Compile one PQL query to a Spark SQL string.
 
-    ``columns`` supplies each referenced table's column list (mapping or
-    callable) — required to expand ``*`` at joins and reproduce the
-    ``$right.<col>`` duplicate-naming rule.  ``width`` (optional) pins
+    ``columns`` supplies each referenced table's column list or Spark
+    schema (mapping or callable) — required to expand ``*`` at joins
+    and reproduce the ``$right.<col>`` duplicate-naming rule; a schema
+    also marks MAP columns, so ``mv-expand`` over one is refused.  ``width`` (optional) pins
     expensive-parse repartition hints to an explicit partition count
     (AQE coalesces argless hints); pass the cluster's default
     parallelism when a session is at hand, as ``PqlEngine`` does.
@@ -5735,23 +5812,18 @@ def compile_to_sql(
     temp-view name the caller promises to register — the engine's
     device for serving option-bearing formats on the SQL path.
     """
-    emitter, expr = _prepare_emitter(
-        text, columns, params, width, view_name_of, externaldata_view_of
-    )
-    if expr.operators and isinstance(
-        expr.operators[-1], (FacetOp, ForkOp)
-    ):
-        raise QueryError(
-            text,
-            [
-                ParseError(
-                    "multi-output query (facet/fork): use"
-                    " compile_to_sql_multi",
-                    expr.operators[-1].span,
-                )
-            ],
-        )
     try:
+        emitter, expr = _prepare_emitter(
+            text, columns, params, width, view_name_of, externaldata_view_of
+        )
+        if expr.operators and isinstance(
+            expr.operators[-1], (FacetOp, ForkOp)
+        ):
+            raise Unsupported(
+                "multi-output query (facet/fork): use"
+                " compile_to_sql_multi",
+                expr.operators[-1].span,
+            )
         sql, _ = emitter.emit_query(expr)
     except ParseError as e:
         raise QueryError(text, [e]) from None
@@ -5767,9 +5839,9 @@ def compile_to_sql_multi(
     Spark SQL string per output table (same names as the DataFrame
     backend's ``MultiResult``).  Single-output queries come back as
     ``{"main": sql}``."""
-    emitter, expr = _prepare_emitter(text, columns, params)
-    last = expr.operators[-1] if expr.operators else None
     try:
+        emitter, expr = _prepare_emitter(text, columns, params)
+        last = expr.operators[-1] if expr.operators else None
         if not isinstance(last, (FacetOp, ForkOp)):
             sql, _ = emitter.emit_query(expr)
             return {"main": sql}
@@ -5808,14 +5880,15 @@ def compile_to_sql_multi(
                     raise ParseError(
                         f"fork: duplicate branch name {name!r}", br.span
                     )
-                saved = (emitter.last_sort, emitter.window)
+                saved = (emitter.last_sort, emitter.window, emitter.maps)
                 emitter.last_sort, emitter.window = None, None
+                emitter.maps = set(saved[2])
                 try:
                     sql, cols = base_sql, list(base_cols)
                     for op in br.ops:
                         sql, cols = emitter.emit_op(op, sql, cols)
                 finally:
-                    emitter.last_sort, emitter.window = saved
+                    emitter.last_sort, emitter.window, emitter.maps = saved
                 out[name] = sql
         return out
     except ParseError as e:

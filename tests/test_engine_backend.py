@@ -1,20 +1,24 @@
-"""PqlEngine backend="sql"/"auto" — the batched compile path (r11).
+"""PqlEngine.query — one SQL compile, the DataFrame compiler only on a
+refusal.
 
-The SQL path must be bit-equal to the DataFrame compiler, resolve
-referenced tables through TRANSIENT collision-proof temp views (r12:
-a user's own same-named temp view must survive a query untouched),
-honor params, and (auto) fall back to the DataFrame compiler on the
-SQL backend's documented refusals instead of erroring — counting the
-fallback, and raising on anything that is not a documented refusal
-or an analysis failure.
+The query is compiled to one Spark SQL string and run with one
+``spark.sql`` call over TRANSIENT collision-proof temp views (a user's
+own same-named temp view survives untouched), with params bound.  Only
+when the SQL backend raises its refusal (``sql_backend.Unsupported``)
+does ``query`` compile again with ``engine.compile_pql``, exactly once,
+and count it on ``sql_fallbacks``.  User errors and emitted SQL that
+fails Spark analysis propagate from the one SQL compile.
 """
 
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
-from pql_spark import PqlEngine
+import pql_spark.engine as engine_mod
+from pql_spark import MultiResult, PqlEngine, compile_pql
+from pql_spark.parser import QueryError
 
 
 @pytest.fixture(scope="module")
@@ -27,7 +31,37 @@ def tables(spark):
         [("u0", "alpha"), ("u1", "beta"), ("u2", "gamma")],
         "user string, team string",
     )
-    return {"EV": ev, "DIM": dim}
+    m = spark.sql(
+        "SELECT id, map('a', id, 'b', id * 2) AS mp,"
+        " array(id, id + 1) AS arr, 'x,y' AS s,"
+        " to_json(named_struct('k', id)) AS bag,"
+        " concat('10.0.0.', id) AS ip FROM range(3)"
+    )
+    nets = spark.createDataFrame(
+        [("10.0.0.0/31", "low")], "cidr string, net_name string"
+    )
+    return {"EV": ev, "DIM": dim, "M": m, "NETS": nets}
+
+
+@pytest.fixture
+def pql_calls(monkeypatch):
+    """Counts the engine's calls of ``compile_pql``."""
+    calls = []
+    orig = engine_mod.compile_pql
+
+    def counted(*a, **k):
+        calls.append(a[0])
+        return orig(*a, **k)
+
+    monkeypatch.setattr(engine_mod, "compile_pql", counted)
+    return calls
+
+
+def _rows(res):
+    """Comparable rows of a DataFrame or of every MultiResult table."""
+    if isinstance(res, MultiResult):
+        return {k: _rows(res[k]) for k in res}
+    return res.columns, sorted(repr(tuple(r)) for r in res.collect())
 
 
 QUERIES = [
@@ -42,18 +76,104 @@ QUERIES = [
 
 @pytest.mark.parametrize("q", QUERIES)
 def test_sql_backend_bit_equal(spark, tables, q):
-    df_rows = sorted(
+    df_rows = sorted(map(tuple, compile_pql(q, tables.__getitem__).collect()))
+    sql_rows = sorted(
         map(tuple, PqlEngine(spark, resolver=tables).query(q).collect())
     )
-    sql_rows = sorted(
-        map(
-            tuple,
-            PqlEngine(spark, resolver=tables, backend="sql")
-            .query(q)
-            .collect(),
-        )
-    )
     assert sql_rows == df_rows and len(df_rows) > 0
+
+
+REFUSALS = [
+    "EV | scan by user order by event_id asc with ("
+    " step hi: value > 30; step lo: value < 10; )"
+    " | summarize n = count()",
+    # a refusal inside a let binding is a refusal too
+    "let t = EV | scan order by event_id asc with ( step hi: value > 30; );"
+    " t | count",
+    "EV | facet by user with ( summarize n = count() )",
+    "EV | fork a = ( where value > 10 | count ) ( count )",
+    "M | evaluate bag_unpack(bag)",
+    "EV | project event_id, user | evaluate pivot(user)",
+    'EV | extend cohort = iff(value > 25, "A", "B")'
+    ' | evaluate diffpatterns(cohort, "A", "B")',
+    "EV | evaluate autocluster(5)",
+    "M | evaluate ipv4_lookup(NETS, ip, cidr, return_unmatched)",
+    "M | mv-expand mp",
+    'M | extend m = bag_pack("x", 1, "y", 2) | mv-expand m',
+]
+
+
+@pytest.mark.parametrize("q", REFUSALS)
+def test_refusal_compiles_once_on_the_dataframe_path(
+    spark, tables, pql_calls, q
+):
+    eng = PqlEngine(spark, resolver=tables)
+    got = eng.query(q)
+    assert pql_calls == [q] and eng.sql_fallbacks == 1
+    assert _rows(got) == _rows(compile_pql(q, tables.__getitem__))
+
+
+def test_mv_apply_over_a_map_is_refused(spark, tables, pql_calls):
+    # the DataFrame compiler reads the type and reports the user error
+    q = "M | mv-apply e = mp on ( take 1 )"
+    with pytest.raises(QueryError, match="requires array values"):
+        PqlEngine(spark, resolver=tables).query(q)
+    assert pql_calls == [q]
+
+
+@pytest.mark.parametrize(
+    "q, err, match",
+    [
+        ("EV | where", QueryError, "1:11: unexpected end of input"),
+        ("EV | where nope > 1", AnalysisException, "nope"),
+        (
+            "EV | summarize hint.shufflekey = nope count() by user",
+            QueryError,
+            "1:6: hint.shufflekey: unknown column 'nope'",
+        ),
+        ("NoSuchTable | count", QueryError, "unknown table"),
+    ],
+)
+def test_user_errors_never_reach_compile_pql(
+    spark, tables, pql_calls, q, err, match
+):
+    eng = PqlEngine(spark, resolver=tables)
+    with pytest.raises(err, match=match):
+        eng.query(q)
+    assert pql_calls == [] and eng.sql_fallbacks == 0
+
+
+def test_analysis_failure_propagates(spark, tables, pql_calls, monkeypatch):
+    # emitted SQL that fails Spark analysis is a backend bug to see,
+    # not a cue to retry on the DataFrame path
+    import pql_spark.sql_backend as sb
+
+    monkeypatch.setattr(
+        sb, "compile_to_sql", lambda *a, **k: "SELECT no_such_col FROM range(1)"
+    )
+    eng = PqlEngine(spark, resolver=tables)
+    with pytest.raises(AnalysisException, match="no_such_col"):
+        eng.query("EV | count")
+    assert pql_calls == [] and eng.sql_fallbacks == 0
+
+
+@pytest.mark.parametrize(
+    "q",
+    [
+        "M | mv-expand arr",
+        'M | extend p = split(s, ",") | mv-expand p',
+        'M | extend m = bag_pack("x", 1) | extend m = split(s, ",")'
+        " | mv-expand m",
+        "M | mv-apply x = arr on ( where x > 1 )",
+        "EV | make-series n = count() default = 0"
+        " on event_id from 0 to 40 step 10 by user"
+        " | mv-expand n, event_id",
+    ],
+)
+def test_arrays_stay_on_sql(spark, tables, pql_calls, q):
+    got = PqlEngine(spark, resolver=tables).query(q)
+    assert pql_calls == []
+    assert _rows(got) == _rows(compile_pql(q, tables.__getitem__))
 
 
 def test_sql_backend_preserves_user_views(spark, tables):
@@ -62,7 +182,7 @@ def test_sql_backend_preserves_user_views(spark, tables):
     user_ev = spark.createDataFrame([(99,)], "sentinel long")
     user_ev.createOrReplaceTempView("EV")
     try:
-        eng = PqlEngine(spark, resolver=tables, backend="sql")
+        eng = PqlEngine(spark, resolver=tables)
         n = eng.query(
             "EV | join kind=inner (DIM) on user | count"
         ).collect()[0][0]
@@ -78,38 +198,33 @@ def test_sql_backend_preserves_user_views(spark, tables):
 
 
 def test_sql_backend_params(spark, tables):
-    eng = PqlEngine(
-        spark, resolver=tables, params={"cut": 30}, backend="sql"
-    )
+    eng = PqlEngine(spark, resolver=tables, params={"cut": 30})
     got = eng.query("EV | where value > cut | count").collect()
     want = tables["EV"].filter(F.col("value") > 30).count()
     assert got[0][0] == want
 
 
-def test_auto_falls_back_on_multi_output(spark, tables):
-    # facet is multi-output: compile_to_sql refuses, auto must fall
-    # back to the DataFrame compiler's MultiResult
-    eng = PqlEngine(spark, resolver=tables, backend="auto")
-    res = eng.query(
-        "EV | facet by user with ( summarize n = count() )"
-    )
-    from pql_spark import MultiResult
-
+def test_auto_falls_back_on_multi_output(spark, tables, pql_calls):
+    # facet is multi-output: compile_to_sql refuses, the DataFrame
+    # compiler builds its MultiResult
+    q = "EV | facet by user with ( summarize n = count() )"
+    res = PqlEngine(spark, resolver=tables).query(q)
     assert isinstance(res, MultiResult)
+    assert pql_calls == [q]
 
 
-def test_sql_backend_serves_csv_externaldata(spark, tmp_path):
+def test_sql_backend_serves_csv_externaldata(spark, tmp_path, pql_calls):
     # r12 (VERDICT r11 item 8): option-bearing externaldata rides the
     # engine's transient-view device on the SQL path — no fallback
     p = tmp_path / "t.csv"
     p.write_text("id,v\n1,2.0\n2,9.5\n")
-    eng = PqlEngine(spark, resolver={}, backend="auto")
+    eng = PqlEngine(spark, resolver={})
     q = (
         f'externaldata (id: long, v: real) ["{p}"]'
         ' with (format="csv", header="true") | where v > 5 | project id'
     )
     assert [r.id for r in eng.query(q).collect()] == [2]
-    assert eng.sql_fallbacks == 0
+    assert eng.sql_fallbacks == 0 and pql_calls == []
     # the transient reader view is dropped after the one spark.sql call
     leftover = [
         t.name for t in spark.catalog.listTables()
@@ -126,8 +241,8 @@ def test_csv_externaldata_backend_equality(spark, tmp_path):
         ' with (format="csv", header="true", sep="|")'
         " | extend tag = strcat(name, tostring(id)) | sort by id asc"
     )
-    dfb = PqlEngine(spark, resolver={}, backend="df").query(q)
-    sqb = PqlEngine(spark, resolver={}, backend="sql").query(q)
+    dfb = compile_pql(q, {}.__getitem__)
+    sqb = PqlEngine(spark, resolver={}).query(q)
     assert dfb.collect() == sqb.collect()
     assert dfb.columns == sqb.columns
 
@@ -135,7 +250,7 @@ def test_csv_externaldata_backend_equality(spark, tmp_path):
 def test_json_externaldata_on_sql_backend(spark, tmp_path):
     p = tmp_path / "t.json"
     p.write_text('{"id": 1, "v": "x"}\n{"id": 2, "v": "y"}\n')
-    eng = PqlEngine(spark, resolver={}, backend="sql")
+    eng = PqlEngine(spark, resolver={})
     q = (
         f'externaldata (id: long, v: string) ["{p}"]'
         ' with (format="json") | where v == "y" | project id'
@@ -148,49 +263,47 @@ def test_to_sql_still_refuses_optioned_externaldata(spark, tmp_path):
     # must point at the engine's transient-view workaround
     p = tmp_path / "t.csv"
     p.write_text("id\n1\n")
-    eng = PqlEngine(spark, resolver={}, backend="sql")
+    eng = PqlEngine(spark, resolver={})
     with pytest.raises(Exception, match="transient reader-backed"):
         eng.to_sql(
             f'externaldata (id: long) ["{p}"] with (format="csv")'
         )
 
 
-def test_unknown_backend_rejected(spark, tables):
-    with pytest.raises(ValueError, match="unknown backend"):
-        PqlEngine(spark, resolver=tables, backend="fast")
-
-
 def test_auto_is_default_and_counts_fallbacks(spark, tables):
-    eng = PqlEngine(spark, resolver=tables)  # default backend = auto
-    assert eng._backend == "auto" and eng.sql_fallbacks == 0
+    eng = PqlEngine(spark, resolver=tables)
+    assert eng.sql_fallbacks == 0
     eng.query("EV | count").collect()
     assert eng.sql_fallbacks == 0  # SQL path handled it
     eng.query("EV | facet by user with ( summarize n = count() )")
-    assert eng.sql_fallbacks == 1  # documented refusal, counted
+    assert eng.sql_fallbacks == 1  # refusal, counted
+    with pytest.raises(QueryError):
+        eng.query("EV | where")
+    assert eng.sql_fallbacks == 1  # a user error is not a refusal
 
 
-def test_auto_does_not_swallow_unexpected_errors(spark, tables, monkeypatch):
-    # only the documented refusal (QueryError) and Spark analysis
-    # failures may fall back; an unexpected error class would hide an
-    # SQL-backend bug behind the silent slow path — it must propagate
+def test_auto_does_not_swallow_unexpected_errors(
+    spark, tables, monkeypatch, pql_calls
+):
+    # an error that is not the refusal would hide an SQL-backend bug
+    # behind the slow path — it must propagate
     import pql_spark.sql_backend as sb
 
     def boom(*a, **k):
         raise RuntimeError("injected sql-backend bug")
 
     monkeypatch.setattr(sb, "compile_to_sql", boom)
-    eng = PqlEngine(spark, resolver=tables, backend="auto")
+    eng = PqlEngine(spark, resolver=tables)
     with pytest.raises(RuntimeError, match="injected"):
         eng.query("EV | count")
-    assert eng.sql_fallbacks == 0
+    assert eng.sql_fallbacks == 0 and pql_calls == []
 
 
 def test_unknown_table_same_error_both_backends(spark):
     # resolver misses surface as the compiler's QueryError ("unknown
-    # table"), never a raw KeyError — on every backend
-    from pql_spark.parser import QueryError
-
-    for backend in ("df", "sql", "auto"):
-        eng = PqlEngine(spark, resolver={}, backend=backend)
-        with pytest.raises(QueryError, match="unknown table"):
-            eng.query("NoSuchTable | count")
+    # table"), never a raw KeyError — on both compile paths
+    q = "NoSuchTable | count"
+    with pytest.raises(QueryError, match="unknown table"):
+        compile_pql(q, {}.__getitem__)
+    with pytest.raises(QueryError, match="unknown table"):
+        PqlEngine(spark, resolver={}).query(q)

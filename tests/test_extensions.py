@@ -520,12 +520,10 @@ def test_range_source(spark):
     ).collect()] == [5, 3, 1]
     with pytest.raises(QueryError, match="non-zero"):
         eng.query("range x from 1 to 5 step 0")
-    # an explicit refusal on the SQL backend too, not an analysis error
-    # that backend="auto" would mask by falling back
+    # the SQL backend reports it as a user error itself, not as an
+    # analysis error of the emitted SQL
     with pytest.raises(QueryError, match="non-zero"):
-        PqlEngine(spark, resolver={}, backend="sql").query(
-            "range x from 1 to 5 step 0"
-        )
+        PqlEngine(spark, resolver={}).query("range x from 1 to 5 step 0")
 
 
 def test_make_series_numeric_axis(spark):
@@ -1314,7 +1312,7 @@ def test_bag_unpack_key_cap(spark, monkeypatch):
 def test_toscalar_memoized(spark, monkeypatch):
     from pyspark.sql import DataFrame
 
-    from pql_spark import PqlEngine
+    from pql_spark import PqlEngine, compile_pql
 
     df = spark.createDataFrame([(1, 5), (2, 9)], "id long, v long")
     cls = type(df)
@@ -1329,20 +1327,19 @@ def test_toscalar_memoized(spark, monkeypatch):
     monkeypatch.setattr(cls, "head", counted)
     # the memo lives in the DataFrame compiler (the SQL backend emits
     # a lazy scalar subquery instead — no driver action at all), so
-    # pin backend="df" for the call-count assertion
-    eng = PqlEngine(spark, resolver={"T": df}, backend="df")
+    # compile with compile_pql for the call-count assertion
     q = (
         "let m = toscalar(T | summarize max(v));"
         " T | where v == m | extend hi = m | project id, hi"
     )
-    out = eng.query(q)
+    out = compile_pql(q, {"T": df}.__getitem__)
     # the let is referenced twice but the subquery ran once
     assert calls["n"] == 1
     assert [tuple(r) for r in out.collect()] == [(2, 9)]
     # and the SQL path's scalar-subquery form agrees without any
     # compile-time driver action
     calls["n"] = 0
-    out_sql = PqlEngine(spark, resolver={"T": df}, backend="sql").query(q)
+    out_sql = PqlEngine(spark, resolver={"T": df}).query(q)
     assert calls["n"] == 0
     assert [tuple(r) for r in out_sql.collect()] == [(2, 9)]
 

@@ -9,7 +9,7 @@ import ipaddress
 
 import pytest
 
-from pql_spark import PqlEngine, compile_to_sql
+from pql_spark import PqlEngine, compile_pql, compile_to_sql
 from pql_spark.parser import QueryError
 
 IPS = [
@@ -139,19 +139,17 @@ def test_int64_overflow_suffix_defaults_like_try_cast(spark, tables):
     # only the exact host 10.0.0.0 would match — none of IPS is that,
     # so extend with one: use the existing ev and assert no crash +
     # the row set matches the DF path
-    eng_df = PqlEngine(spark, tables, backend="df")
-    eng_sql = PqlEngine(spark, tables, backend="sql")
-    got_df = sorted(map(tuple, eng_df.query(q).collect()))
-    got_sql = sorted(map(tuple, eng_sql.query(q).collect()))
+    got_df = sorted(map(tuple, compile_pql(q, tables.__getitem__).collect()))
+    got_sql = sorted(map(tuple, PqlEngine(spark, tables).query(q).collect()))
     assert got_df == got_sql
     ev2 = spark.createDataFrame(
         [(0, "10.0.0.0")], "id long, ip string"
     )
-    for backend in ("df", "sql"):
-        eng2 = PqlEngine(spark, {"ev": ev2}, backend=backend)
-        assert [tuple(r) for r in eng2.query(q).collect()] == [
-            (0, "host")
-        ], backend
+    for backend, out in (
+        ("df", compile_pql(q, {"ev": ev2}.__getitem__)),
+        ("sql", PqlEngine(spark, {"ev": ev2}).query(q)),
+    ):
+        assert [tuple(r) for r in out.collect()] == [(0, "host")], backend
 
 
 def test_errors(engine):

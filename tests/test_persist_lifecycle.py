@@ -10,7 +10,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from pql_spark.engine import PqlEngine
+from pql_spark.engine import PqlEngine, compile_pql
 from pql_spark.operators._util import (
     _TRACKED_PERSISTS,
     tracked_persist,
@@ -68,14 +68,23 @@ def _is_cached(spark, df) -> bool:
 def test_query_keeps_the_callers_cache(spark, backend):
     """A persisted resolver frame is still cached after a query: the
     SQL path's temp views are removed by name only, never with the
-    UNCACHE that ``spark.catalog.dropTempView`` cascades."""
+    UNCACHE that ``spark.catalog.dropTempView`` cascades.  ``auto`` is
+    ``PqlEngine.query`` (SQL, DataFrame fallback on a refusal), ``sql``
+    its SQL path alone, ``df`` the DataFrame compiler alone."""
     t = spark.range(100).withColumn("k", F.col("id") % 3)
     t.persist()
     try:
         t.count()
         assert _is_cached(spark, t)
-        eng = PqlEngine(spark, resolver={"t": t}, backend=backend)
-        rows = eng.query("t | summarize n = count() by k").collect()
+        q = "t | summarize n = count() by k"
+        eng = PqlEngine(spark, resolver={"t": t})
+        if backend == "auto":
+            out = eng.query(q)
+        elif backend == "sql":
+            out = eng._query_via_sql(q, {})
+        else:
+            out = compile_pql(q, {"t": t}.__getitem__)
+        rows = out.collect()
         assert sorted((r.k, r.n) for r in rows) == [(0, 34), (1, 33), (2, 33)]
         assert _is_cached(spark, t), backend
     finally:

@@ -14,7 +14,7 @@ import io
 
 import pytest
 
-from pql_spark import PqlEngine
+from pql_spark import PqlEngine, compile_pql
 from tests.conftest import SF_SMOKE
 
 
@@ -278,7 +278,7 @@ def test_hamming_dup_pairs_plan(spark):
 
 
 def test_sql_backend_path_same_physical_shape(spark, sf_catalog):
-    """The batched compile path (backend='sql') must reach the same
+    """The batched compile path (PqlEngine.query) must reach the same
     physical strategy as the DataFrame compiler on the canonical
     where+summarize+sort pipeline: pushed filter, pruned scan, partial
     aggregation — the plan quality is backend-independent."""
@@ -286,9 +286,11 @@ def test_sql_backend_path_same_physical_shape(spark, sf_catalog):
         "lineitem | where l_quantity > 45"
         " | summarize n = count() by l_returnflag | sort by n desc"
     )
-    for backend in ("df", "sql"):
-        eng = PqlEngine(spark, resolver=sf_catalog, backend=backend)
-        plan = formatted_plan(eng.query(q))
+    for backend, df in (
+        ("df", compile_pql(q, sf_catalog)),
+        ("sql", PqlEngine(spark, resolver=sf_catalog).query(q)),
+    ):
+        plan = formatted_plan(df)
         assert "PushedFilters: [" in plan and "l_quantity" in plan.split(
             "PushedFilters"
         )[1][:120], backend
