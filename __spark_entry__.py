@@ -1286,16 +1286,14 @@ PQL_QUERIES: dict[str, tuple[str, str]] = {
     ),
     # EXTENSION scan operator: ordered funnel matching (predicates in
     # Catalyst, tiny automaton in an Arrow kernel).  The DuckDB twin
-    # runs the same greedy automaton as a sequential left fold:
-    # list_reduce over per-user event lists built with an ORDER BY
-    # aggregate.  State encoding: state = 4*completed + pos; an event
-    # advances iff its step index equals pos; completing step 2 rolls
-    # pos to 0 and increments the match count.  (An earlier twin that
-    # put the CASE inside the ordered list() aggregate mis-evaluated
-    # under parallel grouped aggregation in DuckDB 1.0 — pre-computing
-    # the step index in a subquery and filtering to step events first
-    # is stable; verified against a python reference automaton over 5
-    # repeated runs at sf0.01 and sf0.1.)
+    # runs the same greedy automaton as a RECURSIVE CTE over
+    # row-numbered per-user view/click/purchase events (the
+    # scan_var_window device): an event advances iff its step index
+    # equals pos; completing step 2 counts one funnel and resets pos
+    # to 0.  NOT list_reduce: inside the grouped query DuckDB 1.0.0's
+    # list_reduce mis-folded a few users' lists (one funnel off on 5
+    # of 13 generated sf0.1 datasets; tests/test_scan_funnel_oracle.py
+    # pins this twin to a Python automaton on those datasets).
     "pql_scan_funnel": (
         """
         events
@@ -1307,29 +1305,32 @@ PQL_QUERIES: dict[str, tuple[str, str]] = {
         | summarize funnels = count() / 3, users = dcount(user_id)
         """,
         """
-        WITH per_user AS (
+        WITH RECURSIVE ev AS (
           SELECT user_id,
-                 list_reduce(
-                   list_concat([CAST(0 AS BIGINT)],
-                               list(s ORDER BY ts, event_id)),
-                   (acc, x) -> CASE WHEN x = acc % 4
-                                    THEN CASE WHEN acc % 4 = 2
-                                         THEN (acc // 4 + 1) * 4
-                                         ELSE acc + 1 END
-                                    ELSE acc END
-                 ) // 4 AS n_matches
-          FROM (SELECT user_id, ts, event_id,
-                       CAST(CASE event_type WHEN 'view' THEN 0
-                            WHEN 'click' THEN 1 WHEN 'purchase' THEN 2
-                            ELSE -1 END AS BIGINT) AS s
-                FROM events
-                WHERE event_type IN ('view', 'click', 'purchase'))
-          GROUP BY user_id
-        )
-        SELECT CAST(SUM(n_matches) AS DOUBLE) AS funnels,
-               CAST(COUNT(*) FILTER (WHERE n_matches > 0) AS BIGINT)
-                 AS users
-        FROM per_user
+                 CAST(CASE event_type WHEN 'view' THEN 0
+                      WHEN 'click' THEN 1 ELSE 2 END AS BIGINT) AS s,
+                 row_number() OVER (PARTITION BY user_id
+                                    ORDER BY ts, event_id) AS i
+          FROM events
+          WHERE event_type IN ('view', 'click', 'purchase')),
+        auto AS (
+          SELECT user_id, CAST(0 AS BIGINT) AS i,
+                 CAST(0 AS BIGINT) AS pos, CAST(0 AS BIGINT) AS n
+          FROM (SELECT DISTINCT user_id FROM ev)
+          UNION ALL
+          SELECT e.user_id, a.i + 1,
+                 CASE WHEN e.s <> a.pos THEN a.pos
+                      WHEN a.pos = 2 THEN 0
+                      ELSE a.pos + 1 END,
+                 a.n + CASE WHEN e.s = 2 AND a.pos = 2
+                            THEN 1 ELSE 0 END
+          FROM auto a JOIN ev e
+            ON e.user_id = a.user_id AND e.i = a.i + 1),
+        fin AS (SELECT user_id, arg_max(n, i) AS n
+                FROM auto GROUP BY user_id)
+        SELECT CAST(SUM(n) AS DOUBLE) AS funnels,
+               CAST(COUNT(*) FILTER (WHERE n > 0) AS BIGINT) AS users
+        FROM fin
         """,
     ),
     # EXTENSION scan with declare/state capture + output modes —
@@ -1401,9 +1402,8 @@ PQL_QUERIES: dict[str, tuple[str, str]] = {
     # match count).  NOT list_reduce: DuckDB 1.0.0's list_reduce gave
     # wrong per-row results for THIS lambda on the real data (57/150
     # users wrong at sf0.01 — folding the very lists the query
-    # returns gives different answers in python), while the
-    # scan_funnel twin's list_reduce stays correct (re-verified
-    # against a python automaton this round).
+    # returns gives different answers in python); the scan_funnel
+    # twin dropped it for the same reason.
     "pql_scan_var_window": (
         """
         events

@@ -7,6 +7,12 @@ Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 Each query is timed end-to-end (plan build + execute + collect to the
 driver).  The session is warmed with one trivial action first so JVM
 startup is not attributed to the first query.
+
+Comparability is one rule, ``evaluate_record``: a sweep is comparable
+when its gates run a median of at most ``_BATCH_FLOOR_BAR`` times the
+committed per-gate floors (BATCH_FLOORS.json) and the host was quiet at
+launch.  The sweep that was just timed and any committed record are
+labelled by the same function.
 """
 
 from __future__ import annotations
@@ -25,19 +31,14 @@ from pql_spark.sources import build_session  # noqa: E402
 
 
 # Streaming per-gate startup floors (PERF_NOTES_r10.md, revised r13):
-# a JVM-only transient micro-batch gate floors at ~0.9 s (null-drain /
-# passthrough micro-benchmarks), a Python-stateful one at ~1.4 s;
-# op_stream_near_dup adds its measured 64-perm minhash Arrow kernel
-# (~1.2 s).  op_stream_sink_upsert's floor is re-derived with REAL
-# file writes (PERF_NOTES_r13 §1): a 1-row foreachBatch upsert pays an
-# extra merge-write job + directory swap + parquet read-back on top of
-# the drain, measured 1.05-1.11 s on a quiet session — the old 0.9 s
-# null-drain floor understated the gate shape and made its 2× bar
-# reachable by ordinary session spread.  The bars are machine-checked
-# here: no gate may exceed 2× its floor and the 8-gate family must
-# stay within _STREAM8_FAMILY_MAX (both inflation-scaled), else the
-# record carries stream_bars_exceeded=true (flagged as a regression
-# only on a quiet session — compute_stream_verdict).
+# a JVM-only transient micro-batch gate floors at ~0.9 s, a
+# Python-stateful one at ~1.4 s; op_stream_near_dup adds its 64-perm
+# minhash Arrow kernel (~1.2 s); op_stream_sink_upsert pays a merge-write
+# job + directory swap + parquet read-back (PERF_NOTES_r13 §1).  No gate
+# may exceed 2× its floor and the 8-gate family must stay within
+# _STREAM8_FAMILY_MAX; both bars scale by the sweep's floor ratio.
+# Sub-2× per-gate deltas sit inside same-code quiet-session spread
+# (op_stream_dedup 1.21-1.89 s over a 0.9 s floor), so no tighter bar.
 _STREAM_FLOORS = {
     "op_stream_windowed": 0.9,
     "op_stream_sink_upsert": 1.1,
@@ -49,220 +50,29 @@ _STREAM_FLOORS = {
     "op_stream_near_dup": 2.6,
 }
 _STREAM8_FAMILY_MAX = 14.0
-# Quiet-session cost of the canonical null drain (_stream_sentinel):
-# median of 3 one-row availableNow memory-sink drains, measured 0.35-
-# 0.40 s on an idle 32-core builder session.  The floors above are
-# expressed in this unit's session, so a session whose drain runs slow
-# scales every hard bar by the same measured factor (capped — a >3×
-# drain means the session is unusable for perf claims, and the flag
-# should fire rather than stretch further).
-_STREAM_SENTINEL_REF = 0.37
-# Quiet-session cost of the FILE-WRITE drain (_StreamSentinels.file):
-# a one-row parquet-SINK drain with a real checkpoint directory on the
-# default tmp filesystem — the same unit the sink/stateful gate floors
-# live in (checkpoint WAL fsyncs + parquet write + read-back).  Median
-# of 7 on an idle 32-core builder session: 0.652 s (0.60-0.72 spread).
-# Added r14 (VERDICT r13 item 1a): the r13 driver session inflated the
-# stateful/write-heavy gates ~3× while the memory-sink NULL drain read
-# only 1.122 — I/O-shaped contention is invisible to a drain that
-# touches no files, so the bars never scaled and the flag fired
-# unexplained.  The file drain senses that path directly.
-_STREAM_FILE_SENTINEL_REF = 0.65
-_STREAM_INFLATION_CAP = 3.0
-# a session whose drains run >15% over the references has a measurably
-# slow micro-batch path, and the batch instruments (pql_count sentinel,
-# loadavg) provably cannot sense that (the r12 driver record;
-# re-confirmed by the r13-PM builder session reading inflation 1.284
-# with clean batch sentinels and quiet loadavg) — the bar feeds
-# compute_session_clean's stream component
-_STREAM_QUIET_MAX_INFLATION = 1.15
-# beyond this measured inflation (or with any other dirty instrument)
-# the session cannot support streaming perf claims at all: exceedances
-# are reported as "not_comparable", not "regression" (VERDICT r13
-# item 1 — a flag must agree with the record's own instruments)
-_STREAM_NOT_COMPARABLE_INFLATION = 1.6
+# A sweep whose gates run a median above 1.25× the committed per-gate
+# floors is uniformly slow, whatever else the host reports:
+# BENCH_LOCAL_r14.json ran 1.43× over 186 gates, untouched TPC-H code
+# included, with a quiet launch load.  1.25 leaves headroom over a
+# quiet session's ~1.0-1.15 spread.  A genuine uniform code slowdown
+# also lands here and reads "not comparable"; the floor table is
+# regenerated each round (tools/make_batch_floors.py).
+_BATCH_FLOOR_BAR = 1.25
+# below this many common gates the median is not a uniformity reading
+_BATCH_FLOOR_MIN_COMMON = 30
+# the 1-min loadavg at launch, before this process has done any work,
+# is the neighbours' load; above this share of the cpus it inflates the
+# early gates even when the sweep's median recovers
+_LAUNCH_LOAD_SHARE = 0.15
+# a retry first waits (at most this long) for the 1-min loadavg to shed
+# the previous attempt, so its launch reading is again the neighbours'
+_RETRY_WAIT_SEC = 300
 
 
 def _median(xs: list[float]) -> float:
     s = sorted(xs)
     n = len(s)
     return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2.0
-
-
-def compute_stream_flag(
-    times: dict[str, float],
-    session_clean: bool,
-    floors: dict[str, float] = _STREAM_FLOORS,
-    inflation: float = 1.0,
-    gate_inflations: dict[str, float] | None = None,
-) -> tuple[dict[str, float], float, bool]:
-    """Streaming bars check → (per-gate floor deltas, 8-gate family
-    sum, bars-exceeded):
-
-    * HARD, always on: the 8-gate family sum must stay ≤ 14 s, and no
-      gate may exceed 2× its measured startup floor — a real floor
-      exceedance, not noise.  Bars scale by the measured micro-batch-
-      path slowdown of THIS session (sentinel / quiet reference, ≥ 1,
-      capped).  r14 (VERDICT r13 item 1b): ``gate_inflations`` carries
-      one INTERLEAVED sentinel reading per family gate, sampled
-      immediately before that gate — contention is time-varying across
-      a ~4-minute sweep, and the r13 driver session inflated gates ~3×
-      while the two ENDPOINT drains read 1.122.  Each gate's 2× bar
-      scales by its own nearest reading; the family bar scales by the
-      floor-weighted mean of the per-gate readings (the family time is
-      ≈ Σ floor·inflation under pure contention).  Gates without a
-      reading fall back to the scalar ``inflation`` (endpoint max),
-      which keeps the pre-r14 behavior.
-    * The r11-r13 "tight" noise-gated per-delta tier is REMOVED in
-      v4.1 (r14).  Measured same-code quiet-session evidence killed
-      it: op_stream_dedup reads 1.21-1.89 s (floor 0.9) across quiet
-      builder sessions, interval_join 1.23-3.03 s (floor 1.4) — every
-      sub-2× per-gate margin we tried (flat 0.5 s, then
-      max(0.5, 0.5·floor)) sat INSIDE that spread and fired on quiet
-      boxes (r12 driver, two r14 quiet-box runs) while never catching
-      a true regression in four rounds.  Per-gate deltas below the 2×
-      hard bar are beneath this harness's single-session measurement
-      floor; the honest instrument says so instead of crying wolf.
-      Diffuse small regressions are still caught by the FAMILY bar
-      (14 s = 1.28× headroom over the 10.9 s floor-sum: a +30%
-      across-the-board code change trips it on a quiet session), and
-      per-gate ``stream_floor_deltas`` stay recorded for cross-round
-      trend reading, which is where sub-2× shifts are actually
-      measurable.  ``session_clean`` still gates the VERDICT
-      (regression vs not_comparable), not the bars.
-    """
-    gi = gate_inflations or {}
-
-    def raw(q: str) -> float:
-        return gi.get(q, inflation)
-
-    def eff(q: str) -> float:
-        return min(max(raw(q), 1.0), _STREAM_INFLATION_CAP)
-
-    deltas = {
-        q: round(times[q] - f, 3)
-        for q, f in floors.items()
-        if q in times and times[q] == times[q]
-    }
-    present = list(deltas)
-    family = round(sum(times[q] for q in present), 3)
-    if present:
-        fam_infl = sum(floors[q] * eff(q) for q in present) / sum(
-            floors[q] for q in present
-        )
-    else:
-        fam_infl = min(max(inflation, 1.0), _STREAM_INFLATION_CAP)
-    hard = family > _STREAM8_FAMILY_MAX * fam_infl or any(
-        times[q] > 2.0 * floors[q] * eff(q) for q in present
-    )
-    return deltas, family, bool(hard)
-
-
-def compute_stream_verdict(
-    bars_exceeded: bool,
-    session_clean: bool,
-    max_inflation: float,
-) -> str:
-    """Interpret the bars check against the session's own instruments
-    (VERDICT r13 item 1 — 'done = a driver record whose flag state
-    agrees with its instruments'):
-
-    * ``"regression"`` — bars exceeded on a session whose instruments
-      all read quiet: evidence of a real streaming code regression.
-      This (and only this) sets ``stream_perf_flag``.
-    * ``"not_comparable"`` — bars exceeded WITH a dirty instrument
-      (session not clean, or any interleaved/endpoint sentinel ≥ 1.6×
-      its quiet reference): the exceedance is attributed to machine
-      state, not code, and the family rows cannot support perf claims.
-      The r13 driver record (gates ~3×, launch 15-min loadavg 7.92 on
-      32 cores) lands here — which the judge's quiet-box re-measure
-      (family 16.44 s) independently confirmed.
-    * ``"ok"`` — bars clear.  A transiently-noisy sample only widens
-      its own gate's bar; if the bars still clear, the family is fine
-      and the verdict says so (session-LEVEL comparability is the
-      separate ``session_clean`` / ``headline_comparable`` fields).
-    """
-    if not bars_exceeded:
-        return "ok"
-    if not session_clean or max_inflation >= _STREAM_NOT_COMPARABLE_INFLATION:
-        return "not_comparable"
-    return "regression"
-
-
-def compute_session_clean(
-    contended: bool,
-    sentinel_first: float,
-    sentinel_last: float,
-    load_at_launch: float | list[float] | tuple[float, ...],
-    ncpu: int,
-    stream_inflation: float = 1.0,
-) -> tuple[bool, list[str]]:
-    """A record is 'clean' (arming the tight noise-gated tier, and the
-    precondition for ``headline_comparable``) only if no contention
-    instrument fired → (clean, reasons).  Instruments:
-
-    * the ``contended`` flag (sentinel drift > 2× or loadavg > 1.5×ncpu
-      mid-run);
-    * batch-sentinel drift > 1.5× across the sweep;
-    * a loaded machine at LAUNCH on ANY horizon — 1/5/15-min loadavg
-      > 0.15×ncpu.  r14 hardening (VERDICT r13 item 6): the r13 driver
-      session passed the old 1-min-only bar by 9 % (4.37 vs 4.8) and
-      then ran gates at 3× — but its 15-MIN launch loadavg was 7.92,
-      well over the bar: the machine had been busy for the preceding
-      quarter hour and the record carried the evidence unused;
-    * a slow micro-batch path — measured stream inflation (max over
-      the null-drain AND file-write sentinels, endpoint + interleaved)
-      > 1.15.  Catches the r12/r13-PM phantom shape: quiet loadavg and
-      clean batch sentinels while the streaming path runs 1.3×.
-    """
-    loads = (
-        [load_at_launch]
-        if isinstance(load_at_launch, (int, float))
-        else list(load_at_launch)
-    )
-    reasons: list[str] = []
-    if contended:
-        reasons.append("contended flag fired mid-run")
-    if sentinel_last > 1.5 * sentinel_first:
-        reasons.append(
-            f"batch sentinel drifted {sentinel_last}/{sentinel_first}"
-        )
-    bar = 0.15 * ncpu
-    for horizon, val in zip(("1m", "5m", "15m"), loads):
-        if val > bar:
-            reasons.append(
-                f"launch loadavg[{horizon}]={val} > {round(bar, 2)}"
-            )
-    if stream_inflation > _STREAM_QUIET_MAX_INFLATION:
-        reasons.append(
-            f"stream sentinel inflation {stream_inflation} > "
-            f"{_STREAM_QUIET_MAX_INFLATION}"
-        )
-    return (not reasons, reasons)
-
-
-# Uniform-slowdown bar on the committed per-gate quiet floors
-# (BATCH_FLOORS.json; VERDICT r14 item 2).  The batch analogue of the
-# stream sentinels' absolute quiet references: a session whose gates
-# run a median ≥ 1.25× the best committed same-code evidence is
-# uniformly slow regardless of what loadavg and the endpoint sentinels
-# read — BENCH_LOCAL_r14.json passed every instrument bar while running
-# 1.43× median across 186 gates including untouched TPC-H code.  The
-# bar folds ONLY into headline_comparable (the false-positive lesson
-# stands: per-gate sub-2× deltas are below the single-session
-# measurement floor, so this is a session-level instrument, never a
-# per-gate flag).  1.25 leaves honest headroom over a quiet session's
-# ~1.0-1.15 spread vs the floor set while convicting the 1.35-1.43×
-# uniform shapes all three committed phantom records show.  Trade-off,
-# stated: a GENUINE uniform code slowdown also lands here — the record
-# then says "not comparable" rather than quantifying the regression,
-# which is correct (cross-round headline totals were never the
-# regression instrument; BENCH_SCALING absolutes and controlled
-# experiments are), and the floor table regenerates each round
-# (tools/make_batch_floors.py) so deliberate slowdowns re-baseline.
-_BATCH_FLOOR_BAR = 1.25
-# below this many common gates the median is not a uniformity reading
-_BATCH_FLOOR_MIN_COMMON = 30
 
 
 def load_batch_floors(sf) -> dict | None:
@@ -298,69 +108,96 @@ def compute_batch_floor_ratio(
     return round(_median(ratios), 3), len(ratios)
 
 
-def clamp_bar_scales(
-    rel: dict[str, float], abs_: dict[str, float], cap: float = 1.3
-) -> dict[str, float]:
-    """Bound each RELATIVE bar-scale factor by its gate's ABSOLUTE
-    reading × ``cap`` (ADVICE r14): the relative estimator's best-of-2
-    sample spread is ~1.2× on a quiet box, so unclamped it widens every
-    2× hard bar to ~2.4× and a genuine 2.0-2.4× single-gate regression
-    could pass unflagged on a quiet session.  The absolute reading is
-    the calibrated instrument; noise may stretch a bar at most 30%
-    past what that instrument justifies."""
+def compute_stream_flag(
+    times: dict[str, float], scale: float = 1.0
+) -> tuple[dict[str, float], float, bool]:
+    """Streaming bars → (per-gate floor deltas, 8-gate family sum,
+    bars exceeded).  Each gate's bar is 2× its floor and the family's
+    is ``_STREAM8_FAMILY_MAX``, both times ``scale``; missing and NaN
+    gates are skipped."""
+    deltas = {
+        q: round(times[q] - f, 3)
+        for q, f in _STREAM_FLOORS.items()
+        if q in times and times[q] == times[q]
+    }
+    family = round(sum(times[q] for q in deltas), 3)
+    exceeded = family > _STREAM8_FAMILY_MAX * scale or any(
+        times[q] > 2.0 * _STREAM_FLOORS[q] * scale for q in deltas
+    )
+    return deltas, family, exceeded
+
+
+def compute_stream_verdict(bars_exceeded: bool, comparable: bool) -> str:
+    """``ok`` when the bars clear; an exceedance is a ``regression``
+    only on a comparable sweep, else ``not_comparable``."""
+    if not bars_exceeded:
+        return "ok"
+    return "regression" if comparable else "not_comparable"
+
+
+def evaluate_record(record: dict) -> dict:
+    """The comparability rule → the record's label fields.
+
+    Comparable = the median time/floor ratio over at least
+    ``_BATCH_FLOOR_MIN_COMMON`` common gates is ≤ ``_BATCH_FLOOR_BAR``
+    AND the 1-min launch loadavg is ≤ ``_LAUNCH_LOAD_SHARE``×cpus.  No
+    floor table, too few common gates or no launch reading is not
+    comparable.  The streaming bars scale by max(1, floor ratio).
+    Each failed condition is one short reason code (``load1m=9.21``,
+    ``floor=1.43/189``, ``fewgates=16``, ``nofloor=sf0.01``,
+    ``noload``), the same text in the record and in the digest.
+
+    ``run_sweep`` calls this on the record it just built; a replay
+    calls it on a committed record.  Old records fall back to 32 cpus
+    and to ``loadavg_start`` when they lack ``cpus`` and
+    ``loadavg_at_launch``."""
+    times = record.get("queries", {})
+    floors = load_batch_floors(record.get("sf"))
+    ratio, n = compute_batch_floor_ratio(times, floors)
+    launch = record.get("loadavg_at_launch") or record.get("loadavg_start")
+    reasons = []
+    if not launch:
+        reasons.append("noload")
+    elif launch[0] > _LAUNCH_LOAD_SHARE * record.get("cpus", 32):
+        reasons.append(f"load1m={launch[0]:.2f}")
+    if floors is None:
+        reasons.append(f"nofloor=sf{record.get('sf')}")
+    elif ratio is None:
+        reasons.append(f"fewgates={n}")
+    elif ratio > _BATCH_FLOOR_BAR:
+        reasons.append(f"floor={ratio}/{n}")
+    comparable = not reasons
+    deltas, family, exceeded = compute_stream_flag(
+        times, max(1.0, ratio or 1.0)
+    )
+    verdict = compute_stream_verdict(exceeded, comparable)
     return {
-        q: round(min(r, max(abs_.get(q, 1.0), 1.0) * cap), 3)
-        for q, r in rel.items()
+        "batch_floor_ratio_median": ratio,
+        "batch_floor_gates": n,
+        "stream8_family_sec": family,
+        "stream_floor_deltas": deltas,
+        "stream_bars_exceeded": exceeded,
+        "stream_verdict": verdict,
+        "stream_perf_flag": verdict == "regression",
+        "headline_comparable": comparable,
+        "headline_comparable_reason": ";".join(reasons) or None,
     }
 
 
-def compact_reasons(reasons: list[str]) -> str | None:
-    """Compress clean-reason prose into short semicolon-joined codes.
-
-    VERDICT r15 item 1: the stdout digest's 1900-char budget is shared
-    between the per-query watch rows and everything else, and the r15
-    driver record's long prose ``headline_comparable_reason`` (three
-    full sentences) silently evicted 5 watch rows from the driver's
-    round-over-round diff.  The digest now carries codes
-    (``load1m=14.04;floor=1.672``); BENCH_FULL.json keeps the prose.
-    Unrecognized reasons are truncated, never dropped."""
-    import re
-
-    codes = []
-    for r in reasons:
-        m = re.match(r"contended flag", r)
-        if m:
-            codes.append("contended")
-            continue
-        m = re.match(r"batch sentinel drifted ([0-9.]+)/([0-9.]+)", r)
-        if m:
-            codes.append(f"sent={m.group(1)}/{m.group(2)}")
-            continue
-        m = re.match(r"launch loadavg\[(\d+m)\]=([0-9.]+)", r)
-        if m:
-            codes.append(f"load{m.group(1)}={float(m.group(2)):.2f}")
-            continue
-        m = re.match(r"stream sentinel inflation ([0-9.]+)", r)
-        if m:
-            codes.append(f"sinfl={m.group(1)}")
-            continue
-        m = re.match(r"batch floor ratio median ([0-9.]+)", r)
-        if m:
-            codes.append(f"floor={m.group(1)}")
-            continue
-        codes.append(r[:24])
-    return ";".join(codes) if codes else None
+def _stream_family(times: dict[str, float]) -> list[str]:
+    """The WIDER 10-row streaming family: the 8 op_stream_* gates plus
+    op_near_dup_incremental and op_curate_stream."""
+    return [q for q in times if q.startswith("op_stream_")] + [
+        "op_near_dup_incremental",
+        "op_curate_stream",
+    ]
 
 
 def select_watch_rows(times: dict[str, float]) -> tuple[dict, set]:
     """→ (digest watch rows, env-requested keys).  The static watch
     list is the round-over-round diff surface; env-requested rows
     (SPARK_GRAFT_BENCH_WATCH) are evicted last under overflow."""
-    stream_family = [q for q in times if q.startswith("op_stream_")] + [
-        "op_near_dup_incremental",
-        "op_curate_stream",
-    ]
-    watch = stream_family + [
+    watch = _stream_family(times) + [
         "op_curate_corpus",
         "op_minhash_dups",
         "op_ngram_jaccard",
@@ -400,17 +237,9 @@ def select_watch_rows(times: dict[str, float]) -> tuple[dict, set]:
 # diff surface the driver actually reads (VERDICT r15 item 1).
 _DIGEST_FIELD_EVICTION = (
     "evidence_freshness",
-    "stream_flag_model",
     "methodology",
     "stream_floor_deltas",
-    "loadavg_start",
-    "loadavg_end",
-    "stream_sentinel_first_sec",
-    "stream_sentinel_last_sec",
-    "stream_file_sentinel_first_sec",
-    "stream_file_sentinel_last_sec",
-    "sentinel_first_sec",
-    "sentinel_last_sec",
+    "loadavg_at_launch",
     "headline_comparable_reason",
 )
 
@@ -419,31 +248,18 @@ def build_digest(
     full_record: dict,
     digest_q: dict,
     env_keys: set,
-    reasons: list[str] | None = None,
     limit: int = 1900,
 ) -> str:
     """ONE stdout JSON line that fits the driver's 2000-char capture
     window WITH every watch row (VERDICT r15 item 1).
 
-    Overflow handling, in order: (1) per-gate sentinel maps never
-    enter the digest (they live in BENCH_FULL.json); (2) the prose
-    ``headline_comparable_reason`` is replaced by compact codes;
-    (3) informational scalar fields are evicted, least essential
-    first; (4) only if the line STILL overflows are watch rows
-    evicted (env-requested rows last) — with (1)-(3), the full
-    ~30-row watch set fits with >400 chars of headroom even on a
-    worst-case non-comparable record (tests/test_bench_stream_flag.py
-    replay asserts this)."""
+    Overflow handling, in order: (1) ``discarded_attempts`` never
+    enters the digest (it lives in BENCH_FULL.json); (2) informational
+    scalar fields are evicted, least essential first; (3) only if the
+    line STILL overflows are watch rows evicted (env-requested rows
+    last)."""
     digest = dict(full_record)
-    for bulky in (
-        "stream_sentinel_samples",
-        "stream_gate_inflations",
-        "stream_gate_bar_scales",
-        "discarded_attempts",
-    ):
-        digest.pop(bulky, None)
-    if reasons is not None and digest.get("headline_comparable_reason"):
-        digest["headline_comparable_reason"] = compact_reasons(reasons)
+    digest.pop("discarded_attempts", None)
     digest["queries"] = digest_q
     digest["full_record"] = "BENCH_FULL.json"
     line = json.dumps(digest, separators=(",", ":"))
@@ -462,259 +278,10 @@ def build_digest(
     return line
 
 
-def evaluate_record(record: dict) -> dict:
-    """Re-evaluate a bench record's session instruments under the
-    current (r14) model — used by tests to replay the committed
-    r12/r13 records, and by readers auditing an old headline.  Works
-    from the record's OWN fields, with the fallbacks an old record
-    needs (r12 has no loadavg_at_launch and no stream sentinels)."""
-    launch = record.get("loadavg_at_launch") or record.get(
-        "loadavg_start", [0.0]
-    )
-    ncpu = record.get("cpus", 32)
-    sent_first = record.get("sentinel_first_sec", 0.0)
-    sent_last = record.get("sentinel_last_sec", 0.0)
-    ep = [
-        max(
-            record.get("stream_sentinel_first_sec", 0.0)
-            / _STREAM_SENTINEL_REF,
-            record.get("stream_file_sentinel_first_sec", 0.0)
-            / _STREAM_FILE_SENTINEL_REF,
-        ),
-        max(
-            record.get("stream_sentinel_last_sec", 0.0)
-            / _STREAM_SENTINEL_REF,
-            record.get("stream_file_sentinel_last_sec", 0.0)
-            / _STREAM_FILE_SENTINEL_REF,
-        ),
-    ]
-    endpoint_abs = max([x for x in ep if x > 0] + [0.0])
-    gates_abs = [
-        x for x in record.get("stream_gate_inflations", {}).values()
-        if x > 0
-    ]
-    # mirrors the live model exactly: the reading set is the per-gate
-    # absolute readings plus ONE endpoint reading (the max of
-    # first/last combined) — median → cleanliness, max → verdict bar.
-    # Pre-r14 records carry only the two endpoint null drains; there
-    # the max-of-endpoints rule applies (the median would erase the
-    # one slow reading that convicted the r13-PM phantom).
-    present = gates_abs + ([endpoint_abs] if endpoint_abs > 0 else [])
-    max_infl = round(max(present + [1.0]), 3)
-    med_infl = (
-        round(_median(present), 3) if len(present) >= 4 else max_infl
-    )
-    clean, reasons = compute_session_clean(
-        record.get("contended", False),
-        sent_first,
-        sent_last,
-        launch,
-        ncpu,
-        stream_inflation=med_infl,
-    )
-    times = record.get("queries", {})
-    # bars use the RELATIVE scale factors when the record carries them
-    # (mirrors the live run exactly, including the r15 noise clamp
-    # against the absolute readings); absolute readings are the
-    # fallback for pre-r14 records
-    gi = record.get("stream_gate_bar_scales") or None
-    if gi:
-        gi = clamp_bar_scales(
-            gi, record.get("stream_gate_inflations") or {}
-        )
-    else:
-        gi = record.get("stream_gate_inflations") or None
-    _, family, exceeded = compute_stream_flag(
-        times, clean, inflation=max_infl, gate_inflations=gi
-    )
-    verdict = compute_stream_verdict(exceeded, clean, max_infl)
-    # batch-floor uniformity instrument (VERDICT r14 item 2): replay
-    # against the CURRENT committed floor table, so an old record that
-    # ran uniformly slow is convicted retroactively even though its
-    # own fields said clean
-    floor_med, floor_n = compute_batch_floor_ratio(
-        times, load_batch_floors(record.get("sf"))
-    )
-    floor_ok = floor_med is None or floor_med <= _BATCH_FLOOR_BAR
-    if not floor_ok:
-        reasons = reasons + [
-            f"batch floor ratio median {floor_med} > {_BATCH_FLOOR_BAR}"
-            f" over {floor_n} gates"
-        ]
-    return {
-        "session_clean": clean,
-        "headline_comparable": clean and floor_ok,
-        "reasons": reasons,
-        "batch_floor_ratio_median": floor_med,
-        "batch_floor_gates": floor_n,
-        "stream_inflation_max": max_infl,
-        "stream8_family_sec": family,
-        "stream_bars_exceeded": exceeded,
-        "stream_verdict": verdict,
-        "stream_perf_flag": verdict == "regression",
-    }
-
-
-class _StreamSentinels:
-    """The session's micro-batch-path instruments (VERDICT r13 item 1).
-
-    Two drain units over the same one-row parquet source:
-
-    * ``null`` — availableNow memory-sink drain (source on /dev/shm,
-      sink in memory: touches no files).  The exact micro-benchmark
-      the 0.9 s streaming floors were derived from (PERF_NOTES_r10).
-    * ``file`` — availableNow PARQUET-sink drain with a real
-      checkpoint directory on the default tmp filesystem, plus a
-      read-back — the unit the sink/stateful gate floors live in.
-      Added r14: the r13 driver session inflated write-heavy gates ~3×
-      while the null drain read 1.122, because the contention was
-      I/O-shaped and a memory drain touches no files.
-
-    Endpoint readings are median-of-3 (as before); interleaved per-gate
-    readings are best-of-2 — the same estimator the gates themselves
-    use, so a gate and its neighboring sentinel see the same noise
-    model.  One untimed warm drain per unit first (the cold micro-batch
-    machinery costs ~1.2 s that belongs to session setup)."""
-
-    def __init__(self, spark) -> None:
-        import tempfile
-
-        self.spark = spark
-        shm = Path("/dev/shm")
-        self.src = Path(tempfile.mkdtemp(
-            prefix="pql_ssent_", dir=str(shm) if shm.is_dir() else None
-        ))
-        spark.createDataFrame([(1,)], "id long").write.parquet(
-            str(self.src / "one")
-        )
-        self.schema = spark.read.parquet(str(self.src / "one")).schema
-
-    def _stream(self):
-        return self.spark.readStream.schema(self.schema).parquet(
-            str(self.src / "one")
-        ).select("id")
-
-    def null_drain(self) -> None:
-        from pql_spark.streaming import run_available_now
-
-        run_available_now(self._stream(), "append")
-
-    def file_drain(self) -> None:
-        import shutil
-        import tempfile
-
-        d = Path(tempfile.mkdtemp(prefix="pql_fsent_"))  # default tmp fs
-        try:
-            q = (
-                self._stream()
-                .writeStream.format("parquet")
-                .option("path", str(d / "out"))
-                .option("checkpointLocation", str(d / "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            self.spark.read.parquet(str(d / "out")).count()
-        finally:
-            shutil.rmtree(d, ignore_errors=True)
-
-    def warm(self) -> None:
-        self.null_drain()
-        self.file_drain()
-
-    @staticmethod
-    def _timed(fn, n: int) -> list[float]:
-        runs = []
-        for _ in range(n):
-            t0 = time.perf_counter()
-            fn()
-            runs.append(time.perf_counter() - t0)
-        return runs
-
-    def endpoint(self) -> tuple[float, float]:
-        """(null_median3, file_median3) — the first/last readings."""
-        null = round(_median(self._timed(self.null_drain, 3)), 3)
-        file = round(_median(self._timed(self.file_drain, 3)), 3)
-        return null, file
-
-    def sample(self) -> tuple[float, float]:
-        """(null_best2, file_best2) — one interleaved reading, taken
-        immediately before a streaming family gate."""
-        null = round(min(self._timed(self.null_drain, 2)), 3)
-        file = round(min(self._timed(self.file_drain, 2)), 3)
-        return null, file
-
-    def close(self) -> None:
-        import shutil
-
-        shutil.rmtree(self.src, ignore_errors=True)
-
-
-def _sample_inflation(
-    null_sec: float,
-    file_sec: float,
-    null_base: float | None = None,
-    file_base: float | None = None,
-) -> float:
-    """A reading's inflation: the max over its two units' ratios to
-    their quiet references — contention visible on EITHER path counts
-    (the r13 session was I/O-shaped: file high, null near-quiet).
-
-    ``null_base``/``file_base`` (when given) are the SESSION'S OWN
-    fastest readings of each unit: a deep-warm session drains in
-    ~0.28 s vs the 0.37 s shallow-warm calibration reference, so a
-    mid-sweep contention spike under-reads against the absolute refs
-    by ~1.3× — the session-relative term restores the sensitivity
-    (a spike vs the session's own quiet floor), while the absolute
-    refs still catch a UNIFORMLY slow session whose own minimum is
-    already inflated (the r13-PM phantom shape)."""
-    ratios = [
-        null_sec / _STREAM_SENTINEL_REF,
-        file_sec / _STREAM_FILE_SENTINEL_REF,
-    ]
-    if null_base:
-        ratios.append(null_sec / null_base)
-    if file_base:
-        ratios.append(file_sec / file_base)
-    return round(max(ratios), 3)
-
-
-def _sentinel(spark, sf_dir: str) -> float:
-    """Median-of-3 of a fixed-cost query (``pql_count``).  Run FIRST and
-    LAST: at equal machine load the two medians agree within noise, so a
-    large last/first ratio — or a high loadavg — machine-flags a record
-    whose absolute times were inflated by concurrent work (the r9
-    artifact showed 3-7x inflation with nothing in the JSON to say so).
-    """
-    fn = entrymod.queries()["pql_count"]
-    runs = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).collect()
-        runs.append(time.perf_counter() - t0)
-    return round(sorted(runs)[1], 3)
-
-
-def run_sweep(
-    spark,
-    sf_dir: str,
-    sf: float,
-    load_at_launch,
-    launch_horizons: int = 3,
-) -> tuple[dict, list[str]]:
-    """One full bench sweep over every declared query → (full record,
-    clean reasons).  Timing methodology is unchanged from the original
-    inline form (best-of-2 per query, cold totals alongside); the
-    extraction exists so ``main`` can retry a self-labeled
-    non-comparable sweep (VERDICT r15 item 8).
-
-    ``launch_horizons``: how many of the 1/5/15-min launch-loadavg
-    horizons feed ``compute_session_clean``.  A RETRY attempt passes 1
-    — after the first sweep, the 5/15-min readings are dominated by
-    this process's own previous attempt by construction, so only the
-    post-idle-wait 1-min reading still measures the neighbors (the
-    instrument's purpose).  The record keeps all three readings and
-    self-describes the narrowed check."""
+def run_sweep(spark, sf_dir: str, sf: float, load_at_launch) -> dict:
+    """One full bench sweep over every declared query → the full
+    record (``build_record``).  ``main`` retries a non-comparable
+    sweep (VERDICT r15 item 8)."""
     # Warm fixed machinery once (JIT/codegen infra, parquet reader
     # classes, shuffle system, Python/Arrow workers) so per-query
     # timings measure the queries, not class loading.  The Python-worker
@@ -728,12 +295,6 @@ def run_sweep(
         lambda it: it, "id long"
     ).count()
 
-    load_start = os.getloadavg()
-    sentinel_first = _sentinel(spark, sf_dir)
-    sentinels = _StreamSentinels(spark)
-    sentinels.warm()
-    stream_sentinel_first, stream_file_sentinel_first = sentinels.endpoint()
-
     # Steady-state methodology (JMH-style): each query runs twice and
     # the BEST time is reported.  Run 1 pays one-time costs that are
     # irrelevant to sustained throughput at scale — whole-stage-codegen
@@ -743,16 +304,7 @@ def run_sweep(
     # scan + shuffle + compute.  Cold totals are reported alongside.
     times: dict[str, float] = {}
     cold: dict[str, float] = {}
-    # interleaved sentinel samples (VERDICT r13 item 1b): one combined
-    # null+file reading immediately before EACH streaming family gate —
-    # contention is time-varying across a ~4-minute sweep, and two
-    # endpoint readings provably under-sensed the r13 driver session
-    # (gates ~3×, endpoints 1.122).  Each gate's hard bar scales by its
-    # own nearest reading.
-    gate_samples: dict[str, tuple[float, float]] = {}
     for name, fn in entrymod.queries().items():
-        if name in _STREAM_FLOORS:
-            gate_samples[name] = sentinels.sample()
         runs: list[float] = []
         n = 0
         for _ in range(2):
@@ -782,186 +334,36 @@ def run_sweep(
             f" ({n} rows)",
             file=sys.stderr,
         )
+    return build_record(times, cold, sf, load_at_launch)
 
-    sentinel_last = _sentinel(spark, sf_dir)
-    stream_sentinel_last, stream_file_sentinel_last = sentinels.endpoint()
-    sentinels.close()
-    load_end = os.getloadavg()
-    # contention flag: the fixed-cost sentinel drifted >2x across the
-    # run, or the 1-min loadavg exceeded the core count at either end
-    # (this process alone keeps loadavg ~= its own core usage; anything
-    # far above means a neighbor was competing for the same cores).
-    ncpu = os.cpu_count() or 1
-    contended = bool(
-        sentinel_last > 2.0 * sentinel_first
-        or max(load_start[0], load_end[0]) > 1.5 * ncpu
-    )
 
-    total = round(sum(t for t in times.values() if t == t), 3)
-    cold_total = round(sum(t for t in cold.values() if t == t), 3)
+def build_record(
+    times: dict[str, float], cold: dict[str, float], sf: float,
+    load_at_launch,
+) -> dict:
+    """A sweep's full record from its best and cold times, labelled
+    by ``evaluate_record``."""
     full_record = {
         "metric": "e2e_all_queries",
-        "value": total,
+        "value": round(sum(t for t in times.values() if t == t), 3),
         "unit": "sec",
         "queries": times,
         "sf": sf,
         "methodology": "best-of-2 per query (steady-state);"
         " cold run 1 totals in cold_sec",
-        "cold_sec": cold_total,
-        "sentinel_first_sec": sentinel_first,
-        "sentinel_last_sec": sentinel_last,
-        "stream_sentinel_first_sec": stream_sentinel_first,
-        "stream_sentinel_last_sec": stream_sentinel_last,
-        "stream_file_sentinel_first_sec": stream_file_sentinel_first,
-        "stream_file_sentinel_last_sec": stream_file_sentinel_last,
-        "stream_sentinel_samples": {
-            q: {"null_sec": n, "file_sec": f}
-            for q, (n, f) in gate_samples.items()
-        },
+        "cold_sec": round(sum(t for t in cold.values() if t == t), 3),
         "loadavg_at_launch": [round(x, 2) for x in load_at_launch],
-        "loadavg_start": [round(x, 2) for x in load_start],
-        "loadavg_end": [round(x, 2) for x in load_end],
-        "contended": contended,
-        # recording machine's core count, so replays apply the right
-        # 0.15×ncpu loadavg bar (ADVICE r14: evaluate_record assumed
-        # 32 for every record)
-        "cpus": ncpu,
-    }
-    stream_family = [q for q in times if q.startswith("op_stream_")] + [
-        "op_near_dup_incremental",
-        "op_curate_stream",
-    ]
-    stream_total = round(
-        sum(times[q] for q in stream_family if q in times and times[q] == times[q]),
-        3,
-    )
-    # revised-target check (VERDICT r10 item 4, de-noised r12): per-gate
-    # delta over the measured startup floors + the 8-gate family sum,
-    # recorded and flagged so the ≤14 s target is machine-checked, not
-    # prose.  The tight 0.5 s per-delta check only fires on records
-    # whose own noise instruments are clean; 2× floor exceedance and
-    # the family sum are hard regardless (compute_stream_flag).  Note
-    # stream_family_sec is the WIDER 10-row sum (8 op_stream_* gates
-    # plus op_near_dup_incremental and op_curate_stream); the target
-    # applies to stream8_family_sec.
-    # Two readings per sample, two jobs:
-    # * ABSOLUTE (reading / quiet calibration ref) — the session-level
-    #   instruments: median → session_clean / headline_comparable,
-    #   max → the verdict's not-comparable bar.  Deep-warm quiet
-    #   sessions read ~0.75-0.91 absolute, so these bars keep honest
-    #   headroom.
-    # * RELATIVE (reading / the session's own fastest reading of that
-    #   unit) — ONLY widens the per-gate hard bars: it restores spike
-    #   sensitivity on deep-warm sessions, but its intrinsic best-of-2
-    #   sample spread is ~1.2× on a quiet box (measured twice, r14),
-    #   so feeding it into session_clean or the verdict bar would cry
-    #   wolf exactly the way the retired tight tier did.  Widening a
-    #   hard bar by noise is harmless; dirtying a record by noise is
-    #   not.
-    null_base = min(
-        [stream_sentinel_first, stream_sentinel_last]
-        + [n for n, _ in gate_samples.values()]
-    )
-    file_base = min(
-        [stream_file_sentinel_first, stream_file_sentinel_last]
-        + [f for _, f in gate_samples.values()]
-    )
-    gate_abs = {
-        q: _sample_inflation(n, f) for q, (n, f) in gate_samples.items()
-    }
-    gate_rel = clamp_bar_scales(
-        {
-            q: _sample_inflation(n, f, null_base, file_base)
-            for q, (n, f) in gate_samples.items()
-        },
-        gate_abs,
-    )
-    endpoint_abs = max(
-        _sample_inflation(stream_sentinel_first, stream_file_sentinel_first),
-        _sample_inflation(stream_sentinel_last, stream_file_sentinel_last),
-    )
-    endpoint_rel = max(
-        _sample_inflation(
-            stream_sentinel_first, stream_file_sentinel_first,
-            null_base, file_base,
+        # the recording machine's core count: the launch-load bar
+        "cpus": os.cpu_count() or 1,
+        "n_queries": len(times),
+        # the bars apply to stream8_family_sec, not to this sum
+        "stream_family_sec": round(
+            sum(times[q] for q in _stream_family(times) if q in times
+                and times[q] == times[q]),
+            3,
         ),
-        _sample_inflation(
-            stream_sentinel_last, stream_file_sentinel_last,
-            null_base, file_base,
-        ),
-    )
-    all_abs = list(gate_abs.values()) + [endpoint_abs]
-    stream_inflation_max = round(max(all_abs), 3)
-    stream_inflation_median = round(_median(all_abs), 3)
-    session_clean, clean_reasons = compute_session_clean(
-        contended,
-        sentinel_first,
-        sentinel_last,
-        list(load_at_launch)[:launch_horizons],
-        ncpu,
-        stream_inflation=stream_inflation_median,
-    )
-    stream_deltas, stream8_total, bars_exceeded = compute_stream_flag(
-        times,
-        session_clean,
-        inflation=endpoint_rel,
-        gate_inflations=gate_rel,
-    )
-    stream_verdict = compute_stream_verdict(
-        bars_exceeded, session_clean, stream_inflation_max
-    )
-    full_record["stream8_family_sec"] = stream8_total
-    full_record["stream_floor_deltas"] = stream_deltas
-    # legacy field (pre-r14 definition: endpoint null-drain max ratio)
-    # kept for cross-round comparability of the instrument itself
-    full_record["stream_inflation"] = round(
-        max(stream_sentinel_first, stream_sentinel_last)
-        / _STREAM_SENTINEL_REF,
-        3,
-    )
-    # absolute per-gate readings (the cross-record/replay instrument);
-    # the relative bar-scale factors are recorded separately
-    full_record["stream_gate_inflations"] = gate_abs
-    full_record["stream_gate_bar_scales"] = gate_rel
-    full_record["stream_inflation_median"] = stream_inflation_median
-    full_record["stream_inflation_max"] = stream_inflation_max
-    full_record["stream_bars_exceeded"] = bars_exceeded
-    full_record["stream_verdict"] = stream_verdict
-    # r14 semantics (VERDICT r13 item 1): the flag now means "evidence
-    # of a streaming CODE regression on a session whose instruments
-    # read quiet" — a contended session reports bars_exceeded +
-    # verdict=not_comparable instead, so the flag state always agrees
-    # with the record's own instruments
-    full_record["stream_perf_flag"] = stream_verdict == "regression"
-    full_record["stream_flag_model"] = (
-        "v4: interleaved null+file sentinels, per-gate bars,"
-        " regression-only flag"
-    )
-    full_record["session_clean"] = session_clean
-    # batch-floor uniformity instrument (VERDICT r14 item 2): median of
-    # this run's gate times over the committed per-gate quiet floors —
-    # the absolute reference the batch side lacked.  Folds ONLY into
-    # headline_comparable (session-level), never per-gate flags.
-    batch_floor_med, batch_floor_n = compute_batch_floor_ratio(
-        times, load_batch_floors(sf)
-    )
-    batch_floor_ok = (
-        batch_floor_med is None or batch_floor_med <= _BATCH_FLOOR_BAR
-    )
-    if not batch_floor_ok:
-        clean_reasons = clean_reasons + [
-            f"batch floor ratio median {batch_floor_med} >"
-            f" {_BATCH_FLOOR_BAR} over {batch_floor_n} gates"
-        ]
-    full_record["batch_floor_ratio_median"] = batch_floor_med
-    full_record["batch_floor_gates"] = batch_floor_n
-    # VERDICT r13 item 2: a non-comparable headline self-describes —
-    # the r13 driver total (225.8 s vs r12's 126.8) read as a 78%
-    # regression to anyone not cross-checking the builder records
-    full_record["headline_comparable"] = session_clean and batch_floor_ok
-    full_record["headline_comparable_reason"] = (
-        "; ".join(clean_reasons) if clean_reasons else None
-    )
+    }
+    full_record.update(evaluate_record(full_record))
     # evidence-freshness summary (VERDICT r11 item 7): the bench record
     # itself reproduces the "no evidence older than rN" claim from the
     # committed CORRECTNESS files — tools/evidence_freshness.py has the
@@ -978,9 +380,7 @@ def run_sweep(
         }
     except Exception:  # noqa: BLE001 — no CORRECTNESS files yet
         full_record["evidence_freshness"] = None
-    full_record["n_queries"] = len(times)
-    full_record["stream_family_sec"] = stream_total
-    return full_record, clean_reasons
+    return full_record
 
 
 def main() -> int:
@@ -988,88 +388,66 @@ def main() -> int:
     sf = float(Path(sf_dir).name.removeprefix("sf") or "0.1")
 
     # loadavg at LAUNCH, before this process has done any work: the
-    # only reading that is purely the neighbors'.  The post-warmup
-    # loadavg_start includes our own 32-thread warmup burst and the
-    # r12 driver record showed a session can decay to clean sentinels
-    # while its start-of-run contention inflated the early gates.
+    # only reading that is purely the neighbors'.
     load_at_launch = os.getloadavg()
 
     # Comparable-by-construction (VERDICT r15 item 8): a sweep that
-    # self-labels non-comparable (host-window floor / dirty launch
-    # load) is retried after a bounded idle wait, up to
-    # SPARK_GRAFT_BENCH_ATTEMPTS total attempts (default 2).  Each
-    # attempt is the complete, methodology-identical sweep; nothing is
-    # reused across attempts except the warm JVM (exactly what
-    # best-of-2 already absorbs).  The committed record is the first
-    # comparable attempt, else the lowest-floor one; every discarded
-    # attempt's floor+reason stays in the record as
-    # ``discarded_attempts`` (the sidecar the verdict asked for).
+    # labels itself non-comparable is retried after a bounded idle
+    # wait, up to SPARK_GRAFT_BENCH_ATTEMPTS total attempts (default
+    # 2).  Each attempt is the complete, methodology-identical sweep;
+    # nothing is reused across attempts except the warm JVM.  A sweep
+    # without a floor ratio is not retried: a second attempt runs the
+    # same gates against the same table and cannot change that label.
+    # The committed record is the first comparable attempt, else the
+    # lowest-floor one; every discarded attempt's floor and reason stay
+    # in ``discarded_attempts``.
     attempts = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_ATTEMPTS", "2")))
-    wait_budget = float(
-        os.environ.get("SPARK_GRAFT_BENCH_RETRY_WAIT", "300")
-    )
 
     spark = build_session("pql_spark_bench")
     spark.sparkContext.setLogLevel("ERROR")
-    records: list[tuple[dict, list[str]]] = []
+    records: list[dict] = []
     for attempt in range(1, attempts + 1):
-        horizons = 3
         if attempt > 1:
-            # shed THIS process's own previous sweep from the 1-min
-            # loadavg before re-reading "launch" load, so the retry's
-            # reading is again mostly the neighbors'
-            bar = 0.15 * (os.cpu_count() or 1)
-            deadline = time.monotonic() + wait_budget
+            bar = _LAUNCH_LOAD_SHARE * (os.cpu_count() or 1)
+            deadline = time.monotonic() + _RETRY_WAIT_SEC
             while (
                 os.getloadavg()[0] > bar and time.monotonic() < deadline
             ):
                 time.sleep(10)
             load_at_launch = os.getloadavg()
-            horizons = 1
-        rec, reasons = run_sweep(
-            spark, sf_dir, sf, load_at_launch, launch_horizons=horizons
-        )
+        rec = run_sweep(spark, sf_dir, sf, load_at_launch)
         rec["bench_attempt"] = attempt
-        if attempt > 1:
-            rec["launch_load_check"] = (
-                "1m-only (retry: the 5/15-min horizons carry this"
-                " process's own previous attempt)"
-            )
-        records.append((rec, reasons))
-        if rec["headline_comparable"]:
+        records.append(rec)
+        if rec["headline_comparable"] or rec["batch_floor_ratio_median"] is None:
             break
         print(
             f"bench: attempt {attempt} non-comparable"
-            f" ({compact_reasons(reasons)}); "
+            f" ({rec['headline_comparable_reason']}); "
             + ("retrying" if attempt < attempts else "keeping best"),
             file=sys.stderr,
         )
 
-    chosen = next(
-        (r for r in records if r[0]["headline_comparable"]), None
-    )
-    if chosen is None:
+    def _floor(r: dict) -> float:
+        v = r["batch_floor_ratio_median"]
+        return float("inf") if v is None else v
 
-        def _floor(r: tuple[dict, list[str]]) -> float:
-            v = r[0].get("batch_floor_ratio_median")
-            return v if isinstance(v, (int, float)) else float("inf")
-
-        chosen = min(records, key=_floor)
-    full_record, reasons = chosen
+    full_record = next(
+        (r for r in records if r["headline_comparable"]), None
+    ) or min(records, key=_floor)
     full_record["bench_attempts"] = len(records)
     full_record["discarded_attempts"] = [
         {
-            "attempt": r.get("bench_attempt"),
-            "batch_floor_ratio_median": r.get("batch_floor_ratio_median"),
-            "reason": compact_reasons(rs),
+            "attempt": r["bench_attempt"],
+            "batch_floor_ratio_median": r["batch_floor_ratio_median"],
+            "reason": r["headline_comparable_reason"],
         }
-        for r, rs in records
+        for r in records
         if r is not full_record
     ]
     full_path = Path(__file__).resolve().parent / "BENCH_FULL.json"
     full_path.write_text(json.dumps(full_record) + "\n")
     digest_q, env_keys = select_watch_rows(full_record["queries"])
-    print(build_digest(full_record, digest_q, env_keys, reasons))
+    print(build_digest(full_record, digest_q, env_keys))
     spark.stop()
     return 0
 

@@ -441,7 +441,8 @@ class _SqlEmitter:
         # None → best-effort argless hint
         self.width = width
         self.scope: dict[str, str] = {k: _lit(v) for k, v in params.items()}
-        self.bound: dict[str, tuple[str, list[str]]] = {}  # `as` bindings
+        # `as`/`let`/invoke bindings: (sql, cols, the binding's maps)
+        self.bound: dict[str, tuple[str, list[str], set[str]]] = {}
         # AST of tabular-let bindings — lets emit_ipv4_lookup see a
         # let-bound literal datatable for its compile-time prefix set
         self.bound_ast: dict[str, object] = {}
@@ -467,6 +468,13 @@ class _SqlEmitter:
     # ------------------------------------------------------------ pipeline
 
     def emit_query(self, expr: TabularExpr) -> tuple[str, list[str]]:
+        return self.emit_binding(expr)[:2]
+
+    def emit_binding(
+        self, expr: TabularExpr
+    ) -> tuple[str, list[str], set[str]]:
+        """``emit_query`` plus the result's map columns (see
+        ``self.maps``), which a binding carries to its readers."""
         saved = (self.last_sort, self.window, self._graph, self.maps)
         self.last_sort, self.window, self._graph = None, None, None
         self.maps = set()
@@ -497,7 +505,8 @@ class _SqlEmitter:
             else:
                 name = expr.source.name
                 if name in self.bound:
-                    sql, cols = self.bound[name]
+                    sql, cols, maps = self.bound[name]
+                    self.maps = set(maps)
                 else:
                     try:
                         cols, self.maps = _names_and_maps(
@@ -515,9 +524,10 @@ class _SqlEmitter:
             for op in expr.operators:
                 sql, cols = self.emit_op(op, sql, cols)
                 self.maps &= set(cols)
+            maps = self.maps
         finally:
             self.last_sort, self.window, self._graph, self.maps = saved
-        return sql, cols
+        return sql, cols, maps
 
     def emit_externaldata(
         self, src: ExternalDataSource
@@ -681,7 +691,7 @@ class _SqlEmitter:
         if isinstance(op, JoinOp):
             return self.emit_join(op, sql, cols)
         if isinstance(op, AsOp):
-            self.bound[op.name] = (sql, list(cols))
+            self.bound[op.name] = (sql, list(cols), set(self.maps))
             return sql, cols
         if isinstance(op, DistinctOp):
             if not op.cols:
@@ -2084,7 +2094,7 @@ class _SqlEmitter:
             tab_name = fd.params[0][0]
             saved_bound = self.bound.get(tab_name)
             saved_scope = dict(self.scope)
-            self.bound[tab_name] = (sql, cols)
+            self.bound[tab_name] = (sql, cols, set(self.maps))
             for (pname, ptype), a in zip(fd.params[1:], op.args):
                 psql = self.expr(a)
                 if ptype is not None:
@@ -2092,7 +2102,8 @@ class _SqlEmitter:
                 self.scope[pname] = psql
             self._inlining.add(op.name)
             try:
-                return self.emit_query(fd.tab_body)
+                sql, cols, self.maps = self.emit_binding(fd.tab_body)
+                return sql, cols
             finally:
                 self._inlining.discard(op.name)
                 self.scope = saved_scope
@@ -5780,7 +5791,7 @@ def _prepare_emitter(
             elif stmt.tabular is not None:
                 # EXTENSION tabular let → named subquery binding (same
                 # mechanism as `as`)
-                emitter.bound[stmt.name] = emitter.emit_query(stmt.tabular)
+                emitter.bound[stmt.name] = emitter.emit_binding(stmt.tabular)
                 emitter.bound_ast[stmt.name] = stmt.tabular
             else:
                 emitter.scope[stmt.name] = emitter.expr(stmt.expr)

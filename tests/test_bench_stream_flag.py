@@ -1,14 +1,13 @@
-"""Unit tests for bench.py's streaming perf instrumentation (v4.1,
-VERDICT r13 items 1+2+6): a real 2× floor exceedance or family-sum
-overrun exceeds the (inflation-scaled) hard bars regardless of session
-noise; sub-2× per-gate deltas are beneath the harness's measured
-single-session noise floor and never fire; and the PUBLISHED flag must
-agree with the record's own instruments — bars exceeded on a contended
-session reads ``not_comparable``, never ``regression``.  The r13
-driver session and the judge's quiet-box re-measure are both replayed
-here by their recorded numbers, as are the committed r12/r13 records
-through ``evaluate_record``.  Synthetic records only — no Spark
-session."""
+"""bench.py's one comparability rule, ``evaluate_record``.
+
+A sweep is comparable when its gates run a median of at most
+``_BATCH_FLOOR_BAR``× the committed per-gate floors (BATCH_FLOORS.json,
+over at least ``_BATCH_FLOOR_MIN_COMMON`` common gates) and its 1-min
+launch loadavg is at most 0.15×cpus.  The streaming bars (2× per gate,
+14 s for the 8-gate family) scale by max(1, floor ratio); an exceedance
+is a ``regression`` only on a comparable sweep.  Every committed full
+record is replayed here against the label it stored.  No Spark session.
+"""
 
 from __future__ import annotations
 
@@ -16,34 +15,46 @@ import json
 import sys
 from pathlib import Path
 
+import pytest
+
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from bench import (  # noqa: E402
-    _STREAM8_FAMILY_MAX,
-    _STREAM_FILE_SENTINEL_REF,
-    _STREAM_FLOORS,
-    _STREAM_SENTINEL_REF,
-    _sample_inflation,
     _BATCH_FLOOR_BAR,
-    clamp_bar_scales,
+    _BATCH_FLOOR_MIN_COMMON,
+    _STREAM8_FAMILY_MAX,
+    _STREAM_FLOORS,
     compute_batch_floor_ratio,
-    compute_session_clean,
     compute_stream_flag,
     compute_stream_verdict,
     evaluate_record,
     load_batch_floors,
 )
 
-# measured same-code QUIET-session per-gate readings that killed the
-# r11-r13 "tight" sub-2x per-delta tier (v4.1): these must all stay
-# green — each was a false positive under some earlier margin
+REPO = Path(__file__).resolve().parent.parent
+
+# every committed full sweep record, at the root or archived
+FULL_RECORDS = sorted(
+    str(p.relative_to(REPO))
+    for p in [
+        *REPO.glob("BENCH_LOCAL_*.json"),
+        *REPO.glob("archive/BENCH_LOCAL_*.json"),
+        REPO / "BENCH_FULL.json",
+    ]
+)
+
+# measured same-code QUIET-session per-gate readings: each was a false
+# positive under some earlier sub-2× margin, so all must stay green
 _QUIET_SPREAD_CASES = [
     {"op_stream_dedup": 1.508},          # r14 quiet-box full bench
     {"op_stream_interval_join": 1.95},   # r14 quiet-box sf0.001 smoke
     {"op_stream_windowed": 1.46},        # within 2x of the 0.9 floor
 ]
 
-REPO = Path(__file__).resolve().parent.parent
+
+def _load(name: str) -> dict:
+    rec = json.loads((REPO / name).read_text())
+    return rec.get("parsed", rec)
 
 
 def _times(scale: float = 1.0, **overrides: float) -> dict[str, float]:
@@ -52,51 +63,60 @@ def _times(scale: float = 1.0, **overrides: float) -> dict[str, float]:
     return t
 
 
+def _sweep(ratio: float, load1m: float = 0.5, cpus: int = 32, **over):
+    """A full sweep whose every gate runs ``ratio``× its floor."""
+    floors = load_batch_floors(0.1)
+    times = {q: round(f * ratio, 3) for q, f in floors.items()}
+    times.update(over)
+    return {
+        "sf": 0.1,
+        "queries": times,
+        "loadavg_at_launch": [load1m, 1.0, 1.0],
+        "cpus": cpus,
+    }
+
+
+# --- the streaming bars
+
+
 def test_clean_session_at_floor_is_green():
-    deltas, family, flag = compute_stream_flag(_times(), True)
+    deltas, family, flag = compute_stream_flag(_times())
     assert not flag
     assert family <= _STREAM8_FAMILY_MAX
     assert all(abs(d) < 1e-9 for d in deltas.values())
 
 
 def test_sub_2x_exceedance_below_measurement_floor_is_green():
-    # v4.1: per-gate deltas under the 2x hard bar are beneath the
-    # harness's single-session measurement floor — measured same-code
-    # quiet sessions spread that far (see _QUIET_SPREAD_CASES), so no
-    # sub-2x margin can separate noise from regression
+    # per-gate deltas under the 2x bar are beneath the harness's
+    # single-session measurement floor (see _QUIET_SPREAD_CASES)
     for case in _QUIET_SPREAD_CASES:
-        _, _, flag = compute_stream_flag(_times(**case), True)
+        _, _, flag = compute_stream_flag(_times(**case))
         assert not flag, case
-    # ...and a gate just past its 2x bar on a quiet session DOES fire
+    # ...and a gate just past its 2x bar DOES fire
     t = _times(op_stream_dedup=2.0 * _STREAM_FLOORS["op_stream_dedup"] + 0.05)
-    _, _, flag = compute_stream_flag(t, True)
+    _, _, flag = compute_stream_flag(t)
     assert flag
 
 
 def test_uniform_session_drift_does_not_trip_when_noisy():
-    # a 1.25x across-the-board inflation (classic session spread, r11
-    # PERF_NOTES) with dirty instruments stays green — the family sum
-    # (floor-sum 10.9 s × 1.25 = 13.6 s) is still inside the hard bar
-    _, _, flag = compute_stream_flag(_times(scale=1.25), False)
+    # 1.25x across the board: the family sum (10.9 s floor-sum × 1.25
+    # = 13.6 s) is still inside the 14 s bar
+    _, _, flag = compute_stream_flag(_times(scale=1.25))
     assert not flag
 
 
 def test_two_x_floor_exceedance_exceeds_bars_even_when_noisy():
-    # ...but a REAL 2x floor exceedance on one gate exceeds the hard
-    # bars (interpretation — regression vs not_comparable — is the
-    # verdict layer's job)
     t = _times(
         op_stream_stateful=2.0 * _STREAM_FLOORS["op_stream_stateful"] + 0.1
     )
-    _, _, flag = compute_stream_flag(t, False)
+    _, _, flag = compute_stream_flag(t)
     assert flag
 
 
 def test_family_sum_overrun_exceeds_bars_even_when_noisy():
     # every gate 1.9x its floor: no per-gate 2x trip, but the family
-    # sum blows the ≤14 s hard target
-    t = _times(scale=1.9)
-    deltas, family, flag = compute_stream_flag(t, False)
+    # sum blows the ≤14 s bar
+    deltas, family, flag = compute_stream_flag(_times(scale=1.9))
     assert family > _STREAM8_FAMILY_MAX and flag
 
 
@@ -104,19 +124,14 @@ def test_missing_and_nan_gates_are_skipped():
     t = _times()
     del t["op_stream_dedup"]
     t["op_stream_windowed"] = float("nan")
-    deltas, family, flag = compute_stream_flag(t, True)
+    deltas, family, flag = compute_stream_flag(t)
     assert "op_stream_dedup" not in deltas
     assert "op_stream_windowed" not in deltas
     assert not flag
 
 
-# --- r13: hard bars scale by the measured micro-batch-path inflation
-
-
-_R12_DRIVER = {
-    # BENCH_r12.json, the false-positive record this model must explain:
-    # every stateful gate ~1.5× the builder readings, batch sentinels
-    # clean, loadavg_start 5.77
+_R12_STREAM = {
+    # BENCH_r12.json: every stateful gate ~1.5× the BENCH_LOCAL readings
     "op_stream_windowed": 0.8,
     "op_stream_sink_upsert": 2.219,
     "op_stream_dedup": 1.435,
@@ -127,10 +142,8 @@ _R12_DRIVER = {
     "op_stream_near_dup": 2.369,
 }
 
-_R13_DRIVER = {
-    # BENCH_r13.json — the round-13 unexplained flag: family 47.04 s
-    # (gates 1.6-6.8× their floors) while the endpoint null drains read
-    # inflation only 1.122
+_R13_STREAM = {
+    # BENCH_r13.json: family 47.04 s, gates 1.6-6.8× their floors
     "op_stream_windowed": 1.461,
     "op_stream_sink_upsert": 7.516,
     "op_stream_dedup": 4.072,
@@ -143,205 +156,101 @@ _R13_DRIVER = {
 
 
 def test_r12_driver_record_green_under_measured_inflation():
-    # the r12 record's family (14.757) and sink reading (2.219 over the
-    # revised 1.1 floor) clear the hard bars once the session's own
-    # stream sentinel reads even 10% slow — the attribution: session
-    # inflation, not a sink regression (PERF_NOTES_r13 §1)
-    _, family, flag = compute_stream_flag(
-        _R12_DRIVER, session_clean=False, inflation=1.1
-    )
-    assert family > _STREAM8_FAMILY_MAX  # raw bar overrun is real...
-    assert not flag  # ...but explained by the measured inflation
-
-
-def test_single_gate_regression_still_trips_under_inflation():
-    # a genuine one-gate regression (3× its floor) fires even when the
-    # session reads 1.3× slow — inflation widens bars, it doesn't
-    # disable them
-    t = _times(
-        op_stream_sink_upsert=3.0 * _STREAM_FLOORS["op_stream_sink_upsert"]
-    )
-    _, _, flag = compute_stream_flag(t, session_clean=False, inflation=1.3)
-    assert flag
-
-
-def test_inflation_is_capped_and_floored():
-    # a >3× sentinel cannot stretch the bars indefinitely: at the 3.0
-    # cap a uniform 6.2× record must still flag (floor-sum 11.1 × 6.2
-    # > 14 × 3.0)...
-    _, _, flag = compute_stream_flag(
-        _times(scale=6.2), session_clean=False, inflation=10.0
-    )
-    assert flag
-    # ...and a sub-1 sentinel (machine faster than the reference) never
-    # TIGHTENS the bars below their quiet-session calibration
-    _, _, flag = compute_stream_flag(
-        _times(scale=1.0), session_clean=True, inflation=0.5
-    )
+    # the r12 family (14.757 s) overruns the raw bar, but a sweep whose
+    # gates read a uniform 1.1× slowdown scales the bars by that ratio
+    _, family, flag = compute_stream_flag(_R12_STREAM, 1.1)
+    assert family > _STREAM8_FAMILY_MAX
     assert not flag
 
 
+def test_single_gate_regression_still_trips_under_inflation():
+    # a 3× one-gate regression fires even on a 1.3× slow sweep:
+    # the scale widens bars, it doesn't disable them
+    t = _times(
+        op_stream_sink_upsert=3.0 * _STREAM_FLOORS["op_stream_sink_upsert"]
+    )
+    _, _, flag = compute_stream_flag(t, 1.3)
+    assert flag
+
+
 def test_two_gate_mid_exceedance_stays_green_but_family_bar_holds():
-    # two gates +1.3 s each at the r13 builder-PM session's measured
-    # inflation (1.284): inside the scaled 2x per-gate bars and under
-    # the family bar → green (v4.1: no sub-2x per-delta tier)...
     t = _times(
         op_stream_dedup=_STREAM_FLOORS["op_stream_dedup"] + 1.34,
         op_stream_interval_join=_STREAM_FLOORS["op_stream_interval_join"]
         + 1.29,
     )
-    _, _, flag = compute_stream_flag(t, session_clean=True, inflation=1.284)
+    _, _, flag = compute_stream_flag(t, 1.284)
     assert not flag
-    # ...but a diffuse +30% across the whole family blows the family
-    # bar on a quiet session — the diffuse-regression catcher
-    _, family, flag = compute_stream_flag(
-        _times(scale=1.31), session_clean=True, inflation=1.0
-    )
+    # ...but a diffuse +30% across the whole family blows the family bar
+    _, family, flag = compute_stream_flag(_times(scale=1.31))
     assert family > _STREAM8_FAMILY_MAX and flag
 
 
-# --- r14: per-gate interleaved inflations (VERDICT r13 item 1b)
-
-
-def test_per_gate_inflation_scales_each_gates_bar():
-    # the gate whose nearest sentinel read 3× gets a 3×-scaled bar;
-    # a quiet gate keeps its tight bar.  sink_upsert at 3.1 s is 2.8×
-    # its 1.1 floor — explained where its neighborhood measured 3×,
-    # a trip where it measured quiet.
-    t = _times(op_stream_sink_upsert=3.1)
-    gi_hot = {q: 1.0 for q in _STREAM_FLOORS}
-    gi_hot["op_stream_sink_upsert"] = 3.0
-    _, _, flag = compute_stream_flag(
-        t, session_clean=False, gate_inflations=gi_hot
-    )
-    assert not flag
-    gi_cold = dict.fromkeys(_STREAM_FLOORS, 1.0)
-    _, _, flag = compute_stream_flag(
-        t, session_clean=False, gate_inflations=gi_cold
-    )
-    assert flag
-
-
-def test_family_bar_scales_by_floor_weighted_mean():
-    # all gates uniformly 2.4×: family 26.2 s.  With every nearest
-    # sample reading 2.5×, the weighted-mean family bar is 35 s → clear
-    # (and no per-gate 2×·2.5 bar trips); with quiet samples it blows.
+def test_family_bar_scales_by_floor_ratio():
+    # every stream gate 2.4× its floor: a sweep reading floor 2.5
+    # clears both bars, a sweep at its floors does not
     t = _times(scale=2.4)
-    gi = dict.fromkeys(_STREAM_FLOORS, 2.5)
-    _, _, flag = compute_stream_flag(t, False, gate_inflations=gi)
-    assert not flag
-    _, _, flag = compute_stream_flag(
-        t, False, gate_inflations=dict.fromkeys(_STREAM_FLOORS, 1.0)
-    )
-    assert flag
+    assert not compute_stream_flag(t, 2.5)[2]
+    assert compute_stream_flag(t, 1.0)[2]
 
 
-# --- r14: verdict layer — the flag must agree with the instruments
+# --- the verdict
 
 
 def test_quiet_session_regression_is_flagged_as_regression():
-    assert (
-        compute_stream_verdict(True, session_clean=True, max_inflation=1.05)
-        == "regression"
-    )
+    assert compute_stream_verdict(True, comparable=True) == "regression"
 
 
 def test_contended_exceedance_is_not_comparable_not_regression():
-    assert (
-        compute_stream_verdict(True, session_clean=False, max_inflation=1.1)
-        == "not_comparable"
-    )
-    assert (
-        compute_stream_verdict(True, session_clean=True, max_inflation=2.8)
-        == "not_comparable"
-    )
+    assert compute_stream_verdict(True, comparable=False) == "not_comparable"
 
 
 def test_quiet_clear_session_is_ok():
-    assert (
-        compute_stream_verdict(False, session_clean=True, max_inflation=1.0)
-        == "ok"
-    )
+    assert compute_stream_verdict(False, comparable=True) == "ok"
 
 
-# --- r14: session_clean v2 (VERDICT r13 item 6)
+def test_bars_cleared_is_ok_even_with_one_noisy_sample():
+    # bars that clear read ok whatever the sweep's comparability
+    assert compute_stream_verdict(False, comparable=False) == "ok"
 
 
-def test_session_clean_requires_quiet_launch_loadavg_all_horizons():
-    # the r12 driver case: fast sentinels, loadavg 5.77 at launch on a
-    # 32-core box (> 0.15×32 = 4.8) → NOT clean
-    clean, _ = compute_session_clean(False, 0.185, 0.061, [5.77], 32)
-    assert not clean
-    # the r13 driver case: 1-min 4.37 passed the old bar by 9%, but the
-    # 15-min horizon (7.92) carried the evidence of a busy machine
-    clean, reasons = compute_session_clean(
-        False, 0.193, 0.102, [4.37, 4.54, 7.92], 32
-    )
-    assert not clean
-    assert any("15m" in r for r in reasons)
-    # quiet launch on all horizons, fast sentinels → clean
-    clean, reasons = compute_session_clean(
-        False, 0.185, 0.185, [0.7, 0.9, 1.1], 32
-    )
-    assert clean and not reasons
-    # sentinel drift or the contended flag still dirty the session
-    assert not compute_session_clean(False, 0.1, 0.2, [0.7], 32)[0]
-    assert not compute_session_clean(True, 0.185, 0.185, [0.7], 32)[0]
+def test_single_gate_regression_trips_on_comparable_sweep():
+    dedup = 2.5 * _STREAM_FLOORS["op_stream_dedup"]
+    ev = evaluate_record(_sweep(1.0, op_stream_dedup=dedup))
+    assert ev["headline_comparable"]
+    assert ev["stream_bars_exceeded"]
+    assert ev["stream_verdict"] == "regression" and ev["stream_perf_flag"]
+    # the same gate on a loaded host is not a regression
+    ev = evaluate_record(_sweep(1.0, load1m=9.0, op_stream_dedup=dedup))
+    assert ev["stream_verdict"] == "not_comparable"
+    assert not ev["stream_perf_flag"]
 
 
-def test_session_clean_requires_quiet_stream_sentinels():
-    # the r13-PM phantom shape: loadavg 0.03 at launch, clean batch
-    # sentinels, but the stream path measured 1.284× quiet → not clean
-    clean, reasons = compute_session_clean(
-        False, 0.205, 0.069, [0.03, 0.54, 3.15], 32, stream_inflation=1.284
-    )
-    assert not clean
-    assert any("inflation" in r for r in reasons)
-
-
-# --- r14: the two r13 sessions, replayed by their recorded numbers
+def test_fast_sweep_never_tightens_the_bars():
+    # a sweep faster than its floors scales the bars by 1, not less
+    ev = evaluate_record(_sweep(0.5, op_stream_windowed=1.7))
+    assert ev["batch_floor_ratio_median"] == 0.5
+    assert ev["headline_comparable"] and ev["stream_verdict"] == "ok"
 
 
 def test_r13_driver_session_flag_agrees_with_instruments():
-    # with only its ACTUALLY RECORDED instruments (endpoint null drains
-    # 0.415/0.394 → 1.122; launch loadavg [4.37, 4.54, 7.92]) the v4
-    # model already reads: session not clean (15-min horizon), bars
-    # exceeded, verdict not_comparable → published flag FALSE.  The
-    # record explains itself — no more unexplained flag.
-    infl = round(0.415 / _STREAM_SENTINEL_REF, 3)  # 1.122
-    clean, _ = compute_session_clean(
-        False, 0.193, 0.102, [4.37, 4.54, 7.92], 32, stream_inflation=infl
-    )
-    assert not clean
-    _, family, exceeded = compute_stream_flag(
-        _R13_DRIVER, clean, inflation=infl
-    )
-    assert exceeded and family > 40
-    verdict = compute_stream_verdict(exceeded, clean, infl)
-    assert verdict == "not_comparable"
-
-
-def test_r13_driver_session_with_file_sentinel_sensing():
-    # the I/O-contention attribution (judge-confirmed): had the r14
-    # file-write sentinel existed, the interleaved readings around the
-    # write-heavy gates would have read ~3× (the gates ran 3-6× their
-    # builder readings).  Even at full sensing the bars stay exceeded
-    # (sink 7.52 > 2×1.1×cap3.0 = 6.6) — and the verdict must STILL be
-    # not_comparable, because a ≥1.6× instrument poisons comparability.
-    gi = dict.fromkeys(_STREAM_FLOORS, 3.0)
-    _, _, exceeded = compute_stream_flag(
-        _R13_DRIVER, False, gate_inflations=gi
-    )
-    verdict = compute_stream_verdict(exceeded, False, 3.0)
-    assert verdict == "not_comparable"
+    # the BENCH_r13.json digest: launch 1m 4.37 passes 0.15×32, but its 8
+    # stream rows are too few common gates to read a floor ratio, so
+    # the overrun is not comparable, never a regression
+    ev = evaluate_record({
+        "sf": 0.1, "queries": _R13_STREAM,
+        "loadavg_at_launch": [4.37, 4.54, 7.92], "cpus": 32,
+    })
+    assert not ev["headline_comparable"]
+    assert ev["headline_comparable_reason"] == "fewgates=8"
+    assert ev["stream_bars_exceeded"] and ev["stream8_family_sec"] > 40
+    assert ev["stream_verdict"] == "not_comparable"
 
 
 def test_judge_quiet_box_remeasure_stays_flag_false():
     # the judge's r13 re-measure: family 16.44 s (sink_upsert 1.37,
-    # near_dup 3.80), measured inflation 1.40 on an otherwise-quiet
-    # box.  Under v4: bars scale to 14×1.4 = 19.6 → not exceeded;
-    # session not clean (inflation > 1.15) → verdict not_comparable;
-    # published flag FALSE — exactly the judge's own conclusion.
+    # near_dup 3.80) on a box measured 1.40× slow.  A 1.40 floor ratio
+    # scales the family bar to 19.6 s, and is itself not comparable.
     rest = (16.44 - 1.37 - 3.80) / sum(
         f
         for q, f in _STREAM_FLOORS.items()
@@ -355,137 +264,15 @@ def test_judge_quiet_box_remeasure_stays_flag_false():
         )
         for q, f in _STREAM_FLOORS.items()
     }
-    gi = dict.fromkeys(_STREAM_FLOORS, 1.40)
-    clean, _ = compute_session_clean(
-        False, 0.1, 0.1, [0.25, 0.3, 0.4], 32, stream_inflation=1.40
-    )
-    assert not clean  # inflation 1.40 > 1.15
-    deltas, family, exceeded = compute_stream_flag(
-        t, clean, inflation=1.40, gate_inflations=gi
-    )
+    _, family, exceeded = compute_stream_flag(t, 1.40)
     assert abs(family - 16.44) < 0.05
     assert not exceeded
-    verdict = compute_stream_verdict(exceeded, clean, 1.40)
-    assert verdict != "regression"
-
-
-# --- r14: replay the COMMITTED records through evaluate_record
-#     (VERDICT r13 item 2: done = field set correctly on r12/r13)
-
-
-def _load_driver_record(name: str) -> dict:
-    rec = json.loads((REPO / name).read_text())
-    return rec.get("parsed", rec)
-
-
-def test_replay_r13_driver_record_not_comparable():
-    rec = _load_driver_record("BENCH_r13.json")
-    ev = evaluate_record(rec)
-    assert not ev["headline_comparable"]
-    assert any("15m" in r for r in ev["reasons"])
-    assert ev["stream_verdict"] == "not_comparable"
-    assert ev["stream_bars_exceeded"]  # the overrun is real...
-    assert not ev["stream_perf_flag"]  # ...and attributed, not flagged
-
-
-def test_replay_r12_driver_record_not_comparable():
-    # r12 has no loadavg_at_launch / stream sentinels — evaluate_record
-    # falls back to loadavg_start (5.77 > 4.8 → not comparable)
-    rec = _load_driver_record("BENCH_r12.json")
-    ev = evaluate_record(rec)
-    assert not ev["headline_comparable"]
-    assert not ev["stream_perf_flag"]
-
-
-def test_replay_r13_builder_am_record_comparable():
-    # the quiet AM builder session (116.3 s, inflation 1.068, launch
-    # [2.71, 1.64, 1.52]) must evaluate comparable and flag-false
-    rec = json.loads((REPO / "BENCH_LOCAL_r13.json").read_text())
-    ev = evaluate_record(rec)
-    assert ev["headline_comparable"]
-    assert ev["stream_verdict"] == "ok"
-    assert not ev["stream_perf_flag"]
-
-
-def test_replay_r13_builder_pm_phantom_not_comparable():
-    # the deliberately-kept phantom session (159.7 s, stream inflation
-    # 1.284 with quiet loadavg and clean batch sentinels) must evaluate
-    # not-comparable — the exact shape session_clean v2 now senses
-    rec = json.loads((REPO / "BENCH_LOCAL_r13_pm.json").read_text())
-    ev = evaluate_record(rec)
-    assert not ev["headline_comparable"]
-    assert not ev["stream_perf_flag"]
-
-
-def test_bars_cleared_is_ok_even_with_one_noisy_sample():
-    # a transient spike in one sentinel window only widens that gate's
-    # bar; if the bars still clear, the verdict is "ok" — session-level
-    # comparability is carried by session_clean/headline_comparable
-    assert (
-        compute_stream_verdict(False, session_clean=True, max_inflation=3.3)
-        == "ok"
-    )
-
-
-def test_sample_inflation_session_relative_term():
-    # deep-warm session: its own quiet floor is 0.26 s, well under the
-    # 0.37 s shallow-warm reference.  A 0.78 s mid-sweep spike reads
-    # only 2.1× absolute but 3.0× against the session's own floor —
-    # the relative term restores the sensitivity the r13 endpoint
-    # sentinels lacked
-    assert (
-        _sample_inflation(0.78, 0.45, null_base=0.26, file_base=0.45) == 3.0
-    )
-    # a uniformly-slow session (own floor already inflated) is still
-    # sensed by the absolute reference
-    assert (
-        _sample_inflation(0.55, 0.65, null_base=0.55, file_base=0.65)
-        == round(0.55 / _STREAM_SENTINEL_REF, 3)
-    )
-
-
-def test_replay_r14_builder_record_convicted_by_batch_floor():
-    # VERDICT r14 item 2's done-criterion: BENCH_LOCAL_r14.json passed
-    # every instrument bar (launch loadavg 3.87/3.6 vs 4.8, max stream
-    # inflation 1.538 vs 1.6) yet ran a uniform median 1.43× the r13-AM
-    # record across 186 common gates including untouched TPC-H code —
-    # the committed batch-floor table must now convict it, while its
-    # stream verdict stays ok (bars scaled and cleared) and its
-    # session instruments stay individually green
-    rec = json.loads((REPO / "BENCH_LOCAL_r14.json").read_text())
-    ev = evaluate_record(rec)
-    assert ev["session_clean"]  # the old instruments still read quiet
-    assert not ev["headline_comparable"]
-    assert ev["batch_floor_ratio_median"] is not None
-    assert ev["batch_floor_ratio_median"] > 1.25
-    assert any("batch floor" in r for r in ev["reasons"])
-    assert ev["stream_verdict"] == "ok"
-    assert not ev["stream_perf_flag"]
-
-
-def test_replay_r14_phantom_record_not_comparable():
-    # the THIRD documented phantom instance (launch loadavg 0.02,
-    # micro-batch path 1.22× median absolute): the interleaved
-    # sentinels sense it, the record self-describes — not comparable,
-    # bars scaled and cleared, no flag
-    rec = json.loads((REPO / "BENCH_LOCAL_r14_pm.json").read_text())
-    ev = evaluate_record(rec)
+    ev = evaluate_record(_sweep(1.40, **t))
     assert not ev["headline_comparable"]
     assert ev["stream_verdict"] == "ok" and not ev["stream_perf_flag"]
 
 
-def test_sample_inflation_takes_max_path():
-    # I/O-shaped contention: file drain 3× its ref while the null drain
-    # reads quiet — the combined reading must sense it
-    assert (
-        _sample_inflation(_STREAM_SENTINEL_REF, 3 * _STREAM_FILE_SENTINEL_REF)
-        == 3.0
-    )
-    assert _sample_inflation(_STREAM_SENTINEL_REF, 0.0) == 1.0
-
-
-# --- r15: batch-floor uniformity instrument (VERDICT r14 item 2) and
-#     the relative bar-scale noise clamp (ADVICE r14)
+# --- the floor ratio
 
 
 def test_batch_floor_table_is_committed_and_loads():
@@ -506,6 +293,9 @@ def test_batch_floor_ratio_median_math():
     one_bad = dict(quiet, g0=50.0)
     med, _ = compute_batch_floor_ratio(one_bad, floors)
     assert med == 1.05
+    # an even count takes the mean of the two middle ratios
+    many = {f"g{i}": 1.0 + (i % 2) * 0.2 for i in range(40)}
+    assert compute_batch_floor_ratio(many, floors) == (1.1, 40)
 
 
 def test_batch_floor_small_overlap_abstains():
@@ -515,36 +305,126 @@ def test_batch_floor_small_overlap_abstains():
     assert compute_batch_floor_ratio(few, None) == (None, 0)
 
 
-def test_replay_r13_am_record_stays_comparable_under_floor():
-    # the other half of the done-criterion: the genuinely-quiet r13-AM
-    # record reads ~1.0× the floors and must STAY comparable
-    rec = json.loads((REPO / "BENCH_LOCAL_r13.json").read_text())
+def test_minimum_overlap_decides_comparability():
+    # exactly _BATCH_FLOOR_MIN_COMMON common gates read a ratio; one
+    # fewer is not comparable; gates outside the table do not count
+    floors = load_batch_floors(0.1)
+    names = sorted(floors)[:_BATCH_FLOOR_MIN_COMMON]
+    rec = {
+        "sf": 0.1, "loadavg_at_launch": [0.1], "cpus": 32,
+        "queries": {q: floors[q] for q in names},
+    }
     ev = evaluate_record(rec)
-    assert ev["headline_comparable"], ev["reasons"]
-    assert ev["batch_floor_ratio_median"] is not None
+    assert ev["batch_floor_ratio_median"] == 1.0
+    assert ev["batch_floor_gates"] == _BATCH_FLOOR_MIN_COMMON
+    assert ev["headline_comparable"]
+    del rec["queries"][names[0]]
+    rec["queries"]["op_not_in_the_table"] = 1.0
+    ev = evaluate_record(rec)
+    assert ev["batch_floor_ratio_median"] is None
+    assert ev["headline_comparable_reason"] == (
+        f"fewgates={_BATCH_FLOOR_MIN_COMMON - 1}"
+    )
+    assert not ev["headline_comparable"]
+
+
+def test_discarded_attempts_read_not_comparable():
+    # the two attempts a retry discarded: BENCH_LOCAL_r16_before's first
+    # (floor 1.334) and BENCH_FULL's first (floor 1.129, 1-min load 9.21)
+    ev = evaluate_record(_sweep(1.334, load1m=0.5))
+    assert not ev["headline_comparable"]
+    assert ev["headline_comparable_reason"] == "floor=1.334/191"
+    ev = evaluate_record(_sweep(1.129, load1m=9.21))
+    assert ev["batch_floor_ratio_median"] == 1.129
+    assert not ev["headline_comparable"]
+    assert ev["headline_comparable_reason"] == "load1m=9.21"
+
+
+# --- replay of the committed records
+
+
+@pytest.mark.parametrize("name", FULL_RECORDS)
+def test_replay_every_committed_full_record(name):
+    rec = _load(name)
+    ev = evaluate_record(rec)
+    if "headline_comparable" in rec and name != "archive/BENCH_LOCAL_r14.json":
+        assert ev["headline_comparable"] == rec["headline_comparable"]
+    if "stream_verdict" in rec:
+        assert ev["stream_verdict"] == rec["stream_verdict"]
+    assert not ev["stream_perf_flag"]
+
+
+def test_replay_covers_every_labelled_record():
+    labelled = [n for n in FULL_RECORDS if "stream_verdict" in _load(n)]
+    assert len(labelled) == 13, labelled
+
+
+def test_replay_r14_builder_record_convicted_by_batch_floor():
+    # BENCH_LOCAL_r14.json stored comparable (it predates the floor
+    # table) while running a uniform 1.43× over 186 gates: the floor
+    # ratio convicts it; its stream bars still clear
+    ev = evaluate_record(_load("archive/BENCH_LOCAL_r14.json"))
+    assert not ev["headline_comparable"]
+    assert ev["headline_comparable_reason"] == "floor=1.558/189"
+    assert ev["stream_verdict"] == "ok"
+    assert not ev["stream_perf_flag"]
+
+
+def test_replay_r14_phantom_record_not_comparable():
+    ev = evaluate_record(_load("archive/BENCH_LOCAL_r14_pm.json"))
+    assert not ev["headline_comparable"]
+    assert ev["batch_floor_ratio_median"] > _BATCH_FLOOR_BAR
+    assert ev["stream_verdict"] == "ok" and not ev["stream_perf_flag"]
+
+
+def test_replay_r13_driver_record_not_comparable():
+    ev = evaluate_record(_load("archive/BENCH_r13.json"))
+    assert not ev["headline_comparable"]
+    assert "fewgates=" in ev["headline_comparable_reason"]
+    assert ev["stream_verdict"] == "not_comparable"
+    assert ev["stream_bars_exceeded"]  # the overrun is real...
+    assert not ev["stream_perf_flag"]  # ...and not comparable
+
+
+def test_replay_r12_driver_record_not_comparable():
+    # r12 has no loadavg_at_launch: loadavg_start (5.77 > 4.8) stands in
+    ev = evaluate_record(_load("archive/BENCH_r12.json"))
+    assert not ev["headline_comparable"]
+    assert "load1m=5.77" in ev["headline_comparable_reason"]
+    assert not ev["stream_perf_flag"]
+
+
+def test_replay_r13_builder_am_record_comparable():
+    ev = evaluate_record(_load("archive/BENCH_LOCAL_r13.json"))
+    assert ev["headline_comparable"]
+    assert ev["stream_verdict"] == "ok"
+    assert not ev["stream_perf_flag"]
+
+
+def test_replay_r13_builder_pm_phantom_not_comparable():
+    ev = evaluate_record(_load("archive/BENCH_LOCAL_r13_pm.json"))
+    assert not ev["headline_comparable"]
+    assert ev["batch_floor_ratio_median"] > _BATCH_FLOOR_BAR
+    assert not ev["stream_perf_flag"]
+
+
+def test_replay_r13_am_record_stays_comparable_under_floor():
+    ev = evaluate_record(_load("archive/BENCH_LOCAL_r13.json"))
+    assert ev["headline_comparable"], ev["headline_comparable_reason"]
     assert ev["batch_floor_ratio_median"] <= _BATCH_FLOOR_BAR
 
 
 def test_replay_driver_digest_abstains_on_floor():
-    # the driver digest carries only the ~18 watch rows — below the
-    # 30-gate overlap minimum the instrument abstains rather than
-    # reading uniformity off a biased subset (the instruments that DO
-    # convict r14's driver record are its own: contended + sentinels)
-    rec = json.loads((REPO / "BENCH_r14.json").read_text())["parsed"]
-    ev = evaluate_record(rec)
+    # a BENCH_r*.json digest carries only the ~18 watch rows: below the
+    # 30-gate minimum it reads no floor ratio and is not comparable
+    ev = evaluate_record(_load("archive/BENCH_r14.json"))
     assert ev["batch_floor_ratio_median"] is None
-    assert not ev["headline_comparable"]  # convicted by its own flags
+    assert not ev["headline_comparable"]
 
 
-def test_clamp_bar_scales_bounds_relative_noise():
-    # quiet box: abs ~1.0, rel spread ~1.2 → stays (under the 1.3 cap)
-    assert clamp_bar_scales({"g": 1.2}, {"g": 1.0}) == {"g": 1.2}
-    # noise-only rel spike: bar may widen at most 30% past the
-    # absolute instrument's reading (2.4 would have doubled the bar)
-    assert clamp_bar_scales({"g": 2.4}, {"g": 1.0}) == {"g": 1.3}
-    # genuinely-contended sample: abs carries it, rel passes through
-    assert clamp_bar_scales({"g": 2.4}, {"g": 2.0}) == {"g": 2.4}
-    # abs below 1 (deep-warm session) floors at 1 before the cap
-    assert clamp_bar_scales({"g": 1.5}, {"g": 0.8}) == {"g": 1.3}
-    # missing abs reading behaves like abs=1
-    assert clamp_bar_scales({"g": 2.0}, {}) == {"g": 1.3}
+def test_record_without_launch_reading_is_not_comparable():
+    # r2-r8 records carry no loadavg at all
+    ev = evaluate_record(_load("archive/BENCH_LOCAL_r03.json"))
+    assert ev["batch_floor_ratio_median"] <= _BATCH_FLOOR_BAR
+    assert ev["headline_comparable_reason"] == "noload"
+    assert not ev["stream_perf_flag"]

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 import pql_spark.engine as engine_mod
 from pql_spark import MultiResult, PqlEngine, compile_pql
 from pql_spark.parser import QueryError
+from pql_spark.sql_backend import Unsupported, compile_to_sql
 
 
 @pytest.fixture(scope="module")
@@ -101,6 +102,15 @@ REFUSALS = [
     "M | mv-expand mp",
     'M | extend m = bag_pack("x", 1, "y", 2) | mv-expand m',
 ]
+# a map reached through a binding is still a known map
+BOUND_MAPS = [
+    'let B = M | extend m = bag_pack("k", id); B | mv-expand m',
+    'let f = (t: (*)) { t | extend m = bag_pack("k", id) };'
+    " M | invoke f() | mv-expand m",
+    "let f = (t: (*)) { t | mv-expand m };"
+    ' M | extend m = bag_pack("k", id) | invoke f()',
+]
+REFUSALS += BOUND_MAPS
 
 
 @pytest.mark.parametrize("q", REFUSALS)
@@ -111,6 +121,13 @@ def test_refusal_compiles_once_on_the_dataframe_path(
     got = eng.query(q)
     assert pql_calls == [q] and eng.sql_fallbacks == 1
     assert _rows(got) == _rows(compile_pql(q, tables.__getitem__))
+
+
+@pytest.mark.parametrize("q", BOUND_MAPS)
+def test_bindings_carry_map_marks(q):
+    with pytest.raises(QueryError) as ei:
+        compile_to_sql(q, {"M": ["id", "s"]})
+    assert [type(e) for e in ei.value.errors] == [Unsupported]
 
 
 def test_mv_apply_over_a_map_is_refused(spark, tables, pql_calls):

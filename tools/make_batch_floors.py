@@ -2,23 +2,17 @@
 """Generate BATCH_FLOORS.json — the per-gate quiet-session floor table
 (VERDICT r14 item 2).
 
-The streaming tier has absolute quiet references (null 0.37 s / file
-0.65 s) that let a record's instruments convict a slow session even
-when loadavg and the batch sentinel read clean.  The BATCH side had
-none: BENCH_LOCAL_r14.json self-labeled ``headline_comparable: true``
-(launch loadavg 3.87/3.6 vs bar 4.8, max stream inflation 1.538 vs bar
-1.6) while running a uniform median 1.43× the r13-AM committed record
-across all 186 common gates — including pure-batch TPC-H gates no r14
-diff touched.
-
-This tool derives the missing absolute reference: for every gate, the
-MINIMUM best-of-2 time across the committed same-code-era builder
-records (r13+ — earlier rounds ran materially different code).  A
-session's ``batch_floor_ratio_median`` (median over common gates of
-time / floor) then measures uniform slowdown against the best committed
-evidence; bench.py folds it into ``headline_comparable`` (NOT into
-per-gate flags — the r12-r14 false-positive lesson stands: per-gate
-sub-2× deltas are below the single-session measurement floor).
+For every gate, the floor is the MINIMUM best-of-2 time across the
+committed same-code-era full sweep records (r13+ — earlier rounds ran
+materially different code).  ``bench.evaluate_record`` reads a sweep's
+``batch_floor_ratio_median`` (median over common gates of time /
+floor) against it: a sweep that runs uniformly slow against the best
+committed evidence is not comparable, whatever its launch load read.
+BENCH_LOCAL_r14.json is the case that motivated the table: a quiet
+launch, yet a uniform median 1.43× the r13-AM record across 186 common
+gates, pure-batch TPC-H gates no r14 diff touched included.  The ratio
+is a sweep-level reading only, never a per-gate flag: per-gate sub-2×
+deltas are below the single-session measurement floor.
 
 Regenerate after a round that commits a new clean record:
 
@@ -41,10 +35,10 @@ REPO = Path(__file__).resolve().parent.parent
 DEFAULT_SOURCES = [
     # pre-r15 era: kept for gates the r15 optimizations did not touch
     # (min() only keeps them where they are genuinely lower)
-    "BENCH_LOCAL_r13.json",
-    "BENCH_LOCAL_r13_pm.json",
-    "BENCH_LOCAL_r14.json",
-    "BENCH_LOCAL_r14_pm.json",
+    "archive/BENCH_LOCAL_r13.json",
+    "archive/BENCH_LOCAL_r13_pm.json",
+    "archive/BENCH_LOCAL_r14.json",
+    "archive/BENCH_LOCAL_r14_pm.json",
     # r15 optimization era (re-baselined per the ratchet contract —
     # a faster code round must regenerate rather than enjoy an easy
     # bar): round-start baselines, the mid-round record, the fastest
