@@ -72,7 +72,7 @@ class PqlEngine:
         does not pile up cached blocks in executor storage.  Persists
         only: queries leave no temp views behind, and the caller's own
         persists are never touched.  The registry is shared by every
-        engine and pipeline in the process — closing one engine evicts
+        engine and operator in the process — closing one engine evicts
         blocks persisted by all of them (they stay usable; Spark
         recomputes evicted plans on next use, a perf cost only).
         Matches the bench/test usage of one drain per query; hold

@@ -196,7 +196,7 @@ def _unfilter(
     # Average/Paeth are per-byte recurrences (each byte needs the
     # RECONSTRUCTED left neighbour), so they run as plain-Python list
     # loops — numpy scalar indexing made the same loops ~4x slower
-    # (r15 measurement in OPTIMIZATION_r15.md).  prev keeps a lazily
+    # (r15 measurement in archive/OPTIMIZATION_r15.md).  prev keeps a lazily
     # materialized list twin so runs of filter-3/4 rows convert once.
     prev_list: list[int] | None = [0] * stride
     for y in range(nrows):

@@ -3,9 +3,11 @@
 ``curate_corpus`` is the canonical training-data pipeline the individual
 operators exist for: quality filter → language filter → exact dedup →
 MinHash near-dup removal → deterministic content-keyed train/test split.
-Every stage is one of this package's operators, composed lazily — the
-whole pipeline is a single Spark job graph, so Catalyst sees (and
-optimizes) it end to end, and it scales exactly as its stages do.
+Every stage is one of this package's operators, composed as DataFrame
+operations that Catalyst optimizes, so it scales exactly as its stages
+do.  Where one frame feeds several branches (the post-dedup corpus,
+the drop list, the QA base) it is checkpointed locally, and everything
+downstream plans over that flat leaf instead of the upstream lineage.
 """
 
 from __future__ import annotations
@@ -69,15 +71,33 @@ def curate_corpus(
     8. train/test split keyed on the CONTENT fingerprint, not the id —
        re-ingesting the same text can never land it in the other split.
 
+    Stages 4–6 run EAGERLY, when ``curate_corpus`` is called: the
+    post-dedup corpus and the distinct drop list are each materialized
+    once with ``localCheckpoint`` (and, with ``qa``, the QA base below
+    too), because each is re-read by several branches.  Everything
+    downstream — the anti-join, redaction, the split, every QA frame —
+    is lazy over those flat ``LogicalRDD`` leaves, so a later plan
+    never re-analyzes, re-plans or re-serializes the upstream lineage.
+    The checkpointed blocks belong to the returned frames: Spark's
+    ContextCleaner frees them once those frames are garbage-collected,
+    and nothing is registered for ``unpersist_tracked``.  The trade of
+    a LOCAL checkpoint, which ``operators.dedup.connected_components``
+    makes too: the blocks live in executor storage without lineage, so
+    losing an executor fails a later job over them instead of
+    recomputing the lost partitions.
+
     ``timing``: DIAGNOSTIC ONLY — pass a dict to get per-stage wall
     seconds written into it (keys below).  Timing mode materializes
     each stage with ``localCheckpoint`` so the numbers are attributable
     increments; that inserts barriers Catalyst would otherwise fuse
-    away, so the SUM exceeds the lazy pipeline's end-to-end time.  Use
-    it to see which stage moved between environments, not as the
+    away, so the SUM exceeds the default pipeline's end-to-end time.
+    At the stages the default path checkpoints anyway (``exact_dedup``
+    and the drop list, timed as ``near_dup_pairs`` or, with a
+    ``benchmark``, as ``decontaminate``) it times that one checkpoint.
+    Use it to see which stage moved between environments, not as the
     benchmark number.
 
-    ``qa``: pass a dict to ALSO receive a lazy QA report on what the
+    ``qa``: pass a dict to ALSO receive a QA report on what the
     pipeline kept vs dropped (the curation-review view).  Keys set:
 
     * ``qa["profile"]`` — :func:`profile_columns` of the annotated
@@ -88,30 +108,33 @@ def curate_corpus(
       cohort over the fixed [0, 1] range (bin edges comparable across
       runs and cohorts);
     * ``qa["stage_counts"]`` — one row per pipeline stage
-      ``(stage_idx, stage, rows)`` of surviving row counts, built
-      from 1-row partial aggregates over each stage frame.
+      ``(stage_idx, stage, rows)`` of surviving row counts.
 
-    All three are *lazy DataFrames sharing the pipeline's lineage*
-    (the persisted post-dedup corpus is reused); collecting them runs
-    extra jobs but never mutates the main result, and the main return
-    is byte-identical with or without ``qa``.
+    All three are lazy DataFrames over the checkpointed QA base: one
+    row per input document (ids are assumed unique, as the cohort
+    join requires), labeled from the checkpointed post-dedup ids and
+    drop list.  Collecting them runs extra jobs but never mutates the
+    main result, and the main return is byte-identical with or without
+    ``qa``.
     """
     import time as _time
 
-    from .operators._util import pinned_filter, rebalance, tracked_persist
+    from .operators._util import pinned_filter, rebalance
 
     if langs is not None:
         bad = [lang for lang in langs if not isinstance(lang, str)]
         if bad:
             raise ValueError(f"langs must be str language codes, got {bad!r}")
 
-    def _mark(stage: str, frame: DataFrame) -> DataFrame:
-        if timing is None:
-            return frame
+    def _checkpoint(stage: str, frame: DataFrame) -> DataFrame:
         t0 = _time.perf_counter()
         out = frame.localCheckpoint()
-        timing[stage] = round(_time.perf_counter() - t0, 3)
+        if timing is not None:
+            timing[stage] = round(_time.perf_counter() - t0, 3)
         return out
+
+    def _mark(stage: str, frame: DataFrame) -> DataFrame:
+        return frame if timing is None else _checkpoint(stage, frame)
 
     # spread a single-file input across the cluster's cores FIRST: the
     # whole narrow filter chain below otherwise runs as ONE task (one
@@ -152,7 +175,6 @@ def curate_corpus(
     # pinned: pushdown would substitute the quality/langid trees into a
     # pre-shuffle Filter and evaluate them twice — see pinned_filter
     annot = kept  # full annotated frame (pre-filter) — QA cohort base
-    stages: list[tuple[str, DataFrame]] = [("input", annot)]
     # ONE source of truth for the keep-condition, as SQL text: the
     # filter parses it (identical tree to the old Column build) and the
     # QA stage-count pass below re-counts it without re-attaching a
@@ -165,8 +187,8 @@ def curate_corpus(
         cond_sql += f" AND lang_pred IN ({in_list})"
     cond = F.expr(cond_sql)
     kept = _mark("quality_lang", pinned_filter(kept, cond))
-    stages.append(("quality_lang", kept))
 
+    repetition = None
     if max_dup_ngram_frac is not None:
         # appended narrow fold over `kept` (not `docs`): the repetition
         # stats only pay for rows that survived the filters above, and
@@ -180,32 +202,32 @@ def curate_corpus(
             "n_lines", "dup_line_frac", "dup_line_char_frac",
             "top_ngram_frac", "dup_ngram_frac",
         )
-        kept = _mark("repetition", kept)
-        stages.append(("repetition", kept))
+        kept = repetition = _mark("repetition", kept)
 
     # exact dedup: one survivor (min id) per identical normalized text.
     # A fingerprint-partitioned window min beats the groupBy+join-back
     # (one shuffle instead of two, and no second evaluation of the
-    # filter lineage above)
+    # filter lineage above).
+    # `kept` is re-read by minhash (signature + exact verify), the
+    # decontamination scan, the drop anti-join, redaction, the final
+    # split and the QA base — checkpoint it ONCE so the filter/dedup
+    # DAG above runs once AND drops out of every later plan.  The
+    # expensive branches (minhash, contamination) are then reduced to
+    # a TINY id drop-list, checkpointed too; without that, every
+    # downstream consumer would re-run the whole minhash pipeline
+    # through the anti-join's lineage (measured 22-38s vs ~9s at
+    # sf0.1).  A persist would cache the same rows but keep the whole
+    # upstream plan in every later frame: analysis, AQE re-planning,
+    # plan strings and task closures over it on every consumer.
     from pyspark.sql import Window
 
     w = Window.partitionBy("fingerprint")
-    kept = _mark(
+    kept = deduped = _checkpoint(
         "exact_dedup",
         kept.withColumn("__min_id", F.min(F.col(id_col)).over(w))
         .filter(F.col(id_col) == F.col("__min_id"))
         .drop("__min_id"),
     )
-
-    # `kept` is re-read by minhash (signature + exact verify), the
-    # decontamination scan, the drop anti-join, redaction, and the final
-    # split — persist it ONCE so the filter/join DAG above runs once.
-    # The expensive branches (minhash, contamination) are then reduced
-    # to TINY id drop-lists which are persisted too; without that, every
-    # downstream consumer would re-run the whole minhash pipeline
-    # through the anti-join's lineage (measured 22-38s vs ~9s at sf0.1).
-    stages.append(("exact_dedup", kept))
-    kept = kept_persisted = tracked_persist(kept)
 
     # near-dup removal: drop the higher id of every similar pair.
     # 32 perms / 8 bands (r=4) halve the signature work vs the 64/16
@@ -219,28 +241,19 @@ def curate_corpus(
         sort_pairs=False,  # only the id_b drop-set is used (guide §2.4)
     )
     drops = pairs.select(F.col("id_b").alias(id_col))
-    if timing is not None:
-        t0 = _time.perf_counter()
-        drops = drops.localCheckpoint()
-        timing["near_dup_pairs"] = round(_time.perf_counter() - t0, 3)
-
-    if benchmark is not None:
+    if benchmark is None:
+        drops = _checkpoint("near_dup_pairs", drops.distinct())
+    else:
         from .operators.dedup import contamination_report
 
+        drops = _mark("near_dup_pairs", drops)
         contaminated = contamination_report(
             kept, benchmark, text_col, id_col, gram_n=decontaminate_gram_n
         ).select(id_col)
-        if timing is not None:
-            t0 = _time.perf_counter()
-            contaminated = contaminated.localCheckpoint()
-            timing["decontaminate"] = round(
-                _time.perf_counter() - t0, 3
-            )
-        drops = drops.unionByName(contaminated)
-
-    drops = tracked_persist(drops.distinct())
+        drops = _checkpoint(
+            "decontaminate", drops.unionByName(contaminated).distinct()
+        )
     kept = kept.join(drops, id_col, "left_anti")
-    stages.append(("near_dup_decontam", kept))
 
     if redact:
         # in-place narrow scrub — the (id, redacted) join-back shape
@@ -258,39 +271,35 @@ def curate_corpus(
         from .operators._util import sql_over
         from .operators.profiling import numeric_histogram, profile_columns
 
-        stages.append(("final", out))
-
         def _lit(text: str) -> str:
             # sql_over formats its text: caller-given identifiers and
             # the `langs` literals in cond_sql keep their braces
             return text.replace("{", "{{").replace("}", "}}")
 
         idq = _lit(f"`{id_col}`")
-        # cohort label: did the annotated doc survive to the output?
-        # (left join on the id — the output is a subset of `annot`, so
-        # a match means kept).  text_len instead of raw text keeps the
-        # profile numeric where it matters.  Built as ONE spark.sql
-        # parse (r16): the old 4-op Column chain paid eager analysis
-        # per op over the full annotated lineage; the SQL text yields
-        # the same join+project tree in one analysis pass.
+        # The QA base: one row per annotated doc, labeled from the two
+        # checkpoints rather than from `out`.  `__qa_exact` marks the
+        # docs that survived the exact dedup; `cohort` is 'kept' iff
+        # the doc also escaped the distinct drop list — exactly
+        # membership in `out`, since redaction and the split only
+        # append columns.  Each left join matches at most one row (ids
+        # are unique per doc, `drops` is distinct), so the base keeps
+        # `annot`'s cardinality.  text_len instead of raw text keeps
+        # the profile numeric where it matters.  Checkpointed: the
+        # profile, both histograms and the stage counts all read it,
+        # and it is six narrow columns per doc.
         labeled = sql_over(
-            {"annot": annot, "out": out},
+            {"annot": annot, "kept": deduped, "drops": drops},
             f"SELECT a.{idq}, a.quality, a.lang_pred,"
             f" length(a.{_lit(f'`{text_col}`')}) AS text_len,"
-            " CASE WHEN o.__qa_kept THEN 'kept' ELSE 'dropped' END"
-            " AS cohort"
+            " k.__qa_exact IS NOT NULL AS __qa_exact,"
+            f" CASE WHEN k.__qa_exact AND d.{idq} IS NULL"
+            " THEN 'kept' ELSE 'dropped' END AS cohort"
             " FROM {annot} a LEFT JOIN"
-            f" (SELECT {idq}, TRUE AS __qa_kept FROM {{out}}) o"
-            f" ON a.{idq} = o.{idq}",
-        )
-        # r15 (guide §1.2 / §5): `labeled` feeds the profile AND both
-        # histograms AND two stage counts below — without a persist,
-        # each consumer re-runs the full annotated lineage (the
-        # quality/langid regex trees over every document, ~0.5 s per
-        # pass at sf0.1) plus the final-ids join.  It is four narrow
-        # columns per doc, so the cache is tiny; tracked_persist keeps
-        # the bench's eviction contract.
-        labeled = tracked_persist(labeled)
+            f" (SELECT {idq}, TRUE AS __qa_exact FROM {{kept}}) k"
+            f" ON a.{idq} = k.{idq}"
+            f" LEFT JOIN {{drops}} d ON k.{idq} = d.{idq}",
+        ).localCheckpoint()
         qa["profile"] = profile_columns(
             labeled.select("cohort", id_col, "quality", "text_len"),
             group_by="cohort",
@@ -302,80 +311,45 @@ def curate_corpus(
                 labeled.filter(F.col("cohort") == c),
                 "quality", bins=20, lo=0.0, hi=1.0,
             )
-        # Stage counts, fused (r15, folded further r16 — guide §2.3
-        # "aggregate before you shuffle" / §1.2 don't compute things
-        # twice): stages whose counts are provably identical or
-        # derivable share ONE aggregate pass.
-        # * `input` + `quality_lang` are one scan of the persisted
-        #   `labeled` frame — count(CASE WHEN cond) counts exactly the
-        #   filter's TRUE rows, and `labeled` has one row per `annot`
-        #   row carrying the columns the filter reads.
-        # * `exact_dedup` + `near_dup_decontam` + `final` (r16) are ONE
-        #   pass over the persisted post-dedup frame LEFT-JOINED to the
-        #   distinct drop list: count(1) is the exact_dedup row count
-        #   (each row matches ≤1 drop id because `drops` is distinct,
-        #   so the left join preserves cardinality), count(CASE WHEN no
-        #   match) is exactly the anti-join's row count, and
-        #   train_test_split only appends a column (never changes row
-        #   count) so `final` equals it.  This drops the separate
-        #   exact_dedup aggregate subtree — one fewer full pass per QA
-        #   report (pinned by tests/test_pipelines.py).
-        # Any remaining middle stage (e.g. the optional repetition
-        # filter) keeps its own single-count pass.
-        # The whole accounting is ONE spark.sql parse instead of the
-        # old per-frame agg/explode/union Column chains.
-        by_name = {name: i for i, (name, _) in enumerate(stages)}
-        frames = {
-            "labeled": labeled, "kept": kept_persisted, "drops": drops,
+        # Stage counts: ONE aggregate over the QA base counts every
+        # stage it labels — count(1) is `input`, count(CASE WHEN cond)
+        # counts exactly the filter's TRUE rows (`quality_lang`), the
+        # exact flag counts `exact_dedup`, and the 'kept' cohort counts
+        # both `near_dup_decontam` and `final` (train_test_split never
+        # changes the row count).  The optional repetition stage keeps
+        # its own single-count pass over its frame.
+        kept_sql = "count(CASE WHEN cohort = 'kept' THEN 1 END)"
+        counts = {
+            "input": "count(1)",
+            "quality_lang": f"count(CASE WHEN {_lit(cond_sql)} THEN 1 END)",
+            "exact_dedup": "count(CASE WHEN __qa_exact THEN 1 END)",
+            "near_dup_decontam": kept_sql,
+            "final": kept_sql,
         }
-
-        def _emit(entries: list[tuple[int, str, str]], src: str) -> str:
-            structs = ", ".join(
-                f"named_struct('stage_idx', {i}, 'stage', '{name}',"
-                f" 'rows', {alias})"
-                for i, name, alias in entries
-            )
-            return (
-                "SELECT s.stage_idx, s.stage, s.rows FROM"
-                f" (SELECT explode(array({structs})) AS s FROM ({src}))"
-            )
-
-        parts = [
-            _emit(
-                [
-                    (by_name["input"], "input", "__n_input"),
-                    (by_name["quality_lang"], "quality_lang", "__n_ql"),
-                ],
-                "SELECT count(1) AS __n_input,"
-                f" count(CASE WHEN {_lit(cond_sql)} THEN 1 END) AS __n_ql"
-                " FROM {labeled}",
-            ),
-            _emit(
-                [
-                    (by_name["exact_dedup"], "exact_dedup", "__n_exact"),
-                    (
-                        by_name["near_dup_decontam"],
-                        "near_dup_decontam",
-                        "__n_post",
-                    ),
-                    (by_name["final"], "final", "__n_post"),
-                ],
-                "SELECT count(1) AS __n_exact,"
-                f" count(CASE WHEN d.{idq} IS NULL THEN 1 END) AS __n_post"
-                " FROM {kept} k LEFT JOIN {drops} d"
-                f" ON k.{idq} = d.{idq}",
-            ),
+        aggs = ", ".join(f"{e} AS __n_{name}" for name, e in counts.items())
+        stages = [
+            "input", "quality_lang", "repetition", "exact_dedup",
+            "near_dup_decontam", "final",
         ]
-        for i, (name, f) in enumerate(stages):
-            if name in (
-                "input", "quality_lang", "exact_dedup",
-                "near_dup_decontam", "final",
-            ):
-                continue
-            frames[f"mid{i}"] = f
+        if repetition is None:
+            stages.remove("repetition")
+        structs = ", ".join(
+            f"named_struct('stage_idx', {i}, 'stage', '{name}',"
+            f" 'rows', __n_{name})"
+            for i, name in enumerate(stages)
+            if name in counts
+        )
+        frames = {"labeled": labeled}
+        parts = [
+            "SELECT s.stage_idx, s.stage, s.rows FROM"
+            f" (SELECT explode(array({structs})) AS s FROM"
+            f" (SELECT {aggs} FROM {{labeled}}))"
+        ]
+        if repetition is not None:
+            frames["rep"] = repetition
             parts.append(
-                f"SELECT {i} AS stage_idx, '{name}' AS stage,"
-                f" count(1) AS rows FROM {{mid{i}}}"
+                f"SELECT {stages.index('repetition')} AS stage_idx,"
+                " 'repetition' AS stage, count(1) AS rows FROM {rep}"
             )
         qa["stage_counts"] = sql_over(frames, " UNION ALL ".join(parts))
     return out

@@ -1,6 +1,6 @@
 """Replay tests for the bench stdout digest (VERDICT r15 item 1).
 
-BENCH_r15.json's long prose ``headline_comparable_reason`` silently
+archive/BENCH_r15.json's long prose ``headline_comparable_reason`` silently
 evicted 5 per-query watch rows from the 1900-char stdout digest, which
 cost the round-over-round diff on those queries.  Reasons are now
 short codes, written once by ``evaluate_record``.  These tests replay
@@ -33,7 +33,7 @@ def _committed_full_record() -> dict:
 
 def _worst_case_record() -> dict:
     """The committed sweep's gates, run 1.6× slower on a host whose
-    launch load read 14.04 (BENCH_r15.json's): both reason codes at
+    launch load read 14.04 (archive/BENCH_r15.json's): both reason codes at
     once, plus a discarded retry attempt."""
     times = {
         q: round(t * 1.6, 3)

@@ -42,21 +42,32 @@ def test_engine_context_manager_drains(spark):
     assert _TRACKED_PERSISTS == []
 
 
-def test_pipeline_persists_are_tracked_and_drain(spark):
-    """curate_corpus registers its intermediates; after the caller
-    materializes and closes, nothing lingers in the registry."""
+def test_pipeline_leaves_the_persist_registry_alone(spark):
+    """curate_corpus checkpoints its reuse points instead of persisting
+    them: it registers nothing, and its result is still readable after
+    an engine drains the registry."""
     from pql_spark.pipelines import curate_corpus
 
     unpersist_tracked()
+    marker = tracked_persist(spark.range(3))
     docs = spark.createDataFrame(
-        [(i, "the quick brown fox " * 8) for i in range(40)],
+        [(i, f"doc {i % 7} the quick brown fox " * 8) for i in range(40)],
         "doc_id long, text string",
     )
+    qa: dict = {}
+    out = curate_corpus(
+        docs, min_quality=0.0, near_dup_threshold=0.9, qa=qa
+    )
+    rows = sorted(out.collect())
+    assert len(rows) > 0
+    assert len(_TRACKED_PERSISTS) == 1 and _TRACKED_PERSISTS[0] is marker
     with PqlEngine(spark):
-        out = curate_corpus(docs, min_quality=0.0, near_dup_threshold=0.9)
-        out.count()
-        assert len(_TRACKED_PERSISTS) >= 1
+        pass
     assert _TRACKED_PERSISTS == []
+    assert sorted(out.collect()) == rows
+    assert {r.stage: r.rows for r in qa["stage_counts"].collect()}[
+        "final"
+    ] == len(rows)
 
 
 def _is_cached(spark, df) -> bool:

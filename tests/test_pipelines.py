@@ -73,6 +73,13 @@ def test_curate_corpus_new_stages(spark, raw_docs):
         raw_docs, near_dup_threshold=0.5, benchmark=bench
     )
     assert {r.doc_id for r in out.collect()} == {4}
+    # timing mode times the drop list's one checkpoint as decontaminate
+    timing: dict = {}
+    out = curate_corpus(
+        raw_docs, near_dup_threshold=0.5, benchmark=bench, timing=timing
+    )
+    assert {r.doc_id for r in out.collect()} == {4}
+    assert {"near_dup_pairs", "decontaminate"} <= set(timing)
     # redaction rewrites the surviving text in place
     pii = spark.createDataFrame(
         [(10, GOOD + " reach me at a.b@x.org please thanks")],

@@ -306,42 +306,53 @@ def _python_nodes(df) -> list[str]:
     return [n for n in _PYTHON_NODES if n in plan]
 
 
-def test_batch_minhash_and_curation_run_no_python_workers(spark):
+def test_batch_minhash_and_curation_run_no_python_workers(spark, monkeypatch):
     """Batch MinHash signatures are a JVM aggregate: neither the pair
     operator nor the curation pipeline (whose near-dup stage it is) may
-    plan a Python-worker node.  The persisted frames' cached plans are
-    part of the tree string, so a Python stage behind a persist shows
-    here too."""
-    from pql_spark.operators._util import unpersist_tracked
+    plan a Python-worker node.  The pipeline's checkpoints cut their
+    input plans out of every later tree string, so the executed plan of
+    each frame it checkpoints is recorded and checked too."""
     from pql_spark.operators.dedup import minhash_dup_pairs
     from pql_spark.pipelines import curate_corpus
 
     docs = spark.read.parquet(str(SF_SMOKE / "documents.parquet"))
-    try:
-        assert _python_nodes(minhash_dup_pairs(docs)) == []
-        assert _python_nodes(minhash_dup_pairs(docs, max_bucket=8)) == []
-        qa: dict = {}
-        out = curate_corpus(docs, qa=qa)
-        assert _python_nodes(out) == []
-        for name, frame in qa.items():
-            assert _python_nodes(frame) == [], name
-    finally:
-        unpersist_tracked()
+    frame_cls = type(docs)
+    checkpointed: list[str] = []
+    local_checkpoint = frame_cls.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        out = local_checkpoint(self, *args, **kwargs)
+        checkpointed.append(
+            self._jdf.queryExecution().executedPlan().toString()
+        )
+        return out
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recording)
+    assert _python_nodes(minhash_dup_pairs(docs)) == []
+    assert _python_nodes(minhash_dup_pairs(docs, max_bucket=8)) == []
+    qa: dict = {}
+    out = curate_corpus(docs, qa=qa)
+    assert _python_nodes(out) == []
+    for name, frame in qa.items():
+        assert _python_nodes(frame) == [], name
+    # post-dedup corpus, drop list, QA base
+    assert len(checkpointed) == 3
+    for plan in checkpointed:
+        assert [n for n in _PYTHON_NODES if n in plan] == []
 
 
-def test_curation_qa_reads_its_persists(spark):
-    """The QA report's frames are built over the pipeline's persisted
-    frames through temp views; dropping those views must not UNCACHE
-    them (``spark.catalog.dropTempView`` would), so the executed plans
-    still scan the in-memory cache."""
-    from pql_spark.operators._util import unpersist_tracked
+def test_curation_qa_reads_its_checkpoints(spark):
+    """The QA report's frames are built over the pipeline's local
+    checkpoints, not over the lineage that produced them: their
+    executed plans scan the checkpointed RDDs, with no cached relation
+    and no re-read of the source files."""
     from pql_spark.pipelines import curate_corpus
 
     docs = spark.read.parquet(str(SF_SMOKE / "documents.parquet"))
-    try:
-        qa: dict = {}
-        curate_corpus(docs, qa=qa)
-        for name in ("stage_counts", "profile"):
-            assert "InMemoryTableScan" in executed_plan(qa[name]), name
-    finally:
-        unpersist_tracked()
+    qa: dict = {}
+    curate_corpus(docs, qa=qa)
+    for name in ("stage_counts", "profile"):
+        plan = executed_plan(qa[name])
+        assert "ExistingRDD" in plan, name
+        for leaf in ("InMemoryRelation", "InMemoryTableScan", "Scan parquet"):
+            assert leaf not in plan, (name, leaf)
