@@ -98,8 +98,8 @@ def tracked_persist(df: DataFrame) -> DataFrame:
     """``df.persist()`` registered for later bulk eviction.
 
     Operators that persist an intermediate reused across several
-    downstream branches (e.g. the shingle inverted index in the PPJoin
-    path) return a LAZY result — they cannot unpersist before the
+    downstream branches (e.g. the signature table of the banded-Hamming
+    join) return a LAZY result — they cannot unpersist before the
     caller materializes it, and Spark never auto-evicts cached plans.
     In a long session repeated calls would otherwise accumulate cached
     blocks in executor storage.  Callers (or test/bench harnesses) call

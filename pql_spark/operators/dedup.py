@@ -25,11 +25,11 @@ SQL oracle reproduce results exactly), arithmetic stays in Catalyst.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ._util import rebalance, sql_over, tracked_persist
-from .text import shingle_rows, tokens, word_shingles
+from .text import _sized_shingle_rows, shingle_rows, tokens, word_shingles
 
 # ngram_jaccard_pairs(prefix_filter="auto") turns the PPJoin prefix
 # filter on when the naive inverted join's pair mass Σ df·(df−1)/2
@@ -39,58 +39,16 @@ from .text import shingle_rows, tokens, word_shingles
 # slower at sf1 and disk-death at sf10), zipf ≈220 (prefix wins 56×).
 _PREFIX_AUTO_MASS_RATIO = 100.0
 
-# Session-scoped memo of prefix_filter="auto" decisions, keyed on the
-# SEMANTIC hash of the inverted index's analyzed logical plan (r16,
-# VERDICT r15 item 3): the decision is a pure function of the input
-# lineage (the plan embeds text_col/id_col/shingle_k via shingle_rows),
-# and BOTH candidate paths are exact, so reusing a decision can never
-# change results — it only skips re-running the eager decision
-# aggregate for an input whose stats this session already measured.
-# At 100 TB that is one full column-pruned pass per repeated input
-# saved purely to re-choose a plan already chosen.  Keyed per
-# application id so a new session (new data possible at the same
-# lineage) re-measures; a semantic-hash collision could only ever pick
-# the other EXACT plan, never a wrong result.
-_PREFIX_AUTO_MEMO: dict[tuple[str, int], bool] = {}
 
+def prefix_auto_decision(mass: float | None, postings: int | None) -> bool:
+    """The ``prefix_filter="auto"`` rule over the postings statistics:
+    ON iff the naive inverted join's candidate-pair mass
+    ``mass`` = Σ df·(df−1)/2 exceeds ``_PREFIX_AUTO_MASS_RATIO`` ×
+    ``postings`` = Σ df, df being each gram's posting-list length.
+    :func:`ngram_jaccard_pairs` observes both sums on its postings
+    checkpoint; ``None`` (an empty input) reads as no mass."""
+    return bool((mass or 0.0) > _PREFIX_AUTO_MASS_RATIO * (postings or 1))
 
-def _prefix_memo_key(inv: DataFrame) -> tuple[str, int] | None:
-    try:
-        return (
-            inv.sparkSession.sparkContext.applicationId,
-            inv._jdf.queryExecution().analyzed().semanticHash(),
-        )
-    except Exception:  # noqa: BLE001 — non-JVM-backed plan: no memo
-        return None
-
-
-def prefix_auto_decision(inv: DataFrame, memo: bool = True) -> bool:
-    """The ``prefix_filter="auto"`` rule over an (id, gram) inverted
-    index: ON iff the naive inverted join's candidate-pair mass
-    Σ df·(df−1)/2 exceeds ``_PREFIX_AUTO_MASS_RATIO`` × postings.
-    One groupBy + one global aggregate — a single scan of ``inv``
-    (persist it first when the caller reuses it).  ``memo=True``
-    consults/fills the per-session decision memo (see
-    ``_PREFIX_AUTO_MEMO``); pass False to force a fresh measurement."""
-    key = _prefix_memo_key(inv)
-    if memo and key is not None and key in _PREFIX_AUTO_MEMO:
-        return _PREFIX_AUTO_MEMO[key]
-    stats = (
-        inv.groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("__gf"))
-        .agg(
-            F.sum(F.col("__gf") * (F.col("__gf") - 1) / 2).alias("mass"),
-            F.sum("__gf").alias("postings"),
-        )
-        .head()
-    )
-    decision = bool(
-        (stats["mass"] or 0.0)
-        > _PREFIX_AUTO_MASS_RATIO * (stats["postings"] or 1)
-    )
-    if key is not None:
-        _PREFIX_AUTO_MEMO[key] = decision
-    return decision
 
 # prime just under 2^29: with 32-bit base hashes, a*h + b stays < 2^61 —
 # no int64 overflow in Spark OR in a BIGINT-only SQL oracle
@@ -664,8 +622,13 @@ def ngram_jaccard_pairs(
     Explode distinct shingles → group the posting list per gram → emit
     id pairs map-side (only docs sharing ≥1 shingle ever meet — the
     inverted-index trick that bounds the join away from n²) → |A∩B| by
-    groupBy pair → Jaccard from per-doc sizes.  Fully SQL-expressible,
-    so it doubles as the oracle-checkable twin of the MinHash path.
+    groupBy pair → Jaccard.  Each posting carries its doc's
+    distinct-shingle count ``n`` next to the id, so the set sizes ride
+    with the posting lists into the pair rows: ONE postings aggregate
+    ``gram → sort_array(collect_list(struct(id, n)))`` feeds either
+    path, with no per-doc size aggregate joined back.  Fully
+    SQL-expressible, so it doubles as the oracle-checkable twin of the
+    MinHash path.  Ids are assumed unique per document.
 
     ``prefix_filter=True``: PPJoin-style LOSSLESS candidate pruning
     (Bayardo et al. 2007 "Scaling Up All Pairs", Xiao et al. 2008
@@ -698,26 +661,34 @@ def ngram_jaccard_pairs(
       its crossover sits much higher.
 
     ``prefix_filter="auto"`` (the default since r13) therefore
-    MEASURES instead of assuming: one cheap aggregate over the
-    inverted index computes the naive pair mass Σ df·(df−1)/2 and the
-    posting count P, and turns the filter on iff mass > 100·P.  The
-    ratio is scale-free and the threshold is calibrated on the
-    measured corpora: flat sf1 ratio ≈ 36 and flat sf10 ratio ≈ 76
-    (OFF correctly wins at both — ON is 6.6× slower at sf1 and
-    disk-death at sf10), zipf ratio ≈ 220 (ON wins 3.55 s vs
-    198.6 s).  Both paths are exact, so the choice never changes
-    results — only the plan.
+    MEASURES instead of assuming: the naive pair mass Σ df·(df−1)/2
+    and the posting count P = Σ df come from the postings aggregate
+    itself, and the filter turns on iff mass > 100·P
+    (:func:`prefix_auto_decision`).  The ratio is scale-free and the
+    threshold is calibrated on the measured corpora: flat sf1 ratio
+    ≈ 36 and flat sf10 ratio ≈ 76 (OFF correctly wins at both — ON is
+    6.6× slower at sf1 and disk-death at sf10), zipf ratio ≈ 220 (ON
+    wins 3.55 s vs 198.6 s).  Both paths are exact, so the choice
+    never changes results — only the plan.
 
     NOTE (ADVICE r13): ``"auto"`` makes this builder EAGER — the
-    decision scan (shingle + persist + one global aggregate) runs as
-    a Spark job at CALL time, and the persisted inverted index lives
-    until the returned plan's consumer (or ``unpersist_tracked``)
-    releases it.  Two escapes keep the lazy contract where it
-    matters: a driver-local input (``df.isLocal()`` — createDataFrame
-    test corpora) skips the scan and resolves to the naive path,
+    postings aggregate is materialized ONCE with ``localCheckpoint``
+    at CALL time, and the two sums are read from an ``Observation``
+    on that checkpoint, so the decision runs no job of its own.  The
+    chosen path then plans over the flat checkpoint.  Its blocks
+    belong to the returned frame: Spark's ContextCleaner frees them
+    once that frame is garbage-collected, and nothing is registered
+    for ``unpersist_tracked``.  The trade of a LOCAL checkpoint, which
+    :func:`connected_components` makes too: the blocks live in
+    executor storage without lineage, so losing an executor fails a
+    later job over them instead of recomputing the lost partitions.
+    Two escapes keep the lazy contract where it matters: a
+    driver-local input (``df.isLocal()`` — createDataFrame test
+    corpora) skips the checkpoint and resolves to the naive path,
     which is always right at that scale; and passing
     ``prefix_filter=True/False`` explicitly keeps the builder fully
-    lazy.
+    lazy (the postings aggregate is then planned once and its
+    exchange reused by every branch that reads it).
 
     ``max_posting`` drops grams whose posting list exceeds the cap from
     candidate generation — a pathologically hot gram (a boilerplate
@@ -731,88 +702,9 @@ def ngram_jaccard_pairs(
     original one-pass exact path (cheapest when no gram is hot).
     """
     df = rebalance(df)
-    inv = shingle_rows(df, text_col, id_col, shingle_k)
-    persisted = False
-    if prefix_filter == "auto":
-        if max_posting is not None:
-            prefix_filter = False  # capped mode has its own pruning
-        elif df.isLocal():
-            # driver-local input (createDataFrame corpora): trivially
-            # small, the naive path always wins — skip the eager
-            # decision job AND the persist (ADVICE r13)
-            prefix_filter = False
-        else:
-            # one aggregate decides the plan (see docstring): naive
-            # pair mass Σ df·(df−1)/2 vs posting count.  inv is
-            # persisted first — the decision scan and the chosen
-            # path's passes share it.
-            inv = tracked_persist(inv)
-            persisted = True
-            prefix_filter = prefix_auto_decision(inv)
-    if max_posting is None and prefix_filter:
-        # reused 3× below (freq, prefix join, verify); registered so a
-        # long session can evict it — persisted plans are never
-        # auto-released (see _util.unpersist_tracked)
-        if not persisted:
-            inv = tracked_persist(inv)
-        # ONE SQL parse for the whole PPJoin chain (r16 driver-cost
-        # pass — see the minhash_dup_pairs note; the Column build of
-        # these ~20 ops paid per-op py4j + eager analysis on every
-        # call).  Semantics unchanged, comment-for-comment:
-        # * global gram order (doc-frequency asc, gram) — rare grams
-        #   first, so prefixes are maximally selective and hot grams
-        #   never enter one;
-        # * the 1e-9 epsilon guards each float ceil in the SAFE
-        #   direction (longer prefix / lower required overlap — extra
-        #   candidates only, and the verify is exact);
-        # * the PPJoin POSITION filter (r13): a pair sharing prefix
-        #   gram w at 1-based ranks (i, j) has overlap ≤
-        #   min(nx−i, ny−j) + 1, while Jaccard ≥ t needs overlap ≥
-        #   ceil(t/(1+t) · (nx+ny)) — lossless, measured 4.9× fewer
-        #   candidates on the sf10 flat corpus.
-        idq = f"`{id_col}`"
-        t = f"{float(threshold)!r}D"
-        frac = f"{float(threshold / (1.0 + threshold))!r}D"
-        return sql_over(
-            {"inv": inv},
-            "WITH gfreq AS ("
-            " SELECT gram, count(1) AS __gf FROM {inv} GROUP BY gram"
-            "), isz AS ("
-            f" SELECT {idq} AS __sid, count(1) AS n FROM {{inv}}"
-            f" GROUP BY {idq}"
-            "), pref AS ("
-            f" SELECT {idq}, gram, __rn, n FROM ("
-            f"  SELECT i.{idq}, i.gram, isz.n,"
-            f"   row_number() OVER (PARTITION BY i.{idq}"
-            "    ORDER BY g.__gf ASC, i.gram ASC) AS __rn"
-            "  FROM {inv} i JOIN gfreq g ON i.gram = g.gram"
-            f"  JOIN isz ON i.{idq} = isz.__sid)"
-            f" WHERE __rn <= n - ceil({t} * n - 1e-9D) + 1"
-            "), cand AS ("
-            f" SELECT DISTINCT a.{idq} AS id_a, b.{idq} AS id_b"
-            " FROM pref a JOIN pref b ON a.gram = b.gram"
-            f" WHERE a.{idq} < b.{idq}"
-            "  AND least(a.n - a.__rn, b.n - b.__rn) + 1 >="
-            f"  ceil({frac} * (a.n + b.n) - 1e-9D)"
-            "), vsz AS ("
-            f" SELECT {idq} AS __vid, count(1) AS n FROM {{inv}}"
-            f" GROUP BY {idq}"
-            "), inter AS ("
-            " SELECT id_a, id_b, count(1) AS n_inter FROM"
-            f"  (SELECT {idq} AS id_a, gram FROM {{inv}})"
-            "  JOIN cand USING (id_a)"
-            f"  JOIN (SELECT {idq} AS id_b, gram FROM {{inv}})"
-            "  USING (id_b, gram)"
-            " GROUP BY id_a, id_b)"
-            " SELECT id_a, id_b, jaccard FROM ("
-            "  SELECT id_a, id_b,"
-            "   n_inter / (sa.n + sb.n - n_inter) AS jaccard"
-            "  FROM inter JOIN vsz sa ON id_a = sa.__vid"
-            "  JOIN vsz sb ON id_b = sb.__vid)"
-            f" WHERE jaccard >= {t}"
-            " ORDER BY id_a, id_b",
-        )
     if max_posting is not None:
+        # capped mode has its own pruning: prefix_filter is ignored
+        inv = shingle_rows(df, text_col, id_col, shingle_k)
         postings = inv.groupBy("gram").agg(
             F.sort_array(F.collect_list(id_col)).alias("ids")
         )
@@ -821,35 +713,93 @@ def ngram_jaccard_pairs(
             ["id_a", "id_b"]
         )
         return _verify_jaccard(inv, cand, id_col, threshold)
-    # uncapped naive path, ONE SQL parse (r16 — same device as the
-    # prefix branch): each shared gram contributes exactly one pair
-    # row, so the pair multiset count IS |A∩B| — no second pass over
-    # the grams
-    idq = f"`{id_col}`"
+    if prefix_filter == "auto" and df.isLocal():
+        # driver-local input (createDataFrame corpora): trivially
+        # small, the naive path always wins — stay lazy (ADVICE r13)
+        prefix_filter = False
+    # the ONE postings aggregate; ids are unique, so sort_array orders
+    # each list by id and every emitted pair has id_a < id_b
+    postings = _sized_shingle_rows(
+        df, text_col, id_col, shingle_k
+    ).groupBy("gram").agg(
+        F.sort_array(
+            F.collect_list(F.struct(F.col(id_col).alias("id"), "n"))
+        ).alias("ps")
+    )
+    if prefix_filter == "auto":
+        # the decision's statistics ride on the checkpoint job that
+        # both paths read anyway (see docstring): no scan of its own
+        stats = Observation()
+        gf = F.size("ps").cast("long")
+        postings = postings.observe(
+            stats,
+            F.sum(gf * (gf - 1) / 2).alias("mass"),
+            F.sum(gf).alias("postings"),
+        ).localCheckpoint()
+        seen = stats.get
+        prefix_filter = prefix_auto_decision(seen["mass"], seen["postings"])
     t = f"{float(threshold)!r}D"
-    return sql_over(
-        {"inv": inv},
-        "WITH postings AS ("
-        f" SELECT sort_array(collect_list({idq})) AS ids FROM {{inv}}"
-        " GROUP BY gram"
-        "), inter AS ("
-        " SELECT id_a, id_b, count(1) AS n_inter FROM ("
-        "  SELECT p.id_a AS id_a, p.id_b AS id_b FROM ("
-        "   SELECT explode(flatten(transform(ids, (x, i) ->"
-        "    transform(slice(ids, i + 2, size(ids)),"
-        "     y -> named_struct('id_a', x, 'id_b', y))))) AS p"
-        "   FROM postings))"
-        " GROUP BY id_a, id_b"
-        "), isz AS ("
-        f" SELECT {idq} AS __vid, count(1) AS n FROM {{inv}}"
-        f" GROUP BY {idq})"
+    # both paths end in the same Jaccard arithmetic over the set sizes
+    # the pairs carry, and the same order
+    jaccard = (
         " SELECT id_a, id_b, jaccard FROM ("
         "  SELECT id_a, id_b,"
-        "   n_inter / (sa.n + sb.n - n_inter) AS jaccard"
-        "  FROM inter JOIN isz sa ON id_a = sa.__vid"
-        "  JOIN isz sb ON id_b = sb.__vid)"
+        "   n_inter / (n_a + n_b - n_inter) AS jaccard FROM inter)"
         f" WHERE jaccard >= {t}"
-        " ORDER BY id_a, id_b",
+        " ORDER BY id_a, id_b"
+    )
+    if prefix_filter:
+        # ONE SQL parse for the whole PPJoin chain (r16 driver-cost
+        # pass — see the minhash_dup_pairs note).  Semantics:
+        # * global gram order (doc-frequency asc, gram) — rare grams
+        #   first, so prefixes are maximally selective and hot grams
+        #   never enter one; the doc frequency is the posting list's
+        #   size, read off the exploded postings;
+        # * the 1e-9 epsilon guards each float ceil in the SAFE
+        #   direction (longer prefix / lower required overlap — extra
+        #   candidates only, and the verify is exact);
+        # * the PPJoin POSITION filter (r13): a pair sharing prefix
+        #   gram w at 1-based ranks (i, j) has overlap ≤
+        #   min(nx−i, ny−j) + 1, while Jaccard ≥ t needs overlap ≥
+        #   ceil(t/(1+t) · (nx+ny)) — lossless, measured 4.9× fewer
+        #   candidates on the sf10 flat corpus.
+        frac = f"{float(threshold / (1.0 + threshold))!r}D"
+        return sql_over(
+            {"postings": postings},
+            "WITH grams AS ("
+            " SELECT gram, size(ps) AS __gf, inline(ps) FROM {postings}"
+            "), pref AS ("
+            " SELECT id, gram, __rn, n FROM ("
+            "  SELECT id, gram, n, row_number() OVER (PARTITION BY id"
+            "   ORDER BY __gf ASC, gram ASC) AS __rn FROM grams)"
+            f" WHERE __rn <= n - ceil({t} * n - 1e-9D) + 1"
+            "), cand AS ("
+            " SELECT DISTINCT a.id AS id_a, b.id AS id_b,"
+            "  a.n AS n_a, b.n AS n_b"
+            " FROM pref a JOIN pref b ON a.gram = b.gram"
+            " WHERE a.id < b.id"
+            "  AND least(a.n - a.__rn, b.n - b.__rn) + 1 >="
+            f"  ceil({frac} * (a.n + b.n) - 1e-9D)"
+            "), inter AS ("
+            " SELECT id_a, id_b, n_a, n_b, count(1) AS n_inter FROM"
+            "  (SELECT id AS id_a, gram FROM grams)"
+            "  JOIN cand USING (id_a)"
+            "  JOIN (SELECT id AS id_b, gram FROM grams)"
+            "  USING (id_b, gram)"
+            " GROUP BY id_a, id_b, n_a, n_b)" + jaccard,
+        )
+    # naive path: each shared gram contributes exactly one pair row,
+    # so the pair multiset count IS |A∩B| — no second pass over the
+    # grams
+    return sql_over(
+        {"postings": postings},
+        "WITH inter AS ("
+        " SELECT id_a, id_b, n_a, n_b, count(1) AS n_inter FROM ("
+        "  SELECT inline(flatten(transform(ps, (x, i) ->"
+        "   transform(slice(ps, i + 2, size(ps)), y -> named_struct("
+        "    'id_a', x.id, 'n_a', x.n, 'id_b', y.id, 'n_b', y.n)))))"
+        "  FROM {postings})"
+        " GROUP BY id_a, id_b, n_a, n_b)" + jaccard,
     )
 
 

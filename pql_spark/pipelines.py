@@ -6,8 +6,9 @@ MinHash near-dup removal → deterministic content-keyed train/test split.
 Every stage is one of this package's operators, composed as DataFrame
 operations that Catalyst optimizes, so it scales exactly as its stages
 do.  Where one frame feeds several branches (the post-dedup corpus,
-the drop list, the QA base) it is checkpointed locally, and everything
-downstream plans over that flat leaf instead of the upstream lineage.
+the drop list and, with a QA report, the annotated corpus and the QA
+base) it is checkpointed locally, and everything downstream plans over
+that flat leaf instead of the upstream lineage.
 """
 
 from __future__ import annotations
@@ -73,11 +74,12 @@ def curate_corpus(
 
     Stages 4–6 run EAGERLY, when ``curate_corpus`` is called: the
     post-dedup corpus and the distinct drop list are each materialized
-    once with ``localCheckpoint`` (and, with ``qa``, the QA base below
-    too), because each is re-read by several branches.  Everything
-    downstream — the anti-join, redaction, the split, every QA frame —
-    is lazy over those flat ``LogicalRDD`` leaves, so a later plan
-    never re-analyzes, re-plans or re-serializes the upstream lineage.
+    once with ``localCheckpoint`` (and, with ``qa``, the annotated
+    corpus and the QA base below too), because each is re-read by
+    several branches.  Everything downstream — the anti-join,
+    redaction, the split, every QA frame — is lazy over those flat
+    ``LogicalRDD`` leaves, so a later plan never re-analyzes, re-plans
+    or re-serializes the upstream lineage.
     The checkpointed blocks belong to the returned frames: Spark's
     ContextCleaner frees them once those frames are garbage-collected,
     and nothing is registered for ``unpersist_tracked``.  The trade of
@@ -110,10 +112,15 @@ def curate_corpus(
     * ``qa["stage_counts"]`` — one row per pipeline stage
       ``(stage_idx, stage, rows)`` of surviving row counts.
 
-    All three are lazy DataFrames over the checkpointed QA base: one
-    row per input document (ids are assumed unique, as the cohort
-    join requires), labeled from the checkpointed post-dedup ids and
-    drop list.  Collecting them runs extra jobs but never mutates the
+    With ``qa``, the annotated corpus (every input doc with its
+    ``quality``, ``lang_pred`` and fingerprint, before any filter) is
+    checkpointed ONCE: the main path filters that checkpoint and the
+    QA base reads it, so the report neither re-scans the source nor
+    re-runs the quality, langid and fingerprint expressions.  All
+    three are lazy DataFrames over the checkpointed QA base: one row
+    per input document (ids are assumed unique, as the cohort join
+    requires), labeled from the checkpointed post-dedup ids and drop
+    list.  Collecting them runs extra jobs but never mutates the
     main result, and the main return is byte-identical with or without
     ``qa``.
     """
@@ -172,6 +179,12 @@ def curate_corpus(
         f"{_langid_exprs(text_col)['lang_pred']} AS lang_pred",
         f"{_fingerprint_exprs(text_col)['fingerprint']} AS fingerprint",
     )
+    if qa is not None:
+        # the QA base reads every annotated doc again: checkpoint the
+        # annotated corpus ONCE, so the QA base and the main path share
+        # one quality/langid/fingerprint pass instead of re-scanning
+        # the source and re-running the expressions for the report
+        kept = kept.localCheckpoint()
     # pinned: pushdown would substitute the quality/langid trees into a
     # pre-shuffle Filter and evaluate them twice — see pinned_filter
     annot = kept  # full annotated frame (pre-filter) — QA cohort base

@@ -834,16 +834,36 @@ def test_ngram_prefix_filter_matches_default(spark):
     assert base  # non-degenerate
 
 
+def _gram_stats(df):
+    """(pair mass Σ df·(df−1)/2, postings Σ df) of the 2-gram shingles,
+    by a plain ``groupBy(gram)``."""
+    from pql_spark.operators.dedup import shingle_rows
+
+    s = (
+        shingle_rows(df, "text", "doc_id", 2)
+        .groupBy("gram").count()
+        .agg(
+            F.sum(F.col("count") * (F.col("count") - 1) / 2).alias("mass"),
+            F.sum("count").alias("postings"),
+        )
+        .head()
+    )
+    return s.mass, s.postings
+
+
 def test_ngram_prefix_auto_decision(spark):
-    """prefix_filter='auto' (the r13 default) picks by measured pair
-    mass: a boilerplate-heavy corpus (one hot phrase in every doc →
+    """The prefix_filter='auto' rule over the postings statistics: ON
+    iff the pair mass Σ df·(df−1)/2 exceeds 100× the posting count
+    Σ df.  A boilerplate-heavy corpus (one hot phrase in every doc →
     mass ≈ C(d,2)·grams ≫ postings) turns the filter ON; a corpus of
     all-unique grams (mass 0) keeps it OFF.  Either way the output is
     identical to both explicit settings."""
-    from pql_spark.operators.dedup import (
-        prefix_auto_decision,
-        shingle_rows,
-    )
+    from pql_spark.operators.dedup import prefix_auto_decision
+
+    assert prefix_auto_decision(100.0 * 20 + 0.5, 20)
+    assert not prefix_auto_decision(100.0 * 20, 20)
+    assert not prefix_auto_decision(0.0, 20)
+    assert not prefix_auto_decision(None, None)  # empty input
 
     # mass ratio ≈ 0.3·d for this shape (3 hot grams of 5): d=400 →
     # ≈120 > the 100 threshold; d=60 → ≈18 < 100
@@ -861,12 +881,9 @@ def test_ngram_prefix_auto_decision(spark):
         [(i, f"a{i} b{i} c{i} d{i} e{i}") for i in range(60)],
         "doc_id long, text string",
     )
-    assert prefix_auto_decision(
-        shingle_rows(very_hot, "text", "doc_id", 2)
-    )
-    assert not prefix_auto_decision(
-        shingle_rows(flat, "text", "doc_id", 2)
-    )
+    assert prefix_auto_decision(*_gram_stats(very_hot))
+    assert not prefix_auto_decision(*_gram_stats(hot))
+    assert not prefix_auto_decision(*_gram_stats(flat))
     kw = dict(shingle_k=2, threshold=0.4)
     auto = sorted(
         (r.id_a, r.id_b, round(r.jaccard, 9))
@@ -882,48 +899,112 @@ def test_ngram_prefix_auto_decision(spark):
         assert explicit == auto
 
 
-def test_ngram_prefix_auto_decision_memo(spark):
-    """r16 (VERDICT r15 item 3): the auto decision is memoized per
-    (session, input-lineage semantic hash) — a repeated input skips
-    the eager decision scan; ``memo=False`` always re-measures; and
-    distinct lineages never share an entry."""
-    from pql_spark.operators.dedup import (
-        _PREFIX_AUTO_MEMO,
-        _prefix_memo_key,
-        prefix_auto_decision,
-        shingle_rows,
-    )
+def _ngram_corpora(spark, tmp_path):
+    """A hot corpus (three boilerplate 2-grams in all 405 docs: pair
+    mass ≈ 121× the postings) and a flat one (mass ≈ 0.05×), each with
+    five near-dup pairs above t=0.5, written to parquet so the input
+    is not driver-local and ``"auto"`` really decides."""
+    hot = [(i, f"alpha beta gamma delta u{i} v{i}") for i in range(400)]
+    hot += [
+        (1000 + i, f"alpha beta gamma delta u{i} v{i} w{i}")
+        for i in range(5)
+    ]
+    flat = [(i, f"a{i} b{i} c{i} d{i} e{i}") for i in range(60)]
+    flat += [(100 + i, f"a{i} b{i} c{i} d{i} x{i}") for i in range(5)]
+    out = {}
+    for name, rows in (("hot", hot), ("flat", flat)):
+        path = str(tmp_path / name)
+        spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
+            path
+        )
+        out[name] = (spark.read.parquet(path), rows)
+    return out
 
-    hot = spark.createDataFrame(
-        [(i, "alpha beta gamma delta " + f"u{i} v{i}")
-         for i in range(400)],
-        "doc_id long, text string",
+
+def _brute_jaccard(rows, k, t):
+    from pql_spark.operators.text import py_tokens
+
+    def shingles(text):
+        toks = py_tokens(text)
+        if len(toks) <= k:
+            return {" ".join(toks)}
+        return {
+            " ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)
+        }
+
+    sets = {i: shingles(text) for i, text in rows}
+    ids = sorted(sets)
+    out = []
+    for x, a in enumerate(ids):
+        for b in ids[x + 1:]:
+            inter = len(sets[a] & sets[b])
+            j = inter / len(sets[a] | sets[b])
+            if inter and j >= t:
+                out.append((a, b, round(j, 9)))
+    return out
+
+
+def test_ngram_prefix_auto_decides_both_branches(spark, tmp_path):
+    """``"auto"`` on parquet inputs takes the decision inside
+    ``ngram_jaccard_pairs``: the hot corpus gets the PPJoin plan (its
+    ``row_number`` prefix Window) and the flat one the naive plan (no
+    Window), and on both corpora ``"auto"``, ``True`` and ``False``
+    all equal a brute-force Python Jaccard."""
+    kw = dict(shingle_k=2, threshold=0.5)
+    for name, (df, rows) in _ngram_corpora(spark, tmp_path).items():
+        want = _brute_jaccard(rows, 2, 0.5)
+        assert len(want) == 5, name
+        auto = ngram_jaccard_pairs(df, **kw)
+        plan = auto._jdf.queryExecution().optimizedPlan().toString()
+        assert ("Window [row_number()" in plan) == (name == "hot"), name
+        for setting, out in (
+            ("auto", auto),
+            (True, ngram_jaccard_pairs(df, prefix_filter=True, **kw)),
+            (False, ngram_jaccard_pairs(df, prefix_filter=False, **kw)),
+        ):
+            got = [
+                (r.id_a, r.id_b, round(r.jaccard, 9)) for r in out.collect()
+            ]
+            assert got == want, (name, setting)
+
+
+def test_ngram_prefix_auto_decision_runs_no_job(spark, tmp_path,
+                                                monkeypatch):
+    """The ``"auto"`` decision is observed on the postings checkpoint:
+    building the operator runs only that checkpoint's jobs (one per
+    exchange of the postings plan, then the checkpoint itself), no
+    decision ``head``, and the observed mass/postings equal a
+    ``groupBy(gram)`` over the shingles."""
+    import pql_spark.operators.dedup as D
+
+    seen = []
+    rule = D.prefix_auto_decision
+    monkeypatch.setattr(
+        D, "prefix_auto_decision",
+        lambda mass, postings: seen.append((mass, postings))
+        or rule(mass, postings),
     )
-    flat = spark.createDataFrame(
-        [(i, f"a{i} b{i} c{i} d{i} e{i}") for i in range(60)],
-        "doc_id long, text string",
-    )
-    inv_hot = shingle_rows(hot, "text", "doc_id", 2)
-    inv_flat = shingle_rows(flat, "text", "doc_id", 2)
-    key_hot, key_flat = _prefix_memo_key(inv_hot), _prefix_memo_key(inv_flat)
-    assert key_hot is not None and key_flat is not None
-    assert key_hot != key_flat
-    # a REBUILT DataFrame over the same lineage maps to the same key —
-    # the bench's run-2 shape
-    assert _prefix_memo_key(shingle_rows(hot, "text", "doc_id", 2)) == key_hot
-    _PREFIX_AUTO_MEMO.pop(key_hot, None)
-    _PREFIX_AUTO_MEMO.pop(key_flat, None)
-    d1 = prefix_auto_decision(inv_hot)
-    assert d1 is True and _PREFIX_AUTO_MEMO[key_hot] is True
-    assert prefix_auto_decision(inv_flat) is False
-    # the memo (not a re-measure) answers the repeated call …
-    _PREFIX_AUTO_MEMO[key_hot] = False
-    assert prefix_auto_decision(inv_hot) is False
-    # … and memo=False forces the fresh measurement
-    assert prefix_auto_decision(inv_hot, memo=False) is True
-    assert _PREFIX_AUTO_MEMO[key_hot] is True
-    _PREFIX_AUTO_MEMO.pop(key_hot, None)
-    _PREFIX_AUTO_MEMO.pop(key_flat, None)
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    for name, (df, _) in _ngram_corpora(spark, tmp_path).items():
+        group = f"ngram-auto-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            D.ngram_jaccard_pairs(df, shingle_k=2, threshold=0.5)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sorted(st.getJobIdsForGroup(group))
+        stages = [
+            [st.getStageInfo(s).name for s in st.getJobInfo(j).stageIds]
+            for j in jobs
+        ]
+        assert 1 <= len(jobs) <= 3, (name, stages)
+        assert any(
+            n.startswith("localCheckpoint at") for n in stages[-1]
+        ), (name, stages)
+        assert not any("head at" in n for s in stages for n in s), stages
+        assert seen.pop() == _gram_stats(df), name
+        assert not seen
 
 
 def test_ngram_prefix_filter_float_ceil_boundary(spark):

@@ -335,24 +335,80 @@ def test_batch_minhash_and_curation_run_no_python_workers(spark, monkeypatch):
     assert _python_nodes(out) == []
     for name, frame in qa.items():
         assert _python_nodes(frame) == [], name
-    # post-dedup corpus, drop list, QA base
-    assert len(checkpointed) == 3
+    # annotated corpus, post-dedup corpus, drop list, QA base
+    assert len(checkpointed) == 4
     for plan in checkpointed:
         assert [n for n in _PYTHON_NODES if n in plan] == []
 
 
-def test_curation_qa_reads_its_checkpoints(spark):
+def test_curation_qa_reads_its_checkpoints(spark, monkeypatch):
     """The QA report's frames are built over the pipeline's local
     checkpoints, not over the lineage that produced them: their
     executed plans scan the checkpointed RDDs, with no cached relation
-    and no re-read of the source files."""
+    and no re-read of the source files.  The QA base itself is built
+    from the checkpointed annotated corpus, so the plan it checkpoints
+    does not scan the source either."""
     from pql_spark.pipelines import curate_corpus
 
     docs = spark.read.parquet(str(SF_SMOKE / "documents.parquet"))
+    frame_cls = type(docs)
+    checkpointed: list[str] = []
+    local_checkpoint = frame_cls.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        out = local_checkpoint(self, *args, **kwargs)
+        checkpointed.append(
+            self._jdf.queryExecution().executedPlan().toString()
+        )
+        return out
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recording)
     qa: dict = {}
     curate_corpus(docs, qa=qa)
+    base = checkpointed[-1]  # the QA base is checkpointed last
+    assert "ExistingRDD" in base
+    assert "Scan parquet" not in base
     for name in ("stage_counts", "profile"):
         plan = executed_plan(qa[name])
         assert "ExistingRDD" in plan, name
         for leaf in ("InMemoryRelation", "InMemoryTableScan", "Scan parquet"):
             assert leaf not in plan, (name, leaf)
+
+
+def test_sized_shingle_rows_build_grams_above_the_rebalance(spark):
+    """The sized shingle rows evaluate the gram HOF once, above the
+    rebalance exchange: no ``array_distinct``/``transform`` below it.
+    (An ``explode(g)`` + ``size(g)`` form lets Catalyst infer
+    ``size(g) > 0`` and push the whole HOF under the exchange.)"""
+    from pql_spark.operators.text import _sized_shingle_rows
+
+    docs = spark.read.parquet(str(SF_SMOKE / "documents.parquet"))
+    rows = _sized_shingle_rows(docs, "text", "doc_id", 3)
+    assert rows.columns == ["doc_id", "gram", "n"]
+    plan = rows._jdf.queryExecution().executedPlan().toString()
+    head, sep, below = plan.partition("Exchange RoundRobinPartitioning")
+    assert sep, plan
+    assert "array_distinct" in head
+    for fn in ("array_distinct", "transform("):
+        assert fn not in below, (fn, plan)
+
+
+def test_ngram_pairs_leave_the_persist_registry_alone(spark, tmp_path):
+    """The uncapped n-gram paths persist nothing: ``"auto"`` reads a
+    local checkpoint, explicit ``True``/``False`` stay lazy."""
+    from pql_spark.operators._util import _TRACKED_PERSISTS
+    from pql_spark.operators.dedup import ngram_jaccard_pairs
+
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(i, f"alpha beta gamma delta u{i} v{i}") for i in range(50)],
+        "doc_id long, text string",
+    ).write.parquet(path)
+    docs = spark.read.parquet(path)
+    before = list(_TRACKED_PERSISTS)
+    for setting in ("auto", True, False):
+        out = ngram_jaccard_pairs(
+            docs, shingle_k=2, threshold=0.5, prefix_filter=setting
+        )
+        out.collect()
+        assert _TRACKED_PERSISTS == before, setting

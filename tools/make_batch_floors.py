@@ -45,8 +45,8 @@ DEFAULT_SOURCES = [
     # (digest) session, and the final comparable record
     "BENCH_LOCAL_r15_before_am.json",
     "BENCH_LOCAL_r15_before.json",
-    "BENCH_LOCAL_r15_midround.json",
-    "BENCH_LOCAL_r15_fastest.json",
+    "archive/BENCH_LOCAL_r15_midround.json",
+    "archive/BENCH_LOCAL_r15_fastest.json",
     "BENCH_FULL.json",
 ]
 
