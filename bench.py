@@ -26,7 +26,6 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 import __spark_entry__ as entrymod  # noqa: E402
-from pql_spark.operators._util import unpersist_tracked  # noqa: E402
 from pql_spark.sources import build_session  # noqa: E402
 
 
@@ -316,12 +315,10 @@ def run_sweep(spark, sf_dir: str, sf: float, load_at_launch) -> dict:
                 print(f"bench: {name} failed: {e}", file=sys.stderr)
                 break
             runs.append(time.perf_counter() - t0)
-            # drop any persisted state a pipeline left behind so later
-            # runs aren't timed under another query's cache pressure:
-            # drain the operator-level persist registry first (releases
-            # the Python-side strong refs too), then clear any remaining
-            # cached plans
-            unpersist_tracked()
+            # the library persists nothing (an operator's checkpoints
+            # belong to the frame it returns); clearing the session's
+            # cache still keeps each run independent of anything cached
+            # before it
             spark.catalog.clearCache()
         if not runs or len(runs) < 2:
             times[name] = float("nan")

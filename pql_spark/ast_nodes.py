@@ -1086,10 +1086,6 @@ class LetStatement(Node):
     expr: Expr | None
     tabular: "TabularExpr | None" = None
     func: "FuncDef | None" = None
-    # EXTENSION: `let m = materialize(<tabular>);` — persist the bound
-    # DataFrame so N references compute the shared prefix once (KQL
-    # materialize(); Spark .persist())
-    materialize: bool = False
 
 
 Statement = TabularExpr | LetStatement

@@ -137,8 +137,9 @@ class MultiResult(dict):
     Each entry is an independent lazy DataFrame over the same compiled
     input plan.  Collecting several outputs re-executes the shared
     prefix once per action (Spark has no cross-action plan sharing) —
-    callers iterating every output should ``.persist()`` the input
-    first, or write outputs in one ``foreachBatch``.
+    callers iterating every output should persist the input themselves
+    first (the library caches nothing), or write outputs in one
+    ``foreachBatch``.
     """
 
     def __repr__(self) -> str:  # pragma: no cover - debugging aid
@@ -326,17 +327,12 @@ class Compiler:
                         # EXTENSION tabular let: bind the compiled
                         # DataFrame under the name (shadows the catalog,
                         # same scope as `as` bindings).  materialize()
-                        # persists the bound plan so N downstream
-                        # references compute the shared prefix once —
-                        # Spark's MEMORY_AND_DISK cache, released with
-                        # the engine's other persists (close())
+                        # binds the same way, as on the SQL backend:
+                        # nothing is cached
                         try:
-                            bound = self.compile_tabular(stmt.tabular)
-                            if stmt.materialize:
-                                from .operators._util import tracked_persist
-
-                                bound = tracked_persist(bound)
-                            self.bindings[stmt.name] = bound
+                            self.bindings[stmt.name] = self.compile_tabular(
+                                stmt.tabular
+                            )
                         except ParseError as e:
                             raise QueryError(self.source, [e]) from None
                     else:

@@ -66,22 +66,15 @@ class PqlEngine:
         #: :func:`compile_pql` built instead
         self.sql_fallbacks = 0
 
-    def close(self) -> int:
-        """Drain the PROCESS-GLOBAL tracked-persist registry (see
-        ``operators._util.tracked_persist``) so a long-lived session
-        does not pile up cached blocks in executor storage.  Persists
-        only: queries leave no temp views behind, and the caller's own
-        persists are never touched.  The registry is shared by every
-        engine and operator in the process — closing one engine evicts
-        blocks persisted by all of them (they stay usable; Spark
-        recomputes evicted plans on next use, a perf cost only).
-        Matches the bench/test usage of one drain per query; hold
-        eviction until the last live engine closes if several share
-        heavy cached state.  Returns the number of persists evicted.
-        Safe to call repeatedly."""
-        from .operators._util import unpersist_tracked
-
-        return unpersist_tracked()
+    def close(self) -> None:
+        """Release nothing: the library persists nothing and keeps no
+        cached state.  Queries leave no temp views behind, and the
+        checkpoints some operators take belong to the frames they
+        return (Spark's ContextCleaner frees those blocks once the
+        frames are garbage-collected), so closing one engine never
+        touches another engine's or the caller's cached data.  Kept for
+        ``with PqlEngine(...)`` blocks and explicit callers; safe to
+        call repeatedly."""
 
     def __enter__(self) -> "PqlEngine":
         return self

@@ -57,7 +57,7 @@ def sql_with_views(
     longer needs the names.  The drop goes through the session catalog,
     which removes only the name: ``spark.catalog.dropTempView`` would
     also UNCACHE every cache entry whose plan contains the view's plan,
-    evicting the caller's persisted frames and the operators' own."""
+    evicting the caller's persisted frames."""
     try:
         for name, frame in views.items():
             if frame is not None:
@@ -89,37 +89,6 @@ def sql_over(frames: dict[str, DataFrame], sql_fmt: str) -> DataFrame:
         sql_fmt.format(**names),
         {names[alias]: frame for alias, frame in frames.items()},
     )
-
-
-_TRACKED_PERSISTS: list[DataFrame] = []
-
-
-def tracked_persist(df: DataFrame) -> DataFrame:
-    """``df.persist()`` registered for later bulk eviction.
-
-    Operators that persist an intermediate reused across several
-    downstream branches (e.g. the signature table of the banded-Hamming
-    join) return a LAZY result — they cannot unpersist before the
-    caller materializes it, and Spark never auto-evicts cached plans.
-    In a long session repeated calls would otherwise accumulate cached
-    blocks in executor storage.  Callers (or test/bench harnesses) call
-    :func:`unpersist_tracked` — or ``spark.catalog.clearCache()`` —
-    once results are materialized."""
-    _TRACKED_PERSISTS.append(df.persist())
-    return df
-
-
-def unpersist_tracked() -> int:
-    """Evict every DataFrame registered via :func:`tracked_persist`;
-    returns how many persists were released.  Safe at any time: Spark
-    recomputes an evicted plan on next use."""
-    n = len(_TRACKED_PERSISTS)
-    while _TRACKED_PERSISTS:
-        try:
-            _TRACKED_PERSISTS.pop().unpersist(blocking=False)
-        except Exception:  # noqa: BLE001 — session already stopped
-            pass
-    return n
 
 
 def pinned_filter(df: DataFrame, cond) -> DataFrame:

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ._util import rebalance, sql_over, tracked_persist
+from ._util import rebalance, sql_over
 from .text import _sized_shingle_rows, shingle_rows, tokens, word_shingles
 
 # ngram_jaccard_pairs(prefix_filter="auto") turns the PPJoin prefix
@@ -677,11 +677,11 @@ def ngram_jaccard_pairs(
     on that checkpoint, so the decision runs no job of its own.  The
     chosen path then plans over the flat checkpoint.  Its blocks
     belong to the returned frame: Spark's ContextCleaner frees them
-    once that frame is garbage-collected, and nothing is registered
-    for ``unpersist_tracked``.  The trade of a LOCAL checkpoint, which
-    :func:`connected_components` makes too: the blocks live in
-    executor storage without lineage, so losing an executor fails a
-    later job over them instead of recomputing the lost partitions.
+    once that frame is garbage-collected.  The trade of a LOCAL
+    checkpoint, which :func:`connected_components` makes too: the
+    blocks live in executor storage without lineage, so losing an
+    executor fails a later job over them instead of recomputing the
+    lost partitions.
     Two escapes keep the lazy contract where it matters: a
     driver-local input (``df.isLocal()`` — createDataFrame test
     corpora) skips the checkpoint and resolves to the naive path,
@@ -880,16 +880,27 @@ def hamming_dup_pairs(
     if sig_len % bands:
         raise ValueError("bands must divide the signature length")
     width = sig_len // bands
-    # rebalance BEFORE persisting: a single-split input would
-    # otherwise materialize as ONE cached block, serializing the
-    # banded explode and both verify-join probes onto one core
-    # (no-op on a wide input — the 100 TB case).  NOTE: if the
-    # signature column itself is an expensive derived expression,
-    # repartition the input BEFORE computing it — an exchange added
-    # here sits above the projection, so the construction still runs
-    # at the scan's width (PERF_NOTES_r12, the sf1 hamming chase).
-    sig = tracked_persist(
-        rebalance(sig.select(F.col(id_col), F.col(sig_col).alias("__sig")))
+    # rebalance: a single-split input would otherwise run the banded
+    # explode and both verify-join probes on one core (no-op on a wide
+    # input — the 100 TB case).  Its exchange is the reuse point: the
+    # banded side and both verify sides read it, so Spark runs the
+    # signature construction (an Arrow kernel for pHash/audio/video)
+    # once and the other readers see a ReusedExchange.  The null-id
+    # filter sits BELOW the exchange because Catalyst infers
+    # ``isnotnull(id)`` for the two join sides only — inferred there,
+    # it makes their exchange differ from the banded side's and the
+    # kernel runs twice.  A null id never pairs, so the filter changes
+    # no result.  On a wide input there is no exchange to reuse: the
+    # banded side and the verify sides each run the construction.
+    # NOTE: if the signature column itself is an expensive derived
+    # expression, repartition the input BEFORE computing it — an
+    # exchange added here sits above the projection, so the
+    # construction still runs at the scan's width (PERF_NOTES_r12, the
+    # sf1 hamming chase).
+    sig = rebalance(
+        sig.select(F.col(id_col), F.col(sig_col).alias("__sig")).filter(
+            F.col(id_col).isNotNull()
+        )
     )
     banded = sig.select(
         F.col(id_col),
@@ -1404,9 +1415,10 @@ def near_dup_incremental(
         new_docs, text_col, id_col, num_perm, shingle_k,
         impl="agg", include_shingles=False,
     )
-    banded = tracked_persist(
-        band_signature(sig, id_col, num_perm, bands)
-    )
+    # checkpointed: the call writes this batch's new buckets below, and
+    # the returned dups are read after that write; both read this one
+    # materialization (the blocks belong to the returned frame)
+    banded = band_signature(sig, id_col, num_perm, bands).localCheckpoint()
     state_schema = T.StructType(
         [
             T.StructField("band", T.IntegerType()),
@@ -1441,7 +1453,7 @@ def near_dup_incremental(
         .select(idc, F.col("band"), F.col("__nd_min").alias("dup_of"))
     )
     dups = vs_state.unionByName(vs_batch)
-    # persist the batch's new buckets with their keepers
+    # append the batch's new buckets with their keepers to the state
     new_buckets.select(
         "band", "bhash", F.col("__nd_min").alias("keeper")
     ).write.mode("append").parquet(state_dir)

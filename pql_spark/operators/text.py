@@ -769,14 +769,12 @@ def unigram_lm_score(
 
     Scale shape: explode → broadcast-join the vocab-sized model → one
     per-doc aggregate.  Two shuffles total with the fit, one without.
-    The model is referenced twice (vocab join + total); it is
-    vocab-sized, so it is persisted to keep the fit single-execution
-    (same fan-out rule as the curation pipeline).
+    The model is referenced twice (vocab join + total); both reads
+    share the fit's one word-count exchange (Spark's exchange reuse),
+    so the fit's shuffle runs once.
     """
     if model is None:
-        from ._util import tracked_persist
-
-        model = tracked_persist(unigram_lm_fit(df, text_col, vocab_size))
+        model = unigram_lm_fit(df, text_col, vocab_size)
     words = df.select(
         F.col(id_col), F.explode(tokens(F.col(text_col))).alias("__lm_w")
     ).filter(F.col("__lm_w") != "")

@@ -446,7 +446,9 @@ def _parse_let(tokens: list[Token], source: str) -> LetStatement:
         ):
             return _parse_let_func(p, kw, name)
     # EXTENSION (KQL materialize): `let m = materialize(<tabular>);`
-    # strips the wrapper and marks the binding for persistence
+    # strips the wrapper and binds a plain tabular let, as the SQL
+    # backend always has: nothing is cached, and Spark reuses the
+    # bound plan's identical exchanges across references
     if (
         len(rest) >= 3
         and rest[0].kind is TokenKind.IDENT
@@ -456,7 +458,7 @@ def _parse_let(tokens: list[Token], source: str) -> LetStatement:
     ):
         tab = _parse_tabular(rest[2:-1], source)
         return LetStatement(
-            name=name.value, expr=None, tabular=tab, materialize=True,
+            name=name.value, expr=None, tabular=tab,
             span=Span(kw.span.start, rest[-1].span.end),
         )
     # EXTENSION (KQL tabular let; the reference rejects it): a RHS with a

@@ -81,12 +81,12 @@ def curate_corpus(
     ``LogicalRDD`` leaves, so a later plan never re-analyzes, re-plans
     or re-serializes the upstream lineage.
     The checkpointed blocks belong to the returned frames: Spark's
-    ContextCleaner frees them once those frames are garbage-collected,
-    and nothing is registered for ``unpersist_tracked``.  The trade of
-    a LOCAL checkpoint, which ``operators.dedup.connected_components``
-    makes too: the blocks live in executor storage without lineage, so
-    losing an executor fails a later job over them instead of
-    recomputing the lost partitions.
+    ContextCleaner frees them once those frames are garbage-collected;
+    the library persists nothing.  The trade of a LOCAL checkpoint,
+    which ``operators.dedup.connected_components`` makes too: the
+    blocks live in executor storage without lineage, so losing an
+    executor fails a later job over them instead of recomputing the
+    lost partitions.
 
     ``timing``: DIAGNOSTIC ONLY — pass a dict to get per-stage wall
     seconds written into it (keys below).  Timing mode materializes

@@ -20,6 +20,13 @@ REFERENCE_TESTDATA = Path(
 SF_SMOKE = Path(os.environ.get("PQL_SF_SMOKE", "/root/testdata/sf0.001"))
 
 
+def cache_entries(spark: SparkSession) -> int:
+    """Entries in the session's ``CacheManager``.  Tests compare counts
+    before and after instead of asserting emptiness: a module-scoped
+    fixture elsewhere may hold a cache of its own in the shared session."""
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
 @pytest.fixture(scope="session")
 def spark():
     session = (

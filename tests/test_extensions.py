@@ -1547,33 +1547,26 @@ def test_series_fit_line_numpy_reference(spark):
 
 
 def test_materialize_let(spark, _ff_df):
-    from pql_spark import PqlEngine
-    from pql_spark.compiler import Compiler
-    from pql_spark.operators._util import unpersist_tracked
-    from pql_spark.parser import parse as pql_parse
+    """``materialize`` means the same on both compile paths: a plain
+    tabular let, nothing cached.  Its rows from the DataFrame compiler
+    equal the SQL path's, and neither plan reads an
+    ``InMemoryRelation``."""
+    from pql_spark import PqlEngine, compile_pql
 
-    eng = PqlEngine(spark, resolver={"T": _ff_df})
     q = (
         "let m = materialize(T | where v >= 20);"
-        " m | join kind=inner (m) on id | count"
+        " m | join kind=inner (m) on id | project id, v | sort by id asc"
     )
-    assert eng.query(q).collect()[0]["count()"] == 3
-    # the binding is actually persisted
-    src = "let m = materialize(T | where v >= 20); m | count"
-    comp = Compiler(
-        source=src, resolver=lambda n: _ff_df, params={}
-    )
-    comp.compile_statements(pql_parse(src))
-    try:
-        assert comp.bindings["m"].storageLevel.useMemory
-    finally:
-        # a tracked persist: the engine's close() releases it
-        unpersist_tracked()
-    assert not comp.bindings["m"].storageLevel.useMemory
-    # SQL backend accepts it as a plain tabular let (no cache in text)
-    sql = eng.to_sql(q)
-    _ff_df.createOrReplaceTempView("T")
-    assert spark.sql(sql).collect()[0]["count()"] == 3
+    eng = PqlEngine(spark, resolver={"T": _ff_df})
+    via_sql = eng.query(q)
+    assert eng.sql_fallbacks == 0
+    via_df = compile_pql(q, {"T": _ff_df}.__getitem__)
+    rows = via_sql.collect()
+    assert [(r.id, r.v) for r in rows] == [(2, 20.0), (3, 30.0), (5, 50.0)]
+    assert via_df.collect() == rows
+    for df in (via_sql, via_df):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "InMemoryRelation" not in plan, plan
 
 
 def test_evaluate_narrow(spark):

@@ -1,9 +1,10 @@
-"""The tracked-persist registry must actually drain (ADVICE r9):
-``tracked_persist`` parks strong DataFrame refs until someone evicts,
-so the session lifecycle — ``PqlEngine.close()`` / context manager,
-and bench.py's per-query drain — must call ``unpersist_tracked``.
-Temp views need no such drain: each one lives for a single statement,
-and dropping it never evicts the caller's cache."""
+"""The library persists nothing and keeps no cached state in the
+caller's session: its reuse points are Spark's own (exchange reuse
+inside one plan, or a ``localCheckpoint`` whose blocks belong to the
+frame it returns), each temp view lives for a single statement, and
+dropping a view never evicts the caller's cache.  ``PqlEngine.close()``
+therefore has nothing to release, and closing one engine cannot touch
+what another engine or the caller cached."""
 
 from __future__ import annotations
 
@@ -11,45 +12,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from pql_spark.engine import PqlEngine, compile_pql
-from pql_spark.operators._util import (
-    _TRACKED_PERSISTS,
-    tracked_persist,
-    unpersist_tracked,
-)
-
-
-def test_engine_close_drains_registry(spark):
-    unpersist_tracked()  # start clean
-    df = tracked_persist(spark.range(10).withColumn("x", F.col("id") * 2))
-    df.count()  # materialize the cache
-    assert len(_TRACKED_PERSISTS) == 1
-    assert df.storageLevel.useMemory
-    eng = PqlEngine(spark, {"t": df})
-    n = eng.close()
-    assert n == 1
-    assert _TRACKED_PERSISTS == []
-    assert not df.storageLevel.useMemory  # block really evicted
-    assert df.count() == 10  # evicted plan recomputes fine
-
-
-def test_engine_context_manager_drains(spark):
-    unpersist_tracked()
-    with PqlEngine(spark) as eng:
-        tracked_persist(spark.range(5))
-        tracked_persist(spark.range(6))
-        assert len(_TRACKED_PERSISTS) == 2
-        assert eng is not None
-    assert _TRACKED_PERSISTS == []
+from tests.conftest import cache_entries
 
 
 def test_pipeline_leaves_the_persist_registry_alone(spark):
     """curate_corpus checkpoints its reuse points instead of persisting
-    them: it registers nothing, and its result is still readable after
-    an engine drains the registry."""
+    them: the session's persist registry (Spark's ``CacheManager``) gains
+    no entry, and the result is still readable after an engine closes."""
     from pql_spark.pipelines import curate_corpus
 
-    unpersist_tracked()
-    marker = tracked_persist(spark.range(3))
+    before = cache_entries(spark)
     docs = spark.createDataFrame(
         [(i, f"doc {i % 7} the quick brown fox " * 8) for i in range(40)],
         "doc_id long, text string",
@@ -60,14 +32,77 @@ def test_pipeline_leaves_the_persist_registry_alone(spark):
     )
     rows = sorted(out.collect())
     assert len(rows) > 0
-    assert len(_TRACKED_PERSISTS) == 1 and _TRACKED_PERSISTS[0] is marker
+    assert cache_entries(spark) == before
     with PqlEngine(spark):
         pass
-    assert _TRACKED_PERSISTS == []
     assert sorted(out.collect()) == rows
     assert {r.stage: r.rows for r in qa["stage_counts"].collect()}[
         "final"
     ] == len(rows)
+    assert cache_entries(spark) == before
+
+
+def test_engines_share_a_session_without_touching_its_cache(
+    spark, tmp_path
+):
+    """Two engines on one session: a frame the caller persisted stays
+    cached after both query it and one of them closes, and no operator
+    that once persisted an intermediate (the banded-Hamming signatures,
+    the unigram-LM fit, the incremental near-dup bands, a
+    ``materialize`` let on the DataFrame compiler) adds a cache entry."""
+    from pql_spark.operators import near_dup_incremental, unigram_lm_score
+    from pql_spark.operators.dedup import hamming_dup_pairs
+
+    t = spark.range(100).withColumn("k", F.col("id") % 3)
+    t.persist()
+    try:
+        t.count()
+        before = cache_entries(spark)
+        assert _is_cached(spark, t)
+        first = PqlEngine(spark, resolver={"t": t})
+        second = PqlEngine(spark, resolver={"t": t})
+        q = "t | summarize n = count() by k"
+        want = [(0, 34), (1, 33), (2, 33)]
+        assert sorted((r.k, r.n) for r in first.query(q).collect()) == want
+        assert sorted((r.k, r.n) for r in second.query(q).collect()) == want
+        first.close()
+        assert _is_cached(spark, t)
+        assert sorted((r.k, r.n) for r in second.query(q).collect()) == want
+        second.close()
+        assert _is_cached(spark, t)
+        assert cache_entries(spark) == before
+    finally:
+        t.unpersist()
+
+    before = cache_entries(spark)
+    sig = spark.range(200).select(
+        F.col("id"),
+        F.transform(
+            F.sequence(F.lit(0), F.lit(15)),
+            lambda i: (F.col("id") / 2).cast("long") * 31 + i,
+        ).cast("array<int>").alias("sig"),
+    )
+    docs = spark.createDataFrame(
+        [(i, f"doc {i % 5} the quick brown fox jumps") for i in range(30)],
+        "doc_id long, text string",
+    )
+    built = {
+        "hamming_dup_pairs": lambda: hamming_dup_pairs(
+            sig, "sig", "id", 16, 2, 8
+        ),
+        "unigram_lm_score": lambda: unigram_lm_score(docs, vocab_size=10),
+        "near_dup_incremental": lambda: near_dup_incremental(
+            docs, str(tmp_path / "state")
+        ),
+        "materialize": lambda: compile_pql(
+            "let m = materialize(t | where k >= 1);"
+            " m | join kind=inner (m) on id | count",
+            {"t": t}.__getitem__,
+        ),
+    }
+    for name, build in built.items():
+        assert build().collect(), name
+        assert cache_entries(spark) == before, name
 
 
 def _is_cached(spark, df) -> bool:
@@ -110,10 +145,9 @@ def _pql_views(spark) -> list[str]:
 
 
 def test_no_temp_view_outlives_its_statement(spark):
-    """Every view is dropped right after its one ``spark.sql``, without
-    waiting for ``close()``/``unpersist_tracked()``: a long loop of
-    ``sql_over`` calls, a curation build with its QA report and an
-    engine query leave no view behind, nor does a failing statement."""
+    """Every view is dropped right after its one ``spark.sql``: a long
+    loop of ``sql_over`` calls, a curation build with its QA report and
+    an engine query leave no view behind, nor does a failing statement."""
     from pyspark.errors import AnalysisException
 
     from pql_spark.operators._util import sql_over
@@ -133,4 +167,3 @@ def test_no_temp_view_outlives_its_statement(spark):
     curate_corpus(docs, min_quality=0.0, qa=qa).count()
     PqlEngine(spark, resolver={"t": src}).query("t | count").collect()
     assert _pql_views(spark) == []
-    unpersist_tracked()

@@ -11,11 +11,12 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 
 from pql_spark import PqlEngine, compile_pql
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, cache_entries
 
 
 @pytest.fixture(scope="module")
@@ -199,6 +200,7 @@ def test_autocluster_single_cube_shuffle(engine):
 def test_lm_score_broadcasts_vocab(spark, sf_catalog):
     from pql_spark.operators import unigram_lm_score
 
+    before = cache_entries(spark)
     df = unigram_lm_score(sf_catalog("documents"), vocab_size=100)
     plan = formatted_plan(df)
     # vocab join must be a broadcast HASH join (the nested-loop joins
@@ -208,6 +210,16 @@ def test_lm_score_broadcasts_vocab(spark, sf_catalog):
     assert "BatchEvalPython" not in plan
     # top-V fits without a total sort
     assert "TakeOrderedAndProject" in plan
+    # the model is read twice (vocab join + total) with nothing cached:
+    # the fit's word-count exchange runs once and the second read is a
+    # ReusedExchange of it
+    final = executed_plan(df).split("== Initial Plan ==")[0]
+    fit = re.findall(
+        r"\+- (Exchange|ReusedExchange) [^\n]*?hashpartitioning\(__lm_w",
+        final,
+    )
+    assert sorted(fit) == ["Exchange", "ReusedExchange"], final
+    assert cache_entries(spark) == before
 
 
 def test_line_dedup_corpus_plan(spark, sf_catalog):
@@ -256,7 +268,17 @@ def test_geo_radius_join_plan_is_hash_equi_join(spark):
 def test_hamming_dup_pairs_plan(spark):
     """The banded-Hamming join: posting-list candidates (one groupBy
     shuffle), equi-joins back for the verify — no cartesian, no
-    row-at-a-time Python."""
+    row-at-a-time Python.
+
+    On a single-split input the banded side and both verify sides read
+    ONE rebalance exchange over the signature rows, so a
+    ``mapInPandas`` signature kernel (pHash/audio/video) runs once with
+    nothing cached: the final plan holds the kernel once and the other
+    readers are ``ReusedExchange``s of that one exchange.  Without the
+    null-id filter below it, Catalyst's inferred ``isnotnull(id)`` on
+    the join sides splits the exchange in two and the kernel runs
+    twice."""
+    import pandas as pd
     from pyspark.sql import functions as F
 
     from pql_spark.operators.dedup import hamming_dup_pairs
@@ -275,6 +297,42 @@ def test_hamming_dup_pairs_plan(spark):
     assert "BatchEvalPython" not in plan
     # posting-list aggregation is partial-aggregated (map-side combine)
     assert "partial_sort_array" in plan or "partial_collect_list" in plan
+
+    kernel_rows = spark.sparkContext.accumulator(0)
+
+    def kernel(batches):
+        for b in batches:
+            kernel_rows.add(len(b))
+            yield pd.DataFrame({
+                "id": b["id"],
+                # ids 2k and 2k + 1 share a signature
+                "sig": [
+                    [(int(i) // 2 * 31 + j) % 251 for j in range(16)]
+                    for i in b["id"]
+                ],
+            })
+
+    before = cache_entries(spark)
+    df = hamming_dup_pairs(
+        spark.range(0, 400, 1, 1).mapInPandas(
+            kernel, "id long, sig array<int>"
+        ),
+        "sig", "id", 16, 2, 8,
+    )
+    assert len(df.collect()) == 200
+    final = executed_plan(df).split("== Initial Plan ==")[0]
+    assert final.count("MapInPandas") == 1, final
+    # every round-robin exchange in the plan, reused or not, is the one
+    # rebalance exchange
+    exchanges = re.findall(
+        r"RoundRobinPartitioning\(\d+\), REPARTITION_BY_NUM,"
+        r" \[plan_id=(\d+)\]",
+        final,
+    )
+    assert final.count("ReusedExchange") == 2, final
+    assert len(exchanges) == 2 and len(set(exchanges)) == 1, final
+    assert kernel_rows.value == 400
+    assert cache_entries(spark) == before
 
 
 def test_sql_backend_path_same_physical_shape(spark, sf_catalog):
@@ -394,9 +452,9 @@ def test_sized_shingle_rows_build_grams_above_the_rebalance(spark):
 
 
 def test_ngram_pairs_leave_the_persist_registry_alone(spark, tmp_path):
-    """The uncapped n-gram paths persist nothing: ``"auto"`` reads a
-    local checkpoint, explicit ``True``/``False`` stay lazy."""
-    from pql_spark.operators._util import _TRACKED_PERSISTS
+    """The uncapped n-gram paths persist nothing: the session's persist
+    registry (Spark's ``CacheManager``) gains no entry.  ``"auto"``
+    reads a local checkpoint, explicit ``True``/``False`` stay lazy."""
     from pql_spark.operators.dedup import ngram_jaccard_pairs
 
     path = str(tmp_path / "docs")
@@ -405,10 +463,10 @@ def test_ngram_pairs_leave_the_persist_registry_alone(spark, tmp_path):
         "doc_id long, text string",
     ).write.parquet(path)
     docs = spark.read.parquet(path)
-    before = list(_TRACKED_PERSISTS)
+    before = cache_entries(spark)
     for setting in ("auto", True, False):
         out = ngram_jaccard_pairs(
             docs, shingle_k=2, threshold=0.5, prefix_filter=setting
         )
         out.collect()
-        assert _TRACKED_PERSISTS == before, setting
+        assert cache_entries(spark) == before, setting

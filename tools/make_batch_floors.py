@@ -43,8 +43,8 @@ DEFAULT_SOURCES = [
     # a faster code round must regenerate rather than enjoy an easy
     # bar): round-start baselines, the mid-round record, the fastest
     # (digest) session, and the final comparable record
-    "BENCH_LOCAL_r15_before_am.json",
-    "BENCH_LOCAL_r15_before.json",
+    "archive/BENCH_LOCAL_r15_am_before.json",
+    "archive/BENCH_LOCAL_r15_before.json",
     "archive/BENCH_LOCAL_r15_midround.json",
     "archive/BENCH_LOCAL_r15_fastest.json",
     "BENCH_FULL.json",

@@ -27,7 +27,6 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entrymod  # noqa: E402
-from pql_spark.operators._util import unpersist_tracked  # noqa: E402
 from pql_spark.sources import build_session  # noqa: E402
 
 
@@ -56,7 +55,6 @@ def main() -> int:
             fn(spark, sf_dir)
             pr.disable()
             dt = time.perf_counter() - t0
-            unpersist_tracked()
             spark.catalog.clearCache()
             if best_t is None or dt < best_t:
                 best_t, best_prof = dt, pr

@@ -29,7 +29,6 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entrymod  # noqa: E402
-from pql_spark.operators._util import unpersist_tracked  # noqa: E402
 from pql_spark.sources import build_session  # noqa: E402
 
 
@@ -117,7 +116,6 @@ def profile_once(spark, fn, sf_dir: str) -> dict:
         "jobs": len(new_jobs), "stages": stages,
         "shuffle": _shuffle_bytes_written(spark) - shuffle0, "rows": n,
     }
-    unpersist_tracked()
     spark.catalog.clearCache()
     return rec
 
