@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ._util import rebalance, sql_over
-from .text import _sized_shingle_rows, shingle_rows, tokens, word_shingles
+from .text import _sized_shingle_rows, shingle_rows, tokens
 
 # ngram_jaccard_pairs(prefix_filter="auto") turns the PPJoin prefix
 # filter on when the naive inverted join's pair mass Σ df·(df−1)/2
@@ -80,7 +80,7 @@ def _minhash_agg_sql(idq: str, src: str, num_perm: int) -> str:
     (id, gram) shingle rows emitting ``n`` (distinct-shingle count, the
     exact verify's set size) and ``minhash`` (the ``num_perm``
     ``min((a·h+b) mod P)`` values, ``h`` the :func:`_md5_hash32` of the
-    gram).  Shared by ``minhash_signature(impl="agg")`` and the
+    gram).  Shared by the batch :func:`minhash_signature` and the
     one-parse :func:`minhash_dup_pairs` so their signatures agree by
     construction.  The aggregate combines map-side, so its shuffle
     ships about one row per document, not one per gram."""
@@ -229,89 +229,52 @@ def minhash_signature(
     id_col: str = "doc_id",
     num_perm: int = 64,
     shingle_k: int = 5,
-    impl: str = "pandas",
-    include_shingles: bool = True,
 ) -> DataFrame:
-    """Per-document MinHash signature (array<long>, length num_perm) over
-    distinct k-word shingles.
-    ``include_shingles=False`` drops the shingle arrays from the output
-    (skips their Arrow round-trip when the caller re-derives them).
+    """Per-document MinHash signature ``(id, minhash)``: ``minhash`` is
+    an array<long> of length ``num_perm`` over the distinct k-word
+    shingles.  A NULL text has no shingles, so it gets no row.
 
-    ``impl="pandas"`` (default): one Arrow-batched kernel does shingling
-    + md5 + the permutation mins.  Shingling runs INSIDE the kernel (a
-    Python twin of :func:`pql_spark.operators.text.word_shingles` —
-    lower, collapse whitespace, split, sliding k-gram, first-occurrence
-    distinct) so Arrow ships ONE text string per document instead of
-    ~n_words shingle strings, and md5 runs once per DISTINCT shingle in
-    the batch with the permutation mins as a single
-    ``minimum.reduceat`` — measured ~4× over Catalyst-side shingling +
-    a per-doc loop.  Narrow (no shuffle, no aggregate), so it is the
-    streaming path; it pays for Python workers.
+    The form follows the input kind:
 
-    ``impl="agg"``: shingles are built as exploded ROWS
-    (:func:`pql_spark.operators.text.shingle_rows` — avoids the
-    HOF-lambda re-evaluation trap), each row is md5-hashed once, and the
-    signature is one ``GROUP BY id`` with ``num_perm``
-    ``min((a·h+b) mod P)`` aggregates, parsed as one SQL statement — all
-    JVM, map-side partial aggregation, no Python workers at all.  This
-    is the batch path (:func:`minhash_dup_pairs`,
-    :func:`near_dup_incremental`).  Does not support
-    ``include_shingles``.
+    - a batch frame: shingles are built as exploded ROWS
+      (:func:`pql_spark.operators.text.shingle_rows`), each row is
+      md5-hashed once, and the signature is one ``GROUP BY id`` with
+      ``num_perm`` ``min((a·h+b) mod P)`` aggregates
+      (:func:`_minhash_agg_sql`, shared with :func:`minhash_dup_pairs`)
+      — all JVM, map-side partial aggregation, no Python workers;
+    - a streaming frame (``df.isStreaming``): the narrow Arrow kernel
+      :func:`_arrow_minhash`, the one form a stateless streaming query
+      can run.
 
-    md5 over UTF-8 bytes is engine-independent, so all three impls are
-    bit-identical (``impl="catalyst"`` is the pure-expression reference
-    implementation).  The one difference is a NULL text: ``"pandas"``
-    signs it as the empty shingle ``""``, ``"catalyst"`` returns a NULL
-    signature, and ``"agg"`` returns no row (NULL text has no shingle
-    rows).
+    md5 over UTF-8 bytes is engine-independent, so the two forms are
+    bit-identical; they share no code, so each checks the other.
     """
+    if df.isStreaming:
+        return _arrow_minhash(df, text_col, id_col, num_perm, shingle_k)
+    rows = shingle_rows(rebalance(df, id_col), text_col, id_col, shingle_k)
+    return sql_over(
+        {"sh": rows},
+        f"SELECT `{id_col}`, minhash FROM"
+        f" ({_minhash_agg_sql(f'`{id_col}`', '{sh}', num_perm)})",
+    )
+
+
+def _arrow_minhash(
+    df: DataFrame, text_col: str, id_col: str, num_perm: int, shingle_k: int
+) -> DataFrame:
+    """The streaming form of :func:`minhash_signature`: one
+    Arrow-batched kernel does shingling + md5 + the permutation mins.
+    Shingling runs INSIDE the kernel (a Python twin of
+    :func:`pql_spark.operators.text.word_shingles` — lower, collapse
+    whitespace, split, sliding k-gram, first-occurrence distinct) so
+    Arrow ships ONE text string per document instead of ~n_words
+    shingle strings, and md5 runs once per DISTINCT shingle in the
+    batch with the permutation mins as a single ``minimum.reduceat`` —
+    measured ~4× over Catalyst-side shingling + a per-doc loop.  Narrow
+    (no shuffle, no aggregate), so it runs inside a stateless streaming
+    query; it pays for Python workers.  NULL texts are filtered before
+    the kernel: they have no shingles, as in the JVM aggregate."""
     params = _perm_params(num_perm)
-
-    if impl == "agg":
-        if include_shingles:
-            raise ValueError("impl='agg' does not return shingle arrays")
-        rows = shingle_rows(rebalance(df, id_col), text_col, id_col, shingle_k)
-        return sql_over(
-            {"sh": rows},
-            f"SELECT `{id_col}`, minhash FROM"
-            f" ({_minhash_agg_sql(f'`{id_col}`', '{sh}', num_perm)})",
-        )
-
-    sh = word_shingles(F.col(text_col), shingle_k)
-    shingled = df.select(F.col(id_col), sh.alias("shingles"))
-
-    if impl == "catalyst":
-        hashed = F.transform(F.col("shingles"), _md5_hash32)
-        mins = F.transform(
-            F.reduce(
-                hashed,
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(_P).cast("long").alias("m"),
-                            F.lit(a).cast("long").alias("a"),
-                            F.lit(b).cast("long").alias("b"),
-                        )
-                        for a, b in params
-                    ]
-                ),
-                lambda acc, h: F.transform(
-                    acc,
-                    lambda s: F.struct(
-                        F.least(s.m, (s.a * h + s.b) % F.lit(_P)).alias("m"),
-                        s.a.alias("a"),
-                        s.b.alias("b"),
-                    ),
-                ),
-            ),
-            lambda s: s.m,
-        )
-        out = shingled.select(
-            F.col(id_col), mins.alias("minhash"), F.col("shingles")
-        )
-        return out if include_shingles else out.drop("shingles")
-    if impl != "pandas":
-        raise ValueError(f"unknown impl {impl!r}")
 
     import hashlib
 
@@ -322,8 +285,8 @@ def minhash_signature(
 
     def _py_shingles(text: str) -> list:
         # Python twin of word_shingles(): values match the Catalyst
-        # expression byte-for-byte (verified by the impl-equivalence
-        # tests), so impls stay interchangeable.  py_tokens uses the
+        # expression byte-for-byte (tests compare this kernel with the
+        # JVM aggregate on an adversarial corpus).  py_tokens uses the
         # Java-\s ASCII whitespace class — Python \s also matches
         # U+00A0/U+2028/U+1680… and silently diverged (ADVICE r7).
         toks = py_tokens(text)
@@ -387,16 +350,12 @@ def minhash_signature(
                 sigs = [full] * n
                 for j, doc in enumerate(nonempty):
                     sigs[doc] = red[j]
-            out = {id_col: pdf[id_col], "minhash": sigs}
-            if include_shingles:
-                out["shingles"] = shs
-            yield pd.DataFrame(out)
+            yield pd.DataFrame({id_col: pdf[id_col], "minhash": sigs})
 
-    schema = f"{id_col} long, minhash array<long>"
-    if include_shingles:
-        schema += ", shingles array<string>"
-    return df.select(F.col(id_col), F.col(text_col)).mapInPandas(
-        kernel, schema
+    return (
+        df.select(F.col(id_col), F.col(text_col))
+        .filter(F.col(text_col).isNotNull())
+        .mapInPandas(kernel, f"{id_col} long, minhash array<long>")
     )
 
 
@@ -532,10 +491,10 @@ def minhash_dup_pairs(
 
     Signatures come from ONE JVM aggregate over the (id, gram) shingle
     rows that the exact verify joins anyway (:func:`_minhash_agg_sql`,
-    the ``impl="agg"`` signature): a partial-then-final ``GROUP BY id``
-    that emits each document's shingle count ``n`` next to its
-    signature, so the verify needs no second aggregate for set sizes —
-    ``n`` rides with the id through the bucket lists onto each
+    the batch :func:`minhash_signature`): a partial-then-final
+    ``GROUP BY id`` that emits each document's shingle count ``n`` next
+    to its signature, so the verify needs no second aggregate for set
+    sizes — ``n`` rides with the id through the bucket lists onto each
     candidate pair.  No Python workers run anywhere in the plan.  A
     NULL text has no shingle rows, so it has no signature and joins no
     bucket.
@@ -1399,22 +1358,19 @@ def near_dup_incremental(
     batch, incremental, and streaming buckets agree bit-for-bit.
     Returns ``(id, band, dup_of)`` candidate rows (same contract as
     the stream: verify exact Jaccard downstream if needed).
-    Signatures are the JVM aggregate (``minhash_signature(impl="agg")``
-    — no Python workers), bit-identical to the stream's Arrow kernel
-    except on a NULL text, which has no shingles here and so is never
-    flagged and never a keeper (the stream signs it as the empty
-    shingle).  The state append is plain parquet `append` — wrap calls
-    in your job-level retry/transaction if partial writes matter.
+    Signatures are the batch :func:`minhash_signature` (the JVM
+    aggregate — no Python workers), bit-identical to the stream's Arrow
+    kernel.  A NULL text has no shingles on either, so it is never
+    flagged and never a keeper.  The state append is plain parquet
+    `append` — wrap calls in your job-level retry/transaction if
+    partial writes matter.
     """
     from pathlib import Path
 
     from pyspark.sql import types as T
 
     spark = new_docs.sparkSession
-    sig = minhash_signature(
-        new_docs, text_col, id_col, num_perm, shingle_k,
-        impl="agg", include_shingles=False,
-    )
+    sig = minhash_signature(new_docs, text_col, id_col, num_perm, shingle_k)
     # checkpointed: the call writes this batch's new buckets below, and
     # the returned dups are read after that write; both read this one
     # materialization (the blocks belong to the returned frame)

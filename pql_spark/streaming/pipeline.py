@@ -731,7 +731,8 @@ def stream_near_dup(
     stream: emits (doc_id, band, dup_of) whenever a new document lands
     in an LSH band bucket already occupied by an earlier document.
 
-    Plan: the narrow Arrow minhash kernel (no aggregation — streaming-
+    Plan: :func:`pql_spark.operators.dedup.minhash_signature`, which on
+    a stream is the narrow Arrow kernel (no aggregation — streaming-
     safe) → the same band hashing as the batch pair generator
     (:func:`pql_spark.operators.dedup.band_signature`, so stream and
     batch buckets agree bit-for-bit) → ONE stateful groupBy keyed on
@@ -757,13 +758,7 @@ def stream_near_dup(
     """
     from pql_spark.operators.dedup import band_signature, minhash_signature
 
-    # a NULL text has no shingles, so no signature (as on the batch
-    # paths): the Arrow kernel would sign it as "" and put every
-    # NULL-text doc in the same buckets
-    sig = minhash_signature(
-        docs.filter(F.col(text_col).isNotNull()), text_col, id_col,
-        num_perm, shingle_k, impl="pandas", include_shingles=False,
-    )
+    sig = minhash_signature(docs, text_col, id_col, num_perm, shingle_k)
     banded = band_signature(sig, id_col, num_perm, bands).withColumn(
         "__shard",
         F.pmod(F.xxhash64(F.col("bhash")), F.lit(state_shards)).cast("int"),

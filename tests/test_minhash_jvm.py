@@ -1,9 +1,11 @@
-"""The batch MinHash path computes signatures in the JVM (one
-``GROUP BY id`` over the verify's shingle rows).  These tests pin it to
-the Arrow kernel (``impl="pandas"``) and the pure-expression reference
-(``impl="catalyst"``) on an adversarial corpus, and pin
-``minhash_dup_pairs`` to a run whose signatures come from the Arrow
-kernel — same ids, bit-equal jaccard doubles."""
+"""``minhash_signature`` has two forms that share no code: a batch
+frame gets the JVM aggregate (one ``GROUP BY id`` over the verify's
+shingle rows), a stream gets the narrow Arrow kernel
+(``_arrow_minhash``).  These tests pin the two to each other on an
+adversarial corpus, and pin ``minhash_dup_pairs`` to a run whose
+signatures come from the Arrow kernel — same ids, bit-equal jaccard
+doubles.  A NULL text has no shingles on either form, so no
+signature."""
 
 from __future__ import annotations
 
@@ -11,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pql_spark.operators.dedup import (
+    _arrow_minhash,
     _bucket_pairs,
     _verify_jaccard,
     band_signature,
@@ -43,6 +46,7 @@ ROWS = [
     (15, UNI),                                 # non-ASCII words
     (16, UNI + " jalapeño"),
     (17, "NAÏVE CAFÉ straße 東京 ÜBER résumé smörgåsbord façade"),
+    (18, "alpha beta gamma delta\u1680epsilon zeta eta"),  # one token
     (20, FOOTER),                              # a 4-doc bucket cluster
     (21, FOOTER),
     (22, FOOTER),
@@ -55,24 +59,23 @@ def adv(spark):
     return spark.createDataFrame(ROWS, "doc_id long, text string")
 
 
-def _sigs(df, impl):
-    return {
-        r.doc_id: None if r.minhash is None else list(r.minhash)
-        for r in minhash_signature(
-            df, num_perm=NUM_PERM, shingle_k=K, impl=impl,
-            include_shingles=False,
-        ).collect()
-    }
+def _jvm_sig(df):
+    return minhash_signature(df, num_perm=NUM_PERM, shingle_k=K)
 
 
-def _pandas_signature_pairs(df, max_bucket):
-    """The pair chain with signatures from the Arrow kernel: band →
-    bucket → (capped) pair emission → rows-based exact verify.
-    Returns (candidates, verified pairs sorted by id)."""
-    sig = minhash_signature(
-        df, num_perm=NUM_PERM, shingle_k=K, impl="pandas",
-        include_shingles=False,
-    )
+def _arrow_sig(df):
+    return _arrow_minhash(df, "text", "doc_id", NUM_PERM, K)
+
+
+def _sigs(sig):
+    return {r.doc_id: list(r.minhash) for r in sig.collect()}
+
+
+def _signature_pairs(df, max_bucket, signature=_arrow_sig):
+    """The pair chain over ``signature(df)`` (default: the Arrow
+    kernel): band → bucket → (capped) pair emission → rows-based exact
+    verify.  Returns (candidates, verified pairs sorted by id)."""
+    sig = signature(df)
     buckets = (
         band_signature(sig, "doc_id", NUM_PERM, BANDS)
         .groupBy("band", "bhash")
@@ -86,22 +89,19 @@ def _pandas_signature_pairs(df, max_bucket):
     return cand, _verify_jaccard(sh, cand, "doc_id", THRESHOLD)
 
 
-def test_jvm_signature_matches_pandas_and_catalyst(adv):
-    agg = _sigs(adv, "agg")
-    pandas = _sigs(adv, "pandas")
-    catalyst = _sigs(adv, "catalyst")
-    assert set(agg) == {i for i, t in ROWS if t is not None}
+def test_jvm_signature_matches_arrow_kernel(adv):
+    agg = _sigs(_jvm_sig(adv))
+    arrow = _sigs(_arrow_sig(adv))
+    # NULL text: no shingles, so no row on either form
+    assert set(agg) == set(arrow) == {i for i, t in ROWS if t is not None}
     for doc_id, sig in agg.items():
         assert len(sig) == NUM_PERM
-        assert sig == pandas[doc_id] == catalyst[doc_id], doc_id
-    # NULL text: no shingle rows, so no JVM signature; the Arrow kernel
-    # signs it as the empty shingle, the expression path returns NULL
-    assert pandas[4] == pandas[5] == agg[5]
-    assert catalyst[4] is None
+        assert sig == arrow[doc_id], doc_id
     # the tokenization edge cases really are edge cases
     assert agg[5] == agg[6]            # empty == whitespace-only
     assert agg[7] != agg[8]            # U+00A0 is not whitespace
     assert agg[9] != agg[10]           # nor is U+2028
+    assert agg[18] != agg[8]           # nor is U+1680
     assert agg[11] == agg[12]          # short docs: one whole-doc shingle
     assert agg[15] == agg[17]          # non-ASCII lower-casing agrees
 
@@ -121,7 +121,7 @@ def _jvm_pairs(df, **kw):
 def test_pairs_match_pandas_signature_run(adv, sort_pairs, max_bucket):
     # the NULL-text row has its own test below
     docs = adv.filter(F.col("text").isNotNull())
-    _, ref = _pandas_signature_pairs(docs, max_bucket)
+    _, ref = _signature_pairs(docs, max_bucket)
     want = [tuple(r) for r in ref.collect()]
     got = _jvm_pairs(docs, max_bucket=max_bucket, sort_pairs=sort_pairs)
     if not sort_pairs:
@@ -140,24 +140,23 @@ def test_pairs_match_pandas_signature_run(adv, sort_pairs, max_bucket):
 
 
 def test_null_text_yields_no_pair_on_either_path(adv):
-    cand, ref = _pandas_signature_pairs(adv, None)
-    # the Arrow kernel's empty-shingle signature makes the NULL doc a
-    # candidate of the empty docs, but it has no shingle rows to verify
-    assert any(4 in (r.id_a, r.id_b) for r in cand.collect())
+    # no signature, so the NULL doc is a candidate on neither chain
+    cand, ref = _signature_pairs(adv, None)
+    jvm_cand, _ = _signature_pairs(adv, None, _jvm_sig)
+    for c in (cand, jvm_cand):
+        assert not any(4 in (r.id_a, r.id_b) for r in c.collect())
     want = [tuple(r) for r in ref.collect()]
     got = _jvm_pairs(adv)
-    assert not any(4 in p[:2] for p in want + got)
     assert got == want
     assert (5, 6, 1.0) in got
 
 
 def test_null_text_no_longer_fills_a_capped_bucket(adv):
-    # With Arrow-kernel signatures the NULL doc is a member of the
-    # empty docs' buckets {4, 5, 6}: over a cap of 2, those become
-    # stars from id 4, which the verify then drops, losing (5, 6).
-    # JVM signatures leave the NULL doc out of every bucket.
-    _, ref = _pandas_signature_pairs(adv, 2)
+    # The empty docs' buckets are {5, 6} on both chains: a NULL doc in
+    # them would turn them into stars from id 4 over a cap of 2, which
+    # the verify then drops, losing (5, 6).
+    _, ref = _signature_pairs(adv, 2)
     want = [tuple(r) for r in ref.collect()]
     got = _jvm_pairs(adv, max_bucket=2)
-    assert (5, 6, 1.0) not in want
-    assert got == sorted(want + [(5, 6, 1.0)])
+    assert (5, 6, 1.0) in want
+    assert got == want

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pql_spark.operators import near_dup_incremental
-from pql_spark.operators.dedup import band_signature, minhash_signature
+from pql_spark.operators.dedup import _arrow_minhash, band_signature
 
 BASE = (
     "the quick brown fox jumps over the lazy dog and then runs away "
@@ -64,10 +64,9 @@ def test_state_buckets_match_batch_banding(spark, tmp_path):
         (r.band, r.bhash, r.keeper)
         for r in spark.read.parquet(state).collect()
     }
-    sig = minhash_signature(
-        docs, "text", "doc_id", 64, 5, impl="pandas",
-        include_shingles=False,
-    )
+    # the Arrow kernel: a reference independent of the JVM aggregate
+    # the operator signs with
+    sig = _arrow_minhash(docs, "text", "doc_id", 64, 5)
     expect = {
         (r.band, r.bhash, r.keeper)
         for r in band_signature(sig, "doc_id", 64, 16)

@@ -75,27 +75,19 @@ def test_minhash_signature_shape(docs):
 
 
 def test_minhash_impls_agree(docs):
-    """The Arrow-batched numpy kernel and the pure-Catalyst expression
-    path must produce bit-identical signatures."""
-    fast = {
+    """The batch JVM aggregate and the stream's Arrow-batched numpy
+    kernel must produce bit-identical signatures."""
+    from pql_spark.operators.dedup import _arrow_minhash
+
+    agg = {
         r.doc_id: list(r.minhash)
         for r in minhash_signature(docs, num_perm=16, shingle_k=2).collect()
     }
-    ref = {
+    fast = {
         r.doc_id: list(r.minhash)
-        for r in minhash_signature(
-            docs, num_perm=16, shingle_k=2, impl="catalyst"
-        ).collect()
+        for r in _arrow_minhash(docs, "text", "doc_id", 16, 2).collect()
     }
-    assert fast == ref
-    agg = {
-        r.doc_id: list(r.minhash)
-        for r in minhash_signature(
-            docs, num_perm=16, shingle_k=2, impl="agg",
-            include_shingles=False,
-        ).collect()
-    }
-    assert agg == ref
+    assert fast == agg
 
 
 def test_minhash_dup_pairs(docs):
@@ -767,43 +759,6 @@ def test_multimodal_png_decode_features(spark):
     ).hexdigest()
     # pinned: deterministic synthetic image → deterministic feature
     assert digest == "2c7ebf57341ff5d0d05c5d557fa153d3"
-
-
-def test_minhash_impls_agree_unicode_whitespace(spark):
-    """Java \\s is ASCII-only; Python \\s also matches U+00A0, U+2028,
-    U+1680 — the pandas kernel must shingle with the Java class or its
-    signatures silently diverge from catalyst/agg and the SQL oracle
-    (ADVICE r7 medium)."""
-    rows = [
-        (1, "alpha beta gamma delta epsilon zeta"),
-        (2, "alpha beta gamma delta epsilon zeta"),
-        (3, "plain ascii text with several words here"),
-        (4, "   "),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    from pql_spark.operators.dedup import minhash_signature
-
-    ref = {
-        r.doc_id: list(r.minhash)
-        for r in minhash_signature(
-            docs, num_perm=16, shingle_k=2, impl="catalyst"
-        ).collect()
-    }
-    fast = {
-        r.doc_id: list(r.minhash)
-        for r in minhash_signature(
-            docs, num_perm=16, shingle_k=2, impl="pandas"
-        ).collect()
-    }
-    agg = {
-        r.doc_id: list(r.minhash)
-        for r in minhash_signature(
-            docs, num_perm=16, shingle_k=2, impl="agg",
-            include_shingles=False,
-        ).collect()
-    }
-    assert fast == ref
-    assert agg == ref
 
 
 def test_ngram_prefix_filter_matches_default(spark):

@@ -365,15 +365,26 @@ def _python_nodes(df) -> list[str]:
 
 
 def test_batch_minhash_and_curation_run_no_python_workers(spark, monkeypatch):
-    """Batch MinHash signatures are a JVM aggregate: neither the pair
-    operator nor the curation pipeline (whose near-dup stage it is) may
-    plan a Python-worker node.  The pipeline's checkpoints cut their
-    input plans out of every later tree string, so the executed plan of
-    each frame it checkpoints is recorded and checked too."""
-    from pql_spark.operators.dedup import minhash_dup_pairs
+    """Batch MinHash signatures are a JVM aggregate: neither the
+    signature, the pair operator nor the curation pipeline (whose
+    near-dup stage it is) may plan a Python-worker node.  The same
+    signature over a stream is the narrow Arrow kernel, with no
+    aggregate.  The pipeline's checkpoints cut their input plans out of
+    every later tree string, so the executed plan of each frame it
+    checkpoints is recorded and checked too."""
+    from pql_spark.operators.dedup import minhash_dup_pairs, minhash_signature
     from pql_spark.pipelines import curate_corpus
 
-    docs = spark.read.parquet(str(SF_SMOKE / "documents.parquet"))
+    path = str(SF_SMOKE / "documents.parquet")
+    docs = spark.read.parquet(path)
+    assert _python_nodes(minhash_signature(docs)) == []
+    # a streaming frame has no executedPlan; explain plans it
+    stream = spark.readStream.schema(docs.schema).parquet(path)
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        minhash_signature(stream)._jdf.queryExecution(), "simple"
+    )
+    assert "MapInPandas" in plan and "Aggregate" not in plan, plan
+
     frame_cls = type(docs)
     checkpointed: list[str] = []
     local_checkpoint = frame_cls.localCheckpoint

@@ -350,9 +350,7 @@ def test_stream_near_dup_matches_batch_buckets(tmp_path, spark):
     flagged = {r.doc_id for r in got}
     groups = {(r.doc_id, r.dup_of) for r in got}
 
-    sig = minhash_signature(
-        docs, impl="pandas", include_shingles=False
-    )
+    sig = minhash_signature(docs)
     buckets = (
         band_signature(sig, "doc_id", 64, 16)
         .groupBy("band", "bhash")
@@ -431,7 +429,7 @@ def test_curate_stream_matches_batch(tmp_path, spark):
     f = quality_score(all_docs, append=True).filter(
         F.col("quality") >= 0.75
     ).select("doc_id", "text")
-    sig = minhash_signature(f, impl="pandas", include_shingles=False)
+    sig = minhash_signature(f)
     buckets = (
         band_signature(sig, "doc_id", 64, 16)
         .groupBy("band", "bhash")
