@@ -312,45 +312,34 @@ def _arrow_minhash(
         import itertools
 
         for pdf in batches:
+            # every document has >= 1 shingle (_py_shingles of any text,
+            # even "", is non-empty), so each reduceat segment is too
             shs = [_py_shingles(t) for t in pdf[text_col]]
-            n = len(shs)
-            lens = np.fromiter((len(s) for s in shs), np.int64, count=n)
-            full = np.full(num_perm, _P, dtype=np.int64)  # empty-doc sig
-            total = int(lens.sum())
-            if total == 0:
-                sigs = [full] * n
-            else:
-                flat = np.asarray(
-                    list(itertools.chain.from_iterable(shs)), dtype=object
-                )
-                codes, uniques = pd.factorize(flat)
-                hu = np.fromiter(
-                    (
-                        int(
-                            hashlib.md5(s.encode("utf-8")).hexdigest()[:8],
-                            16,
-                        )
-                        for s in uniques
-                    ),
-                    np.int64,
-                    count=len(uniques),
-                )
-                nonempty = np.flatnonzero(lens > 0)
-                starts = (np.cumsum(lens) - lens)[nonempty]
-                red = np.empty((len(nonempty), num_perm), dtype=np.int64)
-                mu = np.empty(len(hu), dtype=np.int64)
-                gv = np.empty(total, dtype=np.int64)
-                for p, (a, b) in enumerate(params):
-                    # a < P, h < 2^32 → a·h < 2^62: no int64 overflow
-                    np.multiply(hu, a, out=mu)
-                    np.add(mu, b, out=mu)
-                    np.mod(mu, _P, out=mu)
-                    np.take(mu, codes, out=gv)
-                    red[:, p] = np.minimum.reduceat(gv, starts)
-                sigs = [full] * n
-                for j, doc in enumerate(nonempty):
-                    sigs[doc] = red[j]
-            yield pd.DataFrame({id_col: pdf[id_col], "minhash": sigs})
+            lens = np.fromiter((len(s) for s in shs), np.int64, len(shs))
+            flat = np.asarray(
+                list(itertools.chain.from_iterable(shs)), dtype=object
+            )
+            codes, uniques = pd.factorize(flat)
+            hu = np.fromiter(
+                (
+                    int(hashlib.md5(s.encode("utf-8")).hexdigest()[:8], 16)
+                    for s in uniques
+                ),
+                np.int64,
+                count=len(uniques),
+            )
+            starts = np.cumsum(lens) - lens
+            red = np.empty((len(shs), num_perm), dtype=np.int64)
+            mu = np.empty(len(hu), dtype=np.int64)
+            gv = np.empty(len(flat), dtype=np.int64)
+            for p, (a, b) in enumerate(params):
+                # a < P, h < 2^32 → a·h < 2^62: no int64 overflow
+                np.multiply(hu, a, out=mu)
+                np.add(mu, b, out=mu)
+                np.mod(mu, _P, out=mu)
+                np.take(mu, codes, out=gv)
+                red[:, p] = np.minimum.reduceat(gv, starts)
+            yield pd.DataFrame({id_col: pdf[id_col], "minhash": list(red)})
 
     return (
         df.select(F.col(id_col), F.col(text_col))

@@ -19,6 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from pql_spark.operators._util import sql_with_views
@@ -152,73 +153,32 @@ _STATEFUL_OUT = T.StructType(
     ]
 )
 
-_STATEFUL_STATE = T.StructType(
-    [
-        T.StructField("n_events", T.LongType()),
-        T.StructField("total_value", T.DoubleType()),
-    ]
-)
-
 
 def stateful_user_counts(
     df: DataFrame,
     key_col: str = "user_id",
     value_col: str = "value",
-    state_shards: int | None = None,
+    state_shards: int = 64,
 ) -> DataFrame:
     """Custom stateful operator: running per-user totals via
     ``applyInPandasWithState``.
 
     The canonical shape for state Spark's built-ins can't express
-    (custom eviction, conditional alerts, model state): per-key state is
-    a tuple in the state store, each micro-batch's rows arrive as Arrow
-    batches, and the update function merges them — Python runs once per
-    key per batch, not per row.
+    (custom eviction, conditional alerts, model state): state lives in
+    the state store, each micro-batch's rows arrive as Arrow batches,
+    and the update function folds them in with ONE pandas groupby per
+    group — Python runs once per group per batch, not per row.
 
-    ``state_shards``: keying the operator on the raw user id means one
-    Python call + one state round-trip PER USER per batch — fine for
-    hot-key cardinalities, but at millions of active users the ~0.5 ms
-    per-group overhead dominates the arithmetic.  An integer here
-    switches to the Flink key-group pattern (same as
-    :func:`stream_near_dup`): groups are ``pmod(hash(user), shards)``,
-    each shard's state is its users' (n, total) parallel arrays, and
-    batch rows are folded in with ONE pandas groupby per shard.
-    Emitted rows are identical (every user present in the batch, with
-    running totals); only the group key changes.  Size shards so one
+    Groups are Flink-style key groups (as in :func:`stream_near_dup`):
+    ``pmod(xxhash64(user), state_shards)``, each shard's state being
+    its users' (n, total) parallel arrays.  ``state_shards`` is a
+    sizing int: every user present in a batch is emitted with its
+    running totals whatever the count.  More shards bring the kernel
+    closer to per-key state (well above the active users per batch,
+    most groups hold one user); fewer shards mean fewer Python calls
+    and state round-trips (~0.5 ms each) per batch.  Size shards so one
     shard's users fit an executor's memory.
     """
-
-    if state_shards is None:
-
-        def update(
-            key: tuple,
-            pdfs: Iterator[pd.DataFrame],
-            state: GroupState,
-        ) -> Iterator[pd.DataFrame]:
-            n, total = state.get if state.exists else (0, 0.0)
-            batch_n = 0
-            for pdf in pdfs:
-                batch_n += len(pdf)
-                n += len(pdf)
-                total += float(pdf[value_col].sum())
-            state.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [total],
-                    "batch_events": [batch_n],
-                }
-            )
-
-        return df.groupBy(key_col).applyInPandasWithState(
-            update,
-            outputStructType=_STATEFUL_OUT,
-            stateStructType=_STATEFUL_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-
     shard_state = T.StructType(
         [
             T.StructField("users", T.ArrayType(T.LongType())),
@@ -227,7 +187,7 @@ def stateful_user_counts(
         ]
     )
 
-    def update_shard(
+    def update(
         key: tuple,
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
@@ -244,9 +204,9 @@ def stateful_user_counts(
         if not frames:
             return
         batch = pd.concat(frames) if len(frames) > 1 else frames[0]
-        # size (not count) so null-VALUE rows count like the unsharded
-        # len(pdf); dropna=False so null KEYS get a group like Spark's
-        # groupBy in the unsharded path (ADVICE r7)
+        # size (not count) so null-VALUE rows count as rows, like
+        # Spark's count(); dropna=False so null KEYS get a group, like
+        # Spark's groupBy (ADVICE r7)
         agg = batch.groupby(key_col, dropna=False)[value_col].agg(
             ["size", "sum"]
         )
@@ -255,7 +215,7 @@ def stateful_user_counts(
             uk = None if pd.isna(user) else int(user)
             bn = int(row["size"])
             # pandas grouped sum of an all-null group is 0.0 (min_count
-            # defaults to 0), matching the unsharded Series.sum()
+            # defaults to 0): a user's total starts at 0.0, never NULL
             bs = 0.0 if pd.isna(row["sum"]) else float(row["sum"])
             n0, t0 = held.get(uk, (0, 0.0))
             n1, t1 = n0 + bn, t0 + bs
@@ -285,7 +245,7 @@ def stateful_user_counts(
         F.pmod(F.xxhash64(F.col(key_col)), F.lit(state_shards)).cast("int"),
     )
     return sharded.groupBy("__shard").applyInPandasWithState(
-        update_shard,
+        update,
         outputStructType=_STATEFUL_OUT,
         stateStructType=shard_state,
         outputMode="update",
@@ -392,11 +352,60 @@ def run_available_now(
     watermark past it — skipping the finalize batch would silently drop
     the final windows.  Pass ``False`` explicitly for append drains of
     eager operators (stream-stream inner joins, ``dropDuplicates``,
-    stateful kernels), which emit their matches in the data batch."""
+    stateful kernels), which emit their matches in the data batch.
+
+    The drain runs with 4 state-store partitions.  That conf and the
+    no-data-batch one are held only while the query starts; the
+    caller's session reads its own values for the rest of the drain.
+    A drain that outlives its 300 s timeout raises ``TimeoutError``."""
     return _drain_to_memory(df, output_mode, no_data_batches).collect()
 
 
+_SHUFFLE_CONF = "spark.sql.shuffle.partitions"
 _ND_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+
+def _run_available_now(
+    writer: DataStreamWriter,
+    spark: SparkSession,
+    timeout: int | None,
+    shuffle_partitions: int | None = None,
+    no_data_batches: bool | None = None,
+) -> StreamingQuery:
+    """The one availableNow runner: start ``writer`` with an
+    ``availableNow`` trigger, wait for it to drain, stop it.
+
+    A streaming query clones its session when it is constructed, inside
+    ``start()``, so the two confs it takes from the session — the
+    state-store partition count (``shuffle_partitions``) and whether a
+    zero-input finalize micro-batch runs (``no_data_batches``) — are
+    set for ``start()`` only and the caller's values are restored as
+    soon as it returns (or raises).  ``None`` leaves a conf alone.
+
+    A drain still running after ``timeout`` seconds is stopped and
+    raises ``TimeoutError``: whatever its sink holds then is partial."""
+    confs = {}
+    if shuffle_partitions is not None:
+        confs[_SHUFFLE_CONF] = str(shuffle_partitions)
+    if no_data_batches is not None:
+        confs[_ND_CONF] = str(no_data_batches).lower()
+    prev = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        q = writer.trigger(availableNow=True).start()
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    try:
+        if q.awaitTermination(timeout) is False:
+            raise TimeoutError(
+                f"streaming query {q.name or q.id} did not drain within"
+                f" {timeout} s; it was stopped"
+            )
+    finally:
+        q.stop()
+    return q
 
 
 def _drain_to_memory(
@@ -405,8 +414,9 @@ def _drain_to_memory(
     no_data_batches: bool | None = None,
 ) -> DataFrame:
     """Shared drain: run ``df`` into a uniquely named memory sink with
-    ``availableNow`` and return the sink's contents as a DataFrame; the
-    temp view the sink registered is dropped again.
+    :func:`_run_available_now` and return the sink's contents as a
+    DataFrame; the temp view the sink registered is dropped again.  The
+    caller's session confs are changed only while the query starts.
 
     ``no_data_batches`` — see :func:`run_available_now`; ``None``
     resolves to False (skip the finalize batch) for update/complete,
@@ -415,22 +425,8 @@ def _drain_to_memory(
     spark = df.sparkSession
     if no_data_batches is None:
         no_data_batches = output_mode == "append"
-    # state-store partition count is fixed at query start from this conf;
-    # a short availableNow drain doesn't need a wide state store, and
-    # every extra partition is per-micro-batch task + state-commit
-    # overhead (measured on the stream-stream interval join at sf0.1:
-    # 8 partitions 2.7 s, 4 → 2.1 s).  4 keeps multi-task semantics
-    # honest while halving the fixed cost; long-running production
-    # streams size their own shuffle.partitions, not this harness.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_nd = spark.conf.get(_ND_CONF)
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set(_ND_CONF, str(no_data_batches).lower())
-    writer = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
+    writer = df.writeStream.format("memory").queryName(name).outputMode(
+        output_mode
     )
     # a transient drain doesn't need a durable checkpoint; keep the
     # state store's many tiny files in memory when a tmpfs exists
@@ -440,14 +436,21 @@ def _drain_to_memory(
             "checkpointLocation", str(shm / f"pql_ckpt_{name}")
         )
     try:
-        q = writer.start()
-        try:
-            q.awaitTermination(300)
-        finally:
-            q.stop()
+        # a short availableNow drain doesn't need a wide state store,
+        # and every extra partition is per-micro-batch task + state-
+        # commit overhead (measured on the stream-stream interval join
+        # at sf0.1: 8 partitions 2.7 s, 4 → 2.1 s).  4 keeps multi-task
+        # semantics honest while halving the fixed cost; long-running
+        # production streams size their own shuffle.partitions.
+        _run_available_now(
+            writer, spark, 300, shuffle_partitions=4,
+            no_data_batches=no_data_batches,
+        )
+    except BaseException:
+        # the sink's view must not outlive a failed drain
+        spark._jsparkSession.sessionState().catalog().dropTempView(name)
+        raise
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(_ND_CONF, prev_nd)
         if shm.is_dir():
             import shutil
 
@@ -483,17 +486,21 @@ def write_stream_parquet(
 
     ``no_data_batches=False`` skips the trailing zero-input finalize
     micro-batch for STATELESS plans (pure filters/projections) where it
-    can emit nothing; leave it None (conf untouched) for watermark-
-    gated aggregations, whose final windows are emitted BY that batch.
+    can emit nothing; ``None`` leaves the caller's conf alone — right
+    for watermark-gated aggregations, whose final windows are emitted
+    BY that batch under the default.
 
     ``partition_by`` gives hive-style directory partitioning, the same
     layout the batch sinks use — downstream readers get partition
     pruning on those columns.  ``checkpoint`` defaults to a sibling
     ``<path>_ckpt`` directory: with a durable checkpoint the sink is
     exactly-once across restarts (file-sink manifest + WAL).  With
-    ``available_now`` the call drains everything currently readable and
-    returns after termination; pass ``available_now=False`` for a
-    continuously running query (returns the live StreamingQuery).
+    ``available_now`` the call drains everything currently readable
+    with 8 state-store partitions (:func:`_run_available_now`: the
+    confs are held only while the query starts; a drain longer than
+    ``await_seconds`` raises ``TimeoutError``) and returns the stopped
+    query; pass ``available_now=False`` for a continuously running
+    query (returns the live StreamingQuery).
     """
     writer = (
         df.writeStream.format("parquet")
@@ -508,23 +515,10 @@ def write_stream_parquet(
         writer = writer.partitionBy(*partition_by)
     if not available_now:
         return writer.start()
-    writer = writer.trigger(availableNow=True)
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_nd = spark.conf.get(_ND_CONF)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    if no_data_batches is not None:
-        spark.conf.set(_ND_CONF, str(no_data_batches).lower())
-    try:
-        q = writer.start()
-        try:
-            q.awaitTermination(await_seconds)
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(_ND_CONF, prev_nd)
-    return q
+    return _run_available_now(
+        writer, df.sparkSession, await_seconds, shuffle_partitions=8,
+        no_data_batches=no_data_batches,
+    )
 
 
 def stream_upsert_to_parquet(
@@ -557,16 +551,7 @@ def stream_upsert_to_parquet(
         if not batch_df.columns:
             return
         spark = batch_df.sparkSession
-        others = [c for c in batch_df.columns if c not in keys]
-        dedup = (
-            batch_df.groupBy(*[F.col(k) for k in keys])
-            .agg(
-                F.max(F.struct(*[F.col(c) for c in others])).alias("__v")
-            )
-            .select(*keys, "__v.*")
-            if others
-            else batch_df.dropDuplicates(keys)
-        )
+        dedup = _dedup_batch_keys(batch_df, keys)
         if target.exists():
             cur = spark.read.parquet(str(target))
             merged = cur.join(
@@ -589,27 +574,28 @@ def stream_upsert_to_parquet(
             "checkpointLocation",
             checkpoint or f"{str(target).rstrip('/')}_ckpt",
         )
-        .trigger(availableNow=True)
     )
-    # an availableNow drain doesn't need a wide state store (see
-    # run_available_now); the conf is fixed at query start.  update-mode
-    # foreachBatch emits on the data batch, so the zero-input finalize
-    # batch is skipped too (see run_available_now).
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_nd = spark.conf.get(_ND_CONF)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set(_ND_CONF, "false")
-    try:
-        q = writer.start()
-        try:
-            q.awaitTermination(await_seconds)
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(_ND_CONF, prev_nd)
-    return q
+    # an availableNow drain doesn't need a wide state store; update-
+    # mode foreachBatch emits on the data batch, so the zero-input
+    # finalize batch is skipped (see run_available_now)
+    return _run_available_now(
+        writer, df.sparkSession, await_seconds, shuffle_partitions=8,
+        no_data_batches=False,
+    )
+
+
+def _dedup_batch_keys(batch_df: DataFrame, keys: list[str]) -> DataFrame:
+    """One row per key of an upsert micro-batch.  Spark defines no
+    "last write" within a batch, so the row kept is deterministic: the
+    max over the non-key columns' struct."""
+    others = [c for c in batch_df.columns if c not in keys]
+    if not others:
+        return batch_df.dropDuplicates(keys)
+    return (
+        batch_df.groupBy(*keys)
+        .agg(F.max(F.struct(*others)).alias("__v"))
+        .select(*keys, "__v.*")
+    )
 
 
 def merge_upsert_sql(table: str, view: str, keys: list[str]) -> str:
@@ -681,41 +667,21 @@ def stream_upsert_to_table(
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.columns:
             return
-        sp = batch_df.sparkSession
-        others = [c for c in batch_df.columns if c not in keys]
-        dedup = (
-            batch_df.groupBy(*[F.col(k) for k in keys])
-            .agg(
-                F.max(F.struct(*[F.col(c) for c in others])).alias("__v")
-            )
-            .select(*keys, "__v.*")
-            if others
-            else batch_df.dropDuplicates(keys)
-        )
         view = f"__sq_upsert_{uuid4().hex[:8]}"
-        sql_with_views(sp, merge_upsert_sql(table, view, keys), {view: dedup})
+        sql_with_views(
+            batch_df.sparkSession,
+            merge_upsert_sql(table, view, keys),
+            {view: _dedup_batch_keys(batch_df, keys)},
+        )
 
-    writer = (
-        df.writeStream.foreachBatch(merge)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    )
+    writer = df.writeStream.foreachBatch(merge).outputMode("update")
     if checkpoint:
         writer = writer.option("checkpointLocation", checkpoint)
     # update-mode foreachBatch emits on the data batch — skip the
     # zero-input finalize batch (see run_available_now)
-    spark = df.sparkSession
-    prev_nd = spark.conf.get(_ND_CONF)
-    spark.conf.set(_ND_CONF, "false")
-    try:
-        q = writer.start()
-        try:
-            q.awaitTermination(await_seconds)
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set(_ND_CONF, prev_nd)
-    return q
+    return _run_available_now(
+        writer, spark, await_seconds, no_data_batches=False
+    )
 
 
 def stream_near_dup(
@@ -897,27 +863,14 @@ def curate_stream(
                 "append"
             ).parquet(str(dups_path))
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_nd = spark.conf.get(_ND_CONF)
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
     # update-mode stateful kernel emits on the data batch — skip the
     # zero-input finalize batch (see run_available_now)
-    spark.conf.set(_ND_CONF, "false")
-    try:
-        q = (
-            flags.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", str(work / "ckpt_dups"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination(300)
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(_ND_CONF, prev_nd)
+    _run_available_now(
+        flags.writeStream.foreachBatch(sink)
+        .outputMode("update")
+        .option("checkpointLocation", str(work / "ckpt_dups")),
+        spark, 300, shuffle_partitions=4, no_data_batches=False,
+    )
 
     kept_batch = spark.read.parquet(str(kept_path))
     if dups_path.exists():
@@ -936,19 +889,12 @@ def stream_sequence_detect(
     step_window: str = "1h",
     span_window: str = "2h",
     watermark: str = "1 day",
-    state_shards: int | None = None,
+    state_shards: int = 64,
 ) -> DataFrame:
     """Incremental streaming funnel matching — the stateful twin of the
     batch ``evaluate sequence_detect``: per-key greedy-earliest chains
     (each step-1 event chains the EARLIEST later event matching each
     next step within ``step_window``, whole chain ≤ ``span_window``).
-
-    ``state_shards``: as in :func:`stateful_user_counts` — an integer
-    switches the group key from the raw ``key_col`` (one Python call +
-    state round-trip per active key per batch) to the Flink key-group
-    pattern ``pmod(hash(key), shards)``; each shard's state holds its
-    keys' event lists as flattened parallel arrays.  Emitted chains are
-    identical; only the per-batch group count changes.
 
     ``steps`` is ``[(name, bool_sql_expr), …]``; output is one row per
     COMPLETED chain with columns ``<name>_<ts_col>``.  State per key is
@@ -958,9 +904,16 @@ def stream_sequence_detect(
     of stream length.  A chain is emitted exactly once — in the
     micro-batch where its final step's event arrives (exact under
     per-key in-order arrival; late events may chain differently than a
-    batch re-run, the standard streaming caveat).  Python runs once per
-    key per batch over Arrow batches, not per row."""
-    from bisect import bisect_left, bisect_right
+    batch re-run, the standard streaming caveat).  A NULL key is one
+    key, as in the batch operator's ``by``.
+
+    Groups are key groups ``pmod(xxhash64(key), state_shards)``, as in
+    :func:`stateful_user_counts`: each shard's state holds its keys'
+    event lists as flattened parallel arrays, and Python runs once per
+    shard per batch over Arrow batches, not per row or per key.
+    ``state_shards`` is a sizing int with the same trade-off: emitted
+    chains are the same for any count."""
+    from bisect import bisect_right
 
     from .pipeline import _duration_to_usec  # self-import safe
 
@@ -971,17 +924,13 @@ def stream_sequence_detect(
     step_us = _duration_to_usec(step_window)
     span_us = _duration_to_usec(span_window)
     key_field = df.schema[key_col]
+    # a nullable long key column arrives in pandas as float64
+    integral_key = isinstance(key_field.dataType, T.IntegralType)
     out_schema = T.StructType(
         [T.StructField(key_col, key_field.dataType)]
         + [
             T.StructField(f"{n}_{ts_col}", T.TimestampType())
             for n in names
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("us", T.ArrayType(T.LongType())),
-            T.StructField("fl", T.ArrayType(T.IntegerType())),
         ]
     )
     flags = None
@@ -1019,62 +968,9 @@ def stream_sequence_detect(
                 out.append(tuple(chain))
         return out
 
-    def update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        old_us, old_fl = (
-            state.get if state.exists else ([], [])
-        )
-        new_events: list[tuple[int, int]] = []
-        for pdf in pdfs:
-            new_events.extend(
-                (int(u), int(f))
-                for u, f in zip(pdf["__us"], pdf["__fl"])
-            )
-        merged = sorted(
-            list(zip(old_us, old_fl)) + new_events
-        )
-        us = [t for t, _ in merged]
-        fl = [f for _, f in merged]
-        # completion timestamps that are NEW this batch (multiset)
-        final_bit = 1 << (nsteps - 1)
-        new_finals: dict[int, int] = {}
-        for t, f in new_events:
-            if f & final_bit:
-                new_finals[t] = new_finals.get(t, 0) + 1
-        rows = []
-        for chain in chains_of(us, fl):
-            if new_finals.get(chain[-1], 0) > 0:
-                rows.append(chain)
-        # evict events that can extend no future chain
-        if us:
-            horizon = max(us) - span_us
-            keep = [(t, f) for t, f in merged if t >= horizon]
-            state.update(
-                ([t for t, _ in keep], [f for _, f in keep])
-            )
-        if rows:
-            data = {key_col: [key[0]] * len(rows)}
-            for i, n in enumerate(names):
-                data[f"{n}_{ts_col}"] = [
-                    pd.Timestamp(c[i], unit="us") for c in rows
-                ]
-            yield pd.DataFrame(data)
-
-    if state_shards is None:
-        return base.groupBy(key_col).applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-
-    # ---- key-group sharded variant: state is the shard's keys' event
-    # lists as flattened parallel arrays (keys[i] owns the slice
-    # [sum(counts[:i]), sum(counts[:i+1])) of us/fl)
+    # state: the shard's keys' event lists as flattened parallel arrays
+    # (keys[i] owns the slice [sum(counts[:i]), sum(counts[:i+1])) of
+    # us/fl)
     shard_state = T.StructType(
         [
             T.StructField("keys", T.ArrayType(key_field.dataType)),
@@ -1085,7 +981,7 @@ def stream_sequence_detect(
     )
     final_bit = 1 << (nsteps - 1)
 
-    def update_shard(
+    def update(
         key: tuple,
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
@@ -1106,8 +1002,13 @@ def stream_sequence_detect(
             return
         batch = pd.concat(frames) if len(frames) > 1 else frames[0]
         out_rows: list[tuple] = []
-        for k, grp in batch.groupby(key_col, sort=False):
-            if hasattr(k, "item"):  # numpy scalar → plain Python
+        # dropna=False: a NULL key is a group, as in Spark's groupBy
+        for k, grp in batch.groupby(key_col, sort=False, dropna=False):
+            if pd.isna(k):
+                k = None
+            elif integral_key:
+                k = int(k)
+            elif hasattr(k, "item"):  # numpy scalar → plain Python
                 k = k.item()
             old_us, old_fl = held.get(k, ([], []))
             new_events = [
@@ -1117,6 +1018,7 @@ def stream_sequence_detect(
             merged = sorted(list(zip(old_us, old_fl)) + new_events)
             us = [t for t, _ in merged]
             fl = [f for _, f in merged]
+            # completion timestamps that are NEW this batch (multiset)
             new_finals: dict[int, int] = {}
             for t, f in new_events:
                 if f & final_bit:
@@ -1124,6 +1026,7 @@ def stream_sequence_detect(
             for chain in chains_of(us, fl):
                 if new_finals.get(chain[-1], 0) > 0:
                     out_rows.append((k, chain))
+            # evict events that can extend no future chain
             horizon = max(us) - span_us
             keep = [(t, f) for t, f in merged if t >= horizon]
             held[k] = ([t for t, _ in keep], [f for _, f in keep])
@@ -1148,7 +1051,7 @@ def stream_sequence_detect(
         F.pmod(F.xxhash64(F.col(key_col)), F.lit(state_shards)).cast("int"),
     )
     return sharded.groupBy("__shard").applyInPandasWithState(
-        update_shard,
+        update,
         outputStructType=out_schema,
         stateStructType=shard_state,
         outputMode="append",

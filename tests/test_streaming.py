@@ -86,27 +86,15 @@ def test_sessionize_matches_batch_session_window(events_stream, events_batch):
     assert len(streamed) > 0
 
 
-def test_stateful_user_counts(events_stream, events_batch):
-    streamed = run_available_now(stateful_user_counts(events_stream), "update")
+# 1 shard holds every user; 32 is above the fixture's 15 distinct
+# users, so most users have a group to themselves
+@pytest.mark.parametrize("shards", [1, 4, 32])
+def test_stateful_user_counts(events_stream, events_batch, shards):
+    streamed = run_available_now(
+        stateful_user_counts(events_stream, state_shards=shards), "update"
+    )
     # one availableNow pass may split into several micro-batches; the
     # LAST emitted row per user carries the final running totals
-    final = {}
-    for r in streamed:
-        final[r.user_id] = (r.n_events, round(r.total_value, 4))
-    batch = {
-        r.user_id: (r.n, round(r.total, 4))
-        for r in events_batch.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total"))
-        .collect()
-    }
-    assert final == batch
-
-
-def test_stateful_user_counts_sharded(events_stream, events_batch):
-    # the key-group variant must emit identical running totals
-    streamed = run_available_now(
-        stateful_user_counts(events_stream, state_shards=4), "update"
-    )
     final = {}
     for r in streamed:
         final[r.user_id] = (r.n_events, round(r.total_value, 4))
@@ -449,11 +437,12 @@ def test_curate_stream_matches_batch(tmp_path, spark):
     assert not any(d >= 100000 and (d - 100000) in want for d in got)
 
 
-@pytest.mark.parametrize("shards", [None, 4])
+@pytest.mark.parametrize("shards", [1, 4])
 def test_stream_sequence_detect_matches_batch(spark, tmp_path, shards):
     """Cross-micro-batch stateful funnel chains == the batch
-    `evaluate sequence_detect` under per-key in-order arrival (both the
-    per-key and the key-group-sharded state layouts)."""
+    `evaluate sequence_detect` under per-key in-order arrival, for one
+    shard holding every key and for keys spread over shards.  A NULL
+    user is one key, as in the batch operator's `by`."""
     import datetime as dt
     import random
     import time
@@ -467,7 +456,7 @@ def test_stream_sequence_detect_matches_batch(spark, tmp_path, shards):
     t0 = dt.datetime(2024, 1, 1)
     random.seed(7)
     rows = []
-    for uid in range(6):
+    for uid in [*range(6), None]:
         t = t0
         for _ in range(40):
             t += dt.timedelta(minutes=random.randint(3, 50))
@@ -486,15 +475,16 @@ def test_stream_sequence_detect_matches_batch(spark, tmp_path, shards):
             p = etype == "purchase" by user_id)
         """
     )
-    expected = sorted(tuple(r) for r in batch.collect())
+    expected = sorted((tuple(r) for r in batch.collect()), key=repr)
+    assert any(r[0] is None for r in expected)
 
     src = tmp_path / "src"
     src.mkdir()
-    pdf = df.orderBy("ts").toPandas()
-    n = len(pdf)
+    ordered = sorted(rows, key=lambda r: r[1])
+    n = len(ordered)
     for i in range(3):  # three time-ordered micro-batches
         spark.createDataFrame(
-            pdf.iloc[i * n // 3:(i + 1) * n // 3]
+            ordered[i * n // 3:(i + 1) * n // 3], df.schema
         ).repartition(1).write.parquet(str(src / f"part{i}"))
         time.sleep(1.1)  # distinct mod times → in-order processing
     stream = (
@@ -515,22 +505,23 @@ def test_stream_sequence_detect_matches_batch(spark, tmp_path, shards):
         span_window="2h",
         state_shards=shards,
     )
-    got = sorted(tuple(r) for r in run_available_now(out, "append"))
-    assert got == expected and len(got) > 0
+    got = sorted(
+        (tuple(r) for r in run_available_now(out, "append")), key=repr
+    )
+    assert got == expected
 
 
 def test_stateful_user_counts_sharded_null_keys_and_values(spark, tmp_path):
-    """The sharded path must match the unsharded one on null KEYS (a
-    group in Spark's groupBy, dropped by default pandas groupby) and
-    null VALUES (counted by len(pdf), dropped by pandas count) —
-    ADVICE r7."""
+    """Null KEYS are a group (as in Spark's groupBy; default pandas
+    groupby drops them) and null VALUES count as rows (as in count();
+    pandas count drops them) — ADVICE r7 — whatever the shard count."""
     rows = [(1, 10.0), (1, None), (None, 5.0), (2, None), (None, None),
             (2, 7.0)]
     batch = spark.createDataFrame(rows, "user_id long, value double")
     path = str(tmp_path / "null_events")
     batch.coalesce(1).write.parquet(path)
     results = {}
-    for shards in (None, 3):
+    for shards in (1, 3):
         stream = spark.readStream.schema(batch.schema).parquet(path)
         streamed = run_available_now(
             stateful_user_counts(stream, state_shards=shards), "update"
@@ -539,9 +530,95 @@ def test_stateful_user_counts_sharded_null_keys_and_values(spark, tmp_path):
         for r in streamed:
             final[r.user_id] = (r.n_events, r.total_value)
         results[shards] = final
-    assert results[3] == results[None]
+    assert results[3] == results[1]
     # and both match the batch answer: count() counts ROWS, sum skips
     # null values
-    assert results[None] == {
+    assert results[1] == {
         1: (2, 10.0), 2: (2, 7.0), None: (2, 5.0),
     }
+
+
+_ND = "spark.sql.streaming.noDataMicroBatches.enabled"
+_SP = "spark.sql.shuffle.partitions"
+
+
+def _rows_stream(spark, tmp_path):
+    d = tmp_path / "rows"
+    spark.range(3).coalesce(1).write.parquet(str(d))
+    return spark.readStream.schema("id long").parquet(str(d))
+
+
+def test_drain_holds_confs_only_while_starting(spark, tmp_path):
+    """The caller's session reads its own shuffle-partition and
+    no-data-batch values WHILE a drain runs, and after it; the drained
+    query itself ran with the runner's values."""
+    from pql_spark.streaming.pipeline import _run_available_now
+
+    seen = []
+
+    def probe(batch_df, _bid):
+        seen.append((spark.conf.get(_ND), spark.conf.get(_SP)))
+
+    import json
+
+    before = (spark.conf.get(_ND), spark.conf.get(_SP))
+    assert before[1] != "7"
+    writer = (
+        _rows_stream(spark, tmp_path)
+        .writeStream.foreachBatch(probe)
+        .option("checkpointLocation", str(tmp_path / "ck"))
+    )
+    _run_available_now(
+        writer, spark, 60, shuffle_partitions=7, no_data_batches=False
+    )
+    assert seen and set(seen) == {before}
+    assert (spark.conf.get(_ND), spark.conf.get(_SP)) == before
+    # the query took the runner's value at start(): the offsets log
+    # records the state-store partition count it ran with
+    meta = (tmp_path / "ck" / "offsets" / "0").read_text().splitlines()[1]
+    assert json.loads(meta)["conf"][_SP] == "7"
+
+
+def test_drain_restores_confs_when_start_raises(spark, events_stream):
+    from pyspark.errors import AnalysisException
+
+    before = (spark.conf.get(_ND), spark.conf.get(_SP))
+    sorted_stream = pql_stream(
+        spark, "events | sort by value", lambda name: events_stream
+    )
+    with pytest.raises(AnalysisException):
+        run_available_now(sorted_stream, "append")
+    assert (spark.conf.get(_ND), spark.conf.get(_SP)) == before
+
+
+def test_drain_past_its_timeout_raises(spark, tmp_path):
+    """A drain that outlives its timeout is stopped and raises instead
+    of handing back a partial sink."""
+    import time
+
+    from pql_spark.streaming.pipeline import _run_available_now
+
+    def slow(batch_df, _bid):
+        time.sleep(4)
+
+    writer = _rows_stream(spark, tmp_path).writeStream.foreachBatch(slow)
+    with pytest.raises(TimeoutError, match="did not drain within 1 s"):
+        _run_available_now(writer, spark, 1)
+    assert not spark.streams.active
+
+
+def test_failed_drain_leaves_no_sink_view(spark, tmp_path):
+    """A drain whose query fails raises, and the memory sink's temp
+    view is dropped with it."""
+    from pyspark.errors import StreamingQueryException
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    failing = _rows_stream(spark, tmp_path).selectExpr(
+        "IF(id >= 0, CAST(raise_error('boom') AS long), id) AS x"
+    )
+    with pytest.raises(StreamingQueryException, match="boom"):
+        run_available_now(failing, "append")
+    assert temp_views() == before
