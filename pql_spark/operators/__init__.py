@@ -21,7 +21,6 @@ from .dedup import (
     dedup_exact,
     dedup_incremental,
     embedding_dup_pairs,
-    embedding_dup_pairs_broadcast,
     kmv_distinct,
     minhash_dup_pairs,
     near_dup_incremental,
@@ -100,7 +99,6 @@ __all__ = [
     "deterministic_shuffle",
     "doc_fingerprint",
     "embedding_dup_pairs",
-    "embedding_dup_pairs_broadcast",
     "hash_sample",
     "ivf_assign",
     "ivf_topk",

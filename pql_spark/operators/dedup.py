@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ._util import rebalance, sql_over
+from .similarity import _cosine_tiles
 from .text import _sized_shingle_rows, shingle_rows, tokens
 
 # ngram_jaccard_pairs(prefix_filter="auto") turns the PPJoin prefix
@@ -910,6 +911,48 @@ def simhash_dedup(
     return keep.select(id_col).join(df, id_col, "inner")
 
 
+def _cosine_pairs(a_ids, a_vecs, threshold: float, b_ids=None, b_vecs=None):
+    """``(id_a, id_b, cosine)`` for every row pair at cosine ≥
+    ``threshold``, normalized to ``id_a < id_b``; a zero vector pairs
+    with nothing (see :func:`_cosine_tiles`).  Without a B side the A
+    rows pair among themselves (strict upper triangle: no self-pairs,
+    no double count); with one, the two sides hold disjoint ids."""
+    import numpy as np
+    import pandas as pd
+
+    same = b_vecs is None
+    if same:
+        b_ids = a_ids
+    outs = [
+        pd.DataFrame(
+            {
+                "id_a": np.empty(0, np.int64),
+                "id_b": np.empty(0, np.int64),
+                "cosine": np.empty(0, np.float64),
+            }
+        )
+    ]
+    tiles = (
+        _cosine_tiles(a_vecs, b_vecs) if len(a_ids) and len(b_ids) else ()
+    )
+    for s, sims in tiles:
+        a = a_ids[s : s + len(sims)]
+        hit = sims >= threshold
+        if same:
+            hit &= a[:, None] < b_ids[None, :]
+        ii, jj = np.nonzero(hit)
+        outs.append(
+            pd.DataFrame(
+                {
+                    "id_a": np.minimum(a[ii], b_ids[jj]),
+                    "id_b": np.maximum(a[ii], b_ids[jj]),
+                    "cosine": sims[ii, jj],
+                }
+            )
+        )
+    return pd.concat(outs, ignore_index=True)
+
+
 def embedding_dup_pairs(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -928,17 +971,16 @@ def embedding_dup_pairs(
     Arrow kernel runs BLAS matmuls between the two blocks' matrices
     (upper triangle on the diagonal groups).  Nothing is collected to
     the driver; the kernel tiles the Gram product over A-side row
-    chunks (r15), so per-task similarity memory is a fixed ≤ ~128 MB
-    regardless of block size — only the (n/n_blocks)-row block
-    matrices themselves scale with data.  The replication cost is
-    (n_blocks+1)/2 × the input — pick n_blocks ≈ √(cluster cores) so
-    every core gets a tile.  The
+    chunks (:func:`_cosine_tiles`), so per-task similarity memory is a
+    fixed ≤ ~128 MB regardless of block size — only the
+    (n/n_blocks)-row block matrices themselves scale with data.  The
+    replication cost is (n_blocks+1)/2 × the input — pick n_blocks ≈
+    √(cluster cores) so every core gets a tile.  The
     total work is inherently O(n²) because the result is exact; for
     corpus-scale near-dup where approximate recall is acceptable, use
     :func:`pql_spark.operators.similarity.lsh_bucket_topk`-style
     hyperplane bucketing instead (candidates only within buckets).
     """
-    import numpy as np
     import pandas as pd
 
     spark = df.sparkSession
@@ -960,112 +1002,22 @@ def embedding_dup_pairs(
 
     def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         ba, bb = key
-        a_pdf = pdf[pdf["__side"] == 0]
-        a_ids = a_pdf[id_col].to_numpy(dtype=np.int64)
-        if not len(a_ids):
-            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-        a = np.stack([np.asarray(v, dtype=np.float64) for v in a_pdf[vec_col]])
-        a_n = np.sqrt((a * a).sum(axis=1))
+        a = pdf[pdf["__side"] == 0]
+        a_ids = a[id_col].to_numpy(dtype="int64")
         if ba == bb:
-            b_ids, b, b_n = a_ids, a, a_n
-        else:
-            b_pdf = pdf[pdf["__side"] == 1]
-            b_ids = b_pdf[id_col].to_numpy(dtype=np.int64)
-            if not len(b_ids):
-                return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-            b = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in b_pdf[vec_col]]
-            )
-            b_n = np.sqrt((b * b).sum(axis=1))
-        # r15: tile the Gram product over A-side row chunks so kernel
-        # memory is bounded by the TILE (≤ ~128 MB of float64), not by
-        # (block_rows)² — at 200 k rows / 8 blocks a full 25 k × 25 k
-        # tile is 5 GB of similarities and 32 concurrent workers
-        # OOM-crashed (r15 sf10 sweep).  BLAS throughput is unchanged
-        # (each chunk is still one matmul); only peak memory drops.
-        chunk = max(1, 16_000_000 // max(len(b_ids), 1))
-        outs = []
-        for s in range(0, len(a_ids), chunk):
-            e = s + chunk
-            sims = (a[s:e] @ b.T) / np.outer(a_n[s:e], b_n)
-            hit = sims >= threshold
-            if ba == bb:
-                # strict upper triangle: no self-pairs, no double count
-                hit &= a_ids[s:e, None] < b_ids[None, :]
-            # off-diagonal blocks are disjoint id sets — every
-            # unordered row pair appears in exactly one group;
-            # normalize to (lo, hi)
-            ii, jj = np.nonzero(hit)
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "id_a": np.minimum(a_ids[s + ii], b_ids[jj]),
-                        "id_b": np.maximum(a_ids[s + ii], b_ids[jj]),
-                        "cosine": sims[ii, jj],
-                    }
-                )
-            )
-        return pd.concat(outs, ignore_index=True)
+            return _cosine_pairs(a_ids, a[vec_col], threshold)
+        # off-diagonal blocks are disjoint id sets — every unordered
+        # row pair appears in exactly one group
+        b = pdf[pdf["__side"] == 1]
+        return _cosine_pairs(
+            a_ids, a[vec_col], threshold,
+            b[id_col].to_numpy(dtype="int64"), b[vec_col],
+        )
 
     out = work.groupBy("ba", "bb").applyInPandas(
         kernel, "id_a long, id_b long, cosine double"
     )
     return out.orderBy("id_a", "id_b") if sort_pairs else out
-
-
-def embedding_dup_pairs_broadcast(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.95,
-) -> DataFrame:
-    """Embedding near-duplicate pairs via driver-collect + broadcast.
-
-    One side is collected to an (n, d) float64 matrix and broadcast to
-    executors — the same "one side fits in memory" contract as a Spark
-    broadcast join — and the other side streams through ``mapInPandas``
-    in Arrow batches, each batch doing a single BLAS matmul against the
-    broadcast side.  Zero shuffles, but the collected side must fit on
-    the driver: use only when that is explicitly known (e.g. a
-    reference/blocklist set).  :func:`embedding_dup_pairs` is the
-    distributed default.
-    """
-    import numpy as np
-    import pandas as pd
-
-    side = df.select(id_col, vec_col).collect()
-    ids = np.array([r[0] for r in side], dtype=np.int64)
-    mat = np.array([[float(x) for x in r[1]] for r in side], dtype=np.float64)
-    norms = np.sqrt((mat * mat).sum(axis=1))
-    bc = df.sparkSession.sparkContext.broadcast((ids, mat, norms))
-
-    def kernel(batches):
-        b_ids, b_mat, b_norms = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            a = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            a_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            a_norms = np.sqrt((a * a).sum(axis=1))
-            sims = (a @ b_mat.T) / np.outer(a_norms, b_norms)
-            ii, jj = np.nonzero(
-                (sims >= threshold) & (a_ids[:, None] < b_ids[None, :])
-            )
-            yield pd.DataFrame(
-                {
-                    "id_a": a_ids[ii],
-                    "id_b": b_ids[jj],
-                    "cosine": sims[ii, jj],
-                }
-            )
-
-    return (
-        rebalance(df.select(id_col, vec_col))
-        .mapInPandas(kernel, "id_a long, id_b long, cosine double")
-        .orderBy("id_a", "id_b")
-    )
 
 
 def semantic_dedup_pairs(
@@ -1085,12 +1037,14 @@ def semantic_dedup_pairs(
 
     Scale shape: centroid training is a bounded driver-side sample
     (deterministic spherical k-means); assignment is a narrow Catalyst
-    pass; pair generation is one BLAS matmul per cell in
-    ``applyInPandas`` — total work drops from O(n²) to
-    Σ_cells O(|cell|²), the SemDeDup trade: cross-cell duplicates are
-    missed BY DESIGN (semantic dups land in the same cell).  Raise
-    ``n_clusters`` so the largest cell's tile fits executor memory;
-    emitted pairs are exact cosines, so precision vs brute force is 1.
+    pass; pair generation is one tiled Gram product per cell
+    (:func:`_cosine_tiles`) in ``applyInPandas`` — total work drops
+    from O(n²) to Σ_cells O(|cell|²), the SemDeDup trade: cross-cell
+    duplicates are missed BY DESIGN (semantic dups land in the same
+    cell).  Raise ``n_clusters`` so the largest cell's vectors fit
+    executor memory; emitted pairs are exact cosines, so precision vs
+    brute force is 1.  A zero vector gets a NULL cell and pairs with
+    nothing.
 
     ``passes`` (r12) is the cross-cell recall knob: each extra pass
     re-trains the coarse quantizer with a rotated deterministic
@@ -1105,25 +1059,13 @@ def semantic_dedup_pairs(
     ``tests/test_semantic_passes.py``: passes=1 recall 55/60, passes=2
     recall 1.0, zero false pairs, at 2x the single-pass cost envelope.
     """
-    import numpy as np
     import pandas as pd
 
     from .similarity import ivf_assign, train_centroids
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
-        if len(ids) < 2:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-        mat = np.stack(
-            [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-        )
-        norms = np.sqrt((mat * mat).sum(axis=1))
-        sims = (mat @ mat.T) / np.outer(norms, norms)
-        hit = (sims >= threshold) & (ids[:, None] < ids[None, :])
-        ii, jj = np.nonzero(hit)
-        return pd.DataFrame(
-            {"id_a": ids[ii], "id_b": ids[jj], "cosine": sims[ii, jj]}
-        )
+        ids = pdf[id_col].to_numpy(dtype="int64")
+        return _cosine_pairs(ids, pdf[vec_col], threshold)
 
     narrow = df.select(
         F.col(id_col).cast("long").alias(id_col), F.col(vec_col)

@@ -12,6 +12,11 @@ Two tiers, same results contract:
   partition/bucket key), probe only buckets within ``probe_hamming`` of
   the query's bucket — the scan shrinks by ~2^planes/Σ(probed) while
   recall stays high for near-neighbors.
+
+One cosine per execution form, shared with the embedding pair finders
+in :mod:`pql_spark.operators.dedup`: :func:`_cosine_sql` in Catalyst,
+:func:`_cosine_tiles` in the Arrow kernels.  Both state the zero-vector
+rule: a zero-norm side has a NULL cosine, never an error.
 """
 
 from __future__ import annotations
@@ -22,25 +27,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(_dot(a, a))
-
-
-# SQL-text twins of the Column builders above.  Building a dot product
-# through the Column API costs ~40 ms of py4j round trips per call (and
-# ivf_assign pays it once per centroid); one ``F.expr`` parse of the
-# identical tree is a single round trip (guide §5 — the driver should
-# do almost no work).  ``_dlit``/``_alit`` emit exact-roundtrip double
-# literals (shortest-repr decimal + ``D`` suffix parses back to the
-# same IEEE double).
+# Cosine in SQL text: one ``F.expr`` parse per expression is a single
+# py4j round trip, where the same tree built through the Column API
+# costs ~40 ms per dot product (and ivf_assign builds one per centroid;
+# guide §5 — the driver should do almost no work).  ``_dlit``/``_alit``
+# emit exact-roundtrip double literals (shortest-repr decimal + ``D``
+# suffix parses back to the same IEEE double).
 
 
 def _dlit(x: float) -> str:
@@ -63,6 +55,80 @@ def _norm_sql(a: str) -> str:
     return f"sqrt({_dot_sql(a, a)})"
 
 
+def _cosine_sql(v: str, other: str, other_norm: float) -> str:
+    """The SQL cosine of the vector operators: column ``v`` against the
+    literal vector ``other`` whose norm is ``other_norm``.
+
+    Zero-vector rule (shared with :func:`_cosine_tiles`): a zero norm on
+    either side gives NULL, never an error — ``try_divide``, because a
+    plain ``/`` raises DIVIDE_BY_ZERO under ANSI.  NULL fails every
+    threshold and sorts after every cosine in ``DESC`` order.
+    """
+    return (
+        f"try_divide({_dot_sql(v, other)}, "
+        f"{_norm_sql(v)} * {_dlit(other_norm)})"
+    )
+
+
+def _cosine_tiles(a_vecs, b_vecs=None):
+    """Yield ``(row offset, cosine tile)`` over A-side row chunks of the
+    cosine matrix between two sides' ``array<double>`` cells; with
+    ``b_vecs=None`` the A side is paired with itself.  The numpy cosine
+    of every Arrow kernel of the vector operators.
+
+    Each tile is one BLAS matmul of at most ~16 M float64 (≤ ~128 MB),
+    so kernel memory is bounded by the tile, not by the side sizes — a
+    full 25 k × 25 k matrix is 5 GB, and 32 concurrent workers
+    OOM-crashed on it (r15 sf10 sweep).
+
+    Zero-vector rule (shared with :func:`_cosine_sql`): a zero norm on
+    either side gives NaN, which Arrow ships as NULL.  NaN fails every
+    ``>=`` threshold and sorts after every cosine in :func:`_topk_frame`.
+    """
+    import numpy as np
+
+    def stack(vecs):
+        m = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
+        return m, np.sqrt((m * m).sum(axis=1))
+
+    a, a_n = stack(a_vecs)
+    b, b_n = (a, a_n) if b_vecs is None else stack(b_vecs)
+    chunk = max(1, 16_000_000 // len(b))
+    for s in range(0, len(a), chunk):
+        e = s + chunk
+        with np.errstate(divide="ignore", invalid="ignore"):
+            tile = (a[s:e] @ b.T) / np.outer(a_n[s:e], b_n)
+        yield s, tile
+
+
+def _topk_frame(qids, cids, tiles, k: int, is_self) -> "pd.DataFrame":
+    """Per query row of ``tiles``: its ``k`` best candidates, cosine
+    desc (NaN last), neighbor id asc, ranked from 1.  ``is_self(i,
+    order)`` masks the query's own row among the candidate indices
+    ``order``."""
+    import numpy as np
+    import pandas as pd
+
+    out_id, out_nb, out_cos, out_rank = [], [], [], []
+    for s, sims in tiles:
+        for r, row in enumerate(sims):
+            # lexsort's last key is primary; -NaN sorts last
+            order = np.lexsort((cids, -row))
+            order = order[~is_self(s + r, order)][:k]
+            out_id.extend([qids[s + r]] * len(order))
+            out_nb.extend(cids[order])
+            out_cos.extend(row[order])
+            out_rank.extend(range(1, len(order) + 1))
+    return pd.DataFrame(
+        {
+            "id": np.asarray(out_id, dtype=np.int64),
+            "neighbor": np.asarray(out_nb, dtype=np.int64),
+            "cosine": np.asarray(out_cos, dtype=np.float64),
+            "rank": np.asarray(out_rank, dtype=np.int32),
+        }
+    )
+
+
 def cosine_topk(
     df: DataFrame,
     query_vec: list[float],
@@ -70,13 +136,10 @@ def cosine_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Exact top-k by cosine similarity to ``query_vec``."""
+    """Exact top-k by cosine similarity to ``query_vec``.  A zero vector
+    (row or query) has a NULL cosine and ranks last."""
     qnorm = math.sqrt(sum(x * x for x in query_vec))
-    v = f"`{vec_col}`"
-    cos = F.expr(
-        f"{_dot_sql(v, _alit(query_vec))} / "
-        f"({_norm_sql(v)} * {_dlit(qnorm)})"
-    )
+    cos = F.expr(_cosine_sql(f"`{vec_col}`", _alit(query_vec), qnorm))
     return (
         df.select(F.col(id_col), cos.alias("cosine"))
         .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
@@ -90,82 +153,25 @@ def pairwise_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     key_col: str | None = None,
-    impl: str = "pandas",
 ) -> DataFrame:
     """For each vector, its k nearest neighbors by cosine (brute-force
     within ``key_col`` groups when given — the IVF pattern: partition by
     a coarse key, search within the cell).
 
-    ``impl="pandas"`` (default): one Arrow batch per group, the whole
-    cell's similarity matrix is a single BLAS matmul, top-k via argsort
-    — each cell is one task, cells run in parallel across the cluster.
-    ``impl="catalyst"``: pure-expression pairwise join + window rank
-    (no Python workers), kept as the reference implementation.
-    Ordering contract (both impls): cosine desc, neighbor id asc.
-    The pandas kernel self-excludes by ROW POSITION (a duplicate id
-    stays its twin's cosine-1.0 neighbor); :func:`pairwise_topk_skew`
-    reproduces that exactly via a per-(group, id) row ordinal.  The
-    ``impl="catalyst"`` reference excludes by id VALUE, so only
-    unique ids make catalyst equivalent to the other two.
+    One Arrow batch per group: the cell's similarity matrix is a few
+    tiled BLAS matmuls (:func:`_cosine_tiles`), top-k via lexsort — each
+    cell is one task, cells run in parallel across the cluster.
+    Ordering contract: cosine desc (a zero vector's NULL cosines last),
+    neighbor id asc.  Self-exclusion is by ROW POSITION, so a duplicate
+    id stays its twin's cosine-1.0 neighbor; :func:`pairwise_topk_skew`
+    reproduces that exactly via a per-(group, id) row ordinal.
     """
-    if impl == "catalyst":
-        from pyspark.sql import Window
-
-        v = df.select(
-            F.col(id_col),
-            *([F.col(key_col)] if key_col else []),
-            F.col(vec_col).alias("v"),
-            _norm(F.col(vec_col)).alias("nrm"),
-        )
-        a, b = v.alias("a"), v.alias("b")
-        cond = F.col(f"a.{id_col}") != F.col(f"b.{id_col}")
-        if key_col:
-            cond = cond & (F.col(f"a.{key_col}") == F.col(f"b.{key_col}"))
-        cos = _dot(F.col("a.v"), F.col("b.v")) / (
-            F.col("a.nrm") * F.col("b.nrm")
-        )
-        scored = a.join(b, cond).select(
-            F.col(f"a.{id_col}").alias("id"),
-            F.col(f"b.{id_col}").alias("neighbor"),
-            cos.alias("cosine"),
-        )
-        w = Window.partitionBy("id").orderBy(
-            F.col("cosine").desc(), F.col("neighbor").asc()
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .orderBy("id", "rank")
-        )
-    if impl != "pandas":
-        raise ValueError(f"unknown impl {impl!r}")
-
-    import numpy as np
-    import pandas as pd
 
     def kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
         ids = pdf[id_col].to_numpy()
-        mat = np.stack(
-            [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-        )
-        norms = np.sqrt((mat * mat).sum(axis=1))
-        sims = (mat @ mat.T) / np.outer(norms, norms)
-        out_id, out_nb, out_cos, out_rank = [], [], [], []
-        for i in range(len(ids)):
-            # cosine desc, neighbor id asc; lexsort's last key is primary
-            order = np.lexsort((ids, -sims[i]))
-            order = order[order != i][:k]
-            out_id.extend([ids[i]] * len(order))
-            out_nb.extend(ids[order])
-            out_cos.extend(sims[i, order])
-            out_rank.extend(range(1, len(order) + 1))
-        return pd.DataFrame(
-            {
-                "id": out_id,
-                "neighbor": out_nb,
-                "cosine": out_cos,
-                "rank": out_rank,
-            }
+        return _topk_frame(
+            ids, ids, _cosine_tiles(pdf[vec_col]), k,
+            lambda i, order: order == i,
         )
 
     grouping = [key_col] if key_col else [F.lit(0).alias("__cell")]
@@ -219,9 +225,6 @@ def pairwise_topk_skew(
     Identical (id, vector) twins are interchangeable, so the arbitrary
     ordinal order between them cannot change results.
     """
-    import numpy as np
-    import pandas as pd
-
     from pyspark.sql import Window
 
     keys = [key_col] if key_col else []
@@ -249,47 +252,21 @@ def pairwise_topk_skew(
     def kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
         cand = pdf[~pdf["__query"]]
         qry = pdf[pdf["__query"]]
-        if cand.empty or qry.empty:
-            return pd.DataFrame(
-                {"id": [], "neighbor": [], "cosine": [], "rank": []}
-            ).astype(
-                {"id": "int64", "neighbor": "int64",
-                 "cosine": "float64", "rank": "int32"}
-            )
         cids = cand[id_col].to_numpy()
         c_ord = cand["__ord"].to_numpy()
-        cmat = np.stack(
-            [np.asarray(v, dtype=np.float64) for v in cand[vec_col]]
-        )
-        cnrm = np.sqrt((cmat * cmat).sum(axis=1))
         qids = qry[id_col].to_numpy()
         q_ord = qry["__ord"].to_numpy()
-        qmat = np.stack(
-            [np.asarray(v, dtype=np.float64) for v in qry[vec_col]]
+        tiles = (
+            () if cand.empty or qry.empty
+            else _cosine_tiles(qry[vec_col], cand[vec_col])
         )
-        qnrm = np.sqrt((qmat * qmat).sum(axis=1))
-        sims = (qmat @ cmat.T) / np.outer(qnrm, cnrm)
-        out_id, out_nb, out_cos, out_rank = [], [], [], []
-        for i, qid in enumerate(qids):
-            order = np.lexsort((cids, -sims[i]))
-            # drop only the query's OWN row (same id AND ordinal) —
-            # duplicate-id twins remain candidates, as in the
-            # single-task kernel's positional exclusion
-            keep = ~(
-                (cids[order] == qid) & (c_ord[order] == q_ord[i])
-            )
-            order = order[keep][:k]
-            out_id.extend([qid] * len(order))
-            out_nb.extend(cids[order])
-            out_cos.extend(sims[i, order])
-            out_rank.extend(range(1, len(order) + 1))
-        return pd.DataFrame(
-            {
-                "id": out_id,
-                "neighbor": out_nb,
-                "cosine": out_cos,
-                "rank": out_rank,
-            }
+        # drop only the query's OWN row (same id AND ordinal) —
+        # duplicate-id twins remain candidates, as in the single-task
+        # kernel's positional exclusion
+        return _topk_frame(
+            qids, cids, tiles, k,
+            lambda i, order: (cids[order] == qids[i])
+            & (c_ord[order] == q_ord[i]),
         )
 
     grouping = keys + ["__salt"] if keys else ["__salt"]
@@ -362,25 +339,34 @@ def ivf_assign(
     cell_col: str = "cell",
 ) -> DataFrame:
     """Append the nearest-centroid cell id (argmax cosine against the
-    trained centroids) — narrow, no shuffle, pure Catalyst.
+    trained centroids) — narrow, no shuffle, pure Catalyst.  A zero
+    vector has a NULL cosine to every centroid and gets a NULL cell.
 
     At 100 TB the cell id is the IVF partition key: write the corpus
     bucketed/partitioned by it, and a query's nprobe cells become
     partition pruning on the scan (see :func:`ivf_topk`).
     """
     v = f"`{vec_col}`"
-    nrm = _norm_sql(v)
     entries = ", ".join(
         "named_struct('s', "
-        f"{_dot_sql(v, _alit(c))} / "
-        f"({nrm} * {_dlit(math.sqrt(sum(x * x for x in c)) or 1.0)}), "
+        f"{_cosine_sql(v, _alit(c), math.sqrt(sum(x * x for x in c)))}, "
         f"'c', {i})"
         for i, c in enumerate(centroids)
     )
     # ONE SQL parse for the whole scored array — the per-centroid
-    # Column-API build cost ~0.9 s of py4j round trips per call (r15)
+    # Column-API build cost ~0.9 s of py4j round trips per call (r15).
+    # array_max ranks an all-NULL array by cell id, so a zero row is
+    # nulled by adding try_divide(0, norm): 0 for a nonzero row, NULL
+    # for a zero one.  Arithmetic, not IF/filter: Catalyst evaluates
+    # the row norm once for all centroids only while no conditional or
+    # higher-order function wraps the array (a filter() form measured
+    # 1.5x slower at 32 k rows on 4 cores).
     return df.withColumn(
-        cell_col, F.expr(f"array_max(array({entries})).c")
+        cell_col,
+        F.expr(
+            f"array_max(array({entries})).c"
+            f" + CAST(try_divide(0.0D, {_norm_sql(v)}) AS INT)"
+        ),
     )
 
 
@@ -433,7 +419,6 @@ def _q8(x: float, scale: float) -> int:
 def quantize_embeddings(
     df: DataFrame,
     vec_col: str = "embedding",
-    impl: str = "pandas",
 ) -> DataFrame:
     """Symmetric per-vector int8 scalar quantization: adds ``qvec``
     (array<tinyint>, values in [-127, 127]) and ``qscale`` (double,
@@ -443,30 +428,12 @@ def quantize_embeddings(
     once as a compact column, the corpus scan for similarity search
     reads 1/8th the bytes of float64 (1/4 of float32) and downstream
     dot products run on integers.  Rounding is ``floor(x/scale + 0.5)``
-    — ties resolve identically in numpy, Catalyst, and ANSI-SQL
-    oracles, unlike round() (numpy half-even vs SQL half-away).
-
-    ``impl="pandas"`` (default): Arrow-batched numpy kernel, one
-    vectorized pass per batch.  ``impl="catalyst"``: pure-expression
-    twin kept as the bit-equality reference — note its per-element
-    lambda re-evaluates the ``max|v|`` reduction (Catalyst doesn't CSE
-    into interpreted HOF lambdas), making it O(d²) per row; don't use
-    it in the hot path.
+    (:func:`_q8`) — ties resolve identically in numpy, Python and
+    ANSI-SQL oracles, unlike round() (numpy half-even vs SQL
+    half-away).  A zero vector gets ``qscale`` 1.0 and all-zero
+    ``qvec``.  One Arrow-batched numpy kernel, one vectorized pass per
+    batch.
     """
-    if impl == "catalyst":
-        v = F.col(vec_col)
-        amax = F.array_max(F.transform(v, lambda x: F.abs(x.cast("double"))))
-        scale = F.when(amax > 0, amax / F.lit(127.0)).otherwise(F.lit(1.0))
-        qvec = F.transform(
-            v,
-            lambda x: F.floor(x.cast("double") / scale + F.lit(0.5)).cast(
-                "tinyint"
-            ),
-        )
-        return df.withColumn("qvec", qvec).withColumn("qscale", scale)
-    if impl != "pandas":
-        raise ValueError(f"unknown impl {impl!r}")
-
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import (
@@ -507,7 +474,6 @@ def quantized_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     rerank: int = 4,
-    impl: str = "pandas",
 ) -> DataFrame:
     """Top-k by cosine via int8-quantized prefilter + exact re-rank.
 
@@ -528,7 +494,7 @@ def quantized_topk(
     skip stage-1 quantization entirely.
     """
     if "qvec" not in df.columns:
-        df = quantize_embeddings(df, vec_col, impl=impl)
+        df = quantize_embeddings(df, vec_col)
     m = max((abs(x) for x in query_vec), default=0.0)
     qs = m / 127.0 if m > 0 else 1.0
     qq = [_q8(x, qs) for x in query_vec]
@@ -546,8 +512,8 @@ def quantized_topk(
         "x -> CAST(x AS BIGINT) * CAST(x AS BIGINT)), "
         "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
     )
-    # ANSI mode: guard the zero-vector division (NULL sorts last desc);
-    # one SQL parse — see the _dot_sql driver-cost note
+    # a zero vector's proxy is NULL, as its cosine (see _cosine_sql);
+    # one SQL parse — see the driver-cost note above _dlit
     qscore = F.expr(
         f"CASE WHEN {self_int} > 0 THEN "
         f"CAST({dot_int} AS DOUBLE) / sqrt(CAST({self_int} AS DOUBLE)) "
@@ -582,29 +548,18 @@ def hyperplanes(dim: int, planes: int, seed: int = 42) -> list[list[float]]:
     return out
 
 
-def lsh_bucket(vec: Column | str, planes: list[list[float]]) -> Column:
-    """Sign-bit bucket id (long) for a vector against fixed hyperplanes.
-
-    ``vec`` may be a column NAME (preferred — the expression is then one
-    SQL parse instead of ~planes × dot-product Column-API builds, ~0.9 s
-    of py4j round trips per call measured r15) or any Column (legacy
-    path, same tree)."""
-    if isinstance(vec, str):
-        v = f"`{vec}`"
-        terms = " + ".join(
-            f"CASE WHEN {_dot_sql(v, _alit(p))} >= 0 "
-            f"THEN CAST({1 << j} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
-            for j, p in enumerate(planes)
-        )
-        return F.expr(f"CAST(0 AS BIGINT) + {terms}")
-    bucket = F.lit(0).cast("long")
-    for j, plane in enumerate(planes):
-        p = F.lit(plane).cast("array<double>")
-        bit = F.when(_dot(vec, p) >= 0, F.lit(1 << j).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        bucket = bucket + bit
-    return bucket
+def lsh_bucket(vec: str, planes: list[list[float]]) -> Column:
+    """Sign-bit bucket id (long) for the vector column named ``vec``
+    against fixed hyperplanes — one SQL parse (a Column-API build of
+    the planes × dot products cost ~0.9 s of py4j round trips per call,
+    measured r15)."""
+    v = f"`{vec}`"
+    terms = " + ".join(
+        f"CASE WHEN {_dot_sql(v, _alit(p))} >= 0 "
+        f"THEN CAST({1 << j} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
+        for j, p in enumerate(planes)
+    )
+    return F.expr(f"CAST(0 AS BIGINT) + {terms}")
 
 
 def lsh_bucket_topk(

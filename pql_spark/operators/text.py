@@ -28,33 +28,33 @@ STOPWORDS: dict[str, tuple[str, ...]] = {
 }
 
 
-def _norm(text: Column) -> Column:
+def _normalize(text: Column) -> Column:
     """Lowercase and collapse whitespace — the canonical text form."""
     return F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
 
 
 # Java-regex ``\s`` is ASCII-only (``[ \t\n\x0B\f\r]``); Python's ``\s``
 # is Unicode-aware (also matches U+00A0, U+2028, U+1680, …).  Every
-# Python twin of :func:`_norm` must use THIS class or its tokenization
+# Python twin of :func:`_normalize` must use THIS class or its tokenization
 # silently diverges from the Catalyst/SQL paths on Unicode whitespace.
 _WS_JAVA = re.compile(r"[ \t\n\x0b\f\r]+")
 
 
 def py_norm(text: str | None) -> str:
-    """Python twin of :func:`_norm`, byte-identical to the Catalyst
+    """Python twin of :func:`_normalize`, byte-identical to the Catalyst
     expression: ASCII-only whitespace class (Java ``\\s``) and a
     space-only strip (Spark ``trim`` removes U+0020 only)."""
     return _WS_JAVA.sub(" ", (text or "").lower()).strip(" ")
 
 
 def py_tokens(text: str | None) -> list[str]:
-    """Python twin of :func:`tokens` (``split(_norm(t), " ")``)."""
+    """Python twin of :func:`tokens` (``split(_normalize(t), " ")``)."""
     return py_norm(text).split(" ")
 
 
 def tokens(text: Column) -> Column:
     """Whitespace word tokens of normalized text (array<string>)."""
-    return F.split(_norm(text), " ")
+    return F.split(_normalize(text), " ")
 
 
 def _slit(s: str) -> str:
@@ -62,14 +62,14 @@ def _slit(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def _norm_sql(t: str) -> str:
-    """SQL twin of :func:`_norm` — identical Catalyst tree."""
+def _normalize_sql(t: str) -> str:
+    """SQL twin of :func:`_normalize` — identical Catalyst tree."""
     return f"trim(regexp_replace(lower({t}), '\\\\s+', ' '))"
 
 
 def _tokens_sql(t: str) -> str:
     """SQL twin of :func:`tokens`."""
-    return f"split({_norm_sql(t)}, ' ')"
+    return f"split({_normalize_sql(t)}, ' ')"
 
 
 def word_shingles(text: Column, k: int = 5) -> Column:
@@ -332,7 +332,7 @@ def repetition_stats(
     tk = rebalance(
         df.select(
             *base,
-            F.length(_norm(text)).alias("__nc"),
+            F.length(_normalize(text)).alias("__nc"),
             F.split(text, "\n").alias("__lines"),
             tokens(text).alias("__toks"),
         )
@@ -524,7 +524,7 @@ def _fingerprint_exprs(text_col: str) -> dict[str, str]:
     text = f"`{text_col}`"
     toks = _tokens_sql(text)
     return {
-        "fingerprint": f"md5({_norm_sql(text)})",
+        "fingerprint": f"md5({_normalize_sql(text)})",
         "head_key": f"md5(concat_ws(' ', slice({toks}, 1, 8)))",
     }
 

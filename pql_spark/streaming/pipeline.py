@@ -24,8 +24,8 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from pql_spark.operators._util import sql_with_views
 
-# (schema, stream_dir) per parquet path — see stream_parquet_table
-_STREAM_SRC_CACHE: dict[tuple, tuple] = {}
+# batch-read schema per parquet path — see stream_parquet_table
+_STREAM_SRC_CACHE: dict[tuple, T.StructType] = {}
 
 
 def stream_parquet_table(
@@ -50,32 +50,26 @@ def stream_parquet_table(
     if _nanos_ts_columns(path):  # see sources.catalog._read_parquet
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     _force_utc_ltz(spark)  # naive parquet ts → TIMESTAMP, not NTZ
-    # schema + symlink dir are cached per (path, size, mtime): a
-    # benchmark/test session builds the same source many times and a
-    # schema footer read + mkdtemp costs ~0.1-0.2 s per call.  The stat
-    # in the key re-reads a file REPLACED at the same path (ADVICE r8);
+    # the schema is cached per (path, size, mtime): a benchmark/test
+    # session builds the same source many times and a schema footer
+    # read costs ~0.1 s per call.  The stat in the key re-reads a file
+    # REPLACED at the same path (ADVICE r8);
     # sources.catalog.clear_source_caches() drops everything.
     key = snapshot_key(path)
-    cached = _STREAM_SRC_CACHE.get(key)
-    if cached is None:
-        schema = spark.read.parquet(str(path)).schema
-        stream_dir = path
-        if path.is_file():
-            # the streaming file source requires a directory; expose a
-            # single-file table through a symlink dir (zero copy)
-            import tempfile
-
-            stream_dir = Path(
-                tempfile.mkdtemp(prefix=f"pql_stream_{name}_")
-            )
-            (stream_dir / path.name).symlink_to(path)
-        cached = (schema, stream_dir)
-        _STREAM_SRC_CACHE[key] = cached
-    schema, stream_dir = cached
+    schema = _STREAM_SRC_CACHE.get(key)
+    if schema is None:
+        schema = _STREAM_SRC_CACHE[key] = spark.read.parquet(str(path)).schema
+    src = path
+    if path.is_file():
+        # the streaming file source rejects a bare file path ("Option
+        # 'basePath' must be a directory"); a brace glob of the one
+        # name matches exactly that file (``name.parquet*`` would also
+        # match a ``name.parquet.bak`` beside it)
+        src = path.parent / ("{" + path.name + "}")
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(str(stream_dir))
+    df = reader.parquet(str(src))
     for c in _nanos_ts_columns(path):
         # integer `div` — float division would round 1e18-scale nanos
         df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))

@@ -14,14 +14,19 @@ from pql_spark.operators import (
     dedup_exact,
     doc_fingerprint,
     embedding_dup_pairs,
+    ivf_assign,
+    ivf_topk,
     language_id,
     lsh_bucket_topk,
     minhash_dup_pairs,
     minhash_signature,
     ngram_jaccard_pairs,
     pairwise_topk,
+    pairwise_topk_skew,
     quality_score,
+    quantized_topk,
     repetition_stats,
+    semantic_dedup_pairs,
     simhash,
     simhash_dedup,
     token_stats,
@@ -323,18 +328,28 @@ def test_quantize_embeddings_roundtrip(vecs):
             assert abs(q * r.qscale - x) <= r.qscale / 2 + 1e-12
 
 
-def test_quantize_impls_agree(vecs):
+def test_quantize_embeddings_matches_scalar_rule(spark, vecs):
+    """Bit-equal to the scalar rule applied per element in Python:
+    scale = max|v| / 127 (1.0 for a zero vector), q = _q8(x, scale)."""
     from pql_spark.operators import quantize_embeddings
+    from pql_spark.operators.similarity import _q8
 
-    fast = {
-        r.vec_id: (list(r.qvec), round(r.qscale, 12))
-        for r in quantize_embeddings(vecs).collect()
-    }
-    ref = {
-        r.vec_id: (list(r.qvec), round(r.qscale, 12))
-        for r in quantize_embeddings(vecs, impl="catalyst").collect()
-    }
-    assert fast == ref
+    extra = spark.createDataFrame(
+        [
+            (5, "c", [-1.0, 0.5, 0.25]),
+            (6, "c", [0.0, 0.0, 0.0]),
+            (7, "c", [-0.3, 127.0, -63.5]),  # -63.5: a .5 tie at scale 1
+        ],
+        "vec_id long, label string, embedding array<double>",
+    )
+    got, want = {}, {}
+    for r in quantize_embeddings(vecs.unionByName(extra)).collect():
+        got[r.vec_id] = (list(r.qvec), r.qscale)
+        m = max(abs(x) for x in r.embedding)
+        scale = m / 127.0 if m > 0 else 1.0
+        want[r.vec_id] = ([_q8(x, scale) for x in r.embedding], scale)
+    assert len(got) == 8
+    assert got == want
 
 
 def test_quantized_topk_matches_exact(vecs):
@@ -373,18 +388,141 @@ def test_pairwise_topk_grouped(vecs):
     assert all(r.rank == 1 for r in out)
 
 
-def test_pairwise_topk_impls_agree(vecs):
-    fast = [
+def test_pairwise_topk_matches_brute_force(vecs):
+    """Against a brute-force cosine + sort over the collected rows:
+    within each label, cosine desc then neighbor id asc, top 2."""
+    rows = vecs.collect()
+
+    def cos(u, v):
+        dot = sum(a * b for a, b in zip(u, v))
+        return dot / math.sqrt(sum(a * a for a in u) * sum(b * b for b in v))
+
+    want = []
+    for q in sorted(rows, key=lambda r: r.vec_id):
+        cands = sorted(
+            (-cos(q.embedding, c.embedding), c.vec_id)
+            for c in rows
+            if c.label == q.label and c.vec_id != q.vec_id
+        )
+        want += [
+            (q.vec_id, nb, rank, round(-neg, 9))
+            for rank, (neg, nb) in enumerate(cands[:2], start=1)
+        ]
+    got = [
         (r.id, r.neighbor, r.rank, round(r.cosine, 9))
         for r in pairwise_topk(vecs, k=2, key_col="label").collect()
     ]
-    ref = [
-        (r.id, r.neighbor, r.rank, round(r.cosine, 9))
-        for r in pairwise_topk(
-            vecs, k=2, key_col="label", impl="catalyst"
-        ).collect()
+    assert got == want
+
+
+_C02 = 0.9 / math.sqrt(0.82)  # cosine of [1, 0] and [0.9, 0.1]
+
+
+def _zero_case_rows(rows):
+    return [
+        tuple(round(x, 9) if isinstance(x, float) else x for x in r)
+        for r in rows
     ]
-    assert fast == ref
+
+
+def _zero_topk(op, df):
+    return [
+        (r.vec_id, r.cosine)
+        for q in ([1.0, 0.0], [0.0, 0.0])
+        for r in op(df, q, k=3).collect()
+    ]
+
+
+def _zero_pairwise(op):
+    return lambda df: [
+        (r.id, r.neighbor, r.cosine, r.rank)
+        for r in op(df, k=2, key_col="label").collect()
+    ]
+
+
+_ZERO_VECTOR_CASES = {
+    # a zero row or query vector: NULL cosine, ranked last
+    "cosine_topk": (
+        lambda df: _zero_topk(cosine_topk, df),
+        [(0, 1.0), (2, _C02), (1, None), (0, None), (1, None), (2, None)],
+    ),
+    "quantized_topk": (
+        lambda df: _zero_topk(
+            lambda d, q, k: quantized_topk(d, q, k=k, rerank=1), df
+        ),
+        [(0, 1.0), (2, _C02), (1, None), (0, None), (1, None), (2, None)],
+    ),
+    # a zero vector has no nearest centroid: NULL cell, never probed
+    "ivf_assign": (
+        lambda df: [
+            (r.vec_id, r.cell)
+            for r in ivf_assign(df, [[1.0, 0.0], [0.0, 1.0]])
+            .orderBy("vec_id")
+            .collect()
+        ],
+        [(0, 0), (1, None), (2, 0)],
+    ),
+    "ivf_topk": (
+        lambda df: [
+            (r.vec_id, r.cosine)
+            for r in ivf_topk(
+                df, [1.0, 0.0], k=3, n_centroids=2, nprobe=2
+            ).collect()
+        ],
+        [(0, 1.0), (2, _C02)],
+    ),
+    # NULL fails every threshold: the zero vector is in no pair
+    "semantic_dedup_pairs": (
+        lambda df: [
+            tuple(r)
+            for r in semantic_dedup_pairs(
+                df, threshold=0.9, n_clusters=1
+            ).collect()
+        ],
+        [(0, 2, _C02)],
+    ),
+    "embedding_dup_pairs": (
+        lambda df: [
+            tuple(r)
+            for r in embedding_dup_pairs(df, threshold=0.9, n_blocks=2)
+            .collect()
+        ],
+        [(0, 2, _C02)],
+    ),
+    "pairwise_topk": (
+        _zero_pairwise(pairwise_topk),
+        [
+            (0, 2, _C02, 1), (0, 1, None, 2),
+            (1, 0, None, 1), (1, 2, None, 2),
+            (2, 0, _C02, 1), (2, 1, None, 2),
+        ],
+    ),
+    "pairwise_topk_skew": (
+        _zero_pairwise(
+            lambda d, k, key_col: pairwise_topk_skew(
+                d, k=k, key_col=key_col, salt=2
+            )
+        ),
+        [
+            (0, 2, _C02, 1), (0, 1, None, 2),
+            (1, 0, None, 1), (1, 2, None, 2),
+            (2, 0, _C02, 1), (2, 1, None, 2),
+        ],
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_ZERO_VECTOR_CASES))
+def test_zero_vector_has_a_null_cosine(spark, op):
+    """One zero-vector rule on every vector operator: a cosine with a
+    zero-norm side is NULL and never raises (ANSI DIVIDE_BY_ZERO), NULL
+    passes no threshold, and NULL ranks after every cosine."""
+    df = spark.createDataFrame(
+        [(0, "a", [1.0, 0.0]), (1, "a", [0.0, 0.0]), (2, "a", [0.9, 0.1])],
+        "vec_id long, label string, embedding array<double>",
+    )
+    run, want = _ZERO_VECTOR_CASES[op]
+    assert _zero_case_rows(run(df)) == _zero_case_rows(want)
 
 
 def test_ivf_full_probe_equals_brute_force(sf_catalog):
@@ -648,21 +786,28 @@ def test_frame_sample_plan(spark):
     }
 
 
-def test_embedding_dup_pairs_blocked_equals_broadcast(spark):
-    """The distributed block-Gram path must reproduce the broadcast
-    brute-force pairs exactly — any block assignment, any n_blocks."""
-    from pql_spark.operators import embedding_dup_pairs_broadcast
+def test_embedding_dup_pairs_blocked_equals_brute_force(spark):
+    """The distributed block-Gram path must reproduce a brute-force
+    numpy Gram matrix over the collected rows exactly — any block
+    assignment, any n_blocks."""
+    import numpy as np
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    want = {
-        (r.id_a, r.id_b): r.cosine
-        for r in embedding_dup_pairs_broadcast(emb, threshold=0.8).collect()
-    }
+    rows = emb.select("vec_id", "embedding").collect()
+    ids = np.array([r.vec_id for r in rows], dtype=np.int64)
+    mat = np.array([r.embedding for r in rows], dtype=np.float64)
+    norms = np.sqrt((mat * mat).sum(axis=1))
+    sims = (mat @ mat.T) / np.outer(norms, norms)
+    # 0.3: the corpus's largest cosine is ~0.48, so a higher threshold
+    # would compare two empty pair sets
+    ii, jj = np.nonzero((sims >= 0.3) & (ids[:, None] < ids[None, :]))
+    want = {(int(ids[i]), int(ids[j])): sims[i, j] for i, j in zip(ii, jj)}
+    assert len(want) > 100
     for nb in (1, 3, 8):
         got = {
             (r.id_a, r.id_b): r.cosine
             for r in embedding_dup_pairs(
-                emb, threshold=0.8, n_blocks=nb
+                emb, threshold=0.3, n_blocks=nb
             ).collect()
         }
         assert set(got) == set(want), f"n_blocks={nb}"

@@ -622,3 +622,30 @@ def test_failed_drain_leaves_no_sink_view(spark, tmp_path):
     with pytest.raises(StreamingQueryException, match="boom"):
         run_available_now(failing, "append")
     assert temp_views() == before
+
+
+def test_stream_parquet_table_streams_its_file_without_a_temp_dir(
+    spark, tmp_path
+):
+    """A single-file table streams through a brace glob of its own
+    name: no ``pql_stream_*`` directory is left under the temp dir, and
+    a ``.bak`` copy beside the file is not read."""
+    import tempfile
+    from pathlib import Path
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = pa.table({"id": list(range(50)), "v": [0.5] * 50})
+    pq.write_table(table, tmp_path / "t.parquet")
+    pq.write_table(table, tmp_path / "t.parquet.bak")
+
+    def leftovers():
+        return set(Path(tempfile.gettempdir()).glob("pql_stream_*"))
+
+    before = leftovers()
+    df = stream_parquet_table(spark, str(tmp_path), "t")
+    assert leftovers() == before
+    drained = run_available_now(df, "append", no_data_batches=False)
+    batch = spark.read.parquet(str(tmp_path / "t.parquet"))
+    assert len(drained) == batch.count() == 50

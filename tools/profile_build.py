@@ -27,7 +27,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entrymod  # noqa: E402
-from pql_spark.sources import build_session  # noqa: E402
+from profile_query import start_session  # noqa: E402
 
 
 def main() -> int:
@@ -35,14 +35,7 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     n_runs = int(os.environ.get("PROFILE_RUNS", "2"))
     topk = int(os.environ.get("PROFILE_TOP", "25"))
-    spark = build_session("build-profile")
-    spark.sparkContext.setLogLevel("ERROR")
-    warm = spark.read.parquet(str(Path(sf_dir) / "region.parquet"))
-    warm.groupBy("r_name").count().collect()
-    cores = spark.sparkContext.defaultParallelism
-    spark.range(0, cores, 1, cores).mapInPandas(
-        lambda it: it, "id long"
-    ).count()
+    spark = start_session(sf_dir)
 
     qs = entrymod.queries()
     for name in names:

@@ -94,7 +94,7 @@ def _shuffle_bytes_written(spark) -> int:
 
 
 def profile_once(spark, fn, sf_dir: str) -> dict:
-    """Build and collect one gate, then release its persists and views.
+    """Build and collect one gate, then clear the session's cache.
     Returns total/build/collect seconds, jobs, stages, shuffle bytes
     and rows."""
     tracker = spark.sparkContext.statusTracker()
