@@ -409,12 +409,13 @@ class PivotOp(Op):
     """``evaluate pivot(PivotCol [, AggCall]) [: (name: type, …)]`` —
     rotate distinct values of PivotCol into columns (KQL pivot
     plugin); remaining columns are the group keys; default aggregate
-    is ``count()``.  Discovery mode (no annotation) infers + sorts the
-    distinct values (DataFrame backend only).  With the ADX
+    is ``count()``.  Discovery mode (no annotation) finds + sorts the
+    distinct values with one query before the statement is emitted
+    (``PqlEngine.query``; a bare ``to_sql`` refuses it).  With the ADX
     output-schema annotation, entries naming group keys pass through
     and the REST are the pivot values in declared order, matched on
     the pivot column's STRING form and cast to the declared type —
-    static schema, no values-discovery job, both backends."""
+    static schema, no values-discovery job."""
 
     col: Ident
     agg: Expr | None
@@ -426,11 +427,10 @@ class BagUnpackOp(Op):
     """``evaluate bag_unpack(Col [, prefix]) [: (name: type, …)]`` —
     expand a dynamic (JSON object / map) column into one column per
     key (KQL bag_unpack plugin); the bag column is dropped.  Without
-    the ADX output-schema annotation the keys are DISCOVERED (bounded
-    compile-time aggregate — DataFrame backend only); with it the
-    schema is static, keys extract in declared order with declared
-    types, and BOTH backends support the operator (the SQL emitter
-    handles JSON-string bags)."""
+    the ADX output-schema annotation the keys are DISCOVERED with one
+    bounded query before the statement is emitted (``PqlEngine.query``;
+    a bare ``to_sql`` refuses it); with it the schema is static and
+    keys extract in declared order with declared types."""
 
     col: Ident
     prefix: str = ""

@@ -124,10 +124,15 @@ Resolver = Callable[[str], DataFrame]
 
 _BUILTIN_IDENTS = {"true": True, "false": False}  # pql.go:557-561
 
-# bag_unpack key-discovery guardrail: the distinct key set is collected
-# to the driver (like pivot value discovery) — bounded so adversarial
-# high-cardinality bags error instead of OOMing the driver
-BAG_UNPACK_MAX_KEYS = 1000
+# `evaluate` plugins whose one implementation is the SQL emitter's
+# (``Compiler._via_sql``)
+_EMITTED_PLUGINS = (
+    PivotOp, BagUnpackOp, SequenceDetectOp, AutoclusterOp,
+    DiffPatternsOp, DiffPatternsTextOp, SlidingWindowCountsOp,
+    ActivityCountsMetricsOp, NewActivityMetricsOp, FunnelSequenceOp,
+    FunnelCompletionOp, ActiveUsersCountOp, ActivityEngagementOp,
+    SessionCountOp, RollingPercentileOp,
+)
 
 
 class MultiResult(dict):
@@ -736,6 +741,8 @@ class Compiler:
             return df.select("*", exploded.alias(name))
 
     def _apply_tail(self, df: DataFrame, op: Op, env: _Env) -> DataFrame:
+        if isinstance(op, _EMITTED_PLUGINS):
+            return self._via_sql(df, op)
         if isinstance(op, SampleDistinctOp):
             from .operators.sampling import _bucket
 
@@ -814,88 +821,6 @@ class Compiler:
             first = list(op.names)
             rest = [c for c in df.columns if c not in set(first)]
             return df.select(*[F.col(_q(c)) for c in first + rest])
-        if isinstance(op, PivotOp):
-            pcol = op.col.parts[0]
-            if pcol not in df.columns:
-                raise ParseError(
-                    f"pivot: unknown column {pcol!r}", op.col.span
-                )
-            # group keys = every remaining column EXCEPT the aggregate's
-            # inputs (KQL pivot semantics)
-            agg_refs: set[str] = set()
-
-            def walk(node: Expr) -> None:
-                if isinstance(node, Ident) and node.simple:
-                    agg_refs.add(node.parts[0])
-                for child in getattr(node, "__dict__", {}).values():
-                    if isinstance(child, Expr):
-                        walk(child)
-                    elif isinstance(child, list):
-                        for item in child:
-                            if isinstance(item, Expr):
-                                walk(item)
-
-            if op.agg is not None:
-                walk(op.agg)
-            keys = [
-                c for c in df.columns if c != pcol and c not in agg_refs
-            ]
-            agg = (
-                self.compile_expr(op.agg, env)
-                if op.agg is not None
-                else F.count(F.lit(1))
-            )
-            if op.schema is not None:
-                # annotated: entries naming keys pass through, the
-                # rest are the pivot VALUES in declared order —
-                # explicit values skip the distinct-discovery job and
-                # make the schema static.  Matching is on the pivot
-                # column's STRING form; cells cast to declared types.
-                from .parser import _DATATABLE_TYPES
-
-                vals = [
-                    (n, t) for n, t in op.schema if n not in keys
-                ]
-                if not vals:
-                    raise ParseError(
-                        "pivot schema: no pivot-value columns (every"
-                        " entry names a group key)",
-                        op.span,
-                    )
-                PV = "__pql_pv_key"
-                pivoted = (
-                    df.withColumn(
-                        PV, F.col(_q(pcol)).cast("string")
-                    )
-                    .groupBy(*[F.col(_q(k)) for k in keys])
-                    .pivot(PV, [n for n, _ in vals])
-                    .agg(agg)
-                )
-                return pivoted.select(
-                    *[F.col(_q(k)) for k in keys],
-                    *[
-                        F.col(_q(n))
-                        .cast(_DATATABLE_TYPES[t])
-                        .alias(n)
-                        for n, t in vals
-                    ],
-                )
-            # Spark infers + SORTS the distinct pivot values, so the
-            # output column order is deterministic.  groupBy().pivot()
-            # plans two-phase partial aggregation like any groupBy.
-            return df.groupBy(*[F.col(_q(k)) for k in keys]).pivot(
-                pcol
-            ).agg(agg)
-        if isinstance(op, BagUnpackOp):
-            return self._bag_unpack(df, op)
-        if isinstance(op, SequenceDetectOp):
-            return self._sequence_detect(df, op, env)
-        if isinstance(op, AutoclusterOp):
-            return self._autocluster(df, op)
-        if isinstance(op, DiffPatternsOp):
-            return self._diffpatterns(df, op)
-        if isinstance(op, DiffPatternsTextOp):
-            return self._diffpatterns_text(df, op)
         if isinstance(op, InvokeOp):
             fd = self.let_funcs.get(op.name)
             if fd is None or fd.tab_body is None:
@@ -984,22 +909,6 @@ class Compiler:
             return numbered.select(
                 F.col("Row").cast("long").alias("Row"), pairs
             ).select("Row", "__nw.Column", "__nw.Value")
-        if isinstance(op, SlidingWindowCountsOp):
-            return self._sliding_window_counts(df, op, env)
-        if isinstance(op, ActivityCountsMetricsOp):
-            return self._activity_counts_metrics(df, op, env)
-        if isinstance(op, SessionCountOp):
-            return self._session_count(df, op, env)
-        if isinstance(op, FunnelSequenceOp):
-            return self._funnel_sequence(df, op, env)
-        if isinstance(op, FunnelCompletionOp):
-            return self._funnel_completion(df, op, env)
-        if isinstance(op, ActivityEngagementOp):
-            return self._activity_engagement(df, op, env)
-        if isinstance(op, ActiveUsersCountOp):
-            return self._active_users_count(df, op, env)
-        if isinstance(op, NewActivityMetricsOp):
-            return self._new_activity_metrics(df, op, env)
         if isinstance(op, MakeGraphOp):
             src, dst = op.src.parts[0], op.dst.parts[0]
             for name, ident in ((src, op.src), (dst, op.dst)):
@@ -1022,8 +931,6 @@ class Compiler:
             return df
         if isinstance(op, GraphMatchOp):
             return self._graph_match(op, env)
-        if isinstance(op, RollingPercentileOp):
-            return self._rolling_percentile(df, op, env)
         if isinstance(op, RowsNearOp):
             from pyspark.sql import Window
 
@@ -1137,6 +1044,55 @@ class Compiler:
                 pred = hit if pred is None else (pred | hit)
             return df.filter(F.coalesce(pred, F.lit(False)))
         raise ParseError(f"unsupported operator {type(op).__name__}", op.span)
+
+    def _via_sql(self, df: DataFrame, op: Op) -> DataFrame:
+        """Run one ``evaluate`` plugin through the SQL emitter, its one
+        implementation.  ``df`` becomes one collision-proof view (a
+        table the plugin's expressions name, e.g. in a ``toscalar``,
+        one more); the emitter sees the compiler's params, lets,
+        let-functions and last sort; the plugin's statement — and a
+        schema-discovery statement before it, if the plugin needs one
+        — runs over those views, which are dropped right after each
+        statement (``operators._util.sql_with_views``)."""
+        from uuid import uuid4
+
+        from .operators._util import sql_with_views
+        from .sql_backend import _SqlEmitter, _lit
+
+        spark = df.sparkSession
+        uid = f"__pql_vc{uuid4().hex[:12]}"
+        views: dict[str, DataFrame] = {uid: df}
+
+        def table_view(name: str) -> str:
+            views[f"{uid}_{name}"] = self._resolve_table(name, op.span)
+            return f"{uid}_{name}"
+
+        def frame_of(sql: str) -> DataFrame:
+            return sql_with_views(spark, sql, views)
+
+        emitter = _SqlEmitter(
+            self.source,
+            lambda name: self._resolve_table(name, op.span).schema,
+            self.params,
+            width=spark.sparkContext.defaultParallelism,
+            view_name_of=table_view,
+            frame_of=frame_of,
+        )
+        emitter.let_funcs = dict(self.let_funcs)
+        emitter.last_sort = self._last_sort
+        for name, e in self.lets.items():
+            if name in self.params:  # params shadow lets (_ident)
+                continue
+            if isinstance(e, ToScalarExpr):
+                # the value this compiler memoised: one action per let
+                self.compile_expr(e, _Env(df=None))
+                emitter.scope[name] = _lit(
+                    self._toscalar_cache[(e.span.start, e.span.end)]
+                )
+            else:
+                emitter.scope[name] = emitter.expr(e)
+        sql, _ = emitter.emit_op(op, f"SELECT * FROM {_q(uid)}", df.columns)
+        return frame_of(sql)
 
     def _make_series(
         self, df: DataFrame, op: MakeSeriesOp, env: _Env
@@ -1260,127 +1216,6 @@ class Compiler:
             name = f"$right.{c}" if c in left_set else c
             out.append(F.col(f"{_q(ra)}.{_q(c)}").alias(name))
         return joined.select(*out)
-
-    def _sliding_window_counts(
-        self, df: DataFrame, op: SlidingWindowCountsOp, env: _Env
-    ) -> DataFrame:
-        """``evaluate sliding_window_counts``: rolling count/dcount at
-        each bin over a trailing lookback.  Each row explodes to the
-        ≤ Lookback/Bin bins it participates in — a bounded constant
-        fan-out — then ONE hash groupBy(bin): no per-bin rescans, no
-        self-join, linear in rows × (Lookback/Bin) at any scale."""
-        ts = op.ts_col.parts[0]
-        idc = op.id_col.parts[0]
-        for name, ident in ((ts, op.ts_col), (idc, op.id_col)):
-            if name not in df.columns:
-                raise ParseError(
-                    f"sliding_window_counts: unknown column {name!r}",
-                    ident.span,
-                )
-        binu = F.lit(op.bin_usec).cast("long")
-        look = F.lit(op.lookback_usec).cast("long")
-        t = F.unix_micros(F.col(_q(ts)).cast("timestamp"))
-        start = F.unix_micros(
-            self.compile_expr(op.start, env).cast("timestamp")
-        )
-        end = F.unix_micros(self.compile_expr(op.end, env).cast("timestamp"))
-        # row at t participates in bin B = start + k*bin iff
-        # B - lookback < t <= B; clamp k into [0, (end-start)/bin]
-        kmax = F.floor((end - start) / binu).cast("long")
-        k0 = F.greatest(
-            F.lit(0).cast("long"),
-            F.floor((t - start + binu - 1) / binu).cast("long"),
-        )
-        k1 = F.least(
-            kmax,
-            F.floor((t + look - start + binu - 1) / binu).cast("long")
-            - 1,
-        )
-        ks = F.when(k0 <= k1, F.sequence(k0, k1)).otherwise(
-            F.lit(None).cast("array<long>")
-        )
-        exploded = df.select(
-            F.col(_q(idc)).alias("__swc_id"),
-            start.alias("__swc_start"),
-            F.explode(ks).alias("__swc_k"),
-        ).select(
-            "__swc_id",
-            (F.col("__swc_start") + F.col("__swc_k") * binu).alias(
-                "__swc_bin"
-            ),
-        )
-        return exploded.groupBy(
-            F.timestamp_micros(F.col("__swc_bin")).alias(ts)
-        ).agg(
-            F.count(F.lit(1)).alias("Count"),
-            F.count_distinct(F.col("__swc_id")).alias("Dcount"),
-        )
-
-    def _activity_counts_metrics(
-        self, df: DataFrame, op: ActivityCountsMetricsOp, env: _Env
-    ) -> DataFrame:
-        """``evaluate activity_counts_metrics``: per-bin count,
-        distinct ids, new (first-seen) ids, and cumulative distinct.
-
-        Scale shape: two parallel aggregates over the fact rows
-        (per-bin counts; per-id min-bin, then per-bin new counts) and
-        a running sum over the BIN-level relation only — the
-        unpartitioned window is over #bins rows, not data rows."""
-        from pyspark.sql import Window
-
-        ts = op.ts_col.parts[0]
-        idc = op.id_col.parts[0]
-        for name, ident in ((ts, op.ts_col), (idc, op.id_col)):
-            if name not in df.columns:
-                raise ParseError(
-                    f"activity_counts_metrics: unknown column {name!r}",
-                    ident.span,
-                )
-        binu = F.lit(op.bin_usec).cast("long")
-        t = F.unix_micros(F.col(_q(ts)).cast("timestamp"))
-        start = F.unix_micros(
-            self.compile_expr(op.start, env).cast("timestamp")
-        )
-        end = F.unix_micros(self.compile_expr(op.end, env).cast("timestamp"))
-        base = df.select(
-            F.col(_q(idc)).alias("__acm_id"),
-            (start + F.floor((t - start) / binu).cast("long") * binu)
-            .alias("__acm_bin"),
-            t.alias("__acm_t"),
-            start.alias("__acm_s"),
-            end.alias("__acm_e"),
-        ).filter(
-            (F.col("__acm_t") >= F.col("__acm_s"))
-            & (F.col("__acm_t") < F.col("__acm_e"))
-        )
-        per_bin = base.groupBy("__acm_bin").agg(
-            F.count(F.lit(1)).alias("count_"),
-            F.count_distinct(F.col("__acm_id")).alias("dcount"),
-        )
-        new_per_bin = (
-            base.groupBy("__acm_id")
-            .agg(F.min("__acm_bin").alias("__acm_bin"))
-            .groupBy("__acm_bin")
-            .agg(F.count(F.lit(1)).alias("new_dcount"))
-        )
-        joined = per_bin.join(new_per_bin, "__acm_bin", "left").select(
-            "__acm_bin",
-            "count_",
-            "dcount",
-            F.coalesce(F.col("new_dcount"), F.lit(0)).alias("new_dcount"),
-        )
-        w = (
-            Window.partitionBy()
-            .orderBy("__acm_bin")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        return joined.select(
-            F.timestamp_micros(F.col("__acm_bin")).alias(ts),
-            "count_",
-            "dcount",
-            "new_dcount",
-            F.sum("new_dcount").over(w).alias("aggregated_dcount"),
-        )
 
     def _graph_match(self, op: GraphMatchOp, env: _Env) -> DataFrame:
         """``graph-match``: path patterns as hash equi-joins on node
@@ -1513,485 +1348,6 @@ class Compiler:
             )
             env2 = _Env(df=joined)
         return joined.select(*self._compile_cols(op.project, env2))
-
-    def _new_activity_metrics(
-        self, df: DataFrame, op: NewActivityMetricsOp, env: _Env
-    ) -> DataFrame:
-        """``evaluate new_activity_metrics``: cohort-retention matrix.
-        Per (cohort = first-seen bin, activity bin): distinct returning
-        ids + retention ratio vs cohort size.  One per-id min-bin
-        aggregate, one id-keyed join back, one groupBy(cohort, bin) —
-        hash-partitioned throughout, bin-level relations stay tiny."""
-        ts = op.ts_col.parts[0]
-        idc = op.id_col.parts[0]
-        for name, ident in ((ts, op.ts_col), (idc, op.id_col)):
-            if name not in df.columns:
-                raise ParseError(
-                    f"new_activity_metrics: unknown column {name!r}",
-                    ident.span,
-                )
-        binu = F.lit(op.bin_usec).cast("long")
-        t = F.unix_micros(F.col(_q(ts)).cast("timestamp"))
-        start = F.unix_micros(
-            self.compile_expr(op.start, env).cast("timestamp")
-        )
-        end = F.unix_micros(self.compile_expr(op.end, env).cast("timestamp"))
-        active = (
-            df.select(
-                F.col(_q(idc)).alias("__na_id"),
-                (start + F.floor((t - start) / binu).cast("long") * binu)
-                .alias("__na_bin"),
-                t.alias("__na_t"),
-                start.alias("__na_s"),
-                end.alias("__na_e"),
-            )
-            .filter(
-                (F.col("__na_t") >= F.col("__na_s"))
-                & (F.col("__na_t") < F.col("__na_e"))
-            )
-            .select("__na_id", "__na_bin")
-            .distinct()
-        )
-        firsts = active.groupBy("__na_id").agg(
-            F.min("__na_bin").alias("__na_cohort")
-        )
-        cohort_sizes = firsts.groupBy("__na_cohort").agg(
-            F.count(F.lit(1)).alias("__na_csize")
-        )
-        cells = (
-            active.join(firsts, "__na_id")
-            .groupBy("__na_cohort", "__na_bin")
-            .agg(F.count(F.lit(1)).alias("dcount"))
-        )
-        return (
-            cells.join(cohort_sizes, "__na_cohort")
-            .select(
-                F.timestamp_micros(F.col("__na_cohort")).alias(
-                    f"cohort_{ts}"
-                ),
-                F.timestamp_micros(F.col("__na_bin")).alias(ts),
-                F.col("dcount"),
-                (
-                    F.col("dcount").cast("double")
-                    / F.col("__na_csize").cast("double")
-                ).alias("retention"),
-            )
-        )
-
-    def _funnel_sequence(
-        self, df: DataFrame, op: FunnelSequenceOp, env: _Env
-    ) -> DataFrame:
-        """``evaluate funnel_sequence``: (prev, next) state transitions
-        around occurrences of ``Step`` — one lag/lead window
-        PARTITIONED BY id (parallel at scale) + one groupBy(prev,
-        next).  Adjacent events outside MaxWindow contribute NULL
-        prev/next (sequence edge)."""
-        from pyspark.sql import Window
-
-        ts = op.ts_col.parts[0]
-        idc = op.id_col.parts[0]
-        state = op.state_col.parts[0]
-        for name, ident in (
-            (ts, op.ts_col), (idc, op.id_col), (state, op.state_col)
-        ):
-            if name not in df.columns:
-                raise ParseError(
-                    f"funnel_sequence: unknown column {name!r}",
-                    ident.span,
-                )
-        winu = F.lit(op.window_usec).cast("long")
-        t = F.unix_micros(F.col(_q(ts)).cast("timestamp"))
-        start = F.unix_micros(
-            self.compile_expr(op.start, env).cast("timestamp")
-        )
-        end = F.unix_micros(self.compile_expr(op.end, env).cast("timestamp"))
-        step = self.compile_expr(op.step, env)
-        base = df.select(
-            F.col(_q(idc)).alias("__fs_id"),
-            F.col(_q(state)).alias("__fs_state"),
-            t.alias("__fs_t"),
-            step.alias("__fs_step"),
-            start.alias("__fs_s"),
-            end.alias("__fs_e"),
-        ).filter(
-            (F.col("__fs_t") >= F.col("__fs_s"))
-            & (F.col("__fs_t") < F.col("__fs_e"))
-        )
-        w = Window.partitionBy("__fs_id").orderBy("__fs_t")
-        prev_s = F.lag("__fs_state").over(w)
-        prev_t = F.lag("__fs_t").over(w)
-        next_s = F.lead("__fs_state").over(w)
-        next_t = F.lead("__fs_t").over(w)
-        marked = base.select(
-            "__fs_id",
-            "__fs_state",
-            "__fs_step",
-            F.when(
-                (F.col("__fs_t") - prev_t) <= winu, prev_s
-            ).alias("prev"),
-            F.when(
-                (next_t - F.col("__fs_t")) <= winu, next_s
-            ).alias("next"),
-        )
-        return (
-            marked.filter(F.col("__fs_state") == F.col("__fs_step"))
-            .groupBy("prev", "next")
-            .agg(F.count_distinct(F.col("__fs_id")).alias("dcount"))
-        )
-
-    def _active_users_count(
-        self, df: DataFrame, op: ActiveUsersCountOp, env: _Env
-    ) -> DataFrame:
-        """``evaluate active_users_count``: engaged ids per bin —
-        distinct (id, period) first (the small relation), bounded
-        explode to the ≤ Lookback bins each active period counts
-        toward, one groupBy(bin, id) count ≥ MinActivePeriods, one
-        groupBy(bin) count."""
-        ts = op.ts_col.parts[0]
-        idc = op.id_col.parts[0]
-        for name, ident in ((ts, op.ts_col), (idc, op.id_col)):
-            if name not in df.columns:
-                raise ParseError(
-                    f"active_users_count: unknown column {name!r}",
-                    ident.span,
-                )
-        per = F.lit(op.period_usec).cast("long")
-        look = op.lookback_periods
-        t = F.unix_micros(F.col(_q(ts)).cast("timestamp"))
-        start = F.unix_micros(
-            self.compile_expr(op.start, env).cast("timestamp")
-        )
-        end = F.unix_micros(self.compile_expr(op.end, env).cast("timestamp"))
-        nbins = F.floor((end - start) / per).cast("long")
-        p = F.floor((t - start) / per).cast("long")
-        active = (
-            df.filter((t >= start) & (t < end))
-            .select(
-                F.col(_q(idc)).alias("__au_id"),
-                start.alias("__au_start"),
-                p.alias("__au_p"),
-            )
-            .distinct()
-        )
-        # active period p counts toward bins k in [p, p+look-1].
-        # Rows in a partial trailing period have p == nbins (no bin of
-        # their own); null-guard so F.sequence never runs DESCENDING
-        # (start>stop defaults step to -1) — explode drops the NULL.
-        ks = F.when(
-            F.col("__au_p") <= F.col("__nbins") - 1,
-            F.sequence(
-                F.col("__au_p"),
-                F.least(
-                    F.col("__au_p") + F.lit(look - 1),
-                    F.col("__nbins") - 1,
-                ),
-            ),
-        )
-        exploded = active.withColumn(
-            "__nbins", nbins
-        ).select(
-            "__au_id",
-            "__au_start",
-            F.explode(ks).alias("__au_k"),
-        )
-        engaged = (
-            exploded.groupBy("__au_k", "__au_id")
-            .agg(
-                F.count(F.lit(1)).alias("__au_n"),
-                F.first("__au_start").alias("__au_start"),
-            )
-            .filter(F.col("__au_n") >= op.min_periods)
-        )
-        return (
-            engaged.groupBy("__au_k")
-            .agg(
-                F.first("__au_start").alias("__au_start"),
-                F.count(F.lit(1)).alias("active_users"),
-            )
-            .select(
-                F.timestamp_micros(
-                    F.col("__au_start")
-                    + F.col("__au_k") * F.lit(op.period_usec)
-                ).alias(ts),
-                F.col("active_users"),
-            )
-        )
-
-    def _activity_engagement(
-        self, df: DataFrame, op: ActivityEngagementOp, env: _Env
-    ) -> DataFrame:
-        """``evaluate activity_engagement``: DAU/MAU stickiness per
-        inner-window bin.  Each row explodes to the ≤ outer/inner bins
-        whose OUTER window contains it (is-inner flagged), then ONE
-        groupBy(bin, id) flag-max dedup + ONE groupBy(bin) conditional
-        count — the sliding_window_counts shape; no per-bin rescans."""
-        ts = op.ts_col.parts[0]
-        idc = op.id_col.parts[0]
-        for name, ident in ((ts, op.ts_col), (idc, op.id_col)):
-            if name not in df.columns:
-                raise ParseError(
-                    f"activity_engagement: unknown column {name!r}",
-                    ident.span,
-                )
-        inner = F.lit(op.inner_usec).cast("long")
-        outer = F.lit(op.outer_usec).cast("long")
-        t = F.unix_micros(F.col(_q(ts)).cast("timestamp"))
-        start = F.unix_micros(
-            self.compile_expr(op.start, env).cast("timestamp")
-        )
-        end = F.unix_micros(self.compile_expr(op.end, env).cast("timestamp"))
-        # u = t - start ≥ 0 (range filter); bin k's OUTER window is
-        # [k*inner + inner - outer, k*inner + inner) around u, so
-        # k ∈ (u/inner − 1, (u + outer − inner)/inner]; the row's
-        # INNER bin is exactly k = floor(u/inner)
-        u = t - start
-        nbins = F.floor((end - start) / inner).cast("long")
-        k_in = F.floor(u / inner).cast("long")
-        k0 = F.greatest(
-            F.lit(0).cast("long"),
-            F.floor((u - inner) / inner).cast("long") + 1,
-        )
-        k1 = F.least(
-            nbins - 1,
-            F.floor((u + outer - inner) / inner).cast("long"),
-        )
-        ks = F.when(k0 <= k1, F.sequence(k0, k1))
-        exploded = (
-            df.filter((t >= start) & (t < end))
-            .select(
-                F.col(_q(idc)).alias("__ae_id"),
-                start.alias("__ae_start"),
-                k_in.alias("__ae_kin"),
-                F.explode(ks).alias("__ae_k"),
-            )
-        )
-        per_id = exploded.groupBy("__ae_k", "__ae_id").agg(
-            F.max(
-                (F.col("__ae_kin") == F.col("__ae_k")).cast("int")
-            ).alias("__ae_inn"),
-            F.first("__ae_start").alias("__ae_start"),
-        )
-        return (
-            per_id.groupBy("__ae_k")
-            .agg(
-                F.first("__ae_start").alias("__ae_start"),
-                F.sum("__ae_inn").alias("dcount_activities_inner"),
-                F.count(F.lit(1)).alias("dcount_activities_outer"),
-            )
-            .select(
-                F.timestamp_micros(
-                    F.col("__ae_start")
-                    + F.col("__ae_k") * F.lit(op.inner_usec)
-                ).alias(ts),
-                F.col("dcount_activities_inner"),
-                F.col("dcount_activities_outer"),
-                (
-                    F.col("dcount_activities_inner").cast("double")
-                    / F.col("dcount_activities_outer")
-                ).alias("activity_ratio"),
-            )
-        )
-
-    def _funnel_completion(
-        self, df: DataFrame, op: FunnelCompletionOp, env: _Env
-    ) -> DataFrame:
-        """``evaluate funnel_completion``: per (step, window), distinct
-        ids whose greedy-earliest chain (anchored at their FIRST
-        states[0] event in range) reaches step j within the window.
-
-        Plan: k−1 keyed join+min aggregations building the chain table
-        (each one shuffle on the id key; k is the sequence length, a
-        small constant), then a UNION of the k chain tables → ONE
-        grouped conditional-count aggregate → ``stack`` unpivot to
-        (period, dcount) rows.  No per-window rescans, no self-join
-        explosion; the fact table is scanned once per step, each time
-        pre-filtered to that step's state."""
-        ts = op.ts_col.parts[0]
-        idc = op.id_col.parts[0]
-        state = op.state_col.parts[0]
-        for name, ident in (
-            (ts, op.ts_col), (idc, op.id_col), (state, op.state_col)
-        ):
-            if name not in df.columns:
-                raise ParseError(
-                    f"funnel_completion: unknown column {name!r}",
-                    ident.span,
-                )
-        t = F.unix_micros(F.col(_q(ts)).cast("timestamp"))
-        start = F.unix_micros(
-            self.compile_expr(op.start, env).cast("timestamp")
-        )
-        end = F.unix_micros(self.compile_expr(op.end, env).cast("timestamp"))
-        base = df.select(
-            F.col(_q(idc)).alias("__fc_id"),
-            F.col(_q(state)).alias("__fc_state"),
-            t.alias("__fc_t"),
-            start.alias("__fc_s"),
-            end.alias("__fc_e"),
-        ).filter(
-            (F.col("__fc_t") >= F.col("__fc_s"))
-            & (F.col("__fc_t") < F.col("__fc_e"))
-        ).select("__fc_id", "__fc_state", "__fc_t")
-        # chain[j]: (id, t1, tj) — earliest step-j time per id
-        cur = (
-            base.filter(F.col("__fc_state") == op.states[0])
-            .groupBy("__fc_id")
-            .agg(F.min("__fc_t").alias("__t1"))
-            .withColumn("__tj", F.col("__t1"))
-        )
-        spans = [
-            cur.select(
-                F.lit(1).alias("step"),
-                F.lit(op.states[0]).alias("state"),
-                (F.col("__tj") - F.col("__t1")).alias("__span"),
-            )
-        ]
-        for j, s in enumerate(op.states[1:], start=2):
-            nxt = (
-                base.filter(F.col("__fc_state") == s)
-                .join(cur.select("__fc_id", "__t1", "__tj"), "__fc_id")
-                .filter(F.col("__fc_t") >= F.col("__tj"))
-                .groupBy("__fc_id", "__t1")
-                .agg(F.min("__fc_t").alias("__tn"))
-                .withColumnRenamed("__tn", "__tj_next")
-            )
-            cur = nxt.select(
-                "__fc_id", "__t1", F.col("__tj_next").alias("__tj")
-            )
-            spans.append(
-                cur.select(
-                    F.lit(j).alias("step"),
-                    F.lit(s).alias("state"),
-                    (F.col("__tj") - F.col("__t1")).alias("__span"),
-                )
-            )
-        allspans = spans[0]
-        for sdf in spans[1:]:
-            allspans = allspans.unionByName(sdf)
-        wide = allspans.groupBy("step", "state").agg(
-            *[
-                F.count(
-                    F.when(F.col("__span") <= F.lit(w), True)
-                ).alias(f"__w{i}")
-                for i, w in enumerate(op.windows_usec)
-            ]
-        )
-        stack_args = ", ".join(
-            f"{int(w)}L, {_q(f'__w{i}')}"
-            for i, w in enumerate(op.windows_usec)
-        )
-        return wide.selectExpr(
-            "step",
-            "state",
-            f"stack({len(op.windows_usec)}, {stack_args})"
-            " AS (period, dcount)",
-        )
-
-    def _session_count(
-        self, df: DataFrame, op: SessionCountOp, env: _Env
-    ) -> DataFrame:
-        """``evaluate session_count``: sessions STARTED per bin — an
-        id's active bin opens a session iff the id had no activity
-        within the preceding LookBackWindow.  One lag window
-        PARTITIONED BY id (parallel at any scale), one groupBy(bin) —
-        TWO shuffles.  No (id, bin) pre-distinct: within the sorted
-        window, only the FIRST row of an equal-bin run sees a
-        different lag value, so duplicate activity rows can't open a
-        second session in the same bin and the distinct's extra
-        shuffle buys nothing.  Bins with zero session starts are
-        omitted (consistent with the other rolling plugins)."""
-        from pyspark.sql import Window
-
-        ts = op.ts_col.parts[0]
-        idc = op.id_col.parts[0]
-        for name, ident in ((ts, op.ts_col), (idc, op.id_col)):
-            if name not in df.columns:
-                raise ParseError(
-                    f"session_count: unknown column {name!r}",
-                    ident.span,
-                )
-        binu = F.lit(op.bin_usec).cast("long")
-        look = F.lit(op.lookback_usec).cast("long")
-        t = F.unix_micros(F.col(_q(ts)).cast("timestamp"))
-        start = F.unix_micros(
-            self.compile_expr(op.start, env).cast("timestamp")
-        )
-        end = F.unix_micros(self.compile_expr(op.end, env).cast("timestamp"))
-        active = (
-            df.select(
-                F.col(_q(idc)).alias("__sc_id"),
-                F.floor((t - start) / binu).cast("long").alias("__sc_k"),
-                t.alias("__sc_t"),
-                start.alias("__sc_s"),
-                end.alias("__sc_e"),
-            )
-            .filter(
-                (F.col("__sc_t") >= F.col("__sc_s"))
-                & (F.col("__sc_t") < F.col("__sc_e"))
-            )
-            .select("__sc_id", "__sc_k", "__sc_s")
-        )
-        w = Window.partitionBy("__sc_id").orderBy("__sc_k")
-        prev_k = F.lag("__sc_k").over(w)
-        # duplicate (id, k) rows: lag sees the SAME k for every row of
-        # an equal-k run except its first, so exactly one row per
-        # (id, bin) can flag a session start — the old pre-distinct
-        # shuffle was redundant
-        starts = active.withColumn(
-            "__sc_new",
-            (
-                prev_k.isNull()
-                | ((F.col("__sc_k") - prev_k) * binu > look)
-            ).cast("int"),
-        )
-        return (
-            starts.filter(F.col("__sc_new") == 1)
-            .groupBy(
-                F.timestamp_micros(
-                    F.col("__sc_s") + F.col("__sc_k") * binu
-                ).alias(ts)
-            )
-            .agg(F.count(F.lit(1)).alias("count_"))
-        )
-
-    def _rolling_percentile(
-        self, df: DataFrame, op: RollingPercentileOp, env: _Env
-    ) -> DataFrame:
-        """``evaluate rolling_percentile``: per-bin percentile over the
-        trailing BinsPerWindow bins.  Same bounded explode-to-bins +
-        one groupBy shape as sliding_window_counts; the percentile is
-        EXACT interpolated (matching ``percentiles()``)."""
-        val = op.val_col.parts[0]
-        idx = op.idx_col.parts[0]
-        for name, ident in ((val, op.val_col), (idx, op.idx_col)):
-            if name not in df.columns:
-                raise ParseError(
-                    f"rolling_percentile: unknown column {name!r}",
-                    ident.span,
-                )
-        if op.bin_is_timespan:
-            t = F.unix_micros(F.col(_q(idx)).cast("timestamp"))
-            binw = F.lit(int(op.bin_size)).cast("long")
-            out_bin = lambda b: F.timestamp_micros(b.cast("long"))  # noqa: E731
-        else:
-            t = F.col(_q(idx))
-            binw = F.lit(op.bin_size)
-            out_bin = lambda b: b  # noqa: E731
-        b0 = F.floor(t / binw).cast("long")
-        ks = F.sequence(b0, b0 + F.lit(op.bins_per_window - 1))
-        exploded = df.select(
-            F.col(_q(val)).alias("__rp_v"),
-            F.explode(ks).alias("__rp_k"),
-        ).select(
-            "__rp_v", (F.col("__rp_k") * binw).alias("__rp_bin")
-        )
-        out_name = f"percentile_{val}_{op.percentile:g}"
-        return exploded.groupBy(
-            out_bin(F.col("__rp_bin")).alias(idx)
-        ).agg(
-            F.percentile(F.col("__rp_v"), F.lit(op.percentile / 100.0))
-            .alias(out_name)
-        )
 
     def _ipv4_lookup(self, left: DataFrame, op: Ipv4LookupOp) -> DataFrame:
         """``evaluate ipv4_lookup / ipv6_lookup(Lookup, IpCol, RangeCol
@@ -2961,459 +2317,6 @@ class Compiler:
                 pend_sort[0].expr.span,
             )
         return cur
-
-    def _sequence_detect(
-        self, df: DataFrame, op: SequenceDetectOp, env: _Env
-    ) -> DataFrame:
-        """``evaluate sequence_detect``: greedy-earliest per-key event
-        sequences.  See SequenceDetectOp for the documented divergence
-        from KQL.
-
-        Plan (r9 fusion): ONE shuffle + ONE sort total, n-1 stacked
-        window aggregates over the SAME (keys, ts desc) spec — Spark
-        stacks WindowExecs on one Sort when specs match.  Strictly
-        -after is a RANGE frame ``(unboundedPreceding, -1)`` on the
-        descending micro-timestamp (integral micros make -1 exact).
-        The greedy chain is resolved entirely inside the windows via a
-        struct-min recurrence computed backward from the last step:
-
-            G_{n-1}(row) = min{ struct(ts(e)) : p_{n-1}(e), ts(e) > ts(row) }
-            G_j(row)     = min{ struct(ts(e), G_{j+1}(e)) : p_j(e), … }
-
-        struct ordering is lexicographic, so the min picks the EARLIEST
-        step-j event after the row and carries that event's own greedy
-        tail; ties (same ts per key) carry identical tails, so the tie
-        -break never decides between different chains.  Greedy selection
-        is constraint-independent (a violated step window FAILS the
-        chain, it never tries the next event), so the step/span bounds
-        are pure post-filters on the unpacked (t0..t_{n-1}).  Replaces
-        the r≤8 shape of n-1 full union+window passes (one sort shuffle
-        PER step) — measured 0.93 s → see BENCH notes at sf1.
-
-        r14 constant-shave (VERDICT r13 item 5): the struct fields and
-        post-filters carry PACKED BIGINT epoch-micros, not timestamp
-        values — the sort key ``__sq_tsm`` is materialized once, the
-        LAST step's window is a bare-long min (no 1-field struct), and
-        the step/span post-filters compare longs with no per-row
-        unix_micros casts; only the final select converts back to the
-        timeline's type.  Measured at sf1 (10^6 events, best-of-3,
-        values identical): 1.43 → 1.10 s for the n=3 funnel.  For a
-        timestamp_ntz timeline the micros roundtrip goes through the
-        session zone (identity except inside a spring-forward gap), so
-        that type keeps exactness via the same packed plan + cast.
-
-        Considered and rejected (r8): fusing into one groupBy(keys) +
-        collect_list + HOF chain walk — one shuffle, but the per-chain
-        ``filter``+``array_min`` scan is O(chains x events) per key, a
-        quadratic blowup on hot keys (10^6-event key -> 10^11 element
-        ops).  The stacked-window form stays O(N log N + N·n) per key
-        at any skew, which is the 100 TB-correct trade.  Also rejected
-        (r9): resolving the chain with per-step equi-joins against the
-        windowed events — the join branches re-execute the window sort
-        (ReusedExchange shares only the shuffle) and the dedup+join
-        shuffles cost more than the passes they replaced (measured
-        1.08 s vs 0.56 s at sf0.1)."""
-        from pyspark.sql import Window
-
-        ts_name = op.timeline.parts[0]
-        if ts_name not in df.columns:
-            raise ParseError(
-                f"sequence_detect: unknown timeline column {ts_name!r}",
-                op.timeline.span,
-            )
-        keys = []
-        for k in op.keys:
-            if k.parts[0] not in df.columns:
-                raise ParseError(
-                    f"sequence_detect: unknown key column {k.parts[0]!r}",
-                    k.span,
-                )
-            keys.append(k.parts[0])
-        n = len(op.steps)
-        names = [self._col_name(s) for s in op.steps]
-        TSM = "__sq_tsm"
-        ts_type = dict(df.dtypes)[ts_name]
-        is_ts = ts_type.startswith("timestamp")
-        tsm_in = (
-            F.unix_micros(F.col(_q(ts_name)).cast("timestamp"))
-            if is_ts
-            else F.col(_q(ts_name)).cast("long")
-        )
-        preds = [self.compile_expr(s.expr, env) for s in op.steps]
-        base = df.select(
-            *[F.col(_q(k)) for k in keys],
-            tsm_in.alias(TSM),
-            *[p.alias(f"__sq_p{i}") for i, p in enumerate(preds)],
-        )
-        part = [F.col(_q(k)) for k in keys] if keys else [F.lit(1)]
-        any_p = F.coalesce(F.col("__sq_p0"), F.lit(False))
-        for i in range(1, n):
-            any_p = any_p | F.coalesce(F.col(f"__sq_p{i}"), F.lit(False))
-        wr = (
-            Window.partitionBy(*part)
-            .orderBy(F.col(TSM).desc())
-            .rangeBetween(Window.unboundedPreceding, -1)
-        )
-        evs = base.filter(any_p)
-        # backward struct-min recurrence: __sq_g{j} = greedy tail for
-        # steps j..n-1 starting strictly after this row.  All packed
-        # longs; the last step needs no struct at all.
-        for j in range(n - 1, 0, -1):
-            if j == n - 1:
-                payload = F.col(TSM)
-            else:
-                payload = F.struct(
-                    F.col(TSM).alias("t"),
-                    F.col(f"__sq_g{j + 1}").alias("g"),
-                )
-            evs = evs.withColumn(
-                f"__sq_g{j}",
-                F.min(F.when(F.col(f"__sq_p{j}"), payload)).over(wr),
-            )
-        cur = evs.filter(F.col("__sq_p0"))
-        tcols = [F.col(TSM).alias("__t0")]
-        tail = F.col("__sq_g1") if n > 1 else None
-        for i in range(1, n):
-            expr = tail if i == n - 1 else tail.getField("t")
-            tcols.append(expr.alias(f"__t{i}"))
-            if i < n - 1:
-                tail = tail.getField("g")
-        cur = cur.select(*keys, *tcols)
-        for i in range(1, n):
-            cur = cur.filter(
-                F.col(f"__t{i}").isNotNull()
-                & (F.col(f"__t{i}") <= F.col(f"__t{i - 1}") + op.step_usec)
-            )
-        cur = cur.filter(
-            F.col(f"__t{n - 1}") <= F.col("__t0") + op.span_usec
-        )
-
-        def out(i: int) -> Column:
-            c = F.col(f"__t{i}")
-            if is_ts:
-                c = F.timestamp_micros(c)
-            return c.cast(ts_type).alias(f"{names[i]}_{ts_name}")
-
-        return cur.select(*keys, *[out(i) for i in range(n)])
-
-    def _diffpatterns(self, df: DataFrame, op: DiffPatternsOp) -> DataFrame:
-        """``evaluate diffpatterns``: cohort-diff segment mining — ONE
-        native CUBE with two conditional counts (single shuffle);
-        per-cohort totals broadcast back from a separate 1-row
-        aggregate over the input (same device as
-        ``_diffpatterns_text``).  An empty-partition window over the
-        cube output would funnel up to Π(distinct_i+1) rows through a
-        single task — fine on toy columns, a scale hazard on
-        high-cardinality pattern columns."""
-        split = op.split_col.parts[0]
-        if split not in df.columns:
-            raise ParseError(
-                f"diffpatterns: unknown split column {split!r}",
-                op.split_col.span,
-            )
-        if op.cols:
-            names = [c.parts[0] for c in op.cols]
-            for c, n in zip(op.cols, names):
-                if n not in df.columns:
-                    raise ParseError(
-                        f"diffpatterns: unknown column {n!r}", c.span
-                    )
-        else:  # default: every string column except the split
-            names = [
-                f.name for f in df.schema.fields
-                if f.dataType.simpleString() == "string"
-                and f.name != split
-            ]
-            if not names:
-                raise ParseError(
-                    "diffpatterns: no string columns to mine"
-                    " (list columns explicitly)",
-                    op.span,
-                )
-        if len(names) > 6:
-            raise ParseError(
-                f"diffpatterns: at most 6 columns (got {len(names)};"
-                " the cube grows 2^k)",
-                op.span,
-            )
-        k = len(names)
-        sc = F.col(_q(split)).cast("string")
-        ca = F.sum(
-            F.when(sc == op.value_a, 1).otherwise(0)
-        ).alias("CountA")
-        cb = F.sum(
-            F.when(sc == op.value_b, 1).otherwise(0)
-        ).alias("CountB")
-        pats = [
-            F.when(
-                F.grouping(_q(n)) == 1, F.lit("*")
-            ).otherwise(
-                F.coalesce(F.col(_q(n)).cast("string"), F.lit("(null)"))
-            )
-            for n in names
-        ]
-        agg = df.cube(*[F.col(_q(n)) for n in names]).agg(
-            ca,
-            cb,
-            sum(
-                (F.grouping(_q(n)).cast("int") for n in names),
-                F.lit(0),
-            ).alias("__gsum"),
-            *[p.alias(f"__p_{n}") for n, p in zip(names, pats)],
-        )
-        totals = df.agg(
-            F.sum(F.when(sc == op.value_a, 1).otherwise(0)).alias(
-                "__tot_a"
-            ),
-            F.sum(F.when(sc == op.value_b, 1).otherwise(0)).alias(
-                "__tot_b"
-            ),
-        )
-        pa = F.round(
-            F.col("CountA") * 100.0
-            / F.greatest(F.col("__tot_a"), F.lit(1)),
-            2,
-        )
-        pb = F.round(
-            F.col("CountB") * 100.0
-            / F.greatest(F.col("__tot_b"), F.lit(1)),
-            2,
-        )
-        out = (
-            agg.crossJoin(F.broadcast(totals))
-            .withColumn("PercentA", pa)
-            .withColumn("PercentB", pb)
-            .withColumn(
-                "PercentDiff",
-                F.round(F.abs(F.col("PercentA") - F.col("PercentB")), 2),
-            )
-            .filter(
-                (F.col("__gsum") < k)
-                & (F.col("PercentDiff") >= op.min_diff)
-            )
-            .select(
-                "CountA",
-                "CountB",
-                "PercentA",
-                "PercentB",
-                "PercentDiff",
-                *[F.col(f"__p_{n}").alias(n) for n in names],
-            )
-        )
-        return out
-
-    def _diffpatterns_text(
-        self, df: DataFrame, op: DiffPatternsTextOp
-    ) -> DataFrame:
-        """``evaluate diffpatterns_text``: token-level cohort diff —
-        per-row DISTINCT tokens (narrow), one explode + one
-        groupBy(token) with two conditional counts (hot stopwords
-        partial-aggregate map-side), cohort row totals broadcast back
-        from a 1-row aggregate.  No CUBE (single attribute), no
-        per-token rescans."""
-        split = op.split_col.parts[0]
-        text = op.text_col.parts[0]
-        for name, ident in (
-            (split, op.split_col), (text, op.text_col)
-        ):
-            if name not in df.columns:
-                raise ParseError(
-                    f"diffpatterns_text: unknown column {name!r}",
-                    ident.span,
-                )
-        from .operators.text import tokens
-
-        sc = F.col(_q(split)).cast("string")
-        is_a = (sc == op.value_a).cast("int")
-        is_b = (sc == op.value_b).cast("int")
-        base = df.select(
-            is_a.alias("__dpt_a"),
-            is_b.alias("__dpt_b"),
-            F.array_distinct(tokens(F.col(_q(text)))).alias("__dpt_t"),
-        ).filter((F.col("__dpt_a") == 1) | (F.col("__dpt_b") == 1))
-        totals = base.agg(
-            F.sum("__dpt_a").alias("__tot_a"),
-            F.sum("__dpt_b").alias("__tot_b"),
-        )
-        tok = (
-            base.select(
-                "__dpt_a",
-                "__dpt_b",
-                F.explode("__dpt_t").alias("token"),
-            )
-            .filter(F.col("token") != "")
-            .groupBy("token")
-            .agg(
-                F.sum("__dpt_a").alias("CountA"),
-                F.sum("__dpt_b").alias("CountB"),
-            )
-        )
-        joined = tok.crossJoin(F.broadcast(totals))
-        pa = F.round(
-            F.col("CountA") * 100.0
-            / F.greatest(F.col("__tot_a"), F.lit(1)),
-            2,
-        )
-        pb = F.round(
-            F.col("CountB") * 100.0
-            / F.greatest(F.col("__tot_b"), F.lit(1)),
-            2,
-        )
-        return (
-            joined.withColumn("PercentA", pa)
-            .withColumn("PercentB", pb)
-            .withColumn(
-                "PercentDiff",
-                F.round(
-                    F.abs(F.col("PercentA") - F.col("PercentB")), 2
-                ),
-            )
-            .filter(F.col("PercentDiff") >= op.min_diff)
-            .select(
-                "token", "CountA", "CountB",
-                "PercentA", "PercentB", "PercentDiff",
-            )
-        )
-
-    def _autocluster(self, df: DataFrame, op: AutoclusterOp) -> DataFrame:
-        """``evaluate autocluster/basket``: one native CUBE aggregation
-        (Catalyst grouping sets — partial/final hash agg, a single
-        shuffle).  Coverage percent comes from a broadcast 1-row
-        count aggregate — NOT a window over the cube output, which
-        would funnel up to Π(distinct_i+1) rows through one task on
-        high-cardinality columns (same fix as ``_diffpatterns``)."""
-        if op.cols:
-            names = [c.parts[0] for c in op.cols]
-            for c, n in zip(op.cols, names):
-                if n not in df.columns:
-                    raise ParseError(
-                        f"autocluster: unknown column {n!r}", c.span
-                    )
-        else:  # default: every string column
-            names = [
-                f.name for f in df.schema.fields
-                if f.dataType.simpleString() == "string"
-            ]
-            if not names:
-                raise ParseError(
-                    "autocluster: no string columns to cluster"
-                    " (list columns explicitly)",
-                    op.span,
-                )
-        if len(names) > 6:
-            raise ParseError(
-                f"autocluster: at most 6 columns (got {len(names)};"
-                " the cube grows 2^k)",
-                op.span,
-            )
-        k = len(names)
-        totals = df.agg(F.count(F.lit(1)).alias("__tot_n"))
-        pct = F.round(
-            F.col("SegmentCount") * 100.0
-            / F.greatest(F.col("__tot_n"), F.lit(1)),
-            2,
-        )
-        pats = [
-            F.when(
-                F.grouping(_q(n)) == 1, F.lit("*")
-            ).otherwise(
-                F.coalesce(F.col(_q(n)).cast("string"), F.lit("(null)"))
-            )
-            for n in names
-        ]
-        # grouping() only exists inside the cube agg — materialize the
-        # pattern columns there
-        agg = df.cube(*[F.col(_q(n)) for n in names]).agg(
-            F.count(F.lit(1)).alias("SegmentCount"),
-            sum(
-                (F.grouping(_q(n)).cast("int") for n in names),
-                F.lit(0),
-            ).alias("__gsum"),
-            *[p.alias(f"__p_{n}") for n, p in zip(names, pats)],
-        )
-        out = (
-            agg.crossJoin(F.broadcast(totals))
-            .withColumn("Percent", pct)
-            .filter(
-                (F.col("__gsum") < k)
-                & (F.col("Percent") >= op.min_percent)
-            )
-            .select(
-                "SegmentCount",
-                "Percent",
-                *[F.col(f"__p_{n}").alias(n) for n in names],
-            )
-            .orderBy(
-                F.col("SegmentCount").desc(),
-                *[F.col(_q(n)).asc() for n in names],
-            )
-        )
-        return out
-
-    def _bag_unpack(self, df: DataFrame, op: BagUnpackOp) -> DataFrame:
-        """``evaluate bag_unpack``: one small key-discovery aggregate
-        (distinct JSON keys / map keys, collected to the driver — same
-        shape as pivot's value discovery), then a narrow projection of
-        one extraction per key.  JSON-string bags yield string columns;
-        map bags keep the map's value type."""
-        from pyspark.sql import types as T
-
-        bcol = op.col.parts[0]
-        if bcol not in df.columns:
-            raise ParseError(
-                f"bag_unpack: unknown column {bcol!r}", op.col.span
-            )
-        dtype = df.schema[bcol].dataType
-        if isinstance(dtype, T.MapType):
-            keys_df = df.select(
-                F.explode(F.map_keys(F.col(_q(bcol)))).alias("k")
-            )
-            extract = lambda k: F.element_at(F.col(_q(bcol)), k)  # noqa: E731
-        else:
-            keys_df = df.select(
-                F.explode(
-                    F.json_object_keys(F.col(_q(bcol)).cast("string"))
-                ).alias("k")
-            )
-            extract = lambda k: F.get_json_object(  # noqa: E731
-                F.col(_q(bcol)).cast("string"), f"$.{k}"
-            )
-        others = [c for c in df.columns if c != bcol]
-        if op.schema is not None:
-            # ADX output-schema annotation: static keys/types, no
-            # discovery action — extraction in declared order, cast
-            # to the declared Spark type (same mapping as datatable)
-            from .parser import _DATATABLE_TYPES
-
-            return df.select(
-                *[F.col(_q(c)) for c in others],
-                *[
-                    extract(k)
-                    .cast(_DATATABLE_TYPES[t])
-                    .alias(f"{op.prefix}{k}")
-                    for k, t in op.schema
-                ],
-            )
-        # cap key discovery: a config-like bag has tens of keys; an
-        # adversarial/high-cardinality bag would otherwise stream an
-        # unbounded distinct set to the driver
-        discovered = (
-            keys_df.distinct().limit(BAG_UNPACK_MAX_KEYS + 1).collect()
-        )
-        if len(discovered) > BAG_UNPACK_MAX_KEYS:
-            raise ParseError(
-                f"bag_unpack: more than {BAG_UNPACK_MAX_KEYS} distinct"
-                f" keys in {bcol!r} — refusing to widen the schema"
-                " (filter or project the bag first, or declare the"
-                " output schema: `evaluate bag_unpack(col) :"
-                " (name: type, …)`)",
-                op.col.span,
-            )
-        keys = sorted(r.k for r in discovered)
-        return df.select(
-            *[F.col(_q(c)) for c in others],
-            *[extract(k).alias(f"{op.prefix}{k}") for k in keys],
-        )
 
     def _mv_expand_zip(
         self, df: DataFrame, op: MvExpandOp, env: _Env

@@ -40,13 +40,18 @@ class PqlEngine:
     only the name is removed again; the caller's caches and same-named
     temp views are untouched.
 
+    A data-dependent output schema (schema-less ``evaluate pivot``/
+    ``bag_unpack``, ``diffpatterns``/``autocluster`` without a column
+    list) is discovered inside the one compile: the emitter runs one
+    discovery statement over the same transient views, then emits the
+    final statement with the discovered columns.
+
     Only the SQL backend decides when a query needs the DataFrame
     compiler: when it raises its refusal (``sql_backend.Unsupported`` —
-    ``scan``, multi-output ``facet``/``fork``, schema-less
-    ``pivot``/``bag_unpack``, ``diffpatterns``/``autocluster`` without
-    a column list, ``ipv*_lookup return_unmatched``, ``mv-expand``/
-    ``mv-apply`` over a known map), :meth:`query` compiles once more
-    with :func:`compile_pql` and counts it on :attr:`sql_fallbacks`.
+    ``scan``, multi-output ``facet``/``fork``, ``ipv*_lookup
+    return_unmatched``, ``mv-expand``/``mv-apply`` over a known map),
+    :meth:`query` compiles once more with :func:`compile_pql` and counts
+    it on :attr:`sql_fallbacks`.
     Every other error — a user error, or emitted SQL that fails Spark
     analysis — propagates from the one SQL compile.  :func:`compile_pql`
     stays public: the DataFrame compiler on its own, with zero catalog
@@ -103,7 +108,8 @@ class PqlEngine:
         temp view under a fresh ``__pql_v<N>_<name>`` name (never the
         bare table name — a user's own temp view of that name survives
         untouched) for that one call only; see
-        ``operators._util.sql_with_views``."""
+        ``operators._util.sql_with_views``.  A schema-discovery statement
+        runs over the views named so far with the same lifecycle."""
         from .compiler import externaldata_df
         from .operators._util import sql_with_views
         from .sql_backend import compile_to_sql
@@ -133,6 +139,7 @@ class PqlEngine:
             width=self.spark.sparkContext.defaultParallelism,
             view_name_of=view_name,
             externaldata_view_of=ext_view,
+            frame_of=lambda q: sql_with_views(self.spark, q, views),
         )
         return sql_with_views(self.spark, sql, views)
 
@@ -141,7 +148,10 @@ class PqlEngine:
     ) -> str:
         """Compile to a Spark SQL string (the reference's Compile API
         shape, pql.go:18-30); run it with ``spark.sql`` against the same
-        tables registered as views."""
+        tables registered as views.  A string cannot discover a
+        data-dependent schema, so schema-less ``pivot``/``bag_unpack``
+        and ``diffpatterns``/``autocluster`` without columns raise
+        ``sql_backend.Unsupported`` here; :meth:`query` runs them."""
         from .sql_backend import compile_to_sql
 
         merged = dict(self._params)
@@ -191,6 +201,11 @@ def compile_pql(
     resolver: Resolver,
     params: Mapping[str, object] | None = None,
 ) -> DataFrame:
+    """Compile PQL with the DataFrame compiler alone (the path
+    :meth:`PqlEngine.query` takes on a refusal).  The ``evaluate``
+    plugins the SQL emitter implements run through it: each registers
+    its input as one collision-proof temp view for its statements and
+    drops it at once, so compiling leaves no catalog entries."""
     statements = parse(text)
     compiler = Compiler(
         source=text, resolver=resolver, params=dict(params or {})

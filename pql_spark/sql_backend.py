@@ -22,14 +22,26 @@ right-side duplicates to ``$right.<col>``, JoinInner golden), or Spark
 schemas, whose MAP columns the emitter tracks so ``mv-expand`` over a
 bag is refused instead of emitted as array expansion.
 
+Data-dependent output schemas (schema-less ``evaluate pivot`` and
+``bag_unpack``, ``diffpatterns``/``autocluster`` without a column list)
+need to look at the data or at a mid-pipeline type.  The caller may pass
+``frame_of``, which runs one statement over the query's views; the
+emitter discovers the schema with it and then emits the final statement
+(``PqlEngine.query`` passes it).  Without it these forms are refused.
+
 Refusals: a construct this module cannot express but the DataFrame
 compiler can raises :class:`Unsupported`, wrapped in the usual
-``QueryError``.  ``PqlEngine.query`` compiles such a query again with
-``compile_pql``; every other error is the user's and is final.
+``QueryError``: ``scan``, multi-output ``facet``/``fork`` (see
+``compile_to_sql_multi``), ``ipv*_lookup … return_unmatched``,
+``mv-expand``/``mv-apply`` over a known map, and the four
+data-dependent forms above when no ``frame_of`` is given.
+``PqlEngine.query`` compiles such a query again with ``compile_pql``;
+every other error is the user's and is final.
 """
 
 from __future__ import annotations
 
+import datetime
 from collections.abc import Callable, Mapping, Sequence
 
 from .ast_nodes import (
@@ -154,10 +166,17 @@ __all__ = ["compile_to_sql"]
 ColumnsOf = Callable[[str], Sequence[str]]
 
 
+# bag_unpack key-discovery guardrail: the distinct key set is collected
+# to the driver (like pivot value discovery) — bounded so adversarial
+# high-cardinality bags error instead of OOMing the driver
+BAG_UNPACK_MAX_KEYS = 1000
+
+
 class Unsupported(ParseError):
     """The SQL backend's refusal: a construct it cannot emit but the
-    DataFrame compiler (``engine.compile_pql``) builds.  The only
-    error on which ``PqlEngine.query`` compiles a second time."""
+    DataFrame compiler (``engine.compile_pql``) builds — the list is in
+    the module docstring.  The only error on which ``PqlEngine.query``
+    compiles a second time."""
 
 
 # functions whose result this backend emits as a Spark MAP — an
@@ -226,6 +245,13 @@ def _lit(value: object) -> str:
         return repr(value)
     if isinstance(value, str):
         return _qs(value)
+    if isinstance(value, datetime.datetime):
+        # the instant pyspark's lit() binds: naive values are local time
+        from pyspark.sql.types import TimestampType
+
+        return f"timestamp_micros({TimestampType().toInternal(value)})"
+    if isinstance(value, datetime.date):
+        return f"DATE {_qs(value.isoformat())}"
     raise TypeError(f"cannot bind parameter of type {type(value).__name__}")
 
 
@@ -421,6 +447,7 @@ class _SqlEmitter:
         width: int | None = None,
         view_name_of: ColumnsOf | None = None,
         externaldata_view_of=None,
+        frame_of=None,
     ):
         self.text = source_text
         self.columns_of = columns_of
@@ -435,6 +462,12 @@ class _SqlEmitter:
         # spark.sql call; None (bare to_sql) keeps the honest raise —
         # a standalone SQL string cannot carry reader options
         self.externaldata_view_of = externaldata_view_of
+        # optional SQL → DataFrame callback over the query's views: the
+        # one way the emitter sees data or a mid-pipeline schema (a
+        # data-dependent output schema is discovered with it, then the
+        # statement is emitted with that schema); None (bare to_sql)
+        # refuses those forms with Unsupported
+        self.frame_of = frame_of
         # cluster width for pinned REPARTITION(n) hints (an argless
         # REPARTITION/REBALANCE shuffle is AQE-coalescible, which
         # un-parallelizes expensive parse stages on small byte sizes);
@@ -989,77 +1022,7 @@ class _SqlEmitter:
         if isinstance(op, TopNestedOp):
             return self.emit_top_nested(op, inner, cols)
         if isinstance(op, PivotOp):
-            if op.schema is None:
-                raise Unsupported(
-                    "evaluate pivot without an output-schema"
-                    " annotation is data-dependent — declare it"
-                    " (`evaluate pivot(col[, agg]) : (name: type,"
-                    " …)`); PqlEngine.query / compile_pql discover it"
-                    " on the DataFrame backend",
-                    op.span,
-                )
-            from .parser import _DATATABLE_TYPES
-
-            pcol = op.col.parts[0]
-            if pcol not in cols:
-                raise ParseError(
-                    f"pivot: unknown column {pcol!r}", op.col.span
-                )
-            agg_refs: set[str] = set()
-
-            def _walk(node) -> None:
-                if isinstance(node, Ident) and node.simple:
-                    agg_refs.add(node.parts[0])
-                for child in getattr(node, "__dict__", {}).values():
-                    if isinstance(child, Expr):
-                        _walk(child)
-                    elif isinstance(child, list):
-                        for item in child:
-                            if isinstance(item, Expr):
-                                _walk(item)
-
-            if op.agg is not None:
-                _walk(op.agg)
-            keys = [
-                c for c in cols if c != pcol and c not in agg_refs
-            ]
-            vals = [(n, t) for n, t in op.schema if n not in keys]
-            if not vals:
-                raise ParseError(
-                    "pivot schema: no pivot-value columns (every"
-                    " entry names a group key)",
-                    op.span,
-                )
-            agg_sql = (
-                self.expr(op.agg) if op.agg is not None else "count(1)"
-            )
-            agg_inputs = [
-                c for c in cols if c in agg_refs and c != pcol
-            ]
-            inner_items = ", ".join(
-                [_q(c) for c in (*keys, *agg_inputs)]
-                + [f"CAST({_q(pcol)} AS STRING) AS {_q('__pql_pv')}"]
-            )
-            in_list = ", ".join(
-                f"{_qs(n)} AS {_q(n)}" for n, _ in vals
-            )
-            pivoted = (
-                f"SELECT * FROM (SELECT {inner_items} FROM {inner}"
-                f" AS {_q('__pql_pvt')}) PIVOT ({agg_sql} FOR"
-                f" {_q('__pql_pv')} IN ({in_list}))"
-            )
-            out_items = ", ".join(
-                [_q(k) for k in keys]
-                + [
-                    f"CAST({_q(n)} AS {_DATATABLE_TYPES[t]}) AS {_q(n)}"
-                    for n, t in vals
-                ]
-            )
-            return (
-                f"SELECT {out_items} FROM ({pivoted})"
-                f" AS {_q('__pql_pvo')}",
-                [*keys, *[n for n, _ in vals]],
-            )
+            return self._emit_pivot(op, inner, cols)
         if isinstance(op, MakeGraphOp):
             src, dst = op.src.parts[0], op.dst.parts[0]
             for name, ident in ((src, op.src), (dst, op.dst)):
@@ -1085,15 +1048,6 @@ class _SqlEmitter:
         if isinstance(op, GraphMatchOp):
             return self._emit_graph_match(op)
         if isinstance(op, BagUnpackOp):
-            if op.schema is None:
-                raise Unsupported(
-                    "evaluate bag_unpack without an output-schema"
-                    " annotation is data-dependent — declare it"
-                    " (`evaluate bag_unpack(col) : (name: type, …)`);"
-                    " PqlEngine.query / compile_pql discover it on the"
-                    " DataFrame backend",
-                    op.span,
-                )
             from .parser import _DATATABLE_TYPES
 
             bcol = op.col.parts[0]
@@ -1101,6 +1055,8 @@ class _SqlEmitter:
                 raise ParseError(
                     f"bag_unpack: unknown column {bcol!r}", op.col.span
                 )
+            if op.schema is None:
+                return self._emit_bag_unpack_discovered(op, inner, cols)
             # The emitter has no schema to tell a MAP bag from a
             # JSON-string bag, so the extraction is TYPE-AGNOSTIC
             # (r12 — the old CAST(col AS STRING) returned Spark's
@@ -1780,19 +1736,7 @@ class _SqlEmitter:
                     f"diffpatterns: unknown split column {split!r}",
                     op.split_col.span,
                 )
-            if not op.cols:
-                raise Unsupported(
-                    "diffpatterns: list the columns explicitly in the"
-                    " SQL backend (no schema to pick string columns"
-                    " from)",
-                    op.span,
-                )
-            names = [c.parts[0] for c in op.cols]
-            for c, n in zip(op.cols, names):
-                if n not in cols:
-                    raise ParseError(
-                        f"diffpatterns: unknown column {n!r}", c.span
-                    )
+            names = self._pattern_cols(op, sql, cols, "diffpatterns", split)
             if len(names) > 6:
                 raise ParseError(
                     f"diffpatterns: at most 6 columns (got {len(names)};"
@@ -1859,19 +1803,7 @@ class _SqlEmitter:
                  "PercentDiff", *names],
             )
         if isinstance(op, AutoclusterOp):
-            if not op.cols:
-                raise Unsupported(
-                    "autocluster: list the columns explicitly in the"
-                    " SQL backend (no schema to pick string columns"
-                    " from)",
-                    op.span,
-                )
-            names = [c.parts[0] for c in op.cols]
-            for c, n in zip(op.cols, names):
-                if n not in cols:
-                    raise ParseError(
-                        f"autocluster: unknown column {n!r}", c.span
-                    )
+            names = self._pattern_cols(op, sql, cols, "autocluster")
             if len(names) > 6:
                 raise ParseError(
                     f"autocluster: at most 6 columns (got {len(names)};"
@@ -1921,8 +1853,9 @@ class _SqlEmitter:
                 ["SegmentCount", "Percent", *names],
             )
         if isinstance(op, SequenceDetectOp):
-            # Exact SQL twin of compiler._sequence_detect's r9 FUSED
-            # plan: ONE shuffle + ONE sort, n-1 stacked struct-min
+            # The r9 FUSED plan (the one implementation; the
+            # DataFrame compiler calls it too): ONE shuffle + ONE
+            # sort, n-1 stacked struct-min
             # window aggregates over the same (keys, ts desc) spec —
             # Catalyst stacks the WindowExecs on one Sort when specs
             # match.  Replaces the r≤11 N-1 union + running-min form
@@ -1931,8 +1864,6 @@ class _SqlEmitter:
             # and the union form's n-1 sort shuffles were the
             # unattributed 5.3× sf1 scaling row (BENCH_SCALING_r11
             # 2.82 s vs 0.53 s twin; PERF_NOTES_r12 decomposition).
-            # Equal results on both backends are pinned by
-            # test_sequence_detect_sql_backend.
             ts = op.timeline.parts[0]
             if ts not in cols:
                 raise ParseError(
@@ -2350,6 +2281,215 @@ class _SqlEmitter:
                 order.append(name)
         items = ", ".join(elems.get(c, _q(c)) for c in order)
         return f"SELECT {items} FROM ({mid})", order
+
+    def _frame(self, sql: str, form: str, declare: str, span: Span):
+        """The frame of ``sql`` over the query's views (``frame_of``),
+        for a form whose output schema depends on the data or on a
+        mid-pipeline type.  A standalone SQL string has no data to look
+        at, so without the hook the form is refused."""
+        if self.frame_of is None:
+            raise Unsupported(
+                f"{form} is data-dependent — declare it ({declare}), or"
+                " run the query with PqlEngine.query, which discovers it",
+                span,
+            )
+        return self.frame_of(sql)
+
+    def _emit_pivot(
+        self, op: PivotOp, inner: str, cols: list[str]
+    ) -> tuple[str, list[str]]:
+        """``evaluate pivot``: Spark's ``PIVOT`` over the pivot column's
+        STRING form.  Group keys are every other column except the
+        aggregate's inputs (KQL pivot semantics).  Declared values come
+        from the schema annotation and cast to their declared types;
+        without one the values are discovered first with one DISTINCT
+        query, sorted and capped like ``groupBy().pivot(col)``
+        (``spark.sql.pivotMaxValues``), and Spark infers the cells'
+        types.  A NULL value is a column named ``null``."""
+        from .parser import _DATATABLE_TYPES
+
+        pcol = op.col.parts[0]
+        if pcol not in cols:
+            raise ParseError(
+                f"pivot: unknown column {pcol!r}", op.col.span
+            )
+        agg_refs: set[str] = set()
+
+        def _walk(node) -> None:
+            if isinstance(node, Ident) and node.simple:
+                agg_refs.add(node.parts[0])
+            for child in getattr(node, "__dict__", {}).values():
+                if isinstance(child, Expr):
+                    _walk(child)
+                elif isinstance(child, list):
+                    for item in child:
+                        if isinstance(item, Expr):
+                            _walk(item)
+
+        if op.agg is not None:
+            _walk(op.agg)
+        keys = [c for c in cols if c != pcol and c not in agg_refs]
+        # (output name, IN-list value, declared type or None)
+        if op.schema is not None:
+            vals = [
+                (n, _qs(n), _DATATABLE_TYPES[t])
+                for n, t in op.schema
+                if n not in keys
+            ]
+            if not vals:
+                raise ParseError(
+                    "pivot schema: no pivot-value columns (every"
+                    " entry names a group key)",
+                    op.span,
+                )
+        else:
+            pc = _q(pcol)
+            frame = self._frame(
+                f"SELECT CAST({pc} AS STRING), {pc} FROM (SELECT"
+                f" DISTINCT {pc} FROM {inner} AS {_q('__pql_pvd')})"
+                " ORDER BY 2",
+                "evaluate pivot without an output-schema annotation",
+                "`evaluate pivot(col[, agg]) : (name: type, …)`",
+                op.span,
+            )
+            cap = int(
+                frame.sparkSession.conf.get("spark.sql.pivotMaxValues")
+            )
+            found = frame.limit(cap + 1).collect()
+            if len(found) > cap:
+                raise ParseError(
+                    f"pivot: more than {cap} distinct values in"
+                    f" {pcol!r} (spark.sql.pivotMaxValues) — filter"
+                    " first, or declare the output schema: `evaluate"
+                    " pivot(col[, agg]) : (name: type, …)`",
+                    op.col.span,
+                )
+            vals = [
+                ("null", "NULL", None) if v is None else (v, _qs(v), None)
+                for v, _ in found
+            ]
+            if not vals:  # empty input: the keys' (empty) groups
+                if not keys:
+                    raise ParseError(
+                        "pivot: empty input and no group keys — no"
+                        " output columns",
+                        op.span,
+                    )
+                ks = ", ".join(_q(k) for k in keys)
+                return f"SELECT {ks} FROM {inner} GROUP BY {ks}", keys
+        agg_sql = self.expr(op.agg) if op.agg is not None else "count(1)"
+        agg_inputs = [c for c in cols if c in agg_refs and c != pcol]
+        inner_items = ", ".join(
+            [_q(c) for c in (*keys, *agg_inputs)]
+            + [f"CAST({_q(pcol)} AS STRING) AS {_q('__pql_pv')}"]
+        )
+        in_list = ", ".join(f"{v} AS {_q(n)}" for n, v, _ in vals)
+        pivoted = (
+            f"SELECT * FROM (SELECT {inner_items} FROM {inner}"
+            f" AS {_q('__pql_pvt')}) PIVOT ({agg_sql} FOR"
+            f" {_q('__pql_pv')} IN ({in_list}))"
+        )
+        out_items = ", ".join(
+            [_q(k) for k in keys]
+            + [
+                f"CAST({_q(n)} AS {t}) AS {_q(n)}" if t else _q(n)
+                for n, _, t in vals
+            ]
+        )
+        return (
+            f"SELECT {out_items} FROM ({pivoted}) AS {_q('__pql_pvo')}",
+            [*keys, *[n for n, _, _ in vals]],
+        )
+
+    def _emit_bag_unpack_discovered(
+        self, op: BagUnpackOp, inner: str, cols: list[str]
+    ) -> tuple[str, list[str]]:
+        """``evaluate bag_unpack`` without a schema annotation: the
+        bag's type decides the key source (a MAP's keys, else the JSON
+        object keys of its string form), one capped DISTINCT query
+        discovers the keys, and each sorted key becomes one extraction.
+        A MAP bag keeps the map's value type; a JSON bag gives string
+        columns."""
+        bcol = op.col.parts[0]
+        b = _q(bcol)
+        frame = self._frame(
+            f"SELECT {b} FROM {inner} AS {_q('__pql_bud')}",
+            "evaluate bag_unpack without an output-schema annotation",
+            "`evaluate bag_unpack(col) : (name: type, …)`",
+            op.span,
+        )
+        is_map = frame.schema[0].dataType.typeName() == "map"
+        keys_of = (
+            f"map_keys({b})" if is_map
+            else f"json_object_keys(CAST({b} AS STRING))"
+        )
+        # capped: a config-like bag has tens of keys; an adversarial or
+        # high-cardinality bag would otherwise stream an unbounded
+        # distinct set to the driver
+        found = self.frame_of(
+            "SELECT DISTINCT __pql_buk FROM (SELECT"
+            f" explode({keys_of}) AS __pql_buk FROM {inner}"
+            f" AS {_q('__pql_bud')}) LIMIT {BAG_UNPACK_MAX_KEYS + 1}"
+        ).collect()
+        if len(found) > BAG_UNPACK_MAX_KEYS:
+            raise ParseError(
+                f"bag_unpack: more than {BAG_UNPACK_MAX_KEYS} distinct"
+                f" keys in {bcol!r} — refusing to widen the schema"
+                " (filter or project the bag first, or declare the"
+                " output schema: `evaluate bag_unpack(col) :"
+                " (name: type, …)`)",
+                op.col.span,
+            )
+        others = [c for c in cols if c != bcol]
+        items, names = [_q(c) for c in others], list(others)
+        for (k,) in sorted(found):
+            get = (
+                f"element_at({b}, {_lit(k)})" if is_map
+                else f"get_json_object(CAST({b} AS STRING),"
+                f" {_qs(f'$.{k}')})"
+            )
+            names.append(f"{op.prefix}{k}")
+            items.append(f"{get} AS {_q(names[-1])}")
+        if not items:
+            raise ParseError(
+                f"bag_unpack: {bcol!r} holds no keys and is the only"
+                " column — no output columns",
+                op.span,
+            )
+        return f"SELECT {', '.join(items)} FROM {inner}", names
+
+    def _pattern_cols(
+        self, op, sql: str, cols: list[str], form: str,
+        split: str | None = None,
+    ) -> list[str]:
+        """The columns ``diffpatterns``/``autocluster`` mine: the listed
+        ones, else every STRING column of the input except the split
+        column, read from the analysed input schema (no job runs)."""
+        if op.cols:
+            names = [c.parts[0] for c in op.cols]
+            for c, n in zip(op.cols, names):
+                if n not in cols:
+                    raise ParseError(
+                        f"{form}: unknown column {n!r}", c.span
+                    )
+            return names
+        fields = self._frame(
+            sql,
+            f"evaluate {form} without a column list",
+            "list the columns to mine",
+            op.span,
+        ).schema.fields
+        names = [
+            f.name for f in fields
+            if f.dataType.simpleString() == "string" and f.name != split
+        ]
+        if not names:
+            raise ParseError(
+                f"{form}: no string columns to mine (list columns"
+                " explicitly)",
+                op.span,
+            )
+        return names
 
     def _emit_partition(
         self, op: PartitionOp, inner: str, cols: list[str]
@@ -5765,6 +5905,7 @@ def _prepare_emitter(
     width: int | None = None,
     view_name_of: ColumnsOf | None = None,
     externaldata_view_of=None,
+    frame_of=None,
 ) -> tuple[_SqlEmitter, TabularExpr]:
     columns_of: ColumnsOf = (
         columns if callable(columns) else lambda n: columns[n]
@@ -5780,7 +5921,7 @@ def _prepare_emitter(
         )
     emitter = _SqlEmitter(
         text, columns_of, dict(params or {}), width, view_name_of,
-        externaldata_view_of,
+        externaldata_view_of, frame_of,
     )
     for stmt in statements:
         if stmt is tabular[0]:
@@ -5805,6 +5946,7 @@ def compile_to_sql(
     width: int | None = None,
     view_name_of: ColumnsOf | None = None,
     externaldata_view_of=None,
+    frame_of=None,
 ) -> str:
     """Compile one PQL query to a Spark SQL string.
 
@@ -5822,10 +5964,16 @@ def compile_to_sql(
     maps an ``externaldata`` source with reader options (csv/json) to a
     temp-view name the caller promises to register — the engine's
     device for serving option-bearing formats on the SQL path.
+    ``frame_of`` (optional) runs one SQL statement over those views and
+    returns its DataFrame: with it, schema-less ``pivot``/``bag_unpack``
+    discover their output columns with one query each, and
+    ``diffpatterns``/``autocluster`` without a column list read the
+    input's string columns; without it they raise :class:`Unsupported`.
     """
     try:
         emitter, expr = _prepare_emitter(
-            text, columns, params, width, view_name_of, externaldata_view_of
+            text, columns, params, width, view_name_of,
+            externaldata_view_of, frame_of,
         )
         if expr.operators and isinstance(
             expr.operators[-1], (FacetOp, ForkOp)

@@ -12,7 +12,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from pql_spark import PqlEngine, compile_to_sql
+from pql_spark import compile_pql, compile_to_sql
 
 NUM_COLS = ["a", "b"]
 STR_COLS = ["s"]
@@ -137,10 +137,10 @@ def fuzz_table(spark):
 @settings(max_examples=40, deadline=None)
 @given(q=pipeline())
 def test_backends_agree(spark, fuzz_table, q):
-    engine = PqlEngine(spark, resolver=lambda n: fuzz_table)
     fuzz_table.createOrReplaceTempView("T")
     df_rows = sorted(
-        (tuple(r) for r in engine.query(q).collect()), key=str
+        (tuple(r) for r in compile_pql(q, lambda n: fuzz_table).collect()),
+        key=str,
     )
     sql = compile_to_sql(q, lambda n: fuzz_table.columns)
     sql_rows = sorted(

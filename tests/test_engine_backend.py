@@ -3,11 +3,14 @@ refusal.
 
 The query is compiled to one Spark SQL string and run with one
 ``spark.sql`` call over TRANSIENT collision-proof temp views (a user's
-own same-named temp view survives untouched), with params bound.  Only
-when the SQL backend raises its refusal (``sql_backend.Unsupported``)
-does ``query`` compile again with ``engine.compile_pql``, exactly once,
-and count it on ``sql_fallbacks``.  User errors and emitted SQL that
-fails Spark analysis propagate from the one SQL compile.
+own same-named temp view survives untouched), with params bound.  A
+data-dependent output schema (schema-less pivot/bag_unpack,
+diffpatterns/autocluster without columns) is discovered inside that
+compile.  Only when the SQL backend raises its refusal
+(``sql_backend.Unsupported``) does ``query`` compile again with
+``engine.compile_pql``, exactly once, and count it on
+``sql_fallbacks``.  User errors and emitted SQL that fails Spark
+analysis propagate from the one SQL compile.
 """
 
 from __future__ import annotations
@@ -93,11 +96,6 @@ REFUSALS = [
     " t | count",
     "EV | facet by user with ( summarize n = count() )",
     "EV | fork a = ( where value > 10 | count ) ( count )",
-    "M | evaluate bag_unpack(bag)",
-    "EV | project event_id, user | evaluate pivot(user)",
-    'EV | extend cohort = iff(value > 25, "A", "B")'
-    ' | evaluate diffpatterns(cohort, "A", "B")',
-    "EV | evaluate autocluster(5)",
     "M | evaluate ipv4_lookup(NETS, ip, cidr, return_unmatched)",
     "M | mv-expand mp",
     'M | extend m = bag_pack("x", 1, "y", 2) | mv-expand m',
@@ -121,6 +119,142 @@ def test_refusal_compiles_once_on_the_dataframe_path(
     got = eng.query(q)
     assert pql_calls == [q] and eng.sql_fallbacks == 1
     assert _rows(got) == _rows(compile_pql(q, tables.__getitem__))
+
+
+def _pql_v_views(spark) -> list[str]:
+    return [
+        t.name for t in spark.catalog.listTables()
+        if t.name.startswith("__pql_v")
+    ]
+
+
+_COHORTS = (
+    'EV | extend cohort = iff(value > 25, "A", "B"),'
+    ' team = iff(event_id % 2 == 0, "even", "odd")'
+)
+# schema-less form → a reference built without discovery
+DISCOVERED = {
+    "EV | project event_id, user | evaluate pivot(user)": lambda t, q: (
+        t["EV"].select("event_id", "user").groupBy("event_id")
+        .pivot("user").agg(F.count(F.lit(1)))
+    ),
+    "M | evaluate bag_unpack(bag)": lambda t, q: q(
+        "M | evaluate bag_unpack(bag) : (k: string)"
+    ),
+    _COHORTS + ' | evaluate diffpatterns(cohort, "A", "B", 0)': lambda t, q: q(
+        _COHORTS + ' | evaluate diffpatterns(cohort, "A", "B", 0, user, team)'
+    ),
+    "EV | evaluate autocluster(5)": lambda t, q: q(
+        "EV | evaluate autocluster(5, user)"
+    ),
+}
+
+
+@pytest.mark.parametrize("q", list(DISCOVERED))
+def test_discovered_schema_stays_on_sql(spark, tables, pql_calls, q):
+    eng = PqlEngine(spark, resolver=tables)
+    got = eng.query(q)
+    assert pql_calls == [] and eng.sql_fallbacks == 0
+    want = DISCOVERED[q](tables, PqlEngine(spark, resolver=tables).query)
+    assert _rows(got) == _rows(want) and got.count() > 0
+    assert _pql_v_views(spark) == []
+
+
+@pytest.fixture(scope="module")
+def pivots(spark):
+    return spark.createDataFrame(
+        [(1, "a", 10), (1, None, 2), (2, "b", 1), (2, "a", 10),
+         (3, None, 2), (3, "c", 10)],
+        "k int, p string, n long",
+    )
+
+
+@pytest.mark.parametrize("col", ["p", "n"])  # a NULL value; numeric order
+def test_pivot_edge_values_match_spark_pivot(spark, pivots, pql_calls, col):
+    keep = "k, p" if col == "p" else "k, n"
+    eng = PqlEngine(spark, resolver={"P": pivots})
+    got = eng.query(f"P | project {keep} | evaluate pivot({col})")
+    want = pivots.select("k", col).groupBy("k").pivot(col).agg(
+        F.count(F.lit(1))
+    )
+    assert got.columns == want.columns
+    assert _rows(got) == _rows(want)
+    assert pql_calls == [] and eng.sql_fallbacks == 0
+
+
+def test_pivot_over_max_values_is_an_error(spark, pivots, pql_calls):
+    key = "spark.sql.pivotMaxValues"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        eng = PqlEngine(spark, resolver={"P": pivots})
+        with pytest.raises(
+            QueryError, match="more than 2 distinct values in 'n'"
+        ):
+            eng.query("P | project k, n | evaluate pivot(n)")
+        # exactly at the cap is fine: p has a, b, c and NULL
+        spark.conf.set(key, "4")
+        assert eng.query("P | evaluate pivot(p)").columns == [
+            "k", "n", "null", "a", "b", "c"
+        ]
+    finally:
+        spark.conf.set(key, old)
+    assert pql_calls == [] and eng.sql_fallbacks == 0
+
+
+def test_failed_discovery_leaves_no_views(spark, tables, monkeypatch):
+    import pql_spark.sql_backend as sb
+
+    monkeypatch.setattr(sb, "BAG_UNPACK_MAX_KEYS", 1)
+    eng = PqlEngine(spark, resolver=tables)
+    with pytest.raises(QueryError, match="more than 1 distinct keys"):
+        eng.query("M | evaluate bag_unpack(mp)")
+    with pytest.raises(QueryError, match="more than 1 distinct keys"):
+        compile_pql("M | evaluate bag_unpack(mp)", tables.__getitem__)
+    assert _pql_v_views(spark) == []
+
+
+def test_to_sql_refuses_discovery_and_names_the_engine(spark, tables):
+    eng = PqlEngine(spark, resolver=tables)
+    for q in DISCOVERED:
+        with pytest.raises(QueryError, match="PqlEngine.query") as ei:
+            eng.to_sql(q)
+        assert [type(e) for e in ei.value.errors] == [Unsupported]
+
+
+@pytest.fixture(scope="module")
+def sessions(spark):
+    return spark.sql(
+        "SELECT id % 4 AS user_id, TIMESTAMP '2024-01-01 06:00:00'"
+        " + make_interval(0, 0, 0, CAST(id * 7 % 23 AS INT),"
+        " CAST(id % 5 AS INT)) AS ts FROM range(60)"
+    )
+
+
+def test_fallback_plugins_see_the_compilers_scope(
+    spark, sessions, pql_calls
+):
+    # fork still falls back; its branches' plugins run on the SQL
+    # emitter with the compiler's toscalar let and param in scope
+    from datetime import datetime
+
+    lets = "let lo = toscalar(S | summarize min(ts));"
+    plugin = "evaluate session_count(user_id, ts, lo, hi, 1d, 3d)"
+    branches = {"a": plugin, "b": f"where user_id > 1 | {plugin}"}
+    params = {"hi": datetime(2024, 1, 20)}
+    eng = PqlEngine(spark, resolver={"S": sessions})
+    res = eng.query(
+        f"{lets} S | fork "
+        + " ".join(f"{k} = ( {v} )" for k, v in branches.items()),
+        params=params,
+    )
+    assert eng.sql_fallbacks == 1 and len(pql_calls) == 1
+    for name, branch in branches.items():
+        alone = eng.query(f"{lets} S | {branch}", params=params)
+        assert _rows(res[name]) == _rows(alone)
+        assert alone.count() > 0
+    assert eng.sql_fallbacks == 1
+    assert _pql_v_views(spark) == []
 
 
 @pytest.mark.parametrize("q", BOUND_MAPS)

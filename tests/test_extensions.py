@@ -583,7 +583,7 @@ def test_evaluate_pivot(spark):
     assert out[2].a == 12.0
     with pytest.raises(QueryError, match="unknown evaluate plugin"):
         eng.query("T | evaluate no_such_plugin(p)")
-    with pytest.raises(QueryError, match="DataFrame backend"):
+    with pytest.raises(QueryError, match="PqlEngine.query"):
         compile_to_sql("T | evaluate pivot(p)", {"T": ["k", "p", "v"]})
 
 
@@ -1298,10 +1298,10 @@ def test_mv_expand_multi_map_rejected(spark):
 
 
 def test_bag_unpack_key_cap(spark, monkeypatch):
-    import pql_spark.compiler as C
+    import pql_spark.sql_backend as sb
     from pql_spark import PqlEngine, QueryError
 
-    monkeypatch.setattr(C, "BAG_UNPACK_MAX_KEYS", 3)
+    monkeypatch.setattr(sb, "BAG_UNPACK_MAX_KEYS", 3)
     rows = [(i, '{"k%d": 1}' % i) for i in range(5)]
     df = spark.createDataFrame(rows, "id long, bag string")
     eng = PqlEngine(spark, resolver={"B": df})

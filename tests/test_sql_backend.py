@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from pql_spark import PqlEngine, compile_to_sql
+from pql_spark import PqlEngine, compile_pql, compile_to_sql
 
 from .conftest import REFERENCE_TESTDATA, SF_SMOKE
 from .test_goldens import _golden_cases, _load_params
@@ -44,16 +44,14 @@ def test_sql_backend_matches_dataframe_backend(spark, sf_views, name):
     import __spark_entry__ as entrymod
 
     text = entrymod.PQL_QUERIES[name][0]
-    if (
-        "evaluate pivot" in text
-        # discovery-mode bag_unpack is data-dependent; the annotated
-        # form (": (") compiles on both backends
-        or ("evaluate bag_unpack" in text and ") : (" not in text)
-        or "| scan " in text
+    if "| scan " in text:
+        pytest.skip("scan compiles on the DataFrame backend only")
+    if "evaluate pivot" in text or (
+        # the annotated form (": (") has a static schema
+        "evaluate bag_unpack" in text and ") : (" not in text
     ):
-        pytest.skip("data-dependent schema (DataFrame backend only)")
-    engine = PqlEngine(spark, resolver=sf_views)
-    df_rows = _rows(engine.query(text))
+        pytest.skip("data-dependent schema: a bare SQL string refuses it")
+    df_rows = _rows(compile_pql(text, sf_views))
     sql = compile_to_sql(text, lambda n: sf_views(n).columns)
     sql_rows = _rows(spark.sql(sql))
     assert sql_rows == df_rows
