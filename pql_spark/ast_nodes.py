@@ -470,13 +470,13 @@ class ScanOp(Op):
     assignments), the same visibility row-precomputed values get.
 
     Execution: row-only step predicates and assignment values are
-    evaluated as Catalyst columns (JVM/codegen); var-referencing
+    columns of one SQL work statement (JVM/codegen); var-referencing
     expressions are split — maximal var-free subtrees become extra
-    Catalyst columns, and only a tiny comparison/arithmetic skeleton
-    over (vars, those columns) runs interpreted per candidate row
-    inside the Arrow-batched ``applyInPandas`` automaton, which
-    already holds the per-attempt state.  One shuffle on the group
-    keys.  DataFrame backend only.
+    columns, and only a tiny comparison/arithmetic skeleton over
+    (vars, those columns) runs interpreted per candidate row inside
+    the Arrow-batched ``applyInPandas`` automaton, which already holds
+    the per-attempt state.  One shuffle on the group keys.  Needs a
+    frame, so ``PqlEngine.query`` runs it and bare ``to_sql`` refuses.
     """
 
     by: list[Ident]

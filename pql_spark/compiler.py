@@ -119,36 +119,21 @@ from .ast_nodes import (
 )
 from .lexer import Span
 from .parser import ParseError, QueryError
+from .sql_backend import MultiResult, externaldata_df
 
 Resolver = Callable[[str], DataFrame]
 
 _BUILTIN_IDENTS = {"true": True, "false": False}  # pql.go:557-561
 
-# `evaluate` plugins whose one implementation is the SQL emitter's
-# (``Compiler._via_sql``)
+# `evaluate` plugins and ``scan``, whose one implementation is the SQL
+# emitter's (``Compiler._via_sql``)
 _EMITTED_PLUGINS = (
-    PivotOp, BagUnpackOp, SequenceDetectOp, AutoclusterOp,
+    ScanOp, PivotOp, BagUnpackOp, SequenceDetectOp, AutoclusterOp,
     DiffPatternsOp, DiffPatternsTextOp, SlidingWindowCountsOp,
     ActivityCountsMetricsOp, NewActivityMetricsOp, FunnelSequenceOp,
     FunnelCompletionOp, ActiveUsersCountOp, ActivityEngagementOp,
     SessionCountOp, RollingPercentileOp,
 )
-
-
-class MultiResult(dict):
-    """Ordered ``name → DataFrame`` mapping returned by multi-output
-    operators (``facet`` / ``fork``).
-
-    Each entry is an independent lazy DataFrame over the same compiled
-    input plan.  Collecting several outputs re-executes the shared
-    prefix once per action (Spark has no cross-action plan sharing) —
-    callers iterating every output should persist the input themselves
-    first (the library caches nothing), or write outputs in one
-    ``foreachBatch``.
-    """
-
-    def __repr__(self) -> str:  # pragma: no cover - debugging aid
-        return f"MultiResult({list(self)})"
 
 
 def _expand_col_patterns(
@@ -180,26 +165,6 @@ def _expand_col_patterns(
 def _q(name: str) -> str:
     """Backtick-escape a column/alias name for F.col()."""
     return "`" + name.replace("`", "``") + "`"
-
-
-def externaldata_df(spark, src: "ExternalDataSource") -> DataFrame:
-    """Build the ``externaldata`` scan DataFrame: explicit declared
-    schema (no inference pass), format/options passed through to the
-    Spark reader.  Shared by the DataFrame compiler and the engine's
-    SQL path (which registers the result as a transient temp view so
-    option-bearing formats like csv/json work on the batched
-    ``spark.sql`` plan too)."""
-    from .parser import _DATATABLE_TYPES
-
-    opts = dict(src.options)
-    fmt = opts.pop("format", "csv")
-    schema = ", ".join(
-        f"`{n}` {_DATATABLE_TYPES[t]}" for n, t in src.schema
-    )
-    return (
-        spark.read.format(fmt).schema(schema).options(**opts)
-        .load(list(src.uris))
-    )
 
 
 def literal_lookup_prefixes(
@@ -865,8 +830,6 @@ class Compiler:
                         self.lets[pname] = prev
         if isinstance(op, PartitionOp):
             return self._partition(df, op)
-        if isinstance(op, ScanOp):
-            return self._scan(df, op)
         if isinstance(op, GetSchemaOp):
             rows = [
                 (f.name, i, f.dataType.simpleString())
@@ -1046,14 +1009,15 @@ class Compiler:
         raise ParseError(f"unsupported operator {type(op).__name__}", op.span)
 
     def _via_sql(self, df: DataFrame, op: Op) -> DataFrame:
-        """Run one ``evaluate`` plugin through the SQL emitter, its one
-        implementation.  ``df`` becomes one collision-proof view (a
-        table the plugin's expressions name, e.g. in a ``toscalar``,
-        one more); the emitter sees the compiler's params, lets,
-        let-functions and last sort; the plugin's statement — and a
-        schema-discovery statement before it, if the plugin needs one
-        — runs over those views, which are dropped right after each
-        statement (``operators._util.sql_with_views``)."""
+        """Run one ``evaluate`` plugin or ``scan`` through the SQL
+        emitter, its one implementation.  ``df`` becomes one
+        collision-proof view (a table the plugin's expressions name,
+        e.g. in a ``toscalar``, one more; a frame the emitter builds,
+        such as scan's kernel output, one more); the emitter sees the
+        compiler's params, lets, let-functions and last sort; the
+        operator's statement — and a discovery or work statement before
+        it, if it needs one — runs over those views, which are dropped
+        right after each statement (``operators._util.sql_with_views``)."""
         from uuid import uuid4
 
         from .operators._util import sql_with_views
@@ -1070,12 +1034,18 @@ class Compiler:
         def frame_of(sql: str) -> DataFrame:
             return sql_with_views(spark, sql, views)
 
+        def view_of(build) -> str:
+            name = f"{uid}f{len(views)}"
+            views[name] = build(spark)
+            return name
+
         emitter = _SqlEmitter(
             self.source,
             lambda name: self._resolve_table(name, op.span).schema,
             self.params,
             width=spark.sparkContext.defaultParallelism,
             view_name_of=table_view,
+            view_of=view_of,
             frame_of=frame_of,
         )
         emitter.let_funcs = dict(self.let_funcs)
@@ -1737,510 +1707,6 @@ class Compiler:
             key_names.append(kname)
             out_names.extend((kname, aname))
         return sel.select(*[F.col(_q(n)) for n in out_names])
-
-    def _scan(self, df: DataFrame, op: ScanOp) -> DataFrame:
-        """Simplified KQL ``scan``: funnel/sequence matching.
-
-        The step predicates are ordinary Catalyst boolean expressions —
-        evaluated JVM-side with whole-stage codegen BEFORE any Python is
-        involved — so the Arrow-batched ``applyInPandas`` kernel only
-        runs a linear automaton over per-group boolean arrays (numpy).
-        One shuffle on the group keys; group order is restored inside
-        the kernel with a stable sort on the scan's order terms, so the
-        result is deterministic on any partitioning.
-        """
-        import pandas as pd
-
-        from pyspark.sql import types as T
-
-        # declared-var rebuild dtypes: Spark integral/boolean types map
-        # to pandas NULLABLE extension arrays so a NULL assignment value
-        # survives the float64+NaN Arrow representation (see run_group)
-        _SCAN_NULLABLE_DTYPES = {
-            T.ByteType: "Int8",
-            T.ShortType: "Int16",
-            T.IntegerType: "Int32",
-            T.LongType: "Int64",
-            T.BooleanType: "boolean",
-        }
-
-        if not op.order:
-            if self._last_sort is None:
-                raise ParseError(
-                    "scan needs 'order by' (inline or a preceding sort)",
-                    op.span,
-                )
-            order_terms = self._last_sort
-        else:
-            order_terms = op.order
-        env = _Env(df=df)
-        by_names = [i.parts[0] for i in op.by]
-        for b in by_names:
-            if b not in df.columns:
-                raise ParseError(
-                    f"scan by: unknown column {b!r}", op.span
-                )
-        # order terms must be plain columns (the kernel re-sorts the
-        # pandas frame by NAME); computed terms can be extended first
-        order_names: list[str] = []
-        ascending: list[bool] = []
-        for t in order_terms:
-            if not (isinstance(t.expr, Ident) and t.expr.simple):
-                raise ParseError(
-                    "scan order-by terms must be plain columns",
-                    t.expr.span,
-                )
-            order_names.append(t.expr.parts[0])
-            ascending.append(t.asc)
-        for n in order_names:
-            if n not in df.columns:
-                raise ParseError(
-                    f"scan order by: unknown column {n!r}", op.span
-                )
-        var_names = [v for v, _ in op.declare]
-        for rc in (op.match_id, "step", *var_names):
-            if rc in df.columns:
-                raise ParseError(
-                    f"scan: input already has a {rc!r} column (scan"
-                    " appends match-id, step, and declared variables)",
-                    op.span,
-                )
-        k = len(op.steps)
-        names = [s.name for s in op.steps]
-        out_modes = [s.output for s in op.steps]
-
-        # ---- declared-variable references inside step conditions and
-        # assignment values.  Row-only expressions stay in codegen as
-        # before; an expression REFERENCING a declared var is split:
-        # its maximal var-free subtrees are compiled to extra Catalyst
-        # columns (__scan_x{t}) and only a tiny skeleton of
-        # comparisons / boolean ops / arithmetic over (vars,
-        # precomputed columns) is interpreted per candidate row inside
-        # the automaton, where the per-attempt state already lives.
-        import dataclasses as _dc
-
-        var_set = set(var_names)
-        decl_map = dict(op.declare)
-
-        def _refs_vars(ex) -> bool:
-            if isinstance(ex, Ident):
-                return ex.simple and ex.parts[0] in var_set
-            for fld in _dc.fields(ex):
-                v = getattr(ex, fld.name)
-                for item in v if isinstance(v, (list, tuple)) else [v]:
-                    if isinstance(item, Expr) and _refs_vars(item):
-                        return True
-            return False
-
-        def _subst_inits(ex):
-            # var refs → their declare-init ASTs, for TYPE probing only
-            if (
-                isinstance(ex, Ident)
-                and ex.simple
-                and ex.parts[0] in var_set
-            ):
-                return decl_map[ex.parts[0]]
-            if not isinstance(ex, Expr):
-                return ex
-            kw = {}
-            for fld in _dc.fields(ex):
-                v = getattr(ex, fld.name)
-                if isinstance(v, Expr):
-                    kw[fld.name] = _subst_inits(v)
-                elif isinstance(v, list):
-                    kw[fld.name] = [
-                        _subst_inits(x) if isinstance(x, Expr) else x
-                        for x in v
-                    ]
-                else:
-                    kw[fld.name] = v
-            return _dc.replace(ex, **kw)
-
-        xcols: list[Column] = []
-
-        def _skel(ex):
-            if not _refs_vars(ex):
-                t = len(xcols)
-                xcols.append(
-                    self.compile_expr(ex, env).alias(f"__scan_x{t}")
-                )
-                return ("col", t)
-            if isinstance(ex, Ident):
-                return ("var", var_names.index(ex.parts[0]))
-            if isinstance(ex, UnaryExpr):
-                return ("un", ex.op, _skel(ex.operand))
-            if isinstance(ex, CallExpr) and ex.func == "not" and len(
-                ex.args
-            ) == 1:
-                return ("not", _skel(ex.args[0]))
-            if isinstance(ex, BinaryExpr) and ex.op in (
-                "==", "!=", "<", "<=", ">", ">=",
-                "+", "-", "*", "/", "%", "and", "or",
-            ):
-                return ("bin", ex.op, _skel(ex.lhs), _skel(ex.rhs))
-            raise ParseError(
-                "scan: an expression referencing a declared variable"
-                " may combine it only with comparisons, and/or/not,"
-                " and arithmetic (+ - * / %); compute other constructs"
-                " in an earlier step assignment or an extend first",
-                ex.span,
-            )
-
-        # checks[i]: ("arr", i) → precomputed boolean column, or
-        # ("skel", tree) → interpreted against the attempt state
-        checks_spec: list[tuple] = []
-        preds: list[Column] = []
-        for i, s in enumerate(op.steps):
-            if var_set and _refs_vars(s.pred):
-                checks_spec.append(("skel", _skel(s.pred)))
-            else:
-                preds.append(
-                    self.compile_expr(s.pred, env)
-                    .cast("boolean")
-                    .alias(f"__scan_p{i}")
-                )
-                checks_spec.append(("arr", i))
-
-        # declared variables: init + row-only assignment values are
-        # Catalyst row expressions, cast to the coalesced common type;
-        # the kernel only COPIES the precomputed values around.
-        # Var-referencing assignment values (accumulators like
-        # ``total = total + amount``) become skeletons, evaluated
-        # against the state at STEP ENTRY (before any of this step's
-        # own assignments — same visibility row-precomputed values
-        # get).
-        init_cols: list[Column] = []
-        assign_cols: list[Column] = []
-        # (step index, var index) -> work-column name
-        assign_map: dict[tuple[int, int], str] = {}
-        # (step index, var index) -> skeleton tree
-        assign_skel: dict[tuple[int, int], tuple] = {}
-        if op.declare:
-            inits = {
-                v: self.compile_expr(e, env) for v, e in op.declare
-            }
-            raw_assigns: dict[tuple[int, int], Column] = {}
-            skel_keys: set[tuple[int, int]] = set()
-            for i, s in enumerate(op.steps):
-                for v, e in s.assigns:
-                    j = var_names.index(v)
-                    if _refs_vars(e):
-                        skel_keys.add((i, j))
-                        assign_skel[(i, j)] = _skel(e)
-                        # init-substituted twin, for the type probe
-                        raw_assigns[(i, j)] = self.compile_expr(
-                            _subst_inits(e), env
-                        )
-                    else:
-                        raw_assigns[(i, j)] = self.compile_expr(e, env)
-            # type probe: common type per var across init + assignments
-            probe = df.select(
-                *[
-                    F.coalesce(
-                        *[
-                            c
-                            for (ii, jj), c in raw_assigns.items()
-                            if jj == j
-                        ],
-                        inits[v],
-                    ).alias(f"__t{j}")
-                    for j, v in enumerate(var_names)
-                ]
-            ).schema
-            vtypes = [f.dataType for f in probe.fields]
-            init_cols = [
-                inits[v].cast(vtypes[j]).alias(f"__scan_i{j}")
-                for j, v in enumerate(var_names)
-            ]
-            for (i, j), c in raw_assigns.items():
-                if (i, j) in skel_keys:
-                    continue  # evaluated in the kernel, no work column
-                nm = f"__scan_a{i}_{j}"
-                assign_map[(i, j)] = nm
-                assign_cols.append(c.cast(vtypes[j]).alias(nm))
-        work = df.select("*", *preds, *init_cols, *assign_cols, *xcols)
-        out_schema = T.StructType(
-            list(df.schema.fields)
-            + [
-                T.StructField(op.match_id, T.LongType()),
-                T.StructField("step", T.StringType()),
-            ]
-            + (
-                [
-                    T.StructField(v, vtypes[j])
-                    for j, v in enumerate(var_names)
-                ]
-                if op.declare
-                else []
-            )
-        )
-        drop_cols = (
-            [
-                f"__scan_p{i}"
-                for i, c in enumerate(checks_spec)
-                if c[0] == "arr"
-            ]
-            + [f"__scan_i{j}" for j in range(len(var_names))]
-            + list(assign_map.values())
-            + [f"__scan_x{t}" for t in range(len(xcols))]
-        )
-        n_vars = len(var_names)
-        n_x = len(xcols)
-        match_id_col = op.match_id
-
-        import math
-
-        def _sk_null(v) -> bool:
-            if v is None or v is pd.NA:
-                return True
-            try:
-                return bool(pd.isna(v))
-            except (TypeError, ValueError):
-                return False
-
-        def run_group(pdf: pd.DataFrame, gids=None) -> pd.DataFrame:
-            # gids: per-row group ordinal over an ALREADY (keys, order)
-            # -sorted frame — the automaton resets at boundaries, so
-            # one call handles every key of a super-group without
-            # per-key pandas sub-frames (sort/convert/iloc per key
-            # cost ~1 ms × n_keys, which dominated the whole operator
-            # at sf0.1: 2.5 s → ~1 s).  -1 marks null-key rows, which
-            # the per-key groupby dropped before; None → single group.
-            import numpy as np
-
-            if gids is None:
-                pdf = pdf.sort_values(
-                    order_names, ascending=ascending, kind="mergesort"
-                )
-            flags = {
-                i: pdf[f"__scan_p{i}"].fillna(False).to_numpy()
-                for i, c in enumerate(checks_spec)
-                if c[0] == "arr"
-            }
-            xarrs = [
-                pdf[f"__scan_x{t}"].to_numpy() for t in range(n_x)
-            ]
-            if n_vars:
-                init_vals = [
-                    pdf[f"__scan_i{j}"].to_numpy() for j in range(n_vars)
-                ]
-                avals = {
-                    key: pdf[nm].to_numpy()
-                    for key, nm in assign_map.items()
-                }
-
-            def _ev(node, r: int, st: list):
-                # skeleton interpreter — mirrors _binary()'s
-                # semantics: null-safe ==/!= coalesce to False,
-                # ordered comparisons propagate null, try_divide /
-                # try_mod null on zero, Java-sign %
-                tag = node[0]
-                if tag == "col":
-                    v = xarrs[node[1]][r]
-                    return None if _sk_null(v) else v
-                if tag == "var":
-                    v = st[node[1]]
-                    return None if _sk_null(v) else v
-                if tag == "un":
-                    v = _ev(node[2], r, st)
-                    if v is None:
-                        return None
-                    return v if node[1] == "+" else -v
-                if tag == "not":
-                    v = _ev(node[1], r, st)
-                    return None if v is None else (not bool(v))
-                opn = node[1]
-                a = _ev(node[2], r, st)
-                b = _ev(node[3], r, st)
-                if opn in ("and", "or"):
-                    af = None if a is None else bool(a)
-                    bf = None if b is None else bool(b)
-                    if opn == "and":
-                        if af is False or bf is False:
-                            return False
-                        return None if None in (af, bf) else True
-                    if af is True or bf is True:
-                        return True
-                    return None if None in (af, bf) else False
-                if opn in ("==", "!="):
-                    if a is None or b is None:
-                        return False
-                    try:
-                        eq = bool(a == b)
-                    except (TypeError, ValueError):
-                        return False
-                    return eq if opn == "==" else not eq
-                if a is None or b is None:
-                    return None
-                try:
-                    if opn == "<":
-                        return bool(a < b)
-                    if opn == "<=":
-                        return bool(a <= b)
-                    if opn == ">":
-                        return bool(a > b)
-                    if opn == ">=":
-                        return bool(a >= b)
-                    if opn == "+":
-                        return a + b
-                    if opn == "-":
-                        return a - b
-                    if opn == "*":
-                        return a * b
-                    if opn == "/":
-                        return None if b == 0 else a / b
-                    # '%': Java remainder (sign of dividend), like
-                    # Spark's %; try_mod → NULL on zero
-                    if b == 0:
-                        return None
-                    if isinstance(
-                        a, (int, np.integer)
-                    ) and isinstance(b, (int, np.integer)):
-                        # exact integer Java-sign remainder — fmod
-                        # round-trips through float64 and diverges for
-                        # |operands| > 2^53 (ADVICE r7)
-                        ia, ib = int(a), int(b)
-                        r = abs(ia) % abs(ib)
-                        return r if ia >= 0 else -r
-                    return math.fmod(a, b)
-                except TypeError:
-                    return None
-
-            pos, match_id = 0, 0
-            state: list = [None] * n_vars
-            # pending: (row, step name, step index, var snapshot)
-            pending: list[tuple[int, str, int, list]] = []
-            out_idx: list[int] = []
-            out_mid: list[int] = []
-            out_step: list[str] = []
-            out_vars: list[list] = [[] for _ in range(n_vars)]
-            cur_g = None
-            for r in range(len(pdf)):
-                if gids is not None:
-                    g = gids[r]
-                    if g < 0:  # null scan key: never matches
-                        continue
-                    if g != cur_g:  # new key: fresh automaton
-                        cur_g = g
-                        pos, match_id, pending = 0, 0, []
-                if pos < k:
-                    spec = checks_spec[pos]
-                    if spec[0] == "arr":
-                        hit = flags[pos][r]
-                    else:
-                        st = (
-                            state
-                            if pos > 0
-                            else [
-                                init_vals[j][r] for j in range(n_vars)
-                            ]
-                        )
-                        hit = bool(_ev(spec[1], r, st) or False)
-                else:
-                    hit = False
-                if hit:
-                    if pos == 0 and n_vars:
-                        # new match attempt: reset to the init values
-                        state = [init_vals[j][r] for j in range(n_vars)]
-                    entry = list(state)
-                    for j in range(n_vars):
-                        key = (pos, j)
-                        if key in assign_skel:
-                            state[j] = _ev(assign_skel[key], r, entry)
-                        elif n_vars and key in avals:
-                            state[j] = avals[key][r]
-                    pending.append((r, names[pos], pos, list(state)))
-                    pos += 1
-                    if pos == k:
-                        for rr, st_, si, snap in pending:
-                            if out_modes[si] == "none":
-                                continue
-                            out_idx.append(rr)
-                            out_mid.append(match_id)
-                            out_step.append(st_)
-                            for j in range(n_vars):
-                                out_vars[j].append(snap[j])
-                        match_id += 1
-                        pos, pending = 0, []
-            base = pdf.drop(columns=drop_cols)
-            res = base.iloc[out_idx].copy()
-            res[match_id_col] = pd.array(out_mid, dtype="int64")
-            res["step"] = out_step
-            import numpy as np
-
-            for j, v in enumerate(var_names):
-                # init + assignments share one cast Spark type, but
-                # their PANDAS dtypes can differ: an integral Arrow
-                # column containing nulls arrives as float64+NaN, so a
-                # NULL assignment captured on a matched row must not be
-                # forced through np.asarray(dtype=int64) (crash) nor
-                # truncated.  Rebuild against the declared Spark type:
-                # nullable pandas extension arrays for integral/bool
-                # (NaN → <NA>, integral floats cast losslessly), numpy
-                # for float/datetime, object otherwise — an object
-                # column only where Arrow accepts it (strings etc.).
-                nullable = _SCAN_NULLABLE_DTYPES.get(type(vtypes[j]))
-                if nullable is not None:
-                    res[v] = pd.array(out_vars[j], dtype=nullable)
-                elif isinstance(
-                    vtypes[j], (T.FloatType, T.DoubleType)
-                ) or str(init_vals[j].dtype).startswith("datetime64"):
-                    res[v] = pd.Series(
-                        np.asarray(out_vars[j], dtype=init_vals[j].dtype),
-                        index=res.index,
-                    )
-                else:
-                    res[v] = pd.Series(
-                        out_vars[j], index=res.index, dtype="object"
-                    )
-            return res
-
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            # one kernel call handles a SUPER-group (many scan groups):
-            # applyInPandas pays per-call Arrow/serialization overhead,
-            # so ~1500 tiny per-key calls cost seconds where ~2×cores
-            # super-group calls cost milliseconds (measured 3.8s → sub
-            # -second at sf0.1).  ONE (keys, order) sort + a
-            # boundary-resetting pass replaces per-key pandas
-            # sub-frames; match_ids stay LOCAL to a key.
-            pdf = pdf.drop(columns="__scan_g", errors="ignore")
-            if not by_names:
-                return run_group(pdf)
-            pdf = pdf.sort_values(
-                by_names + order_names,
-                ascending=[True] * len(by_names) + ascending,
-                kind="mergesort",
-            )
-            gids = pdf.groupby(by_names, sort=False).ngroup().to_numpy()
-            return run_group(pdf, gids)
-
-        if by_names:
-            # hash scan keys into ~2×parallelism super-groups — the
-            # shuffle still co-locates each key's rows, but the Python
-            # kernel is invoked per super-group, not per key
-            n_super = 2 * df.sparkSession.sparkContext.defaultParallelism
-            work = work.withColumn(
-                "__scan_g",
-                F.pmod(
-                    F.xxhash64(*[F.col(_q(b)) for b in by_names]),
-                    F.lit(n_super),
-                ),
-            )
-            grouped = work.groupBy(F.col("__scan_g"))
-        else:
-            # single global sequence: one group (single task — fine for
-            # small post-filter inputs; use `by` at scale)
-            import warnings
-
-            warnings.warn(
-                "scan without 'by' funnels the whole input through a"
-                " single task — add 'by <key>' for distributed"
-                " sequence matching at scale",
-                stacklevel=2,
-            )
-            grouped = work.groupBy(F.lit(1).alias("__scan_g"))
-        out = grouped.applyInPandas(kernel, out_schema)
-        return out
 
     def _partition(self, df: DataFrame, op: PartitionOp) -> DataFrame:
         """KQL ``partition by Col (…)`` with no per-partition iteration:

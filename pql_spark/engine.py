@@ -8,13 +8,13 @@ a lazy DataFrame — Catalyst plans it, nothing executes until an action.
 from __future__ import annotations
 
 import itertools
-from collections.abc import Callable, Mapping
+from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .compiler import Compiler, MultiResult, Resolver
-from .parser import QueryError, parse
-from .sql_backend import Unsupported
+from .compiler import Compiler, Resolver
+from .parser import parse
+from .sql_backend import MultiResult
 
 __all__ = ["MultiResult", "PqlEngine", "compile_pql", "parse"]
 
@@ -32,30 +32,20 @@ class PqlEngine:
     (pql.go:25-30): identifiers substituted at compile time, bound here as
     typed literal values.
 
-    :meth:`query` compiles to one Spark SQL string and submits it with a
-    single ``spark.sql`` call: ~1 ms of Python compile where the
-    DataFrame compiler pays one py4j round trip per Column op.  Each
-    referenced table is registered as a temp view under a
-    collision-proof ``__pql_v<N>_<name>`` name for that one call, then
-    only the name is removed again; the caller's caches and same-named
-    temp views are untouched.
-
-    A data-dependent output schema (schema-less ``evaluate pivot``/
-    ``bag_unpack``, ``diffpatterns``/``autocluster`` without a column
-    list) is discovered inside the one compile: the emitter runs one
-    discovery statement over the same transient views, then emits the
-    final statement with the discovered columns.
-
-    Only the SQL backend decides when a query needs the DataFrame
-    compiler: when it raises its refusal (``sql_backend.Unsupported`` —
-    ``scan``, multi-output ``facet``/``fork``, ``ipv*_lookup
-    return_unmatched``, ``mv-expand``/``mv-apply`` over a known map),
-    :meth:`query` compiles once more with :func:`compile_pql` and counts
-    it on :attr:`sql_fallbacks`.
-    Every other error — a user error, or emitted SQL that fails Spark
-    analysis — propagates from the one SQL compile.  :func:`compile_pql`
-    stays public: the DataFrame compiler on its own, with zero catalog
-    side effects.
+    :meth:`query` has one compile path: PQL to Spark SQL, one
+    ``spark.sql`` call per output (~1 ms of Python compile where a
+    DataFrame-API build pays one py4j round trip per Column op).  Each
+    referenced table is a temp view under a collision-proof
+    ``__pql_v<N>_<name>`` name for each call, then only the name is
+    removed again; the caller's caches and same-named temp views are
+    untouched.  Forms that need the data or a frame (a data-dependent
+    output schema, ``scan``, ``return_unmatched``, csv/json
+    ``externaldata``) run inside that compile over the same views; a
+    frame they build is one more view.  A ``facet``/``fork`` query
+    returns a :class:`MultiResult`.  Every error — a user error, or
+    emitted SQL that fails Spark analysis — propagates from that one
+    compile.  :func:`compile_pql` stays public: the DataFrame compiler
+    on its own, with zero catalog side effects.
     """
 
     def __init__(
@@ -67,9 +57,6 @@ class PqlEngine:
         self.spark = spark
         self._resolver = _as_resolver(spark, resolver)
         self._params = dict(params or {})
-        #: number of queries the SQL backend refused and
-        #: :func:`compile_pql` built instead
-        self.sql_fallbacks = 0
 
     def close(self) -> None:
         """Release nothing: the library persists nothing and keeps no
@@ -89,33 +76,25 @@ class PqlEngine:
 
     def query(
         self, text: str, params: Mapping[str, object] | None = None
-    ) -> DataFrame:
-        """Parse + compile one PQL query; returns a lazy DataFrame."""
-        merged = dict(self._params)
-        if params:
-            merged.update(params)
-        try:
-            return self._query_via_sql(text, merged)
-        except QueryError as e:
-            if not any(isinstance(x, Unsupported) for x in e.errors):
-                raise
-            self.sql_fallbacks += 1
-            return compile_pql(text, self._resolver, merged)
+    ) -> DataFrame | MultiResult:
+        """Parse + compile one PQL query; returns a lazy DataFrame, or a
+        :class:`MultiResult` for a ``facet``/``fork`` query."""
+        return self._query_via_sql(text, {**self._params, **(params or {})})
 
-    def _query_via_sql(self, text: str, params: dict) -> DataFrame:
-        """The batched compile path: PQL → one SQL string → ONE
-        ``spark.sql`` call.  Each referenced table is registered as a
-        temp view under a fresh ``__pql_v<N>_<name>`` name (never the
-        bare table name — a user's own temp view of that name survives
-        untouched) for that one call only; see
-        ``operators._util.sql_with_views``.  A schema-discovery statement
-        runs over the views named so far with the same lifecycle."""
-        from .compiler import externaldata_df
+    def _query_via_sql(
+        self, text: str, params: dict
+    ) -> DataFrame | MultiResult:
+        """PQL → SQL → ONE ``spark.sql`` call per output, over the
+        tables' ``__pql_v<N>_<name>`` views and the emitter's frames'
+        ``__pql_v<N>f<i>`` views, registered for each call only (never
+        under a bare table name; see ``operators._util.sql_with_views``).
+        A discovery or work statement has the same lifecycle."""
         from .operators._util import sql_with_views
         from .sql_backend import compile_to_sql
 
         uid = next(_VIEW_IDS)
         views: dict[str, DataFrame] = {}
+        frame_ids = itertools.count()
 
         def view_name(name: str) -> str:
             v = f"__pql_v{uid}_{name}"
@@ -123,42 +102,37 @@ class PqlEngine:
                 views[v] = self._resolver(name)
             return v
 
-        # option-bearing externaldata (csv/json): the reader-backed
-        # DataFrame (declared schema + options) rides along as one more
-        # view, named ``__pql_v<N>ed<i>`` so no table view's name can
-        # equal it
-        ext_ids = itertools.count()
-
-        def ext_view(src) -> str:
-            v = f"__pql_v{uid}ed{next(ext_ids)}"
-            views[v] = externaldata_df(self.spark, src)
+        def view_of(build) -> str:
+            v = f"__pql_v{uid}f{next(frame_ids)}"
+            views[v] = build(self.spark)
             return v
 
-        sql = compile_to_sql(
+        def run(sql: str) -> DataFrame:
+            return sql_with_views(self.spark, sql, views)
+
+        out = compile_to_sql(
             text, lambda name: self._resolver(name).schema, params,
             width=self.spark.sparkContext.defaultParallelism,
-            view_name_of=view_name,
-            externaldata_view_of=ext_view,
-            frame_of=lambda q: sql_with_views(self.spark, q, views),
+            view_name_of=view_name, view_of=view_of, frame_of=run,
         )
-        return sql_with_views(self.spark, sql, views)
+        if isinstance(out, MultiResult):
+            return MultiResult((k, run(sql)) for k, sql in out.items())
+        return run(out)
 
     def to_sql(
         self, text: str, params: Mapping[str, object] | None = None
     ) -> str:
         """Compile to a Spark SQL string (the reference's Compile API
         shape, pql.go:18-30); run it with ``spark.sql`` against the same
-        tables registered as views.  A string cannot discover a
-        data-dependent schema, so schema-less ``pivot``/``bag_unpack``
-        and ``diffpatterns``/``autocluster`` without columns raise
+        tables registered as views.  A string holds no frame, so the
+        forms that need one (a data-dependent schema, ``scan``,
+        ``return_unmatched``, csv/json ``externaldata``) raise
         ``sql_backend.Unsupported`` here; :meth:`query` runs them."""
         from .sql_backend import compile_to_sql
 
-        merged = dict(self._params)
-        if params:
-            merged.update(params)
         return compile_to_sql(
-            text, lambda n: self._resolver(n).schema, merged,
+            text, lambda n: self._resolver(n).schema,
+            {**self._params, **(params or {})},
             width=self.spark.sparkContext.defaultParallelism,
         )
 
@@ -170,11 +144,9 @@ class PqlEngine:
         back as ``{"main": sql}``."""
         from .sql_backend import compile_to_sql_multi
 
-        merged = dict(self._params)
-        if params:
-            merged.update(params)
         return compile_to_sql_multi(
-            text, lambda n: self._resolver(n).schema, merged
+            text, lambda n: self._resolver(n).schema,
+            {**self._params, **(params or {})},
         )
 
 
@@ -201,11 +173,13 @@ def compile_pql(
     resolver: Resolver,
     params: Mapping[str, object] | None = None,
 ) -> DataFrame:
-    """Compile PQL with the DataFrame compiler alone (the path
-    :meth:`PqlEngine.query` takes on a refusal).  The ``evaluate``
-    plugins the SQL emitter implements run through it: each registers
-    its input as one collision-proof temp view for its statements and
-    drops it at once, so compiling leaves no catalog entries."""
+    """Compile PQL with the DataFrame compiler alone.
+    :meth:`PqlEngine.query` never calls it; it is the reference the
+    SQL path's equivalence tests compare against.  The ``evaluate``
+    plugins and ``scan``, which the SQL emitter implements, run through
+    it: each registers its input as one collision-proof temp view for
+    its statements and drops it at once, so compiling leaves no catalog
+    entries."""
     statements = parse(text)
     compiler = Compiler(
         source=text, resolver=resolver, params=dict(params or {})

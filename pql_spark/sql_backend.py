@@ -20,23 +20,21 @@ Schema knowledge: SQL text can't introspect, so the caller provides
 per-table column lists (needed to expand ``*`` at joins and rename
 right-side duplicates to ``$right.<col>``, JoinInner golden), or Spark
 schemas, whose MAP columns the emitter tracks so ``mv-expand`` over a
-bag is refused instead of emitted as array expansion.
+bag expands per property instead of per position.
 
-Data-dependent output schemas (schema-less ``evaluate pivot`` and
-``bag_unpack``, ``diffpatterns``/``autocluster`` without a column list)
-need to look at the data or at a mid-pipeline type.  The caller may pass
-``frame_of``, which runs one statement over the query's views; the
-emitter discovers the schema with it and then emits the final statement
-(``PqlEngine.query`` passes it).  Without it these forms are refused.
-
-Refusals: a construct this module cannot express but the DataFrame
-compiler can raises :class:`Unsupported`, wrapped in the usual
-``QueryError``: ``scan``, multi-output ``facet``/``fork`` (see
-``compile_to_sql_multi``), ``ipv*_lookup … return_unmatched``,
-``mv-expand``/``mv-apply`` over a known map, and the four
-data-dependent forms above when no ``frame_of`` is given.
-``PqlEngine.query`` compiles such a query again with ``compile_pql``;
-every other error is the user's and is final.
+Frames: a few forms need the data or a Spark frame — a data-dependent
+output schema (schema-less ``evaluate pivot``/``bag_unpack``,
+``diffpatterns``/``autocluster`` without a column list), ``scan`` (a
+numpy automaton over the frame of one work statement,
+``scan_kernel.scan_groups``), ``ipv*_lookup … return_unmatched`` (row
+ids fixed by a checkpoint) and csv/json ``externaldata`` (a reader
+frame).  The caller may pass two hooks: ``frame_of`` runs one statement
+over the query's views, and ``view_of`` registers a frame as one more
+view.  ``PqlEngine.query`` passes both, so this module is its only
+compiler; a ``facet``/``fork`` query then comes back as one statement
+per output.  Without the hooks — a standalone SQL string — these forms
+raise :class:`Unsupported`, wrapped in the usual ``QueryError``; every
+other error is the user's.
 """
 
 from __future__ import annotations
@@ -128,7 +126,6 @@ from .ast_nodes import (
 )
 from .functions import (
     _DT_PARTS,
-    _DURATION_UNITS,
     _duration_usec,
     KQL_RENAMES,
     build_parse_regex,
@@ -173,10 +170,23 @@ BAG_UNPACK_MAX_KEYS = 1000
 
 
 class Unsupported(ParseError):
-    """The SQL backend's refusal: a construct it cannot emit but the
-    DataFrame compiler (``engine.compile_pql``) builds — the list is in
-    the module docstring.  The only error on which ``PqlEngine.query``
-    compiles a second time."""
+    """The refusal of a standalone SQL string: a form that needs
+    ``PqlEngine.query``'s session hooks (see :func:`compile_to_sql`) —
+    a data-dependent schema, ``scan``, ``return_unmatched``, csv/json
+    ``externaldata`` — or a multi-output query in
+    :func:`compile_to_sql`.  ``PqlEngine.query`` never raises it."""
+
+
+class MultiResult(dict):
+    """Ordered ``name → output`` mapping of a multi-output query
+    (``facet``/``fork``): lazy DataFrames from ``PqlEngine.query``, or
+    SQL statements from :func:`compile_to_sql` with the engine's hooks.
+    Collecting several DataFrames re-executes the shared input once per
+    action — persist it first (the library caches nothing), or write
+    the outputs in one ``foreachBatch``."""
+
+    def __repr__(self) -> str:  # pragma: no cover - debugging aid
+        return f"MultiResult({list(self)})"
 
 
 # functions whose result this backend emits as a Spark MAP — an
@@ -438,6 +448,24 @@ def _sql_range_prefix6(c: str) -> str:
     )
 
 
+def externaldata_df(spark, src: ExternalDataSource):
+    """The ``externaldata`` reader DataFrame: explicit declared schema
+    (no inference pass), format/options passed through to the Spark
+    reader.  ``PqlEngine.query`` registers it as one more view of the
+    query, so option-bearing formats (csv/json) work in SQL too."""
+    from .parser import _DATATABLE_TYPES
+
+    opts = dict(src.options)
+    fmt = opts.pop("format", "csv")
+    schema = ", ".join(
+        f"`{n}` {_DATATABLE_TYPES[t]}" for n, t in src.schema
+    )
+    return (
+        spark.read.format(fmt).schema(schema).options(**opts)
+        .load(list(src.uris))
+    )
+
+
 class _SqlEmitter:
     def __init__(
         self,
@@ -446,7 +474,7 @@ class _SqlEmitter:
         params: Mapping[str, object],
         width: int | None = None,
         view_name_of: ColumnsOf | None = None,
-        externaldata_view_of=None,
+        view_of=None,
         frame_of=None,
     ):
         self.text = source_text
@@ -456,17 +484,18 @@ class _SqlEmitter:
         # instead of clobbering same-named user views (identity when
         # None — to_sql() callers expect the real table names)
         self.view_name_of = view_name_of or (lambda n: n)
-        # optional ExternalDataSource → temp-view-name callback: the
-        # engine uses it to serve option-bearing formats (csv/json)
-        # through a transient view it registers around the one
-        # spark.sql call; None (bare to_sql) keeps the honest raise —
-        # a standalone SQL string cannot carry reader options
-        self.externaldata_view_of = externaldata_view_of
+        # optional (SparkSession → DataFrame) → view-name callback: the
+        # caller registers the built frame as one more view of the
+        # query (option-bearing externaldata, scan's kernel output,
+        # return_unmatched's id'd fact rows); None (bare to_sql)
+        # refuses those forms — a standalone SQL string holds no frame
+        self.view_of = view_of
         # optional SQL → DataFrame callback over the query's views: the
         # one way the emitter sees data or a mid-pipeline schema (a
         # data-dependent output schema is discovered with it, then the
-        # statement is emitted with that schema); None (bare to_sql)
-        # refuses those forms with Unsupported
+        # statement is emitted with that schema; scan and
+        # return_unmatched take their frames with it); None (bare
+        # to_sql) refuses those forms with Unsupported
         self.frame_of = frame_of
         # cluster width for pinned REPARTITION(n) hints (an argless
         # REPARTITION/REBALANCE shuffle is AQE-coalescible, which
@@ -503,11 +532,71 @@ class _SqlEmitter:
     def emit_query(self, expr: TabularExpr) -> tuple[str, list[str]]:
         return self.emit_binding(expr)[:2]
 
-    def emit_binding(
-        self, expr: TabularExpr
-    ) -> tuple[str, list[str], set[str]]:
+    def emit_outputs(self, expr: TabularExpr) -> MultiResult | None:
+        """One statement per output of a query ending in ``facet``/
+        ``fork``, None for any other query: a count table per ``facet
+        by`` column plus its ``with`` pipe as ``main``, or one per
+        ``fork`` branch (which starts with no sort, as a pipeline
+        does)."""
+        if not _multi_output(expr):
+            return None
+        last = expr.operators[-1]
+        base = TabularExpr(
+            source=expr.source, operators=expr.operators[:-1],
+            span=expr.span,
+        )
+        return self.emit_binding(
+            base, tail=lambda sql, cols: self._outputs(last, sql, cols)
+        )
+
+    def _outputs(
+        self, last: FacetOp | ForkOp, base_sql: str, base_cols: list[str]
+    ) -> MultiResult:
+        out = MultiResult()
+        if isinstance(last, FacetOp):
+            if last.with_ops:
+                sql, cols = base_sql, list(base_cols)
+                for op in last.with_ops:
+                    sql, cols = self.emit_op(op, sql, cols)
+                out["main"] = sql
+            for ident in last.by:
+                c = ident.parts[0]
+                if c not in base_cols:
+                    raise ParseError(
+                        f"facet by: unknown column {c!r}", ident.span
+                    )
+                if c in out:
+                    raise ParseError(
+                        f"facet by: duplicate output table {c!r}",
+                        ident.span,
+                    )
+                out[c] = (
+                    f"SELECT {_q(c)}, count(1) AS count_ FROM"
+                    f" ({base_sql}) GROUP BY {_q(c)}"
+                )
+            return out
+        for i, br in enumerate(last.branches):
+            name = br.name or f"fork_{i}"
+            if name in out:
+                raise ParseError(
+                    f"fork: duplicate branch name {name!r}", br.span
+                )
+            saved = (self.last_sort, self.window, self.maps)
+            self.last_sort, self.window = None, None
+            self.maps = set(saved[2])
+            try:
+                sql, cols = base_sql, list(base_cols)
+                for op in br.ops:
+                    sql, cols = self.emit_op(op, sql, cols)
+            finally:
+                self.last_sort, self.window, self.maps = saved
+            out[name] = sql
+        return out
+
+    def emit_binding(self, expr: TabularExpr, tail=None):
         """``emit_query`` plus the result's map columns (see
-        ``self.maps``), which a binding carries to its readers."""
+        ``self.maps``), which a binding carries to its readers — or
+        ``tail(sql, cols)``'s result, emitted in the pipeline's scope."""
         saved = (self.last_sort, self.window, self._graph, self.maps)
         self.last_sort, self.window, self._graph = None, None, None
         self.maps = set()
@@ -557,6 +646,8 @@ class _SqlEmitter:
             for op in expr.operators:
                 sql, cols = self.emit_op(op, sql, cols)
                 self.maps &= set(cols)
+            if tail is not None:
+                return tail(sql, cols)
             maps = self.maps
         finally:
             self.last_sort, self.window, self._graph, self.maps = saved
@@ -569,8 +660,8 @@ class _SqlEmitter:
         (``SELECT … FROM parquet.`uri```), one UNION ALL branch per
         uri.  Only the self-describing formats (parquet, orc) have
         inline scan syntax; csv/json need reader options, which Spark
-        SQL only accepts through ``CREATE … USING`` DDL — those stay
-        DataFrame-backend-only with an explicit error.  The declared
+        SQL only accepts through ``CREATE … USING`` DDL — those need
+        the ``view_of`` hook (a reader frame).  The declared
         schema becomes a CAST projection, mirroring the DataFrame
         backend's user-schema column pruning."""
         from .parser import _DATATABLE_TYPES
@@ -578,16 +669,15 @@ class _SqlEmitter:
         opts = dict(src.options)
         fmt = opts.pop("format", "csv").lower()
         if fmt not in ("parquet", "orc") or opts:
-            if self.externaldata_view_of is not None:
+            if self.view_of is not None:
                 # engine path: the reader-backed DataFrame (declared
-                # schema + options) is registered as a transient view
-                # around the one spark.sql call, so csv/json scan with
-                # full option support on the SQL backend too
-                view = self.externaldata_view_of(src)
+                # schema + options) is one more view of the query, so
+                # csv/json scan with full option support
+                view = self.view_of(lambda spark: externaldata_df(spark, src))
                 names = [n for n, _ in src.schema]
                 proj = ", ".join(_q(n) for n in names)
                 return f"SELECT {proj} FROM {_q(view)}", names
-            raise ParseError(
+            raise Unsupported(
                 "externaldata as a standalone SQL string supports only"
                 " the self-describing path-scan formats (parquet, orc)"
                 " with no reader options — Spark SQL has no inline"
@@ -830,50 +920,37 @@ class _SqlEmitter:
     def _emit_mv_expand_core(
         self, op: MvExpandOp, inner: str, cols: list[str]
     ) -> tuple[str, list[str]]:
-        self._refuse_maps(op, "mv-expand")
-        if True:
-            if len(op.cols) > 1:
-                return self._emit_mv_expand_zip(op, inner, cols)
-            name, _ = self.col_spec(op.col)
-            idx = op.itemindex
-            if idx is not None:
-                if idx in cols:
-                    raise ParseError(
-                        f"mv-expand with_itemindex: column {idx!r}"
-                        " already exists",
-                        op.span,
-                    )
-                gen = (
-                    f"posexplode({self.expr(op.col.expr)})"
-                    f" AS ({_q(idx)}, __mv_val)"
-                )
-                mid = f"SELECT *, {gen} FROM {inner}"
-                if op.col.name is not None and op.col.name in cols:
-                    order = [*cols, idx]
-                    items = [
-                        f"__mv_val AS {_q(name)}" if c == name else _q(c)
-                        for c in order
-                    ]
-                    return (
-                        f"SELECT {', '.join(items)} FROM ({mid})",
-                        order,
-                    )
-                order = [*cols, idx, name]
-                items = [
-                    f"__mv_val AS {_q(name)}" if c == name else _q(c)
-                    for c in order
-                ]
-                return f"SELECT {', '.join(items)} FROM ({mid})", order
-            item = f"explode({self.expr(op.col.expr)}) AS {_q(name)}"
-            if op.col.name is not None and op.col.name in cols:
-                items = [
-                    item if c == name else _q(c) for c in cols
-                ]
-                return f"SELECT {', '.join(items)} FROM {inner}", cols
-            return (
-                f"SELECT *, {item} FROM {inner}",
-                [*cols, name],
+        if len(op.cols) > 1:
+            return self._emit_mv_expand_zip(op, inner, cols)
+        is_map = self._known_map(op.col)
+        name, _ = self.col_spec(op.col)
+        idx = op.itemindex
+        if idx is not None and idx in cols:
+            raise ParseError(
+                f"mv-expand with_itemindex: column {idx!r} already exists",
+                op.span,
             )
+        src, val = self.expr(op.col.expr), "__mv_val"
+        if is_map:
+            # KQL bag semantics: one row per property, the cell a
+            # single-entry bag
+            src = f"map_entries({src})"
+            val = "map(__mv_val.key, __mv_val.value)"
+        # explode drops null/empty collections (KQL default);
+        # with_itemindex → posexplode (0-based element position)
+        gen = (
+            f"explode({src}) AS __mv_val" if idx is None
+            else f"posexplode({src}) AS ({_q(idx)}, __mv_val)"
+        )
+        order = [*cols, idx] if idx is not None else list(cols)
+        if op.col.name is None or op.col.name not in cols:
+            order.append(name)  # else: replace in place, keep position
+        items = [f"{val} AS {_q(c)}" if c == name else _q(c) for c in order]
+        return (
+            f"SELECT {', '.join(items)} FROM"
+            f" (SELECT *, {gen} FROM {inner})",
+            order,
+        )
 
     def _emit_tail(
         self, op: Op, sql: str, inner: str, cols: list[str]
@@ -1131,11 +1208,7 @@ class _SqlEmitter:
         if isinstance(op, PartitionOp):
             return self._emit_partition(op, inner, cols)
         if isinstance(op, ScanOp):
-            raise Unsupported(
-                "scan's sequential automaton requires the DataFrame"
-                " backend (PqlEngine.query / compile_pql)",
-                op.span,
-            )
+            return self._emit_scan(op, inner, cols)
         if isinstance(op, SerializeOp):
             if self.last_sort is None:
                 raise ParseError(
@@ -2052,19 +2125,25 @@ class _SqlEmitter:
                 f"SELECT * FROM {inner} WHERE coalesce({hits}, FALSE)",
                 cols,
             )
-        raise Unsupported(
-            f"SQL backend: unsupported operator {type(op).__name__}", op.span
+        if isinstance(op, (FacetOp, ForkOp)):
+            name = "facet" if isinstance(op, FacetOp) else "fork"
+            raise ParseError(
+                f"{name} is only allowed as the final operator at the top"
+                " level of the query (not in subqueries, join sides or"
+                " bindings)",
+                op.span,
+            )
+        raise ParseError(
+            f"unsupported operator {type(op).__name__}", op.span
         )
 
-    def _refuse_maps(self, op: MvExpandOp | MvApplyOp, what: str) -> None:
-        """Expansion below is positional (arrays); a bag expands per
-        property, which the DataFrame compiler decides from the type."""
+    def _arrays_only(self, op: MvExpandOp | MvApplyOp, what: str) -> None:
+        """Positional expansion (mv-apply, multi-column mv-expand) takes
+        arrays; a known map there is the user's error."""
         for c in op.cols:
             if self._known_map(c):
-                raise Unsupported(
-                    f"{what} over a map (bag) column: the SQL backend"
-                    " expands arrays only — PqlEngine.query / compile_pql"
-                    " expand bags on the DataFrame backend",
+                raise ParseError(
+                    f"{what} requires array values, got a map (bag)",
                     c.span,
                 )
 
@@ -2077,7 +2156,7 @@ class _SqlEmitter:
         where/extend/project stay row-local, sort+take/top become a
         per-record rank window, summarize a GROUP BY on the record id
         with record-constant columns carried via first()."""
-        self._refuse_maps(op, "mv-apply")
+        self._arrays_only(op, "mv-apply")
         ROW, IDX = "__mv_row", "__mv_idx"
         names = [self.col_spec(c)[0] for c in op.cols]
         # bare array EXPRESSIONS (col_spec's item carries the alias)
@@ -2245,6 +2324,7 @@ class _SqlEmitter:
         """Multi-column mv-expand: explode one index sequence sized to
         the longest array, then ``try_element_at`` per array (zip-to-
         longest, null-padded — mirrors the DataFrame compiler)."""
+        self._arrays_only(op, "mv-expand with multiple columns")
         specs = [self.col_spec(c) for c in op.cols]
         exprs = [self.expr(c.expr) for c in op.cols]
         sizes = [f"size({e})" for e in exprs]
@@ -2256,7 +2336,7 @@ class _SqlEmitter:
         )
         names = [name for name, _ in specs]
         # slice(e, 1, size(e)) is an identity for arrays but a type
-        # error for maps — surfaces a map not known to _refuse_maps at
+        # error for maps — surfaces a map not known to _arrays_only at
         # analysis time instead of silently key-looking-up integer
         # indexes
         elems = {
@@ -2282,15 +2362,239 @@ class _SqlEmitter:
         items = ", ".join(elems.get(c, _q(c)) for c in order)
         return f"SELECT {items} FROM ({mid})", order
 
-    def _frame(self, sql: str, form: str, declare: str, span: Span):
+    def _emit_scan(
+        self, op: ScanOp, inner: str, cols: list[str]
+    ) -> tuple[str, list[str]]:
+        """``scan`` at a frame boundary: one work statement computes
+        every row-only value as SQL (step predicates, casted declare
+        inits and assignments, var-free subtrees of var-referencing
+        expressions, the super-group key); its frame runs the numpy
+        automaton (``scan_kernel.scan_groups``) in ``applyInPandas`` —
+        one shuffle on the scan keys — and comes back as one more view
+        of the query."""
+        import dataclasses as dc
+
+        from pyspark.sql import types as T
+
+        from .scan_kernel import scan_groups
+
+        order_terms = op.order or self.last_sort
+        if not order_terms:
+            raise ParseError(
+                "scan needs 'order by' (inline or a preceding sort)",
+                op.span,
+            )
+        by_names = [i.parts[0] for i in op.by]
+        for b in by_names:
+            if b not in cols:
+                raise ParseError(f"scan by: unknown column {b!r}", op.span)
+        # order terms must be plain columns (the kernel re-sorts the
+        # pandas frame by NAME); computed terms can be extended first
+        for t in order_terms:
+            if not (isinstance(t.expr, Ident) and t.expr.simple):
+                raise ParseError(
+                    "scan order-by terms must be plain columns",
+                    t.expr.span,
+                )
+            if t.expr.parts[0] not in cols:
+                raise ParseError(
+                    f"scan order by: unknown column {t.expr.parts[0]!r}",
+                    op.span,
+                )
+        var_names = [v for v, _ in op.declare]
+        for rc in (op.match_id, "step", *var_names):
+            if rc in cols:
+                raise ParseError(
+                    f"scan: input already has a {rc!r} column (scan"
+                    " appends match-id, step, and declared variables)",
+                    op.span,
+                )
+        var_set, decl_map = set(var_names), dict(op.declare)
+
+        def refs_vars(ex) -> bool:
+            if isinstance(ex, Ident):
+                return ex.simple and ex.parts[0] in var_set
+            for fld in dc.fields(ex):
+                v = getattr(ex, fld.name)
+                for item in v if isinstance(v, (list, tuple)) else [v]:
+                    if isinstance(item, Expr) and refs_vars(item):
+                        return True
+            return False
+
+        def subst_inits(ex):
+            # var refs → their declare-init ASTs, for the type probe only
+            if isinstance(ex, Ident) and ex.simple and ex.parts[0] in var_set:
+                return decl_map[ex.parts[0]]
+            kw = {}
+            for fld in dc.fields(ex):
+                v = getattr(ex, fld.name)
+                if isinstance(v, Expr):
+                    v = subst_inits(v)
+                elif isinstance(v, list):
+                    v = [
+                        subst_inits(x) if isinstance(x, Expr) else x
+                        for x in v
+                    ]
+                kw[fld.name] = v
+            return dc.replace(ex, **kw)
+
+        items: list[str] = []  # the work statement's computed columns
+        n_x = 0
+
+        def skel(ex):
+            nonlocal n_x
+            if not refs_vars(ex):
+                items.append(f"{self.expr(ex)} AS __scan_x{n_x}")
+                n_x += 1
+                return ("col", n_x - 1)
+            if isinstance(ex, Ident):
+                return ("var", var_names.index(ex.parts[0]))
+            if isinstance(ex, UnaryExpr):
+                return ("un", ex.op, skel(ex.operand))
+            if (
+                isinstance(ex, CallExpr)
+                and ex.func == "not"
+                and len(ex.args) == 1
+            ):
+                return ("not", skel(ex.args[0]))
+            if isinstance(ex, BinaryExpr) and ex.op in (
+                "==", "!=", "<", "<=", ">", ">=",
+                "+", "-", "*", "/", "%", "and", "or",
+            ):
+                return ("bin", ex.op, skel(ex.lhs), skel(ex.rhs))
+            raise ParseError(
+                "scan: an expression referencing a declared variable"
+                " may combine it only with comparisons, and/or/not,"
+                " and arithmetic (+ - * / %); compute other constructs"
+                " in an earlier step assignment or an extend first",
+                ex.span,
+            )
+
+        # checks[i]: ("arr", i) → the boolean column __scan_p{i}, or
+        # ("skel", tree) → interpreted against the attempt state
+        checks_spec: list[tuple] = []
+        for i, s in enumerate(op.steps):
+            if var_set and refs_vars(s.pred):
+                checks_spec.append(("skel", skel(s.pred)))
+            else:
+                items.append(
+                    f"CAST({self.expr(s.pred)} AS BOOLEAN) AS __scan_p{i}"
+                )
+                checks_spec.append(("arr", i))
+        assign_map: dict[tuple[int, int], str] = {}
+        assign_skel: dict[tuple[int, int], tuple] = {}
+        vtypes: list = []
+        if op.declare:
+            inits = [self.expr(e) for _, e in op.declare]
+            raw: dict[tuple[int, int], str] = {}
+            for i, s in enumerate(op.steps):
+                for v, e in s.assigns:
+                    j = var_names.index(v)
+                    if refs_vars(e):
+                        assign_skel[(i, j)] = skel(e)
+                        # init-substituted twin, for the type probe
+                        raw[(i, j)] = self.expr(subst_inits(e))
+                    else:
+                        raw[(i, j)] = self.expr(e)
+            # type probe: each var's common type across its init and
+            # assignments — the schema of one statement, no job
+            probe = self._frame(
+                "SELECT "
+                + ", ".join(
+                    "coalesce("
+                    + ", ".join(
+                        [c for (_, jj), c in raw.items() if jj == j]
+                        + [inits[j]]
+                    )
+                    + f") AS __t{j}"
+                    for j in range(len(var_names))
+                )
+                + f" FROM {inner}",
+                "scan", None, op.span,
+            )
+            vtypes = [f.dataType for f in probe.schema.fields]
+            sql_types = [
+                f.dataType().sql() for f in probe._jdf.schema().fields()
+            ]
+            items += [
+                f"CAST({inits[j]} AS {sql_types[j]}) AS __scan_i{j}"
+                for j in range(len(var_names))
+            ]
+            for (i, j), c in raw.items():
+                if (i, j) not in assign_skel:
+                    assign_map[(i, j)] = f"__scan_a{i}_{j}"
+                    items.append(
+                        f"CAST({c} AS {sql_types[j]}) AS __scan_a{i}_{j}"
+                    )
+        if by_names:
+            # hash scan keys into ~2×parallelism super-groups: the
+            # shuffle still co-locates each key's rows, but the kernel
+            # is called per super-group, not per key
+            keys = ", ".join(_q(b) for b in by_names)
+            items.append(
+                f"pmod(xxhash64({keys}), {2 * (self.width or 1)})"
+                " AS __scan_g"
+            )
+        else:
+            import warnings
+
+            warnings.warn(
+                "scan without 'by' funnels the whole input through a"
+                " single task — add 'by <key>' for distributed"
+                " sequence matching at scale",
+                stacklevel=2,
+            )
+            items.append("0 AS __scan_g")
+        work = self._frame(
+            f"SELECT *, {', '.join(items)} FROM {inner}",
+            "scan", None, op.span,
+        )
+        out_cols = [*cols, op.match_id, "step", *var_names]
+        schema = T.StructType(
+            work.schema.fields[: len(cols)]
+            + [
+                T.StructField(op.match_id, T.LongType()),
+                T.StructField("step", T.StringType()),
+            ]
+            + [T.StructField(v, t) for v, t in zip(var_names, vtypes)]
+        )
+        spec = dict(
+            by_names=by_names,
+            order_names=[t.expr.parts[0] for t in order_terms],
+            ascending=[t.asc for t in order_terms],
+            checks_spec=checks_spec,
+            assign_map=assign_map,
+            assign_skel=assign_skel,
+            names=[s.name for s in op.steps],
+            out_modes=[s.output for s in op.steps],
+            var_names=var_names,
+            vtypes=vtypes,
+            match_id_col=op.match_id,
+            drop_cols=[
+                c for c in work.columns[len(cols):] if c != "__scan_g"
+            ],
+            n_x=n_x,
+        )
+
+        def kernel(pdf):
+            return scan_groups(pdf, **spec)
+
+        scanned = work.groupBy("__scan_g").applyInPandas(kernel, schema)
+        view = self.view_of(lambda _spark: scanned)
+        return f"SELECT * FROM {_q(view)}", out_cols
+
+    def _frame(self, sql: str, form: str, declare: str | None, span: Span):
         """The frame of ``sql`` over the query's views (``frame_of``),
-        for a form whose output schema depends on the data or on a
-        mid-pipeline type.  A standalone SQL string has no data to look
-        at, so without the hook the form is refused."""
-        if self.frame_of is None:
+        for a form that depends on the data or a mid-pipeline type
+        (``declare`` says how to state it instead), or that runs over a
+        Spark frame and registers one back with ``view_of`` (``declare``
+        None).  A standalone SQL string has neither, so without the
+        hooks the form is refused."""
+        if self.frame_of is None or declare is None and self.view_of is None:
+            how = "" if declare is None else f"declare it ({declare}), or "
             raise Unsupported(
-                f"{form} is data-dependent — declare it ({declare}), or"
-                " run the query with PqlEngine.query, which discovers it",
+                f"{form} needs the data — {how}run the query with"
+                " PqlEngine.query",
                 span,
             )
         return self.frame_of(sql)
@@ -3007,17 +3311,9 @@ class _SqlEmitter:
         ≤129-row v6) distinct-prefix set, hash equi-join on (prefix,
         masked ip).  The v6 branch pre-computes the fact side's
         32-nibble hex canon ONCE in a subquery so the parse doesn't
-        re-run per (row × prefix).  The DataFrame-only
-        ``return_unmatched`` flag is rejected (it needs generated row
-        identity)."""
+        re-run per (row × prefix).  ``return_unmatched`` also needs a
+        frame (see ``_lookup_unmatched``)."""
         pname = "ipv6_lookup" if op.v6 else "ipv4_lookup"
-        if op.return_unmatched:
-            raise Unsupported(
-                f"{pname}: return_unmatched is only supported on"
-                " the DataFrame backend (PqlEngine.query /"
-                " compile_pql)",
-                op.span,
-            )
         right_sql, right_cols = self.emit_query(op.right)
         ip_name = op.ip_col.parts[0]
         if ip_name not in left_cols:
@@ -3032,6 +3328,8 @@ class _SqlEmitter:
                 " in the lookup table",
                 op.range_col.span,
             )
+        if op.return_unmatched:
+            return self._lookup_unmatched(op, left_sql, left_cols)
 
         def masked4(v: str, prefix: str) -> str:
             return (
@@ -3244,6 +3542,41 @@ class _SqlEmitter:
         )
         return sql, out_names
 
+    def _lookup_unmatched(
+        self, op: Ipv4LookupOp, left_sql: str, left_cols: list[str]
+    ) -> tuple[str, list[str]]:
+        """``ipv*_lookup … return_unmatched``: the matched rows, then
+        the fact rows no network matched with NULL lookup columns (the
+        UNION ALL types them).  The anti-join needs a row identity that
+        both reads of the fact rows agree on; a subquery read twice may
+        number its rows differently on each read, so the id'd rows are
+        checkpointed and read back as one more view of the query."""
+        import dataclasses as dc
+
+        LID = "__pql_ip_lid"
+        ided = self._frame(
+            f"SELECT *, monotonically_increasing_id() AS {LID}"
+            f" FROM ({left_sql})",
+            "return_unmatched", None, op.span,
+        ).localCheckpoint()
+        view = _q(self.view_of(lambda _spark: ided))
+        matched, names = self.emit_ipv4_lookup(
+            dc.replace(op, return_unmatched=False),
+            f"SELECT * FROM {view}", [*left_cols, LID],
+        )
+        names.remove(LID)
+        rights = names[len(left_cols):]
+        un = ", ".join(
+            [_q(c) for c in left_cols] + [f"NULL AS {_q(c)}" for c in rights]
+        )
+        sql = (
+            f"SELECT {', '.join(_q(c) for c in names)} FROM ({matched})"
+            f" UNION ALL SELECT {un} FROM {view} LEFT ANTI JOIN"
+            f" (SELECT {LID} AS __pql_ip_mid FROM ({matched}))"
+            f" ON {LID} = __pql_ip_mid"
+        )
+        return sql, names
+
     def emit_join(
         self, op: JoinOp, left_sql: str, left_cols: list[str]
     ) -> tuple[str, list[str]]:
@@ -3412,8 +3745,8 @@ class _SqlEmitter:
             )
         if isinstance(e, CallExpr):
             return self.call(e)
-        raise Unsupported(
-            f"SQL backend: unsupported expression {type(e).__name__}", e.span
+        raise ParseError(
+            f"unsupported expression {type(e).__name__}", e.span
         )
 
     def ident(self, e: Ident) -> str:
@@ -5904,7 +6237,7 @@ def _prepare_emitter(
     params: Mapping[str, object] | None,
     width: int | None = None,
     view_name_of: ColumnsOf | None = None,
-    externaldata_view_of=None,
+    view_of=None,
     frame_of=None,
 ) -> tuple[_SqlEmitter, TabularExpr]:
     columns_of: ColumnsOf = (
@@ -5921,7 +6254,7 @@ def _prepare_emitter(
         )
     emitter = _SqlEmitter(
         text, columns_of, dict(params or {}), width, view_name_of,
-        externaldata_view_of, frame_of,
+        view_of, frame_of,
     )
     for stmt in statements:
         if stmt is tabular[0]:
@@ -5945,39 +6278,36 @@ def compile_to_sql(
     params: Mapping[str, object] | None = None,
     width: int | None = None,
     view_name_of: ColumnsOf | None = None,
-    externaldata_view_of=None,
+    view_of=None,
     frame_of=None,
-) -> str:
+) -> str | MultiResult:
     """Compile one PQL query to a Spark SQL string.
 
     ``columns`` supplies each referenced table's column list or Spark
     schema (mapping or callable) — required to expand ``*`` at joins
     and reproduce the ``$right.<col>`` duplicate-naming rule; a schema
-    also marks MAP columns, so ``mv-expand`` over one is refused.  ``width`` (optional) pins
-    expensive-parse repartition hints to an explicit partition count
-    (AQE coalesces argless hints); pass the cluster's default
-    parallelism when a session is at hand, as ``PqlEngine`` does.
-    ``view_name_of`` (optional) maps each logical table name to the
-    catalog view name the SQL should reference — the engine passes a
-    collision-proof temp-view prefix so running a query never replaces
-    a user's same-named temp view.  ``externaldata_view_of`` (optional)
-    maps an ``externaldata`` source with reader options (csv/json) to a
-    temp-view name the caller promises to register — the engine's
-    device for serving option-bearing formats on the SQL path.
-    ``frame_of`` (optional) runs one SQL statement over those views and
-    returns its DataFrame: with it, schema-less ``pivot``/``bag_unpack``
-    discover their output columns with one query each, and
-    ``diffpatterns``/``autocluster`` without a column list read the
-    input's string columns; without it they raise :class:`Unsupported`.
+    also marks MAP columns, so ``mv-expand`` over one expands per
+    property.  ``width`` (optional) pins expensive-parse repartition
+    hints to an explicit partition count (AQE coalesces argless hints).
+
+    The optional hooks are ``PqlEngine.query``'s: ``view_name_of`` maps
+    a table name to its collision-proof temp view, ``frame_of`` runs
+    one statement over the query's views, ``view_of`` registers a frame
+    built from the session as one more view.  With them, the forms the
+    module docstring lists compile, and a ``facet``/``fork`` query
+    comes back as a :class:`MultiResult` of one statement per output;
+    without them they raise :class:`Unsupported` (a multi-output
+    query: use :func:`compile_to_sql_multi`).
     """
     try:
         emitter, expr = _prepare_emitter(
-            text, columns, params, width, view_name_of,
-            externaldata_view_of, frame_of,
+            text, columns, params, width, view_name_of, view_of, frame_of,
         )
-        if expr.operators and isinstance(
-            expr.operators[-1], (FacetOp, ForkOp)
-        ):
+        if view_of is not None:
+            outs = emitter.emit_outputs(expr)
+            if outs is not None:
+                return outs
+        elif _multi_output(expr):
             raise Unsupported(
                 "multi-output query (facet/fork): use"
                 " compile_to_sql_multi",
@@ -5995,60 +6325,20 @@ def compile_to_sql_multi(
     params: Mapping[str, object] | None = None,
 ) -> dict[str, str]:
     """Compile a multi-output (``facet``/``fork``) PQL query to one
-    Spark SQL string per output table (same names as the DataFrame
-    backend's ``MultiResult``).  Single-output queries come back as
+    Spark SQL string per output table (same names as the outputs of
+    ``PqlEngine.query``).  Single-output queries come back as
     ``{"main": sql}``."""
     try:
         emitter, expr = _prepare_emitter(text, columns, params)
-        last = expr.operators[-1] if expr.operators else None
-        if not isinstance(last, (FacetOp, ForkOp)):
-            sql, _ = emitter.emit_query(expr)
-            return {"main": sql}
-        base = TabularExpr(
-            source=expr.source,
-            operators=expr.operators[:-1],
-            span=expr.span,
-        )
-        base_sql, base_cols = emitter.emit_query(base)
-        out: dict[str, str] = {}
-        if isinstance(last, FacetOp):
-            if last.with_ops:
-                sql, cols = base_sql, list(base_cols)
-                for op in last.with_ops:
-                    sql, cols = emitter.emit_op(op, sql, cols)
-                out["main"] = sql
-            for ident in last.by:
-                c = ident.parts[0]
-                if c not in base_cols:
-                    raise ParseError(
-                        f"facet by: unknown column {c!r}", ident.span
-                    )
-                if c in out:
-                    raise ParseError(
-                        f"facet by: duplicate output table {c!r}",
-                        ident.span,
-                    )
-                out[c] = (
-                    f"SELECT {_q(c)}, count(1) AS count_ FROM"
-                    f" ({base_sql}) GROUP BY {_q(c)}"
-                )
-        else:
-            for i, br in enumerate(last.branches):
-                name = br.name or f"fork_{i}"
-                if name in out:
-                    raise ParseError(
-                        f"fork: duplicate branch name {name!r}", br.span
-                    )
-                saved = (emitter.last_sort, emitter.window, emitter.maps)
-                emitter.last_sort, emitter.window = None, None
-                emitter.maps = set(saved[2])
-                try:
-                    sql, cols = base_sql, list(base_cols)
-                    for op in br.ops:
-                        sql, cols = emitter.emit_op(op, sql, cols)
-                finally:
-                    emitter.last_sort, emitter.window, emitter.maps = saved
-                out[name] = sql
-        return out
+        outs = emitter.emit_outputs(expr)
+        if outs is None:
+            return {"main": emitter.emit_query(expr)[0]}
+        return dict(outs)
     except ParseError as e:
         raise QueryError(text, [e]) from None
+
+
+def _multi_output(expr: TabularExpr) -> bool:
+    return bool(expr.operators) and isinstance(
+        expr.operators[-1], (FacetOp, ForkOp)
+    )

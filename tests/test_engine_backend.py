@@ -1,16 +1,15 @@
-"""PqlEngine.query — one SQL compile, the DataFrame compiler only on a
-refusal.
+"""PqlEngine.query — one compile path: PQL to Spark SQL.
 
-The query is compiled to one Spark SQL string and run with one
-``spark.sql`` call over TRANSIENT collision-proof temp views (a user's
-own same-named temp view survives untouched), with params bound.  A
-data-dependent output schema (schema-less pivot/bag_unpack,
-diffpatterns/autocluster without columns) is discovered inside that
-compile.  Only when the SQL backend raises its refusal
-(``sql_backend.Unsupported``) does ``query`` compile again with
-``engine.compile_pql``, exactly once, and count it on
-``sql_fallbacks``.  User errors and emitted SQL that fails Spark
-analysis propagate from the one SQL compile.
+The query is compiled to SQL and run with one ``spark.sql`` call per
+output over TRANSIENT collision-proof temp views (a user's own
+same-named temp view survives untouched), with params bound.  Forms
+that need the data or a frame — a data-dependent output schema
+(schema-less pivot/bag_unpack, diffpatterns/autocluster without
+columns), ``scan``, ``return_unmatched``, map ``mv-expand`` — run inside
+that compile, and facet/fork return one statement per output.
+``engine.compile_pql`` (the DataFrame compiler) is never called; it is
+the reference the rows here are compared against.  User errors and
+emitted SQL that fails Spark analysis propagate from the one compile.
 """
 
 from __future__ import annotations
@@ -87,11 +86,13 @@ def test_sql_backend_bit_equal(spark, tables, q):
     assert sql_rows == df_rows and len(df_rows) > 0
 
 
-REFUSALS = [
+# the forms the SQL backend once refused, which PqlEngine.query then
+# compiled a second time with the DataFrame compiler
+FORMER_REFUSALS = [
     "EV | scan by user order by event_id asc with ("
     " step hi: value > 30; step lo: value < 10; )"
     " | summarize n = count()",
-    # a refusal inside a let binding is a refusal too
+    # a scan inside a let binding
     "let t = EV | scan order by event_id asc with ( step hi: value > 30; );"
     " t | count",
     "EV | facet by user with ( summarize n = count() )",
@@ -108,17 +109,19 @@ BOUND_MAPS = [
     "let f = (t: (*)) { t | mv-expand m };"
     ' M | extend m = bag_pack("k", id) | invoke f()',
 ]
-REFUSALS += BOUND_MAPS
+FORMER_REFUSALS += BOUND_MAPS
 
 
-@pytest.mark.parametrize("q", REFUSALS)
-def test_refusal_compiles_once_on_the_dataframe_path(
-    spark, tables, pql_calls, q
-):
-    eng = PqlEngine(spark, resolver=tables)
-    got = eng.query(q)
-    assert pql_calls == [q] and eng.sql_fallbacks == 1
-    assert _rows(got) == _rows(compile_pql(q, tables.__getitem__))
+@pytest.mark.parametrize("q", FORMER_REFUSALS)
+def test_former_refusal_stays_on_sql(spark, tables, pql_calls, q):
+    got = PqlEngine(spark, resolver=tables).query(q)
+    assert pql_calls == []
+    assert isinstance(got, MultiResult) == q.startswith(
+        ("EV | facet", "EV | fork")
+    )
+    want = _rows(compile_pql(q, tables.__getitem__))
+    assert _rows(got) == want and want
+    assert _pql_v_views(spark) == []
 
 
 def _pql_v_views(spark) -> list[str]:
@@ -154,7 +157,7 @@ DISCOVERED = {
 def test_discovered_schema_stays_on_sql(spark, tables, pql_calls, q):
     eng = PqlEngine(spark, resolver=tables)
     got = eng.query(q)
-    assert pql_calls == [] and eng.sql_fallbacks == 0
+    assert pql_calls == []
     want = DISCOVERED[q](tables, PqlEngine(spark, resolver=tables).query)
     assert _rows(got) == _rows(want) and got.count() > 0
     assert _pql_v_views(spark) == []
@@ -179,7 +182,7 @@ def test_pivot_edge_values_match_spark_pivot(spark, pivots, pql_calls, col):
     )
     assert got.columns == want.columns
     assert _rows(got) == _rows(want)
-    assert pql_calls == [] and eng.sql_fallbacks == 0
+    assert pql_calls == []
 
 
 def test_pivot_over_max_values_is_an_error(spark, pivots, pql_calls):
@@ -199,7 +202,7 @@ def test_pivot_over_max_values_is_an_error(spark, pivots, pql_calls):
         ]
     finally:
         spark.conf.set(key, old)
-    assert pql_calls == [] and eng.sql_fallbacks == 0
+    assert pql_calls == []
 
 
 def test_failed_discovery_leaves_no_views(spark, tables, monkeypatch):
@@ -222,6 +225,32 @@ def test_to_sql_refuses_discovery_and_names_the_engine(spark, tables):
         assert [type(e) for e in ei.value.errors] == [Unsupported]
 
 
+@pytest.mark.parametrize("q", [FORMER_REFUSALS[0], FORMER_REFUSALS[4]])
+def test_to_sql_refuses_frames_and_names_the_engine(spark, tables, q):
+    # scan and return_unmatched run over a frame; a string holds none
+    with pytest.raises(QueryError, match="PqlEngine.query") as ei:
+        PqlEngine(spark, resolver=tables).to_sql(q)
+    assert [type(e) for e in ei.value.errors] == [Unsupported]
+
+
+@pytest.mark.parametrize(
+    "q",
+    [
+        # a declare init and an assignment of incompatible types: the
+        # type probe fails analysis
+        "EV | scan by user order by event_id asc declare (x = 1)"
+        ' with ( step s: value > 1 => x = bag_pack("k", 1); )',
+        # an unknown column in a step: the work statement fails
+        "EV | scan by user order by event_id asc"
+        " with ( step s: nope > 1; )",
+    ],
+)
+def test_failed_scan_leaves_no_views(spark, tables, q):
+    with pytest.raises(AnalysisException):
+        PqlEngine(spark, resolver=tables).query(q)
+    assert _pql_v_views(spark) == []
+
+
 @pytest.fixture(scope="module")
 def sessions(spark):
     return spark.sql(
@@ -231,45 +260,42 @@ def sessions(spark):
     )
 
 
-def test_fallback_plugins_see_the_compilers_scope(
-    spark, sessions, pql_calls
-):
-    # fork still falls back; its branches' plugins run on the SQL
-    # emitter with the compiler's toscalar let and param in scope
+def test_fallback_plugins_see_the_compilers_scope(spark, sessions):
+    # the DataFrame compiler's fork runs its branches' plugins on the
+    # SQL emitter with the compiler's toscalar let and param in scope
     from datetime import datetime
 
     lets = "let lo = toscalar(S | summarize min(ts));"
     plugin = "evaluate session_count(user_id, ts, lo, hi, 1d, 3d)"
     branches = {"a": plugin, "b": f"where user_id > 1 | {plugin}"}
     params = {"hi": datetime(2024, 1, 20)}
-    eng = PqlEngine(spark, resolver={"S": sessions})
-    res = eng.query(
-        f"{lets} S | fork "
-        + " ".join(f"{k} = ( {v} )" for k, v in branches.items()),
-        params=params,
+    q = f"{lets} S | fork " + " ".join(
+        f"{k} = ( {v} )" for k, v in branches.items()
     )
-    assert eng.sql_fallbacks == 1 and len(pql_calls) == 1
+    res = compile_pql(q, {"S": sessions}.__getitem__, params)
+    eng = PqlEngine(spark, resolver={"S": sessions})
+    assert _rows(res) == _rows(eng.query(q, params=params))
     for name, branch in branches.items():
         alone = eng.query(f"{lets} S | {branch}", params=params)
         assert _rows(res[name]) == _rows(alone)
         assert alone.count() > 0
-    assert eng.sql_fallbacks == 1
     assert _pql_v_views(spark) == []
 
 
 @pytest.mark.parametrize("q", BOUND_MAPS)
 def test_bindings_carry_map_marks(q):
-    with pytest.raises(QueryError) as ei:
-        compile_to_sql(q, {"M": ["id", "s"]})
-    assert [type(e) for e in ei.value.errors] == [Unsupported]
+    # a map reached through a binding expands per property
+    assert "explode(map_entries(" in compile_to_sql(q, {"M": ["id", "s"]})
 
 
 def test_mv_apply_over_a_map_is_refused(spark, tables, pql_calls):
-    # the DataFrame compiler reads the type and reports the user error
+    # a positioned user error, as the DataFrame compiler reports it
     q = "M | mv-apply e = mp on ( take 1 )"
-    with pytest.raises(QueryError, match="requires array values"):
-        PqlEngine(spark, resolver=tables).query(q)
-    assert pql_calls == [q]
+    for run in (PqlEngine(spark, resolver=tables).query,
+                lambda q: compile_pql(q, tables.__getitem__)):
+        with pytest.raises(QueryError, match="requires array values"):
+            run(q)
+    assert pql_calls == []
 
 
 @pytest.mark.parametrize(
@@ -291,7 +317,7 @@ def test_user_errors_never_reach_compile_pql(
     eng = PqlEngine(spark, resolver=tables)
     with pytest.raises(err, match=match):
         eng.query(q)
-    assert pql_calls == [] and eng.sql_fallbacks == 0
+    assert pql_calls == []
 
 
 def test_analysis_failure_propagates(spark, tables, pql_calls, monkeypatch):
@@ -305,7 +331,7 @@ def test_analysis_failure_propagates(spark, tables, pql_calls, monkeypatch):
     eng = PqlEngine(spark, resolver=tables)
     with pytest.raises(AnalysisException, match="no_such_col"):
         eng.query("EV | count")
-    assert pql_calls == [] and eng.sql_fallbacks == 0
+    assert pql_calls == []
 
 
 @pytest.mark.parametrize(
@@ -355,13 +381,18 @@ def test_sql_backend_params(spark, tables):
     assert got[0][0] == want
 
 
-def test_auto_falls_back_on_multi_output(spark, tables, pql_calls):
-    # facet is multi-output: compile_to_sql refuses, the DataFrame
-    # compiler builds its MultiResult
+def test_multi_output_names_match_the_dataframe_compiler(
+    spark, tables, pql_calls
+):
+    # facet is multi-output: query builds its MultiResult from one SQL
+    # statement per output, named and ordered as compile_pql names them
     q = "EV | facet by user with ( summarize n = count() )"
-    res = PqlEngine(spark, resolver=tables).query(q)
-    assert isinstance(res, MultiResult)
-    assert pql_calls == [q]
+    eng = PqlEngine(spark, resolver=tables)
+    res = eng.query(q)
+    want = compile_pql(q, tables.__getitem__)
+    assert isinstance(res, MultiResult) and len(res) > 1
+    assert list(res) == list(eng.to_sql_multi(q)) == list(want)
+    assert pql_calls == []
 
 
 def test_sql_backend_serves_csv_externaldata(spark, tmp_path, pql_calls):
@@ -375,7 +406,7 @@ def test_sql_backend_serves_csv_externaldata(spark, tmp_path, pql_calls):
         ' with (format="csv", header="true") | where v > 5 | project id'
     )
     assert [r.id for r in eng.query(q).collect()] == [2]
-    assert eng.sql_fallbacks == 0 and pql_calls == []
+    assert pql_calls == []
     # the transient reader view is dropped after the one spark.sql call
     leftover = [
         t.name for t in spark.catalog.listTables()
@@ -421,23 +452,10 @@ def test_to_sql_still_refuses_optioned_externaldata(spark, tmp_path):
         )
 
 
-def test_auto_is_default_and_counts_fallbacks(spark, tables):
-    eng = PqlEngine(spark, resolver=tables)
-    assert eng.sql_fallbacks == 0
-    eng.query("EV | count").collect()
-    assert eng.sql_fallbacks == 0  # SQL path handled it
-    eng.query("EV | facet by user with ( summarize n = count() )")
-    assert eng.sql_fallbacks == 1  # refusal, counted
-    with pytest.raises(QueryError):
-        eng.query("EV | where")
-    assert eng.sql_fallbacks == 1  # a user error is not a refusal
-
-
 def test_auto_does_not_swallow_unexpected_errors(
     spark, tables, monkeypatch, pql_calls
 ):
-    # an error that is not the refusal would hide an SQL-backend bug
-    # behind the slow path — it must propagate
+    # an error inside the SQL compile propagates as it is
     import pql_spark.sql_backend as sb
 
     def boom(*a, **k):
@@ -447,7 +465,7 @@ def test_auto_does_not_swallow_unexpected_errors(
     eng = PqlEngine(spark, resolver=tables)
     with pytest.raises(RuntimeError, match="injected"):
         eng.query("EV | count")
-    assert eng.sql_fallbacks == 0 and pql_calls == []
+    assert pql_calls == []
 
 
 def test_unknown_table_same_error_both_backends(spark):

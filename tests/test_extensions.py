@@ -1559,7 +1559,6 @@ def test_materialize_let(spark, _ff_df):
     )
     eng = PqlEngine(spark, resolver={"T": _ff_df})
     via_sql = eng.query(q)
-    assert eng.sql_fallbacks == 0
     via_df = compile_pql(q, {"T": _ff_df}.__getitem__)
     rows = via_sql.collect()
     assert [(r.id, r.v) for r in rows] == [(2, 20.0), (3, 30.0), (5, 50.0)]

@@ -159,7 +159,7 @@ def test_errors(engine):
         engine.query("ev | evaluate ipv4_lookup(nets, ip, nope)")
     with pytest.raises(QueryError, match="return_unmatched"):
         engine.query("ev | evaluate ipv4_lookup(nets, ip, cidr, nonsense)")
-    with pytest.raises(QueryError, match="DataFrame backend"):
+    with pytest.raises(QueryError, match="PqlEngine.query"):
         engine.to_sql(
             "ev | evaluate ipv4_lookup(nets, ip, cidr, return_unmatched)"
         )

@@ -408,6 +408,10 @@ def _norm(v):
         return round(v, 6)
     if isinstance(v, bool):
         return int(v)
+    if isinstance(v, dict):  # a map: Spark's dict, DuckDB's key/value lists
+        if set(v) == {"key", "value"} and isinstance(v["key"], list):
+            v = dict(zip(v["key"], v["value"]))
+        return tuple(sorted((k, _norm(x)) for k, x in v.items()))
     return v
 
 
@@ -546,7 +550,78 @@ SEED_CORPUS = [
 ]
 
 
+# -- multi-output queries: (pql, {output name: duck}) — one mirror per
+#    facet count table, the facet's ``with`` pipe as ``main``, and each
+#    fork branch (an unnamed one is ``fork_<i>``)
+MULTI_CORPUS = [
+    (
+        "T | where (a >= -2) | facet by s, b"
+        " with ( where (b > 0) | summarize n = count(), m = sum(a) by s )",
+        {
+            "main": "SELECT s, count(*) AS n, sum(a) AS m FROM T"
+            " WHERE a >= -2 AND b > 0 GROUP BY s",
+            "s": "SELECT s, count(*) AS count_ FROM T WHERE a >= -2"
+            " GROUP BY s",
+            "b": "SELECT b, count(*) AS count_ FROM T WHERE a >= -2"
+            " GROUP BY b",
+        },
+    ),
+    (
+        "T | extend c = (a + b) | fork lo = ( where (c < 1)"
+        " | summarize n = count(), m = max(b) by s )"
+        " ( summarize n = count() by a | where (n > 4) )",
+        {
+            "lo": "SELECT s, count(*) AS n, max(b) AS m FROM T"
+            " WHERE a + b < 1 GROUP BY s",
+            "fork_1": "SELECT * FROM (SELECT a, count(*) AS n FROM T"
+            " GROUP BY a) WHERE n > 4",
+        },
+    ),
+]
+
+# -- mv-expand over a bag_pack map: one row per property, the cell a
+#    single-entry map; with_itemindex numbers the properties from 0
+_BAG = "(SELECT s, MAP {'x': a, 'y': b} AS m FROM T)"
+MV_MAP_CORPUS = [
+    (
+        'T | extend m = bag_pack("x", a, "y", b) | mv-expand m'
+        " | project s, m",
+        "SELECT s, map_from_entries([e]) AS m FROM"
+        f" (SELECT s, unnest(map_entries(m)) AS e FROM {_BAG})",
+    ),
+    (
+        'T | extend m = bag_pack("x", a, "y", b)'
+        " | mv-expand with_itemindex = i m | project s, i, m",
+        "SELECT s, i, map_from_entries([e]) AS m FROM"
+        " (SELECT s, unnest(range(len(map_entries(m)))) AS i,"
+        f" unnest(map_entries(m)) AS e FROM {_BAG})",
+    ),
+]
+
+
 # ------------------------------------------------------------------ tests
+
+
+@pytest.mark.parametrize("idx", range(len(MULTI_CORPUS)))
+def test_multi_output_synth(synth, idx):
+    eng, con = synth
+    pql, outputs = MULTI_CORPUS[idx]
+    res = eng.query(pql)
+    assert list(res) == list(outputs)
+    for name, duck_sql in outputs.items():
+        s_df = res[name]
+        r = con.execute(duck_sql)
+        d_cols = [c[0] for c in r.description]
+        assert s_df.columns == d_cols, (pql, name)
+        assert _rows(s_df.columns, s_df.collect()) == _rows(
+            d_cols, r.fetchall()
+        ), (pql, name)
+
+
+@pytest.mark.parametrize("idx", range(len(MV_MAP_CORPUS)))
+def test_mv_expand_map_synth(synth, idx):
+    eng, con = synth
+    run_both(eng, con, *MV_MAP_CORPUS[idx])
 
 
 @pytest.mark.parametrize("idx", range(len(SEED_CORPUS)))

@@ -126,6 +126,50 @@ def test_var_equality_is_null_safe_false(spark):
     assert out.collect() == []
 
 
+_RANDOM_SCAN = """E | scan by uid order by t asc
+     declare (start_t = tolong(0), acc = tolong(0))
+     with (
+       step s1: e == "a" => start_t = t, acc = v;
+       step s2: e == "b" and t - start_t <= 6
+                => acc = acc + v;
+       step s3: e == "c" and acc >= 5;
+     )
+   | project uid, match_id, step, t, acc"""
+
+
+def _reference(rows) -> list[tuple]:
+    """Brute-force python automaton of ``_RANDOM_SCAN`` over
+    (uid, t, e, v) rows."""
+    outr = []
+    by_uid: dict[int, list] = {}
+    for u, t, e, v in rows:
+        by_uid.setdefault(u, []).append((t, e, v))
+    for u, ev in by_uid.items():
+        ev.sort()
+        pos, mid, st, pend = 0, 0, [None, None], []
+        for t, e, v in ev:
+            if pos == 0:
+                hit = e == "a"
+            elif pos == 1:
+                hit = e == "b" and t - st[0] <= 6
+            else:
+                hit = e == "c" and st[1] >= 5
+            if not hit:
+                continue
+            if pos == 0:
+                st = [t, v]
+            elif pos == 1:
+                st = [st[0], st[1] + v]
+            pend.append((t, f"s{pos + 1}", list(st)))
+            pos += 1
+            if pos == 3:
+                for tt, sname, snap in pend:
+                    outr.append((u, mid, sname, tt, snap[1]))
+                mid += 1
+                pos, pend = 0, []
+    return sorted(outr)
+
+
 def test_reference_automaton_random(spark):
     # brute-force python reference over a pseudo-random event stream
     import random
@@ -139,51 +183,29 @@ def test_reference_automaton_random(spark):
             rows.append((uid, t, rng.choice("abc"), rng.randint(0, 9)))
     df = spark.createDataFrame(rows, "uid long, t long, e string, v long")
     eng = PqlEngine(spark, resolver={"E": df})
-    out = eng.query(
-        """E | scan by uid order by t asc
-             declare (start_t = tolong(0), acc = tolong(0))
-             with (
-               step s1: e == "a" => start_t = t, acc = v;
-               step s2: e == "b" and t - start_t <= 6
-                        => acc = acc + v;
-               step s3: e == "c" and acc >= 5;
-             )
-           | project uid, match_id, step, t, acc"""
+    got = sorted(map(tuple, eng.query(_RANDOM_SCAN).collect()))
+    assert got == _reference(rows)
+
+
+def test_hot_group_matches_reference(spark):
+    # one scan key with 100k rows: the size at which a Catalyst fold
+    # over collect_list turned quadratic; the kernel walks it linearly.
+    # Rows come in pseudo-random pairs; an "a" opens a pair and a "b"
+    # closes it, 3-5 ticks later, and v >= 3, so no attempt stalls
+    df = spark.range(100_000).selectExpr(
+        "7L AS uid",
+        "id * 3 + pmod(xxhash64(id, 1), 3) AS t",  # strictly increasing
+        "element_at(CASE WHEN id % 2 = 0"
+        " THEN array('a', 'c', 'b', 'c', 'b')"
+        " ELSE array('b', 'c', 'c', 'b', 'b') END,"
+        " CAST(pmod(xxhash64(id DIV 2, 2), 5) AS INT) + 1) AS e",
+        "3 + pmod(xxhash64(id, 3), 7) AS v",
     )
-    got = sorted(map(tuple, out.collect()))
-
-    def ref():
-        outr = []
-        by_uid: dict[int, list] = {}
-        for u, t, e, v in rows:
-            by_uid.setdefault(u, []).append((t, e, v))
-        for u, ev in by_uid.items():
-            ev.sort()
-            pos, mid, st, pend = 0, 0, [None, None], []
-            for t, e, v in ev:
-                if pos == 0:
-                    hit = e == "a"
-                elif pos == 1:
-                    hit = e == "b" and t - st[0] <= 6
-                else:
-                    hit = e == "c" and st[1] >= 5
-                if not hit:
-                    continue
-                if pos == 0:
-                    st = [0, 0]
-                    st = [t, v]
-                elif pos == 1:
-                    st = [st[0], st[1] + v]
-                pend.append((t, f"s{pos + 1}", list(st)))
-                pos += 1
-                if pos == 3:
-                    for tt, sname, snap in pend:
-                        outr.append((u, mid, sname, tt, snap[1]))
-                    mid += 1
-                    pos, pend = 0, []
-        return sorted(outr)
-
-    assert got == ref()
+    rows = [tuple(r) for r in df.collect()]
+    eng = PqlEngine(spark, resolver={"E": df})
+    got = sorted(map(tuple, eng.query(_RANDOM_SCAN).collect()))
+    want = _reference(rows)
+    assert got == want and len(want) > 10_000
 
 
 def test_unsupported_var_construct_errors(engine):
